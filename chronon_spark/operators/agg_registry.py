@@ -72,11 +72,6 @@ class OpSpec:
         raise NotImplementedError
 
 
-def _sum0(c: Column, wspec) -> Column:
-    # sum over frame treating all-null as 0 where count semantics demand it
-    return F.sum(c).over(wspec)
-
-
 class SumSpec(OpSpec):
     def direct(self) -> Column:
         return F.sum(self.col)

@@ -34,12 +34,22 @@ from chronon_spark.api import (
     AggregationPart,
     EntitySource,
     GroupBy,
+    Operation,
+    apply_derivations,
 )
-from chronon_spark.operators.agg_registry import finalize_rounding, spec_for
+from chronon_spark.operators.agg_registry import _cmp_count_desc, finalize_rounding, spec_for
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 from chronon_spark.sources.scan import scan_source
 
 DAY_MS = 86_400_000
+# ops planned as exploded per-value daily counts (_compute_hist_like_part and
+# the bucketed twin); scalar and array exact UNIQUE_COUNT take the sweep instead
+_HIST_LIKE = (
+    Operation.HISTOGRAM,
+    Operation.APPROX_FREQUENT_K,
+    Operation.APPROX_HEAVY_HITTERS_K,
+    Operation.UNIQUE_COUNT,
+)
 
 
 def window_days(part: AggregationPart) -> Optional[int]:
@@ -82,8 +92,6 @@ def _apply_derivations(df: DataFrame, group_by: GroupBy) -> DataFrame:
     """Reference projection semantics: "*" expands to unconsumed base
     columns; otherwise only keys/ds/ts + derived survive
     (api/.../Extensions.scala derivationProjection)."""
-    from chronon_spark.api import TIME_COLUMN, apply_derivations
-
     ensure = list(group_by.key_columns) + [PARTITION_COLUMN, TIME_COLUMN]
     return apply_derivations(df, group_by.derivations, ensure)
 
@@ -121,17 +129,9 @@ def compute_snapshot_groupby(
     dtypes = dict(df.dtypes)
 
     # dispatch parts: plain scalar / auto-explode (array) / map-valued /
-    # bucketed / histogram-like (value-exploded plan)
-    from chronon_spark.api import Operation
-
-    _HIST_LIKE = (
-        Operation.HISTOGRAM,
-        Operation.APPROX_FREQUENT_K,
-        Operation.APPROX_HEAVY_HITTERS_K,
-        Operation.UNIQUE_COUNT,
-    )
+    # bucketed / histogram-like (value-exploded plan) / exact unique count
     plain, by_array, mapped, bucketed, hist_like, utk_struct = [], {}, [], [], [], []
-    bucketed_hist, hist_array = [], []
+    bucketed_hist, hist_array, unique = [], [], []
     for p in parts:
         if p.bucket is not None:
             # hist-like bucketed ops get the exploded (bucket, value) plan —
@@ -140,6 +140,9 @@ def compute_snapshot_groupby(
         elif (p.operation == Operation.UNIQUE_TOP_K
               and dtypes.get(p.input_column, "").startswith("struct<")):
             utk_struct.append(p)
+        elif (p.operation == Operation.UNIQUE_COUNT
+              and not dtypes.get(p.input_column, "").startswith("map<")):
+            unique.append(p)
         elif dtypes.get(p.input_column, "").startswith("array<"):
             if p.operation in _HIST_LIKE:
                 hist_array.append(p)
@@ -155,15 +158,14 @@ def compute_snapshot_groupby(
     results = []
     if plain:
         results.append(_compute_plain_parts(df, keys, plain, rng, spec, dense))
+    for p in unique:
+        results.append(_compute_unique_count_part(df, keys, p, rng, spec, dense))
     for p in hist_like:
         results.append(_compute_hist_like_part(df, keys, p, rng, spec, dense))
     for p in hist_array:
         # array input: each element counts individually — explode, then the
         # same exploded-value plan as scalar hist-like ops
-        exploded = df.select(
-            *[c for c in df.columns if c != p.input_column],
-            F.explode_outer(F.col(p.input_column)).alias(p.input_column),
-        )
+        exploded = _explode(df, p.input_column)
         results.append(_compute_hist_like_part(exploded, keys, p, rng, spec, dense))
     for p in bucketed_hist:
         results.append(_compute_bucketed_hist_part(df, keys, p, rng, spec, dense))
@@ -172,22 +174,13 @@ def compute_snapshot_groupby(
     for col, ps in by_array.items():
         # auto-explode: each list element aggregates individually
         # (reference: VectorDispatcher, ColumnAggregator.scala:208-217)
-        exploded = df.select(
-            *[c for c in df.columns if c != col],
-            F.explode_outer(F.col(col)).alias(col),
-        )
-        results.append(_compute_plain_parts(exploded, keys, ps, rng, spec, dense))
+        results.append(_compute_plain_parts(_explode(df, col), keys, ps, rng, spec, dense))
     for p in mapped:
         # map<string, V> input: per-map-key aggregation == bucketed agg of
         # the exploded (key, value) pairs (reference: MapColumnAggregator)
-        from chronon_spark.api import AggregationPart as AP
-
         mk, mv = f"__mk_{p.input_column}", f"__mv_{p.input_column}"
-        exploded = df.select(
-            *[c for c in df.columns if c != p.input_column],
-            F.explode_outer(F.col(p.input_column)).alias(mk, mv),
-        )
-        sub = AP(mv, p.operation, dict(p.arg_map), p.window, bucket=mk)
+        exploded = _explode(df, p.input_column, mk, mv)
+        sub = AggregationPart(mv, p.operation, dict(p.arg_map), p.window, bucket=mk)
         fn = (_compute_bucketed_hist_part if p.operation in _HIST_LIKE
               else _compute_bucketed_part)
         r = fn(exploded, keys, sub, rng, spec, dense)
@@ -199,25 +192,20 @@ def compute_snapshot_groupby(
     for other in results[1:]:
         out = out.join(other, keys + [PARTITION_COLUMN], "full_outer")
     # a key with zero non-null input values has no exploded rows at all —
-    # its unique count is 0 (not null) and its histogram-like map is {}
-    # (kernel parity)
+    # its histogram-like map is {} (kernel parity)
     out_types = dict(out.dtypes)
     hist_mapped = [p for p in mapped if p.operation in _HIST_LIKE]
     for p in hist_like + hist_array + bucketed_hist + hist_mapped:
-        if p.operation == Operation.UNIQUE_COUNT and p.bucket is None \
-                and not out_types[p.output_name].startswith("map<"):
-            out = out.withColumn(
-                p.output_name, F.coalesce(F.col(p.output_name), F.lit(0).cast("long"))
-            )
-        else:
-            out = out.withColumn(
-                p.output_name,
-                F.coalesce(
-                    F.col(p.output_name),
-                    F.expr(f"CAST(map() AS {out_types[p.output_name]})"),
-                ),
-            )
+        empty = F.expr(f"CAST(map() AS {out_types[p.output_name]})")
+        out = out.withColumn(p.output_name, F.coalesce(F.col(p.output_name), empty))
     return _apply_derivations(out, group_by)
+
+
+def _explode(df: DataFrame, col: str, *aliases: str) -> DataFrame:
+    """`col` replaced by its elements (a map by its key/value `aliases`),
+    one row each; a NULL or empty collection keeps one NULL row."""
+    return df.select(*[c for c in df.columns if c != col],
+                     F.explode_outer(F.col(col)).alias(*(aliases or (col,))))
 
 
 def _day_expr(df) -> F.Column:
@@ -241,6 +229,12 @@ def _ds_from_day(col: F.Column) -> F.Column:
     return F.date_format(F.timestamp_millis(col * DAY_MS), "yyyy-MM-dd")
 
 
+def _in_range(df: DataFrame, rng: Optional[PartitionRange], spec) -> DataFrame:
+    for clause in rng.where_clauses(spec.column) if rng is not None else []:
+        df = df.where(clause)
+    return df
+
+
 def _compute_plain_parts(df, keys, parts, rng, spec, dense) -> DataFrame:
     """stage 1: one shuffle to daily partial IRs (grouped on the integer
     day number — strings only materialize on the aggregated output);
@@ -255,7 +249,7 @@ def _compute_plain_parts(df, keys, parts, rng, spec, dense) -> DataFrame:
     )
 
     if dense:
-        daily = _densify(daily, keys, rng, spec, list(partial_cols))
+        daily = _densify(daily, keys, rng, spec)
 
     w_base = W.partitionBy(*keys).orderBy("__day")
     out_cols = []
@@ -271,10 +265,7 @@ def _compute_plain_parts(df, keys, parts, rng, spec, dense) -> DataFrame:
     out = daily.select(
         *keys, _ds_from_day(F.col("__day")).alias(PARTITION_COLUMN), *out_cols
     )
-    if rng is not None:
-        for clause in rng.where_clauses(spec.column):
-            out = out.where(clause)
-    return out
+    return _in_range(out, rng, spec)
 
 
 def _compute_bucketed_part(df, keys, part, rng, spec, dense) -> DataFrame:
@@ -283,8 +274,6 @@ def _compute_bucketed_part(df, keys, part, rng, spec, dense) -> DataFrame:
     over the key's (bucket x active-day) grid so a bucket with in-window
     but not same-day events still gets its map entry, then windowed and
     folded to a map."""
-    from chronon_spark.api import AggregationPart, Operation
-
     b = part.bucket
     sub = AggregationPart(part.input_column, part.operation, dict(part.arg_map), part.window)
     sp = spec_for(sub)
@@ -298,18 +287,10 @@ def _compute_bucketed_part(df, keys, part, rng, spec, dense) -> DataFrame:
     # observed days — so a window still holding events emits its map on
     # event-free days.
     if dense:
-        assert rng is not None and rng.start is not None and rng.end is not None, (
-            "dense mode needs a bounded output range"
-        )
-        spark = df.sparkSession
-        days_df = spark.createDataFrame(
-            [(spec.epoch_millis(d) // DAY_MS,) for d in rng.partitions()],
-            "__day long",
-        )
         # key universe from ALL event rows (df), not the null-bucket-filtered
         # daily: a key whose buckets are all NULL still has rows, so kernel
         # parity (and any GROUP BY oracle) gives it an {} map, not no row
-        spine = df.select(*keys).distinct().crossJoin(F.broadcast(days_df))
+        spine = _dense_spine(df, keys, rng, spec)
     else:
         spine = df.withColumn("__day", _day_expr(df)).select(*keys, "__day").distinct()
     kb = dfb.select(*keys, b).distinct()
@@ -340,41 +321,77 @@ def _compute_bucketed_part(df, keys, part, rng, spec, dense) -> DataFrame:
     out = daily.groupBy(*keys, "__day").agg(
         F.map_from_entries(entries).alias(part.output_name)
     ).withColumn(PARTITION_COLUMN, _ds_from_day(F.col("__day"))).drop("__day")
-    if rng is not None:
-        for clause in rng.where_clauses(spec.column):
-            out = out.where(clause)
-    return out
+    return _in_range(out, rng, spec)
+
+
+def _compute_unique_count_part(df, keys, part, rng, spec, dense) -> DataFrame:
+    """Exact UNIQUE_COUNT (scalar or array input) as a sweep line over
+    time, the time-ordered single pass of TD-Join (SIGMOD 2025).
+
+    A value seen by a key on `day` enters that key's window at `day` (+1)
+    and leaves it when the window slides past — at `day + w`, or earlier
+    at the value's next occurrence, which re-enters it. A lifetime window
+    never slides, so only the first occurrence counts. The running sum of
+    the deltas per key, read on the output spine, is the number of
+    distinct values in the window. Values are compared as strings (an
+    array element counts individually). Cost is O(distinct (key, value,
+    day) triples) — no (key x day x value) scaffold, no map fold."""
+    uv = f"__uv_{part.output_name}"
+    dayed = df.withColumn("__day", _day_expr(df))
+    val = F.col(part.input_column)
+    if dict(df.dtypes)[part.input_column].startswith("array<"):
+        val = F.explode(val)
+    triples = (
+        dayed.select(*keys, "__day", val.alias(uv))
+        .select(*keys, "__day", F.col(uv).cast("string").alias(uv))
+        .where(F.col(uv).isNotNull())
+        .distinct()
+    )
+    days = window_days(part)
+    nxt = F.lead("__day").over(W.partitionBy(*keys, uv).orderBy("__day"))
+    # least() skips NULL: a value's last occurrence leaves at day + w, and
+    # never under a lifetime window
+    leave = nxt if days is None else F.least(nxt, F.col("__day") + days)
+    deltas = triples.withColumn("__leave", leave).select(*keys, F.inline(F.array(
+        F.struct(F.col("__day"), F.lit(1).alias("__d")),
+        F.struct(F.col("__leave").alias("__day"), F.lit(-1).alias("__d")),
+    ))).where(F.col("__day").isNotNull())
+    # the spine carries every output row (keys whose values are all NULL
+    # included, so they read 0); its delta-0 rows only mark where to read
+    spine = (_dense_spine(dayed, keys, rng, spec) if dense
+             else dayed.select(*keys, "__day").distinct())
+    swept = spine.select(*keys, "__day", F.lit(0).alias("__d"), F.lit(True).alias("__s"))
+    swept = swept.unionByName(deltas.withColumn("__s", F.lit(False)))
+    running = F.sum("__d").over(
+        W.partitionBy(*keys).orderBy("__day")
+        .rangeBetween(W.unboundedPreceding, W.currentRow)
+    )
+    out = swept.withColumn(part.output_name, running.cast("long")).where("__s").select(
+        *keys, _ds_from_day(F.col("__day")).alias(PARTITION_COLUMN), part.output_name
+    )
+    return _in_range(out, rng, spec)
 
 
 def _compute_hist_like_part(df, keys, part, rng, spec, dense) -> DataFrame:
-    """HISTOGRAM / frequent-k / exact UNIQUE_COUNT via the explode ->
-    groupBy(keys, day, value) -> re-window -> fold plan (the shape of the
-    reference's own Spark UDAF, spark/.../udafs/Histogram.scala:28-43).
+    """HISTOGRAM / frequent-k via the explode -> groupBy(keys, day, value)
+    -> re-window -> fold plan (the shape of the reference's own Spark
+    UDAF, spark/.../udafs/Histogram.scala:28-43). Exact UNIQUE_COUNT has
+    its own sweep (`_compute_unique_count_part`).
 
-    Replaces two scale-killers flagged in round 1: the O(distinct^2)
-    higher-order-function merge (interpreted lambdas per output row) and
-    UNIQUE_COUNT's per-output-row set flattening. Total cost here is
-    O(distinct (key, day, value) triples) with map-side combine, and every
-    window shares the same per-value daily counts."""
-    from chronon_spark.api import AggregationPart, Operation
-    from chronon_spark.operators.agg_registry import _cmp_count_desc
-
+    Replaces the round-1 scale-killer: the O(distinct^2)
+    higher-order-function merge (interpreted lambdas per output row).
+    Total cost here is O(distinct (key, day, value) triples) with map-side
+    combine, and every window shares the same per-value daily counts."""
     hv = f"__hv_{part.output_name}"
     dfb = df.withColumn(hv, F.col(part.input_column).cast("string"))
     sub = AggregationPart(part.input_column, Operation.COUNT, {}, part.window, bucket=hv)
     r = _compute_bucketed_part(dfb, keys, sub, rng, spec, dense)
-    m = F.col(sub.output_name)
-    if part.operation == Operation.UNIQUE_COUNT:
-        out_col = F.size(m).cast("long")
-    else:
-        k = part.arg_map.get("k")
-        if k:
-            entries = F.slice(
-                F.array_sort(F.map_entries(m), _cmp_count_desc), 1, int(k)
-            )
-            out_col = F.map_from_entries(entries)
-        else:
-            out_col = m
+    out_col = m = F.col(sub.output_name)
+    k = part.arg_map.get("k")
+    if k:
+        out_col = F.map_from_entries(
+            F.slice(F.array_sort(F.map_entries(m), _cmp_count_desc), 1, int(k))
+        )
     return r.withColumn(part.output_name, out_col).drop(sub.output_name)
 
 
@@ -386,9 +403,6 @@ def _compute_bucketed_hist_part(df, keys, part, rng, spec, dense) -> DataFrame:
     distinct count), per (keys, day) to the outer bucket map. Cost is
     O(distinct (key, day, bucket, value)) with map-side combine, replacing
     the O(distinct^2) HistogramSpec/UniqueCountSpec HOF merges."""
-    from chronon_spark.api import Operation
-    from chronon_spark.operators.agg_registry import _cmp_count_desc
-
     b, col = part.bucket, part.input_column
     hv = f"__hv_{part.output_name}"
     dayed = df.withColumn("__day", _day_expr(df))
@@ -401,17 +415,9 @@ def _compute_bucketed_hist_part(df, keys, part, rng, spec, dense) -> DataFrame:
     # scaffold: (key, day) spine x the key's observed (bucket, value) pairs
     # so windows still emit on days without that exact pair
     if dense:
-        assert rng is not None and rng.start is not None and rng.end is not None, (
-            "dense mode needs a bounded output range"
-        )
-        spark = df.sparkSession
-        days_df = spark.createDataFrame(
-            [(spec.epoch_millis(d) // DAY_MS,) for d in rng.partitions()],
-            "__day long",
-        )
         # key universe from ALL event rows (kernel parity for all-null keys;
         # the spine left-join at the end coalesces them to empty maps)
-        spine = dayed.select(*keys).distinct().crossJoin(F.broadcast(days_df))
+        spine = _dense_spine(dayed, keys, rng, spec)
     else:
         spine = dayed.select(*keys, "__day").distinct()
     kb = dfb.where(F.col(hv).isNotNull()).select(*keys, b, hv).distinct()
@@ -459,10 +465,7 @@ def _compute_bucketed_hist_part(df, keys, part, rng, spec, dense) -> DataFrame:
         .withColumn(PARTITION_COLUMN, _ds_from_day(F.col("__day")))
         .drop("__day")
     )
-    if rng is not None:
-        for clause in rng.where_clauses(spec.column):
-            out = out.where(clause)
-    return out
+    return _in_range(out, rng, spec)
 
 
 def _cmp_utk(a, b):
@@ -490,8 +493,6 @@ def _compute_unique_topk_struct_part(df, keys, part, rng, spec, dense) -> DataFr
     best (sort_key desc, unique_id asc). State stays O(ids/day), the
     windowed merge is a plain max — same asymptotics as the reference's
     bounded insert-with-watermark state."""
-    from chronon_spark.api import AggregationPart, Operation
-
     uid = f"__uid_{part.output_name}"
     sk = f"__sk_{part.output_name}"
     exploded = df.select(
@@ -513,23 +514,25 @@ def _compute_unique_topk_struct_part(df, keys, part, rng, spec, dense) -> DataFr
     return r.withColumn(part.output_name, out_col).drop(sub.output_name)
 
 
-def _densify(daily, keys, rng, spec, partial_names):
-    """Scaffold every (key, day) pair in the output range so window tails
-    materialize on event-free days (Chronon emits rows for all days).
-    Operates on integer day numbers (`__day`)."""
-    spark = daily.sparkSession
+def _dense_spine(df, keys, rng, spec) -> DataFrame:
+    """Every (key, `__day`) pair of the bounded output range, over the keys
+    of `df` — the dense-mode output rows (Chronon emits rows for all days,
+    so window tails materialize on event-free days)."""
     assert rng is not None and rng.start is not None and rng.end is not None, (
         "dense mode needs a bounded output range"
     )
-    days_df = spark.createDataFrame(
+    days_df = df.sparkSession.createDataFrame(
         [(spec.epoch_millis(d) // DAY_MS,) for d in rng.partitions()], "__day long"
     )
-    key_df = daily.select(*keys).distinct()
-    scaffold = key_df.crossJoin(F.broadcast(days_df))
-    # FULL outer: keep the lookback days' partials (outside the output
-    # range) — the window frames need that history — while adding empty
-    # rows for event-free days inside the range.
-    return scaffold.join(daily, keys + ["__day"], "full_outer")
+    return df.select(*keys).distinct().crossJoin(F.broadcast(days_df))
+
+
+def _densify(daily, keys, rng, spec):
+    """Scaffold the dense spine onto the daily partials. FULL outer: keep
+    the lookback days' partials (outside the output range) — the window
+    frames need that history — while adding empty rows for event-free
+    days inside the range."""
+    return _dense_spine(daily, keys, rng, spec).join(daily, keys + ["__day"], "full_outer")
 
 
 def _compute_entity_snapshot(spark, group_by, rng, spec) -> DataFrame:
@@ -539,14 +542,6 @@ def _compute_entity_snapshot(spark, group_by, rng, spec) -> DataFrame:
     UNWINDOWED entity aggregation is the CURRENT day's snapshot state
     (each partition already carries the accumulated world — merging days
     would double-count entities)."""
-    from chronon_spark.api import Operation
-
-    _HIST_LIKE = (
-        Operation.HISTOGRAM,
-        Operation.APPROX_FREQUENT_K,
-        Operation.APPROX_HEAVY_HITTERS_K,
-        Operation.UNIQUE_COUNT,
-    )
     df = _union_sources(spark, group_by, rng, spec)
     keys = group_by.key_columns
     parts = group_by.aggregation_parts()
@@ -587,17 +582,16 @@ def _compute_entity_snapshot(spark, group_by, rng, spec) -> DataFrame:
             daily = daily.withColumn(part.output_name, finalize_rounding(sp.merge(frame), sp))
         out = daily.select(*keys, PARTITION_COLUMN, *[p.output_name for p in plain])
         for p in hist_like:
-            r = _compute_hist_like_part(df, keys, p, rng, spec, dense=False)
+            fn = (_compute_unique_count_part if p.operation == Operation.UNIQUE_COUNT
+                  else _compute_hist_like_part)
+            r = fn(df, keys, p, rng, spec, dense=False)
             out = out.join(r, keys + [PARTITION_COLUMN], "full_outer")
             if p.operation == Operation.UNIQUE_COUNT:
                 out = out.withColumn(
                     p.output_name,
                     F.coalesce(F.col(p.output_name), F.lit(0).cast("long")),
                 )
-    if rng is not None:
-        for clause in rng.where_clauses(spec.column):
-            out = out.where(clause)
-    return _apply_derivations(out, group_by)
+    return _apply_derivations(_in_range(out, rng, spec), group_by)
 
 
 def compute_groupby(

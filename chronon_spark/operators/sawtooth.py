@@ -355,12 +355,6 @@ def _sawtooth_bucketed(event_ts, event_vals, query_ts, part, array_inputs):
     return res
 
 
-def _notnull_mask_obj(vals: np.ndarray) -> np.ndarray:
-    if vals.dtype == object:
-        return np.array([v is not None for v in vals], dtype=bool)
-    return ~np.isnan(vals.astype(np.float64, copy=False))
-
-
 def _utk_struct_index(vals: np.ndarray):
     """Precompute for the UNIQUE_TOP_K struct variant: factorized unique_id
     codes and ORDER RANKS for both fields (ranks order by the actual value,

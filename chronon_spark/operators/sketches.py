@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import math
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -692,9 +692,12 @@ def write_cpc_ir(
     library that ships with Spark (pinned in tests/test_cpc.py), so a
     reference deployment can union/estimate our IR tables and vice
     versa. Values hash exactly as `CpcSketch.update` (long vs string
-    typed like the source column). Same IR-table discipline as the
-    KLL/frequency writers: payload size is O(K), one shuffle on the
-    group keys, raw values never leave the executor."""
+    typed like the source column); any other value type raises
+    ValueError — the library canonicalizes doubles to long bits, so
+    hashing their text would silently diverge on cross-deployment
+    unions. Same IR-table discipline as the KLL/frequency writers:
+    payload size is O(K), one shuffle on the group keys, raw values never
+    leave the executor."""
     from chronon_spark.cpc_sketch import cpc_from_values
 
     out_schema = ", ".join(
@@ -702,8 +705,12 @@ def write_cpc_ir(
         + [f"`{out_col}` binary"]
     )
     group_cols = list(keys) + [ds_col]
-    integral = dict(df.dtypes)[value_col] in (
-        "int", "bigint", "smallint", "tinyint")
+    value_type = dict(df.dtypes)[value_col]
+    integral = value_type in ("int", "bigint", "smallint", "tinyint")
+    if not integral and value_type != "string":
+        raise ValueError(
+            f"write_cpc_ir hashes integral or string values only; "
+            f"{value_col!r} is {value_type}")
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         col = pdf[value_col].dropna()

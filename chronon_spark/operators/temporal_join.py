@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from chronon_spark.api import (
     PARTITION_COLUMN,
     TIME_COLUMN,
-    Accuracy,
     AggregationPart,
     GroupBy,
     Join,
@@ -48,6 +47,8 @@ from chronon_spark.operators.groupby import (
     _union_sources,
     window_days,
 )
+from chronon_spark.operators.sawtooth import sawtooth_aggregate
+from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 
 
 def _temporal_scan_range(group_by, rng, spec) -> Optional[PartitionRange]:
@@ -66,8 +67,6 @@ def _temporal_scan_range(group_by, rng, spec) -> Optional[PartitionRange]:
         return PartitionRange(None, rng.end, spec)  # lifetime: full history
     max_days = max(lookbacks, default=1)
     return PartitionRange(spec.shift(rng.start, -(max_days + 1)), rng.end, spec)
-from chronon_spark.operators.sawtooth import sawtooth_aggregate
-from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 
 _ARRAY_OPS = (
     Operation.FIRST_K,
@@ -308,7 +307,7 @@ def temporal_features(
             .otherwise(F.lit(0)).cast("long"),
         )
         # event at ts serves query chunks floor(ts/span) ..
-        # floor((ts+max_w)/span); emit the distinct chunk ids
+        # floor((ts + max_w + hop)/span); emit the distinct chunk ids
         chunk0 = F.floor(F.col(TIME_COLUMN) / F.lit(span)).cast("long")
         right_df = right_df.withColumn(
             "__salt",
@@ -446,8 +445,8 @@ def temporal_features(
     grouped = left_df.groupBy(l_bucket.alias("__bucket")).cogroup(
         right_slim.groupBy(r_bucket.alias("__bucket"))
     )
-    out = grouped.applyInPandas(kernel, schema=out_schema)
-    return out.drop("__salt") if salt > 1 else out
+    # both salting modes key the cogroup on `__salt`; it is never output
+    return grouped.applyInPandas(kernel, schema=out_schema).drop("__salt")
 
 
 def temporal_self_features(

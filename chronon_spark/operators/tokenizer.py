@@ -36,18 +36,6 @@ END = "</w>"                 # word-end marker (Sennrich convention)
 # driver-side training core (operates on a bounded word-frequency dict)
 # ---------------------------------------------------------------------------
 
-def _pair_stats(vocab: dict) -> tuple[dict, dict]:
-    """pair -> total count, pair -> {word_index} over the symbol-tuple
-    vocab {tuple(symbols): count}."""
-    pairs: dict = {}
-    where: dict = {}
-    for wi, (syms, cnt) in enumerate(vocab.items()):
-        for a, b in zip(syms, syms[1:]):
-            pairs[(a, b)] = pairs.get((a, b), 0) + cnt
-            where.setdefault((a, b), set()).add(wi)
-    return pairs, where
-
-
 def _merge_word(syms: tuple, pair: tuple) -> tuple:
     a, b = pair
     out = []

@@ -8,9 +8,12 @@ Every job is idempotent and partition-granular:
   1. plan  = unfilled_ranges(wanted, existing output partitions)
   2. chunk = each hole split into step_days ranges (bounds shuffle size and
      gives mid-job recovery points)
-  3. run   = compute + dynamic-partition-overwrite write per chunk
-  4. record = one manifest row PER PARTITION with lineage + metrics
-     (north_rule: per-partition lineage and metrics to a manifest table)
+  3. run   = compute + ONE dynamic-partition-overwrite write per chunk —
+     the step's plan runs once, nothing is cached
+  4. record = one manifest row PER PARTITION with lineage + metrics, rows
+     read from the footers of the files the step committed, appended with
+     pyarrow on the driver (north_rule: per-partition lineage and metrics
+     to a manifest table)
 
 Semantic-hash invalidation (reference: JoinUtils.tablesToRecompute,
 JoinUtils.scala:292-305): the job config's hash is stored with the output;
@@ -21,11 +24,15 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import time
+import uuid
 from dataclasses import asdict, dataclass, field, is_dataclass
 from enum import Enum
 from typing import Callable, Optional, Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,6 +53,10 @@ MANIFEST_SCHEMA = (
     "input_start string, input_end string, wall_sec double, "
     "semantic_hash string, run_ts long, status string"
 )
+_MANIFEST_ARROW = pa.schema([
+    (name, {"string": pa.string(), "long": pa.int64(), "double": pa.float64()}[t])
+    for name, t in (f.split() for f in MANIFEST_SCHEMA.split(", "))
+])
 
 
 def agg_aware_hash(config) -> str:
@@ -175,22 +186,25 @@ class BackfillJob:
     # -- manifest ---------------------------------------------------------
     def _record(self, ds_rows: dict[str, int], rng: PartitionRange, wall: float,
                 status: str = "ok") -> None:
+        """Append one manifest row per partition (one `empty` row for a step
+        that wrote nothing) as a parquet file written on the driver with
+        pyarrow — no Spark job. The file lands under a hidden name and is
+        renamed into place, so readers never see a partial file."""
+        if not ds_rows:
+            ds_rows, status = {rng.start or "": 0}, "empty"
         now = int(time.time() * 1000)
         rows = [
-            (self.job_name, self.output_table, ds, int(n), rng.start, rng.end,
-             round(wall, 3), self.sem_hash, now, status)
+            dict(zip(_MANIFEST_ARROW.names, (
+                self.job_name, self.output_table, ds, int(n), rng.start, rng.end,
+                round(wall, 3), self.sem_hash, now, status)))
             for ds, n in sorted(ds_rows.items())
         ]
-        if not rows:
-            rows = [(self.job_name, self.output_table, rng.start or "", rng.start,
-                     rng.end, round(wall, 3), self.sem_hash, now, "empty")]
-            df = self.spark.createDataFrame(
-                [(r[0], r[1], r[2], 0, r[3], r[4], r[5], r[6], r[7], r[8]) for r in rows],
-                MANIFEST_SCHEMA,
-            )
-        else:
-            df = self.spark.createDataFrame(rows, MANIFEST_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.wh.path(MANIFEST_TABLE))
+        root = self.wh.path(MANIFEST_TABLE)
+        os.makedirs(root, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(root, "." + name)
+        pq.write_table(pa.Table.from_pylist(rows, schema=_MANIFEST_ARROW), tmp)
+        os.replace(tmp, os.path.join(root, name))
 
     def manifest(self) -> DataFrame:
         return self.spark.read.parquet(self.wh.path(MANIFEST_TABLE))
@@ -283,24 +297,24 @@ class BackfillJob:
                                 additive_refilled=sorted(additive))
         for hole in holes:
             for step in hole.steps(self.step_days):
-                t0 = time.perf_counter()
-                df = self.compute(step)
-                out = df.cache()
-                per_ds = {
-                    r["ds"]: r["n"]
-                    for r in out.groupBy(self.spec.column)
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .withColumnRenamed(self.spec.column, "ds")
-                    .collect()
-                }
-                self.wh.insert_overwrite(out, self.output_table, cluster_by=self.cluster_by)
-                out.unpersist()
-                wall = time.perf_counter() - t0
-                self._record(per_ds, step, wall)
-                report.steps.append(
-                    StepResult(step, sum(per_ds.values()), round(wall, 3))
-                )
+                report.steps.append(self._run_step(step))
         return report
+
+    def _run_step(self, step: PartitionRange, status: str = "ok") -> StepResult:
+        """compute -> one write -> manifest. Rows per ds come from the
+        footers of the files this step's commit added, so the step's plan
+        runs exactly once and nothing is cached. Only the step's own
+        partitions count: a concurrent writer may commit other partitions
+        of the table meanwhile."""
+        t0 = time.perf_counter()
+        since = self.wh.latest_snapshot_id(self.output_table)
+        self.wh.insert_overwrite(self.compute(step), self.output_table,
+                                 cluster_by=self.cluster_by)
+        per_ds = {ds: n for ds, n in self.wh.rows_added_since(self.output_table, since).items()
+                  if step.start <= ds <= step.end}
+        wall = time.perf_counter() - t0
+        self._record(per_ds, step, wall, status)
+        return StepResult(step, sum(per_ds.values()), round(wall, 3))
 
 
 def groupby_backfill(
@@ -412,15 +426,11 @@ class WatermarkStore:
         self.wh = warehouse
 
     def _path(self, consumer: str, upstream: str) -> str:
-        import os
-
         d = self.wh.path("_watermarks")
         os.makedirs(d, exist_ok=True)
         return os.path.join(d, f"{consumer}__{upstream}.json")
 
     def get(self, consumer: str, upstream: str) -> Optional[dict]:
-        import os
-
         p = self._path(consumer, upstream)
         if not os.path.exists(p):
             return None
@@ -428,8 +438,6 @@ class WatermarkStore:
             return json.load(fh)
 
     def set(self, consumer: str, upstream: str, snapshot_id: int, sem_hash: str) -> None:
-        import os
-
         p = self._path(consumer, upstream)
         tmp = p + ".tmp"
         with open(tmp, "w") as fh:
@@ -485,20 +493,7 @@ def incremental_refresh(
                 d = job.spec.after(d)
         for rng in chunk(sorted(stale), job.spec):
             for step in rng.steps(job.step_days):
-                t0 = time.perf_counter()
-                df = job.compute(step)
-                out = df.cache()
-                per_ds = {
-                    r["ds"]: r["n"]
-                    for r in out.groupBy(job.spec.column)
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .withColumnRenamed(job.spec.column, "ds")
-                    .collect()
-                }
-                wh.insert_overwrite(out, job.output_table)
-                out.unpersist()
-                job._record(per_ds, step, time.perf_counter() - t0,
-                            status="refreshed")
+                job._run_step(step, status="refreshed")
                 refreshed.append(step)
     report = job.run(start, end)
     wm.set(job.output_table, upstream_table, latest, job.sem_hash)

@@ -301,6 +301,22 @@ class ParquetWarehouse:
         snaps = self.snapshots(table)
         return snaps[-1]["snapshot_id"] if snaps else 0
 
+    def rows_added_since(self, table: str, snapshot_id: int) -> dict[str, int]:
+        """Rows per partition in the data files that overwrite commits
+        after `snapshot_id` added, read from their parquet footers on the
+        driver — no data scan, no Spark job (Iceberg keeps the same number
+        as each manifest entry's record_count)."""
+        import pyarrow.parquet as pq
+
+        out: dict[str, int] = {}
+        for s in self.snapshots(table):
+            if s["snapshot_id"] > snapshot_id and s["operation"] == "overwrite":
+                for f in s["added_files"]:
+                    ds = self._partition_of(f)
+                    n = pq.read_metadata(os.path.join(self.path(table), f)).num_rows
+                    out[ds] = out.get(ds, 0) + n
+        return out
+
     def _commit_snapshot(
         self,
         table: str,

@@ -19,6 +19,7 @@ from chronon_spark.api import (
 )
 from chronon_spark.partitions import PartitionRange
 from chronon_spark.plans.backfill import (
+    MANIFEST_SCHEMA,
     MANIFEST_TABLE,
     groupby_backfill,
     join_backfill,
@@ -77,6 +78,84 @@ def test_backfill_writes_partitions_and_manifest(spark, wh, events_path):
     assert all(r["status"] == "ok" for r in man.collect())
     # chunked into ceil(12/5)=3 steps
     assert len(rep.steps) == 3
+
+
+def test_backfill_step_single_pass_and_footer_counts(spark, tmp_path, events_path):
+    """A step writes its DataFrame once, uncached, and the manifest rows
+    per ds (read from the committed files' footers) equal a data count."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    writes = []
+
+    class Probe(ParquetWarehouse):
+        def insert_overwrite(self, df, table, cluster_by=None):
+            writes.append((df.is_cached,
+                           spark.sparkContext._jsc.getPersistentRDDs().size()))
+            super().insert_overwrite(df, table, cluster_by=cluster_by)
+
+    wh = Probe(spark, str(tmp_path / "warehouse"))
+    job = groupby_backfill(spark, wh, _gb(events_path), "g_out", step_days=5,
+                           cluster_by=["user_id"])
+    rep = job.run("2024-01-03", "2024-01-14")
+    assert writes == [(False, persisted)] * 3
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    counted = {r["ds"]: r["count"]
+               for r in wh.read("g_out").groupBy("ds").count().collect()}
+    man = {r["ds"]: r["rows"] for r in job.manifest().collect()}
+    assert man == counted
+    assert rep.rows_written == sum(counted.values())
+
+
+def test_step_counts_ignore_concurrent_commits(spark, tmp_path, events_path):
+    """Another writer committing a different partition while a step writes
+    must not leak into that step's manifest rows."""
+    foreign = spark.createDataFrame([(1, 2.0, "2024-02-01")], "user_id int, v double, ds string")
+
+    class Concurrent(ParquetWarehouse):
+        def insert_overwrite(self, df, table, cluster_by=None):
+            super().insert_overwrite(df, table, cluster_by=cluster_by)
+            super().insert_overwrite(foreign, table)
+
+    wh = Concurrent(spark, str(tmp_path / "warehouse"))
+    job = groupby_backfill(spark, wh, _gb(events_path), "g_out", step_days=5)
+    job.run("2024-01-03", "2024-01-04")
+    man = {r["ds"]: r["rows"] for r in job.manifest().collect()}
+    counted = {r["ds"]: r["count"] for r in wh.read("g_out").where("ds < '2024-02-01'")
+               .groupBy("ds").count().collect()}
+    assert man == counted and set(man) == {"2024-01-03", "2024-01-04"}
+
+
+def test_manifest_record_runs_no_spark_job(spark, wh):
+    """`_record` appends the manifest on the driver: zero Spark jobs, and
+    the file reads back together with Spark-written manifest files."""
+    sc = spark.sparkContext
+    job = groupby_backfill(spark, wh, _gb("unused"), "g_out")
+    spark.createDataFrame(
+        [("old", "g_out", "2024-01-01", 5, "2024-01-01", "2024-01-01", 1.0, "h", 1, "ok")],
+        MANIFEST_SCHEMA,
+    ).write.parquet(wh.path(MANIFEST_TABLE))
+    sc.setJobGroup("manifest-record", "manifest append")
+    try:
+        job._record({"2024-01-02": 7, "2024-01-03": 0},
+                    PartitionRange("2024-01-02", "2024-01-03"), 0.5)
+        job._record({}, PartitionRange("2024-01-04", "2024-01-04"), 0.1,
+                    status="refreshed")
+        assert list(sc.statusTracker().getJobIdsForGroup("manifest-record")) == []
+        rows = sorted(tuple(r) for r in
+                      job.manifest().select("ds", "rows", "status").collect())
+        assert list(sc.statusTracker().getJobIdsForGroup("manifest-record"))  # probe sees jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == [("2024-01-01", 5, "ok"), ("2024-01-02", 7, "ok"),
+                    ("2024-01-03", 0, "ok"), ("2024-01-04", 0, "empty")]
+    assert job.manifest().schema == spark.createDataFrame([], MANIFEST_SCHEMA).schema
+
+
+def test_empty_step_records_empty_status(spark, wh, events_path):
+    job = groupby_backfill(spark, wh, _gb(events_path), "g_out", step_days=5)
+    rep = job.run("2024-03-01", "2024-03-02")
+    assert rep.rows_written == 0
+    man = [(r["ds"], r["rows"], r["status"]) for r in job.manifest().collect()]
+    assert man == [("2024-03-01", 0, "empty")]
 
 
 def test_backfill_resume_only_missing(spark, wh, events_path):

@@ -173,6 +173,26 @@ def test_spark_ir_surface(spark):
     assert ours == jb
 
 
+def test_spark_ir_rejects_fractional_values(spark):
+    """datasketches-java `update(double)` hashes the canonicalized long
+    bits, not the text; hashing str(value) would diverge from a
+    reference deployment's sketches, so fractional value columns raise
+    instead of producing silently incompatible payloads."""
+    from pyspark.sql import functions as F
+
+    from chronon_spark.operators.sketches import write_cpc_ir
+
+    df = spark.createDataFrame(
+        [("a", "2024-01-01", 1.5)], "k string, ds string, v double"
+    ).withColumn("f", F.col("v").cast("float")).withColumn(
+        "d", F.col("v").cast("decimal(10,2)"))
+    for col in ("v", "f", "d"):
+        with pytest.raises(ValueError, match="integral or string"):
+            write_cpc_ir(df, ["k"], col)
+    assert write_cpc_ir(df.withColumn("s", F.col("v").cast("string")),
+                        ["k"], "s").count() == 1
+
+
 def test_nosv_format_roundtrip(spark):
     """Formats 4 (PINNED_SLIDING_MERGED_NOSV): a coupon matrix whose
     rows are exactly default-low-bits | window byte leaves ZERO

@@ -31,6 +31,8 @@ WATCHED = [
     "spark.sql.sources.partitionColumnTypeInference.enabled",
     "spark.sql.sources.partitionOverwriteMode",
     "spark.chronon.join.salt",
+    "spark.chronon.join.salt.keys",
+    "spark.chronon.join.salt.time_days",
     "spark.chronon.backfill.small_mode.cutoff",
     "spark.chronon.backfill.bloom.min_right_bytes",
     "spark.sql.session.timeZone",

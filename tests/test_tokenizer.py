@@ -138,13 +138,15 @@ def test_unicode_whitespace_train_apply_consistency(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({
             "doc_id": ["a", "b", "c"],
-            "text": ["foo bar foo bar",
-                     "foo bar baz",
-                     "  foo\tbar "],
+            "text": ["foo\u00a0bar foo bar",
+                     "foo\u2028bar\u2009baz",
+                     "\u00a0 foo\tbar\u00a0"],
         })
     )
     wc = {r.word: r.cnt
           for r in _word_counts_df(docs, "text", lowercase=True).collect()}
+    texts = "".join(r.text for r in docs.collect())
+    assert "\u00a0" in texts and "\u2028" in texts
     assert wc == {"foo": 4, "bar": 4, "baz": 1}
 
     model = train_bpe(docs, num_merges=10, max_words=100)

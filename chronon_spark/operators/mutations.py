@@ -59,9 +59,9 @@ from chronon_spark.operators.sawtooth import _naive_one
 from chronon_spark.operators.temporal_join import (
     _emit,
     _empty_feature,
+    _kernel_columns,
     _np_col,
     _segment_codes,
-    output_sql_type,
 )
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 
@@ -449,34 +449,29 @@ def temporal_entity_features(
     right_keys: list[str],
     parts: list[AggregationPart],
     prefix: str = "",
-    time_col: str = TIME_COLUMN,
-    buckets: Optional[int] = None,
 ) -> DataFrame:
     """Enrich left rows with mutation-replayed point-in-time features.
 
+    left_df: any columns + `ts` (epoch millis long) + left_keys.
     snapshot_df: keys + ts + value cols + ds (partition d = state at end
     of day d). mutation_df: keys + ts + value cols + mutation_ts +
-    is_before. All left columns pass through.
+    is_before. Returns left_df columns + one `{prefix}{output_name}`
+    column per part.
+
+    Group state is day-bounded (the day is in the cogroup hash), so the
+    bucket count only needs to cover the cluster: 4x parallelism, at
+    least 64, balances per-group Arrow overhead against skew headroom
+    (spark.chronon.mutations.buckets overrides).
     """
     spark = left_df.sparkSession
-    if buckets is None:
-        # group state is day-bounded (day is in the hash), so buckets only
-        # need to cover the cluster: 4x parallelism balances per-group
-        # Arrow overhead against skew headroom (conf-overridable)
-        buckets = int(
-            spark.conf.get(
-                "spark.chronon.mutations.buckets",
-                str(max(64, 4 * spark.sparkContext.defaultParallelism)),
-            )
+    buckets = int(
+        spark.conf.get(
+            "spark.chronon.mutations.buckets",
+            str(max(64, 4 * spark.sparkContext.defaultParallelism)),
         )
-    right_types = dict(snapshot_df.dtypes)
-    input_cols = sorted(
-        {p.input_column for p in parts} | {p.bucket for p in parts if p.bucket}
     )
-    feature_fields = [
-        (f"{prefix}{p.output_name}", output_sql_type(p, right_types[p.input_column]))
-        for p in parts
-    ]
+    right_types = dict(snapshot_df.dtypes)
+    input_cols, _, _, feature_fields = _kernel_columns(right_types, parts, prefix)
 
     # snapshot partition d serves queries of day d+1
     snap = snapshot_df.select(
@@ -498,7 +493,7 @@ def temporal_entity_features(
     )
     right = snap.unionByName(mut)
 
-    left_q = left_df.withColumn(_QDAY, F.expr(f"{time_col} DIV {DAY_MS}"))
+    left_q = left_df.withColumn(_QDAY, F.expr(f"{TIME_COLUMN} DIV {DAY_MS}"))
     left_cols = [f.name for f in left_df.schema.fields]
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in left_df.schema.fields]
@@ -525,7 +520,7 @@ def temporal_entity_features(
                 out[name] = _empty_feature(part, sql_type, nq)
             return out
         lcode, rcode = _segment_codes(lpdf, rpdf, seg_l, seg_r, seg_types)
-        lts = lpdf[time_col].to_numpy().astype(np.int64)
+        lts = lpdf[TIME_COLUMN].to_numpy().astype(np.int64)
         rorder = np.argsort(rcode, kind="stable")
         rcode_s = rcode[rorder]
         rts_s = rpdf[TIME_COLUMN].to_numpy().astype(np.int64)[rorder]

@@ -272,69 +272,56 @@ def _sawtooth_mapcol(event_ts, event_vals, query_ts, part):
     """map<string, V> input: aggregate each map key's values independently
     -> map output (reference: MapColumnAggregator).
 
-    Explodes the dicts ONCE into (ts, key, value) triples, factorizes the
-    keys and segments with a stable argsort — O(entries log entries) total
-    instead of O(|keys| x n_events) per-key scans."""
+    Explodes the dicts ONCE into (ts, key, value) triples and factorizes
+    the keys — O(entries log entries) total instead of O(|keys| x
+    n_events) per-key scans."""
     import pandas as pd
 
-    nq = len(query_ts)
-    dicts = event_vals[part.input_column]
     ts_list, key_list, val_list = [], [], []
-    for j, d in enumerate(dicts):
+    for t, d in zip(event_ts.tolist(), event_vals[part.input_column]):
         if d is None:
             continue
-        t = event_ts[j]
         for k, v in d.items():
             ts_list.append(t)
             key_list.append(k)
             val_list.append(v)
-    sub = AggregationPart(
-        part.input_column, part.operation, dict(part.arg_map), part.window, None
+    codes, uniq = pd.factorize(np.array(key_list, dtype=object))
+    return _sawtooth_grouped(
+        np.array(ts_list, dtype=np.int64), codes, uniq,
+        np.array(val_list, dtype=object), query_ts, part, set(),
     )
-    maps: list[dict] = [dict() for _ in range(nq)]
-    if key_list:
-        flat_ts = np.array(ts_list, dtype=np.int64)
-        flat_vals = np.array(val_list, dtype=object)
-        codes, uniq = pd.factorize(np.array(key_list, dtype=object))
-        order = np.argsort(codes, kind="stable")  # ts order kept per key
-        oc = codes[order]
-        bounds = np.flatnonzero(np.diff(oc, prepend=oc[0] - 1))
-        bounds = np.append(bounds, len(oc))
-        for seg in range(len(bounds) - 1):
-            sel = order[bounds[seg]:bounds[seg + 1]]
-            k = uniq[oc[bounds[seg]]]
-            r = _sawtooth_plain(
-                flat_ts[sel], {part.input_column: flat_vals[sel]},
-                query_ts, [sub], set(),
-            )[sub.output_name]
-            _fill_maps(maps, k, r, part.operation, nq)
-    res = np.full(nq, None, dtype=object)
-    res[:] = maps
-    return res
 
 
 def _sawtooth_bucketed(event_ts, event_vals, query_ts, part, array_inputs):
     """Per-bucket sub-aggregation -> map output. Bucket column must be
-    string (reference: RowAggregator.scala:42-48).
-
-    Buckets are factorized once and segmented with a stable argsort
-    (events stay time-sorted inside each segment) — O(n log n) total
-    instead of the O(|buckets| x n_events) per-bucket boolean masks."""
+    string (reference: RowAggregator.scala:42-48), so bucket values are
+    stringified before they are factorized."""
     import pandas as pd
 
+    bstr = np.array(
+        [None if b is None or b != b else str(b)
+         for b in event_vals[part.bucket].tolist()],
+        dtype=object,
+    )
+    codes, uniq = pd.factorize(bstr)  # nulls -> -1
+    return _sawtooth_grouped(
+        event_ts, codes, uniq, event_vals[part.input_column], query_ts, part,
+        array_inputs,
+    )
+
+
+def _sawtooth_grouped(ts, codes, uniq, vals, query_ts, part, array_inputs):
+    """Shared tail of the bucketed and map-input parts: aggregate each
+    group's events (code c, labelled uniq[c]) separately and fill the
+    per-query output maps {label: value}. `ts` is time-sorted; a stable
+    argsort segments the codes, so events stay time-sorted inside each
+    segment — O(n log n) total instead of O(|groups| x n_events) boolean
+    masks. Code -1 (null bucket) is skipped."""
     nq = len(query_ts)
-    bvals = event_vals[part.bucket]
     sub = AggregationPart(
         part.input_column, part.operation, dict(part.arg_map), part.window, None
     )
     maps: list[dict] = [dict() for _ in range(nq)]
-    bstr = np.array(
-        [None if b is None else str(b) for b in bvals.tolist()], dtype=object
-    ) if bvals.dtype == object else np.array(
-        [None if b != b else str(b) for b in bvals.tolist()], dtype=object
-    )
-    codes, uniq = pd.factorize(bstr)  # nulls -> -1
-    vals_in = event_vals[part.input_column]
     order = np.argsort(codes, kind="stable")
     oc = codes[order]
     first_nn = int(np.searchsorted(oc, 0, side="left"))  # skip the -1 block
@@ -344,12 +331,11 @@ def _sawtooth_bucketed(event_ts, event_vals, query_ts, part, array_inputs):
         bounds = np.append(bounds, len(oc))
         for seg in range(len(bounds) - 1):
             sel = order[bounds[seg]:bounds[seg + 1]]
-            b = uniq[oc[bounds[seg]]]
             r = _sawtooth_plain(
-                event_ts[sel], {part.input_column: vals_in[sel]},
-                query_ts, [sub], array_inputs,
+                ts[sel], {part.input_column: vals[sel]}, query_ts, [sub],
+                array_inputs,
             )[sub.output_name]
-            _fill_maps(maps, b, r, part.operation, nq)
+            _fill_maps(maps, uniq[oc[bounds[seg]]], r, part.operation, nq)
     res = np.full(nq, None, dtype=object)
     res[:] = maps
     return res

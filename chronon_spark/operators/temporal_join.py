@@ -18,10 +18,11 @@ cogroup-apply is exactly union+groupBy at the shuffle level — each side is
 hash-partitioned by key ONCE, co-located, and handed to the vectorized
 kernel as Arrow batches; there is no join explosion and no per-row Python.
 Skew controls: AQE on; the bucket-hash grouping is itself a generalized
-salt (hot keys share buckets with other keys); for a single MONSTER key,
-``spark.chronon.join.salt = S`` splits its left rows across S kernel
-groups by replicating the right side S times (exact results, verified by
-test_salted_join_matches_unsalted).
+salt (hot keys share buckets with other keys); hot keys named in
+``spark.chronon.join.salt.keys`` can additionally be split across kernel
+groups by hash (``salt``) or by time chunk (``salt.time_days``) — see
+`_salt_hot_keys` (exact results, verified by the temporal_join_salted
+gate query and test_composite_skew).
 """
 
 from __future__ import annotations
@@ -218,74 +219,135 @@ def _segment_codes(
     return lcode, rcode
 
 
-def temporal_features(
+_NUMERIC_BUF = ("double", "bigint", "int", "smallint")
+
+
+def _join_buckets(spark: SparkSession) -> int:
+    """Cogroup bucket count: spark.chronon.join.buckets, default 8x the
+    shuffle partitions — at cluster scale size it so a bucket's rows fit
+    executor memory."""
+    return int(
+        spark.conf.get(
+            "spark.chronon.join.buckets",
+            str(8 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))),
+        )
+    )
+
+
+def _kernel_columns(types: dict, parts: list[AggregationPart], prefix: str = ""):
+    """What a kernel reads and writes: the sorted input columns (values and
+    buckets), the array- and map-typed ones among them, and one
+    (name, sql type) per feature column."""
+    input_cols = sorted(
+        {p.input_column for p in parts} | {p.bucket for p in parts if p.bucket}
+    )
+    array_inputs = {c for c in input_cols if types[c].startswith("array<")}
+    map_inputs = {c for c in input_cols if types[c].startswith("map<")}
+    feature_fields = [
+        (f"{prefix}{p.output_name}", output_sql_type(p, types[p.input_column]))
+        for p in parts
+    ]
+    return input_cols, array_inputs, map_inputs, feature_fields
+
+
+def _sawtooth_by_key(
+    qcode: np.ndarray,
+    qts: np.ndarray,
+    ecode: np.ndarray,
+    ets: np.ndarray,
+    evals: dict[str, np.ndarray],
+    parts: list[AggregationPart],
+    feature_fields: list[tuple[str, str]],
+    array_inputs: set[str],
+    map_inputs: set[str],
+) -> dict[str, np.ndarray]:
+    """The per-key sawtooth loop shared by the join and self kernels.
+
+    Queries (qcode, qts) and events (ecode, ets, evals) are each sorted by
+    (key code, ts). Every query key's event range comes from one
+    searchsorted over all segment codes; `sawtooth_aggregate` then runs
+    once per query key on array views. Returns feature name -> buffer
+    aligned with the sorted queries: numeric features accumulate in
+    float64 (NaN = null, exact for int64 < 2^53) so emit stays
+    vectorized; arrays, maps and strings use object buffers."""
+    nq = len(qts)
+    outs = {
+        name: np.full(nq, np.nan) if t in _NUMERIC_BUF else np.full(nq, None, dtype=object)
+        for name, t in feature_fields
+    }
+    if nq == 0:
+        return outs
+    starts = np.flatnonzero(np.diff(qcode, prepend=qcode[0] - 1))
+    ends = np.append(starts[1:], nq)
+    e0 = np.searchsorted(ecode, qcode[starts], side="left")
+    e1 = np.searchsorted(ecode, qcode[starts], side="right")
+    names = [(name, part.output_name) for (name, _), part in zip(feature_fields, parts)]
+    for s, e, r0, r1 in zip(starts.tolist(), ends.tolist(), e0.tolist(), e1.tolist()):
+        feats = sawtooth_aggregate(
+            ets[r0:r1],
+            {c: v[r0:r1] for c, v in evals.items()},
+            qts[s:e],
+            parts,
+            array_inputs=array_inputs,
+            map_inputs=map_inputs,
+        )
+        for name, out_name in names:
+            vals = feats[out_name]
+            buf = outs[name]
+            if buf.dtype != object and vals.dtype == object:
+                vals = np.array([np.nan if v is None else v for v in vals], dtype=np.float64)
+            buf[s:e] = vals
+    return outs
+
+
+def _salt_hot_keys(
+    spark: SparkSession,
     left_df: DataFrame,
     right_df: DataFrame,
     left_keys: list[str],
     right_keys: list[str],
     parts: list[AggregationPart],
-    prefix: str = "",
-    time_col: str = TIME_COLUMN,
-    buckets: Optional[int] = None,
-) -> DataFrame:
-    """Enrich every left row with point-in-time features from right_df.
+):
+    """Targeted hot-key salting: the keys named in
+    spark.chronon.join.salt.keys (comma-separated values of the FIRST join
+    key) get a `__salt` cogroup key so their rows spread over several
+    kernel groups; every other key takes salt 0, the plain path.
 
-    left_df: any columns + `time_col` (epoch millis long) + left_keys.
-    right_df: right_keys + ts + the parts' input columns.
-    Returns left_df columns + one `{prefix}{output_name}` column per part.
-    All left columns pass through, so duplicate left rows are preserved
-    (reference duplicates the left in tests: EventsEventsTemporalTest.scala:75-76).
+    * ``spark.chronon.join.salt = S`` (QUERY-heavy keys): a hot key's left
+      rows spread over S salts by a ts-derived hash and only its right rows
+      replicate S times. Measured 2.03x on a 32M-row join whose viral key
+      holds 1/3 of the queries (16 cores).
+    * ``spark.chronon.join.salt.time_days = D`` (EVENT-heavy keys, where
+      every hash slice would re-process all the key's events): the hot
+      key's queries shard by ts into D-day chunks and each event
+      replicates only into the chunks whose queries can see it, so
+      per-chunk input is the chunk's own traffic plus one window of
+      lookback. Needs every part windowed. Measured 1.46x.
 
-    Physical plan: both sides are cogrouped on `pmod(xxhash64(keys),
-    buckets)` — NOT on the raw key — and the kernel processes every key in
-    the bucket from one Arrow batch. PySpark's cogroup serde costs
-    milliseconds PER GROUP, so per-key grouping caps throughput at a few
-    hundred groups/sec/core; bucketing amortizes that over thousands of
-    keys while the per-key sawtooth still runs on zero-copy array views.
-    `buckets` defaults to 8x shuffle partitions (conf
-    spark.chronon.join.buckets overrides) — at cluster scale size it so a
-    bucket's rows fit executor memory.
-    """
-    spark = left_df.sparkSession
-    if buckets is None:
-        buckets = int(
-            spark.conf.get(
-                "spark.chronon.join.buckets",
-                str(8 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))),
-            )
-        )
-    # hot-key salting (spark.chronon.join.salt = S > 1): left rows spread
-    # over S salts by a ts-derived hash; the right side is REPLICATED S
-    # times and (key, salt) becomes the cogroup key — a monster key's left
-    # rows split across S kernel groups at the cost of S x right events
-    # for that key. With spark.chronon.join.salt.keys set (comma-separated
-    # values of the FIRST join key), only those hot keys are split and
-    # only THEIR right rows replicate — the scalable mode: a global salt
-    # multiplies the whole right shuffle by S (measured 5x SLOWER on a
-    # 32M-row join with one 3% monster key), targeted salting pays the
-    # replication only where the skew is. Exactness is oracle-pinned
-    # either way (temporal_join_salted gate query,
-    # test_salted_join_matches_unsalted).
+    Either mode without salt.keys, or both together, raises ValueError.
+    salt.keys is required because salting EVERY key replicates the whole
+    right side S times: on a 32M-row join with one 3% key that was ~1.5x
+    slower than no salting (best pass 67.2 s vs 44.3 s, same session).
+    Returns the (possibly salted) frames and key lists."""
     salt = int(spark.conf.get("spark.chronon.join.salt", "1"))
-    # EVENT-heavy hot keys (spark.chronon.join.salt.time_days = D, with
-    # salt.keys): query-side salting cannot help a key whose EVENT
-    # history dominates (every salt slice re-processes all its events —
-    # measured flat on the 32M-row torture). When every part is
-    # WINDOWED, time-sharding solves it exactly: the hot key's queries
-    # shard by ts into D-day chunks and each event replicates into at
-    # most ceil(max_window/D)+1 chunks (the only ones whose queries can
-    # see it) — per-chunk kernel input is bounded by the chunk's own
-    # traffic plus one window of lookback, regardless of total history.
-    time_days = int(spark.conf.get("spark.chronon.join.salt.time_days",
-                                   "0"))
+    time_days = int(spark.conf.get("spark.chronon.join.salt.time_days", "0"))
+    if salt <= 1 and time_days <= 0:
+        return left_df, right_df, left_keys, right_keys
+    if salt > 1 and time_days > 0:
+        raise ValueError(
+            "spark.chronon.join.salt and spark.chronon.join.salt.time_days "
+            "are exclusive salting modes; set one")
+    salt_keys = [
+        s for s in spark.conf.get("spark.chronon.join.salt.keys", "").split(",")
+        if s != ""
+    ]
+    if not salt_keys:
+        raise ValueError(
+            "spark.chronon.join.salt and spark.chronon.join.salt.time_days "
+            "require spark.chronon.join.salt.keys")
+    l_hot = F.col(left_keys[0]).cast("string").isin(salt_keys)
+    r_hot = F.col(right_keys[0]).cast("string").isin(salt_keys)
     if time_days > 0:
-        salt_keys = [
-            s for s in spark.conf.get(
-                "spark.chronon.join.salt.keys", "").split(",") if s != ""
-        ]
-        if not salt_keys:
-            raise ValueError(
-                "spark.chronon.join.salt.time_days requires salt.keys")
         unbounded = [p.output_name for p in parts if p.window is None]
         if unbounded:
             raise ValueError(
@@ -299,69 +361,61 @@ def temporal_features(
         # window size), so the visibility horizon is max_w + hop, not
         # max_w — bound with a full day to stay safe for all hops
         reps = (max_w + 86_400_000) // span + 2
-        l_hot = F.col(left_keys[0]).cast("string").isin(salt_keys)
-        r_hot = F.col(right_keys[0]).cast("string").isin(salt_keys)
-        left_df = left_df.withColumn(
-            "__salt",
-            F.when(l_hot, F.floor(F.col(time_col) / F.lit(span)))
-            .otherwise(F.lit(0)).cast("long"),
+        l_salt = (
+            F.when(l_hot, F.floor(F.col(TIME_COLUMN) / F.lit(span)))
+            .otherwise(F.lit(0)).cast("long")
         )
-        # event at ts serves query chunks floor(ts/span) ..
-        # floor((ts + max_w + hop)/span); emit the distinct chunk ids
         chunk0 = F.floor(F.col(TIME_COLUMN) / F.lit(span)).cast("long")
-        right_df = right_df.withColumn(
-            "__salt",
-            F.explode(F.when(
-                r_hot,
-                F.array_distinct(F.array(*[
-                    chunk0 + F.lit(i).cast("long") for i in range(reps)
-                ])),
-            ).otherwise(F.array(F.lit(0).cast("long")))),
+        r_salts = F.array_distinct(
+            F.array(*[chunk0 + F.lit(i).cast("long") for i in range(reps)])
         )
-        left_keys = list(left_keys) + ["__salt"]
-        right_keys = list(right_keys) + ["__salt"]
-    elif salt > 1:
-        salt_keys = [
-            s for s in spark.conf.get(
-                "spark.chronon.join.salt.keys", "").split(",") if s != ""
-        ]
-        all_salts = F.array(*[F.lit(i).cast("long") for i in range(salt)])
-        if salt_keys:
-            l_hot = F.col(left_keys[0]).cast("string").isin(salt_keys)
-            r_hot = F.col(right_keys[0]).cast("string").isin(salt_keys)
-            left_df = left_df.withColumn(
-                "__salt",
-                F.when(
-                    l_hot,
-                    F.pmod(F.xxhash64(*[F.col(k) for k in left_keys],
-                                      F.col(time_col)), F.lit(salt)),
-                ).otherwise(F.lit(0).cast("long")),
-            )
-            right_df = right_df.withColumn(
-                "__salt",
-                F.explode(F.when(r_hot, all_salts)
-                          .otherwise(F.array(F.lit(0).cast("long")))),
-            )
-        else:
-            left_df = left_df.withColumn(
-                "__salt",
-                F.pmod(F.xxhash64(*[F.col(k) for k in left_keys],
-                                  F.col(time_col)), F.lit(salt)),
-            )
-            right_df = right_df.withColumn("__salt", F.explode(all_salts))
-        left_keys = list(left_keys) + ["__salt"]
-        right_keys = list(right_keys) + ["__salt"]
-    right_types = dict(right_df.dtypes)
-    left_types = dict(left_df.dtypes)
-    input_cols = sorted(
-        {p.input_column for p in parts} | {p.bucket for p in parts if p.bucket}
+    else:
+        l_salt = F.when(
+            l_hot,
+            F.pmod(F.xxhash64(*[F.col(k) for k in left_keys], F.col(TIME_COLUMN)),
+                   F.lit(salt)),
+        ).otherwise(F.lit(0).cast("long"))
+        r_salts = F.array(*[F.lit(i).cast("long") for i in range(salt)])
+    left_df = left_df.withColumn("__salt", l_salt)
+    right_df = right_df.withColumn(
+        "__salt",
+        F.explode(F.when(r_hot, r_salts).otherwise(F.array(F.lit(0).cast("long")))),
     )
-    array_inputs = {c for c in input_cols if right_types[c].startswith("array<")}
-    map_inputs = {c for c in input_cols if right_types[c].startswith("map<")}
-    feature_fields = [
-        (f"{prefix}{p.output_name}", output_sql_type(p, right_types[p.input_column]))
-        for p in parts
-    ]
+    return left_df, right_df, list(left_keys) + ["__salt"], list(right_keys) + ["__salt"]
+
+
+def temporal_features(
+    left_df: DataFrame,
+    right_df: DataFrame,
+    left_keys: list[str],
+    right_keys: list[str],
+    parts: list[AggregationPart],
+    prefix: str = "",
+) -> DataFrame:
+    """Enrich every left row with point-in-time features from right_df.
+
+    left_df: any columns + `ts` (epoch millis long) + left_keys.
+    right_df: right_keys + ts + the parts' input columns.
+    Returns left_df columns + one `{prefix}{output_name}` column per part.
+    All left columns pass through, so duplicate left rows are preserved
+    (reference duplicates the left in tests: EventsEventsTemporalTest.scala:75-76).
+
+    Physical plan: both sides are cogrouped on `pmod(xxhash64(keys),
+    buckets)` — NOT on the raw key — and the kernel processes every key in
+    the bucket from one Arrow batch. PySpark's cogroup serde costs
+    milliseconds PER GROUP, so per-key grouping caps throughput at a few
+    hundred groups/sec/core; bucketing amortizes that over thousands of
+    keys while the per-key sawtooth still runs on zero-copy array views.
+    The bucket count comes from `_join_buckets`; hot keys may be salted
+    (`_salt_hot_keys`).
+    """
+    spark = left_df.sparkSession
+    buckets = _join_buckets(spark)
+    left_df, right_df, left_keys, right_keys = _salt_hot_keys(
+        spark, left_df, right_df, left_keys, right_keys, parts)
+    right_types = dict(right_df.dtypes)
+    input_cols, array_inputs, map_inputs, feature_fields = _kernel_columns(
+        right_types, parts, prefix)
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in left_df.schema.fields]
         + [f"`{n}` {t}" for n, t in feature_fields]
@@ -394,52 +448,19 @@ def temporal_features(
             lpdf, rpdf, left_keys, right_keys,
             [right_types[rk] for rk in right_keys],
         )
-        # sort each side by (key, ts); all per-key work happens on views
-        lts = lpdf[time_col].to_numpy().astype(np.int64)
+        lts = lpdf[TIME_COLUMN].to_numpy().astype(np.int64)
         rts = rpdf[TIME_COLUMN].to_numpy().astype(np.int64)
         lorder = np.lexsort((lts, lcode))
         rorder = np.lexsort((rts, rcode))
-        lcode_s, lts_s = lcode[lorder], lts[lorder]
-        rcode_s, rts_s = rcode[rorder], rts[rorder]
-        evals = {c: _np_col(rpdf, c, right_types[c])[rorder] for c in input_cols}
-        # typed buffers: numeric features accumulate in float64 (NaN=null,
-        # exact for int64 < 2^53) so emit stays fully vectorized; complex
-        # types (arrays/maps/strings) use object buffers
-        outs = {
-            name: (
-                np.full(nq, np.nan)
-                if t in ("double", "bigint", "int", "smallint")
-                else np.full(nq, None, dtype=object)
-            )
-            for name, t in feature_fields
-        }
-        # per-key segments (contiguous after the sorts)
-        l_bounds = np.flatnonzero(np.diff(lcode_s, prepend=lcode_s[0] - 1))
-        l_bounds = np.append(l_bounds, nq)
-        for seg in range(len(l_bounds) - 1):
-            s, e = l_bounds[seg], l_bounds[seg + 1]
-            code = lcode_s[s]
-            r0 = np.searchsorted(rcode_s, code, side="left")
-            r1 = np.searchsorted(rcode_s, code, side="right")
-            feats = sawtooth_aggregate(
-                rts_s[r0:r1],
-                {c: v[r0:r1] for c, v in evals.items()},
-                lts_s[s:e],
-                parts,
-                array_inputs=array_inputs,
-                map_inputs=map_inputs,
-            )
-            pos = lorder[s:e]
-            for (name, t), part in zip(feature_fields, parts):
-                vals_out = feats[part.output_name]
-                if outs[name].dtype == object:
-                    outs[name][pos] = np.asarray(vals_out, dtype=object)
-                else:
-                    outs[name][pos] = np.asarray(
-                        [np.nan if v is None else v for v in vals_out], dtype=np.float64
-                    ) if np.asarray(vals_out).dtype == object else vals_out
-        for (name, sql_type), part in zip(feature_fields, parts):
-            out[name] = _emit(outs[name], sql_type)
+        bufs = _sawtooth_by_key(
+            lcode[lorder], lts[lorder], rcode[rorder], rts[rorder],
+            {c: _np_col(rpdf, c, right_types[c])[rorder] for c in input_cols},
+            parts, feature_fields, array_inputs, map_inputs,
+        )
+        for name, sql_type in feature_fields:
+            buf = np.empty_like(bufs[name])
+            buf[lorder] = bufs[name]
+            out[name] = _emit(buf, sql_type)
         return out
 
     grouped = left_df.groupBy(l_bucket.alias("__bucket")).cogroup(
@@ -453,14 +474,12 @@ def temporal_self_features(
     df: DataFrame,
     keys: list[str],
     parts: list[AggregationPart],
-    time_col: str = TIME_COLUMN,
-    buckets: Optional[int] = None,
     query_lo: Optional[int] = None,
     query_hi: Optional[int] = None,
 ) -> DataFrame:
     """TEMPORAL GroupBy fast path: features for every source row as-of its
-    OWN timestamp (reference: GroupBy.temporalEvents with the source as
-    its own query set).
+    OWN `ts` (reference: GroupBy.temporalEvents with the source as its
+    own query set).
 
     The generic cogroup plan would scan and shuffle the SAME table twice
     (left = queries, right = events) and sort both sides. Here the table
@@ -468,33 +487,23 @@ def temporal_self_features(
     applyInPandas, and the kernel serves each row's query from the very
     batch it arrived in — half the shuffle bytes and half the Arrow
     serde of the join path, which is exactly the memory-bandwidth-bound
-    portion at high parallelism.
+    portion at high parallelism. The bucket count comes from
+    `_join_buckets`.
 
     `query_lo`/`query_hi` (epoch ms) bound WHICH rows emit output (the
     backfill range) while all rows still feed window state — the self
     analog of the join path's lookback-widened right scan.
     """
-    spark = df.sparkSession
-    if buckets is None:
-        buckets = int(
-            spark.conf.get(
-                "spark.chronon.join.buckets",
-                str(8 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))),
-            )
-        )
+    buckets = _join_buckets(df.sparkSession)
     types = dict(df.dtypes)
-    input_cols = sorted(
-        {p.input_column for p in parts} | {p.bucket for p in parts if p.bucket}
+    input_cols, array_inputs, map_inputs, feature_fields = _kernel_columns(types, parts)
+    out_cols = keys + [TIME_COLUMN]
+    slim = (
+        df.select(*dict.fromkeys(out_cols + input_cols))
+        .where(F.col(TIME_COLUMN).isNotNull())
     )
-    array_inputs = {c for c in input_cols if types[c].startswith("array<")}
-    map_inputs = {c for c in input_cols if types[c].startswith("map<")}
-    feature_fields = [
-        (p.output_name, output_sql_type(p, types[p.input_column])) for p in parts
-    ]
-    needed = list(dict.fromkeys(keys + [time_col] + input_cols))
-    slim = df.select(*needed).where(F.col(time_col).isNotNull())
     out_schema = ", ".join(
-        [f"`{c}` {types[c]}" for c in keys + [time_col]]
+        [f"`{c}` {types[c]}" for c in out_cols]
         + [f"`{n}` {t}" for n, t in feature_fields]
     )
     bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(buckets))
@@ -502,66 +511,25 @@ def temporal_self_features(
     hi = (1 << 62) if query_hi is None else int(query_hi)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n == 0:
-            return pd.DataFrame(
-                columns=keys + [time_col] + [f for f, _ in feature_fields]
-            )
-        code = np.zeros(n, dtype=np.int64)
+        if len(pdf) == 0:
+            return pd.DataFrame(columns=out_cols + [f for f, _ in feature_fields])
+        code = np.zeros(len(pdf), dtype=np.int64)
         for k in keys:
             codes, uniq = pd.factorize(pdf[k], use_na_sentinel=False)
             code = code * len(uniq) + codes
-        ts = pdf[time_col].to_numpy().astype(np.int64)
+        ts = pdf[TIME_COLUMN].to_numpy().astype(np.int64)
         order = np.lexsort((ts, code))
         code_s, ts_s = code[order], ts[order]
-        evals = {c: _np_col(pdf, c, types[c])[order] for c in input_cols}
-        qmask = (ts_s >= lo) & (ts_s < hi)
-        nq = int(qmask.sum())
-        outs = {
-            name: (
-                np.full(nq, np.nan)
-                if t in ("double", "bigint", "int", "smallint")
-                else np.full(nq, None, dtype=object)
-            )
-            for name, t in feature_fields
-        }
-        qpos = np.cumsum(qmask) - 1  # output slot per masked row
-        bounds = np.flatnonzero(np.diff(code_s, prepend=code_s[0] - 1))
-        bounds = np.append(bounds, n)
-        for seg in range(len(bounds) - 1):
-            s, e = bounds[seg], bounds[seg + 1]
-            qm = qmask[s:e]
-            if not qm.any():
-                continue
-            feats = sawtooth_aggregate(
-                ts_s[s:e],
-                {c: v[s:e] for c, v in evals.items()},
-                ts_s[s:e][qm],
-                parts,
-                array_inputs=array_inputs,
-                map_inputs=map_inputs,
-            )
-            pos = qpos[s:e][qm]
-            for (name, _), part in zip(feature_fields, parts):
-                vals_out = feats[part.output_name]
-                if outs[name].dtype == object:
-                    outs[name][pos] = np.asarray(vals_out, dtype=object)
-                else:
-                    arr = np.asarray(vals_out)
-                    outs[name][pos] = (
-                        np.asarray(
-                            [np.nan if v is None else v for v in vals_out],
-                            dtype=np.float64,
-                        )
-                        if arr.dtype == object
-                        else arr
-                    )
-        # masked rows in sorted order == output slot order (qpos is the
-        # running index over that same order)
-        sel = order[np.flatnonzero(qmask)]
-        out = pdf.iloc[sel][keys + [time_col]].reset_index(drop=True)
-        for (name, sql_type), part in zip(feature_fields, parts):
-            out[name] = _emit(outs[name], sql_type)
+        # the rows in [lo, hi) are the queries; every row is an event
+        qsel = np.flatnonzero((ts_s >= lo) & (ts_s < hi))
+        bufs = _sawtooth_by_key(
+            code_s[qsel], ts_s[qsel], code_s, ts_s,
+            {c: _np_col(pdf, c, types[c])[order] for c in input_cols},
+            parts, feature_fields, array_inputs, map_inputs,
+        )
+        out = pdf.iloc[order[qsel]][out_cols].reset_index(drop=True)
+        for name, sql_type in feature_fields:
+            out[name] = _emit(bufs[name], sql_type)
         return out
 
     return slim.groupBy(bucket.alias("__bucket")).applyInPandas(

@@ -71,107 +71,45 @@ def test_hot_key_skew_completes_and_is_correct(spark):
     assert rows[3] == expect_cold
 
 
-def test_salted_join_matches_unsalted(spark):
-    """spark.chronon.join.salt splits hot keys across kernel groups
-    without changing ANY result value."""
-    rng = np.random.default_rng(43)
-    n = 5000
-    keys = np.where(rng.random(n) < 0.8, 7, rng.integers(0, 20, n))
-    ts = np.sort(rng.integers(0, 10 * DAY, n)) + BASE
-    ev = [(int(k), int(t), float(round(rng.uniform(0, 10), 2)))
-          for k, t in zip(keys, ts)]
-    right = spark.createDataFrame(ev, "user_id int, ts long, value double")
-    q = [(int(rng.integers(0, 20)), int(BASE + rng.integers(0, 10 * DAY)))
-         for _ in range(300)] + [(7, int(BASE + rng.integers(0, 10 * DAY)))
-                                 for _ in range(100)]
-    left = spark.createDataFrame(q, "user_id int, ts long")
-    parts = [
-        AggregationPart("value", Operation.SUM, window=Window(7)),
-        AggregationPart("value", Operation.COUNT, window=None),
-        AggregationPart("value", Operation.LAST_K, arg_map={"k": 3}, window=Window(7)),
-    ]
+SALTING = {
+    # query-side hash split of the named hot key
+    "salt.keys": {"spark.chronon.join.salt": "4",
+                  "spark.chronon.join.salt.keys": "7"},
+    # time shards of the named hot key (windowed parts only)
+    "salt.time_days": {"spark.chronon.join.salt.keys": "7",
+                       "spark.chronon.join.salt.time_days": "3"},
+}
 
-    def run():
-        out = temporal_features(left, right, ["user_id"], ["user_id"], parts)
-        return {
-            (r["user_id"], r["ts"]): (r["value_sum_7d"], r["value_count"],
-                                      tuple(r["value_last3_7d"]))
-            for r in out.collect()
-        }
+REJECTED = {
+    # a salt with no hot keys named would salt every key
+    "salt-without-keys": {"spark.chronon.join.salt": "4"},
+    "time_days-without-keys": {"spark.chronon.join.salt.time_days": "3"},
+    # two modes at once: neither may silently win
+    "salt-and-time_days": {"spark.chronon.join.salt": "4",
+                           "spark.chronon.join.salt.keys": "7",
+                           "spark.chronon.join.salt.time_days": "3"},
+}
 
-    base = run()
-    spark.conf.set("spark.chronon.join.salt", "4")
+SALT_PARTS = [
+    AggregationPart("value", Operation.SUM, window=Window(7)),
+    AggregationPart("value", Operation.COUNT, window=Window(1)),
+    AggregationPart("value", Operation.LAST_K, arg_map={"k": 3}, window=Window(7)),
+]
+
+
+def _with_confs(spark, confs, fn):
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
-        salted = run()
+        return fn()
     finally:
-        spark.conf.set("spark.chronon.join.salt", "1")
-    assert set(base) == set(salted)
-    for k in base:
-        bs, bc, bl = base[k]
-        ss, sc, sl = salted[k]
-        assert bc == sc, k
-        assert bl == sl, k
-        if bs is None:
-            assert ss is None
-        else:
-            assert ss == pytest.approx(bs), k
+        for k in confs:
+            spark.conf.unset(k)
 
 
-def test_targeted_salted_join_matches_unsalted(spark):
-    """spark.chronon.join.salt.keys restricts the split/replication to
-    the listed hot keys — the scalable mode (a global salt multiplies
-    the WHOLE right shuffle by S). Results must match unsalted exactly,
-    including keys NOT in the list and hot-key rows themselves."""
-    rng = np.random.default_rng(47)
-    n = 6000
-    keys = np.where(rng.random(n) < 0.7, 7, rng.integers(0, 20, n))
-    ts = np.sort(rng.integers(0, 10 * DAY, n)) + BASE
-    ev = [(int(k), int(t), float(round(rng.uniform(0, 10), 2)))
-          for k, t in zip(keys, ts)]
-    right = spark.createDataFrame(ev, "user_id int, ts long, value double")
-    q = [(int(rng.integers(0, 20)), int(BASE + rng.integers(0, 10 * DAY)))
-         for _ in range(300)] + [(7, int(BASE + rng.integers(0, 10 * DAY)))
-                                 for _ in range(200)]
-    left = spark.createDataFrame(q, "user_id int, ts long")
-    parts = [
-        AggregationPart("value", Operation.SUM, window=Window(7)),
-        AggregationPart("value", Operation.COUNT, window=None),
-        AggregationPart("value", Operation.LAST_K, arg_map={"k": 3},
-                        window=Window(7)),
-    ]
-
-    def run():
-        out = temporal_features(left, right, ["user_id"], ["user_id"], parts)
-        return {
-            (r["user_id"], r["ts"]): (r["value_sum_7d"], r["value_count"],
-                                      tuple(r["value_last3_7d"]))
-            for r in out.collect()
-        }
-
-    base = run()
-    spark.conf.set("spark.chronon.join.salt", "4")
-    spark.conf.set("spark.chronon.join.salt.keys", "7")
-    try:
-        salted = run()
-    finally:
-        spark.conf.unset("spark.chronon.join.salt")
-        spark.conf.unset("spark.chronon.join.salt.keys")
-    assert set(base) == set(salted)
-    for k in base:
-        bs, bc, bl = base[k]
-        ss, sc, sl = salted[k]
-        assert (bc, bl) == (sc, sl), k
-        if bs is None:
-            assert ss is None
-        else:
-            assert ss == pytest.approx(bs), k
-
-
-def test_time_sharded_salting_matches_unsalted(spark):
-    """spark.chronon.join.salt.time_days shards an EVENT-heavy hot key
-    by query time chunk; each event replicates only into the chunks
-    whose queries can see it (bounded by the max window). Exact for
-    windowed-only parts; unbounded parts are rejected loudly."""
+def _hot_key_frames(spark):
+    """A hot key 7 that dominates BOTH sides: 60% of 8000 events over 20
+    days and 300 of 700 queries."""
     rng = np.random.default_rng(53)
     n = 8000
     keys = np.where(rng.random(n) < 0.6, 7, rng.integers(0, 20, n))
@@ -183,41 +121,50 @@ def test_time_sharded_salting_matches_unsalted(spark):
          for _ in range(400)] + [(7, int(BASE + rng.integers(0, 20 * DAY)))
                                  for _ in range(300)]
     left = spark.createDataFrame(q, "user_id int, ts long")
-    parts = [
-        AggregationPart("value", Operation.SUM, window=Window(7)),
-        AggregationPart("value", Operation.COUNT, window=Window(1)),
-        AggregationPart("value", Operation.LAST_K, arg_map={"k": 3},
-                        window=Window(7)),
-    ]
+    return left, right
+
+
+@pytest.mark.parametrize("mode", sorted(SALTING))
+def test_salting_matches_unsalted(spark, mode):
+    """Each salting mode splits the hot key across kernel groups without
+    changing ANY result value, for the hot key's rows and every other key:
+    salt.keys hash-splits its queries and replicates only its events;
+    salt.time_days shards its queries by 3-day chunk and replicates each
+    event only into the chunks whose queries can see it."""
+    left, right = _hot_key_frames(spark)
+    parts = list(SALT_PARTS)
+    if mode == "salt.keys":  # hash splits also serve lifetime parts
+        parts.append(AggregationPart("value", Operation.COUNT, window=None))
 
     def run():
         out = temporal_features(left, right, ["user_id"], ["user_id"], parts)
-        return {
-            (r["user_id"], r["ts"]): (r["value_sum_7d"],
-                                      r["value_count_1d"],
-                                      tuple(r["value_last3_7d"]))
-            for r in out.collect()
-        }
+        return {(r["user_id"], r["ts"]): [r[p.output_name] for p in parts]
+                for r in out.collect()}
 
     base = run()
-    spark.conf.set("spark.chronon.join.salt.time_days", "3")
-    spark.conf.set("spark.chronon.join.salt.keys", "7")
-    try:
-        sharded = run()
-        # unbounded part -> loud failure, not silent wrong results
-        bad = parts + [AggregationPart("value", Operation.COUNT,
-                                       window=None)]
-        with pytest.raises(ValueError):
-            temporal_features(left, right, ["user_id"], ["user_id"], bad)
-    finally:
-        spark.conf.unset("spark.chronon.join.salt.time_days")
-        spark.conf.unset("spark.chronon.join.salt.keys")
-    assert set(base) == set(sharded)
+    salted = _with_confs(spark, SALTING[mode], run)
+    assert set(base) == set(salted)
     for k in base:
-        bs, bc, bl = base[k]
-        ss, sc, sl = sharded[k]
-        assert (bc, bl) == (sc, sl), k
-        if bs is None:
-            assert ss is None
-        else:
-            assert ss == pytest.approx(bs), k
+        for b, s in zip(base[k], salted[k]):
+            if isinstance(b, float):
+                assert s == pytest.approx(b), k
+            else:
+                assert s == b, k
+
+
+@pytest.mark.parametrize("mode", sorted(REJECTED))
+def test_conflicting_salt_confs_raise(spark, mode):
+    left, right = _hot_key_frames(spark)
+    with pytest.raises(ValueError):
+        _with_confs(spark, REJECTED[mode], lambda: temporal_features(
+            left, right, ["user_id"], ["user_id"], SALT_PARTS))
+
+
+def test_time_sharding_rejects_unbounded_parts(spark):
+    """time_days is exact only for windowed parts; an unbounded part fails
+    loudly instead of returning silently wrong results."""
+    left, right = _hot_key_frames(spark)
+    bad = SALT_PARTS + [AggregationPart("value", Operation.COUNT, window=None)]
+    with pytest.raises(ValueError):
+        _with_confs(spark, SALTING["salt.time_days"], lambda: temporal_features(
+            left, right, ["user_id"], ["user_id"], bad))

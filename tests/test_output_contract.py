@@ -1,7 +1,8 @@
-"""Output contract of the public join operators: the result carries
-exactly the declared columns — the left columns plus one feature column
-per aggregation part — and never an internal `__`-prefixed column, under
-every salting mode."""
+"""Output contract of the public temporal operators: the result carries
+exactly the declared columns — the query columns plus one feature column
+per aggregation part — and never an internal `__`-prefixed column. The
+join operators are checked under every salting mode; the temporal
+GroupBy (self path) and the mutation-replay join carry no salting."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,7 +18,13 @@ from chronon_spark.api import (
     Operation,
     Window,
 )
-from chronon_spark.operators.temporal_join import compute_temporal_join, temporal_features
+from chronon_spark.operators.mutations import temporal_entity_features
+from chronon_spark.operators.temporal_join import (
+    compute_temporal_groupby,
+    compute_temporal_join,
+    temporal_features,
+)
+from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange
 
 BASE = 1704067200000
 DAY = 86_400_000
@@ -86,3 +93,43 @@ def test_compute_temporal_join_declared_schema(spark, salting):
         features = [f"{jp.full_prefix()}_{p.output_name}"
                     for jp in jps for p in jp.group_by.aggregation_parts()]
         _assert_contract(out, left.columns + features)
+
+
+def test_compute_temporal_groupby_declared_schema(spark):
+    _, events = _frames(spark)
+    gb = GroupBy(
+        sources=[DataFrameSource(lambda s: events.withColumn("extra", F.lit(1)))],
+        key_columns=["user_id"],
+        aggregations=[
+            Aggregation("value", Operation.SUM, windows=[Window(7)]),
+            Aggregation("value", Operation.LAST_K, arg_map={"k": 2}, windows=[Window(1)]),
+        ],
+        accuracy=Accuracy.TEMPORAL,
+        name="self",
+    )
+    features = [p.output_name for p in gb.aggregation_parts()]
+    for rng in (None, PartitionRange("2024-01-05", "2024-01-08", DEFAULT_SPEC)):
+        out = compute_temporal_groupby(spark, gb, rng)
+        _assert_contract(out, ["user_id", "ts"] + features + ["ds"])
+        assert out.count() > 0
+
+
+def test_temporal_entity_features_declared_schema(spark):
+    left, _ = _frames(spark)
+    snap = spark.createDataFrame(
+        [(i % 9, BASE + 7 * DAY - i, float(i), "2024-01-08") for i in range(30)],
+        "user_id int, ts long, value double, ds string",
+    )
+    mut = spark.createDataFrame(
+        [(i % 9, BASE + 8 * DAY + i, float(i), BASE + 8 * DAY + 500 * i, i % 3 == 0)
+         for i in range(30)],
+        "user_id int, ts long, value double, mutation_ts long, is_before boolean",
+    )
+    parts = [
+        AggregationPart("value", Operation.SUM, window=None),
+        AggregationPart("value", Operation.MAX, window=Window(7)),
+    ]
+    out = temporal_entity_features(left, snap, mut, ["user_id"], ["user_id"], parts,
+                                   prefix="e_")
+    _assert_contract(out, left.columns + [f"e_{p.output_name}" for p in parts])
+    assert out.count() == left.count()

@@ -253,3 +253,139 @@ def test_bucketed_zero_windows_omit_stale_buckets():
         want = naive_aggregate(ts, vals, q, [p])[p.output_name]
         assert list(got) == list(want), op
         assert "b" not in got[0], op  # the stale bucket stays absent
+
+
+# ---------------------------------------------------------------------------
+# _sawtooth_by_key over whole buckets vs per-key naive
+# ---------------------------------------------------------------------------
+
+BUCKET_TYPES = {"v": "double", "cat": "string", "m": "map<string,double>"}
+BUCKET_PARTS = [
+    AggregationPart("v", Operation.SUM, window=Window(2, TimeUnit.DAYS)),
+    AggregationPart("v", Operation.COUNT, window=None),
+    AggregationPart("v", Operation.AVERAGE, window=Window(3, TimeUnit.HOURS)),
+    AggregationPart("v", Operation.MAX, window=Window(30, TimeUnit.DAYS)),
+    AggregationPart("v", Operation.LAST, window=Window(2, TimeUnit.DAYS)),
+    AggregationPart("v", Operation.LAST_K, arg_map={"k": 3}, window=Window(2, TimeUnit.DAYS)),
+    AggregationPart("cat", Operation.HISTOGRAM, window=Window(30, TimeUnit.DAYS)),
+    # one bucketed part and one map-input part pin _sawtooth_grouped
+    AggregationPart("v", Operation.SUM, window=Window(2, TimeUnit.DAYS), bucket="cat"),
+    AggregationPart("m", Operation.COUNT, window=Window(30, TimeUnit.DAYS)),
+]
+
+
+def _multikey_bucket(rng, n_keys=14):
+    """Events for n_keys key codes, sorted by (code, ts): per key 0, 1 or
+    many events, NaN values, None buckets, dicts with None values."""
+    base = 1704067200000
+    sizes = rng.choice([0, 1, 1, 6, 40], size=n_keys)
+    code = np.repeat(np.arange(n_keys, dtype=np.int64), sizes)
+    n = len(code)
+    ts = base + rng.integers(0, 10 * 86_400_000, size=n)
+    ts[rng.random(n) < 0.2] = base + 86_400_000  # same-ts events
+    order = np.lexsort((ts, code))
+    code, ts = code[order], ts[order].astype(np.int64)
+    v = np.round(rng.uniform(-50, 50, size=n), 2)
+    v[rng.random(n) < 0.2] = np.nan
+    cat = rng.choice(np.array(["a", "b", "c", None], dtype=object), size=n)
+    m = np.empty(n, dtype=object)
+    for i in range(n):
+        if rng.random() < 0.15:
+            m[i] = None
+        else:
+            m[i] = {k: (None if rng.random() < 0.2 else float(rng.integers(0, 9)))
+                    for k in rng.choice(["x", "y", "z"], size=rng.integers(0, 3))}
+    return code, ts, {"v": v, "cat": cat, "m": m}
+
+
+def _naive_key(ets, evals, qts):
+    """naive_aggregate for one key; the map-input part is the bucketed
+    aggregation of its flattened (ts, map key, value) triples."""
+    plain = [p for p in BUCKET_PARTS if p.input_column != "m"]
+    want = naive_aggregate(ets, evals, qts, plain)
+    flat = [(t, k, v) for t, d in zip(ets, evals["m"]) if d for k, v in d.items()]
+    for p in BUCKET_PARTS:
+        if p.input_column == "m":
+            sub = AggregationPart("mv", p.operation, dict(p.arg_map), p.window, "mk")
+            got = naive_aggregate(
+                np.array([t for t, _, _ in flat], dtype=np.int64),
+                {"mv": np.array([v for _, _, v in flat], dtype=object),
+                 "mk": np.array([k for _, k, _ in flat], dtype=object)},
+                qts, [sub],
+            )
+            want[p.output_name] = got[sub.output_name]
+    return want
+
+
+def _same(f, s):
+    if isinstance(s, dict):
+        return (isinstance(f, dict) and f.keys() == s.keys()
+                and all(_close(f[k], s[k]) for k in s))
+    if isinstance(s, list):
+        return [round(float(x), 6) for x in f] == [round(float(x), 6) for x in s]
+    return _close(f, s)
+
+
+def _check_by_key(qcode, qts, ecode, ets, evals, monkeypatch):
+    from chronon_spark.operators import temporal_join as tj
+
+    calls = []
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return sawtooth_aggregate(*a, **kw)
+
+    monkeypatch.setattr(tj, "sawtooth_aggregate", counting)
+    _, array_inputs, map_inputs, fields = tj._kernel_columns(BUCKET_TYPES, BUCKET_PARTS)
+    bufs = tj._sawtooth_by_key(qcode, qts, ecode, ets, evals, BUCKET_PARTS,
+                               fields, array_inputs, map_inputs)
+    # exactly one kernel call per query key, none for event-only keys
+    assert len(calls) == len(np.unique(qcode))
+    for c in np.unique(qcode):
+        qi = np.flatnonzero(qcode == c)
+        ei = np.flatnonzero(ecode == c)
+        want = _naive_key(ets[ei], {k: v[ei] for k, v in evals.items()}, qts[qi])
+        for (name, _), p in zip(fields, BUCKET_PARTS):
+            for j, i in enumerate(qi):
+                assert _same(bufs[name][i], want[p.output_name][j]), (
+                    f"key {c} {name} T={qts[i]}: {bufs[name][i]!r} "
+                    f"!= {want[p.output_name][j]!r}")
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_by_key_join_shape_vs_naive(seed, monkeypatch):
+    """Separate query arrays: query keys with no events, event keys with
+    no queries, queries tied to event ts, queries before every event."""
+    rng = np.random.default_rng(seed)
+    ecode, ets, evals = _multikey_bucket(rng)
+    qcode = rng.integers(0, 18, size=120)  # codes >= 14 have no events
+    qts = 1704067200000 + rng.integers(-86_400_000, 11 * 86_400_000, size=120)
+    tie = rng.choice(len(ets), size=min(20, len(ets)), replace=False)
+    qcode = np.concatenate([qcode, ecode[tie]])
+    qts = np.concatenate([qts, ets[tie]]).astype(np.int64)
+    order = np.lexsort((qts, qcode))
+    _check_by_key(qcode[order], qts[order], ecode, ets, evals, monkeypatch)
+
+
+@pytest.mark.parametrize("seed", [4, 5, 6])
+def test_by_key_self_shape_vs_naive(seed, monkeypatch):
+    """The self kernel's shape: the queries are a ts-masked subset of the
+    events themselves, so every query ties an event at its own ts."""
+    rng = np.random.default_rng(seed)
+    ecode, ets, evals = _multikey_bucket(rng)
+    lo = 1704067200000 + 3 * 86_400_000
+    qsel = np.flatnonzero((ets >= lo) & (ets < lo + 4 * 86_400_000))
+    _check_by_key(ecode[qsel], ets[qsel], ecode, ets, evals, monkeypatch)
+
+
+def test_by_key_empty_query_set():
+    """A self bucket with no rows in the query range returns empty buffers."""
+    from chronon_spark.operators.temporal_join import _kernel_columns, _sawtooth_by_key
+
+    ecode, ets, evals = _multikey_bucket(np.random.default_rng(7))
+    _, array_inputs, map_inputs, fields = _kernel_columns(BUCKET_TYPES, BUCKET_PARTS)
+    empty = np.empty(0, dtype=np.int64)
+    bufs = _sawtooth_by_key(empty, empty, ecode, ets, evals, BUCKET_PARTS,
+                            fields, array_inputs, map_inputs)
+    assert sorted(bufs) == sorted(n for n, _ in fields)
+    assert all(len(b) == 0 for b in bufs.values())

@@ -378,8 +378,10 @@ the targeted-mode equality pytest).
 | 3% key (control) | 3% of rows on one key | {c1}s | {c8}s | not a straggler at 16 cores (fair share is 6%) — salting is pure overhead, don't turn it on |
 
 The same 3% control with the old GLOBAL salt (whole right side replicated
-8x) took {g8}s — 5x SLOWER than unsalted, which is why r5 made salting
-targeted. The honest operating guidance a 1000-executor deployment needs:
+8x) had a best pass of {g8}s, about 1.5x SLOWER than unsalted in the same
+session (`r5skew`, 44.27s), which is why r5 made salting targeted. The
+global mode has since been removed: a salt without `salt.keys`, or `salt`
+together with `salt.time_days`, raises `ValueError`. The honest operating guidance a 1000-executor deployment needs:
 salt only named viral keys when their load is query-dominated; reach for
 time-sharded salting when the EVENT history is the heavy side and every
 part is windowed; and fall back to skew-key exclusion

@@ -87,11 +87,8 @@ def decode_image(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     """Decode to (h, w, 3) uint8: the synthetic layouts (rgb8/half) plus
     the REAL interchange formats (png/jpeg/gif/bmp/tiff/webp — all
     from-scratch spec implementations, incl. lossy VP8 WebP)."""
-    if fmt == "rgb8":
-        return np.frombuffer(data, dtype=np.uint8).reshape(h, w, 3)
-    if fmt == "half":
-        small = np.frombuffer(data, dtype=np.uint8).reshape(h // 2, w // 2, 3)
-        return np.repeat(np.repeat(small, 2, axis=0), 2, axis=1)
+    if fmt in SYNTHETIC_FORMATS:
+        return decode_synthetic([data], w, h, fmt)[0]
     if fmt == "png":
         from chronon_spark.codecs import decode_png
 
@@ -119,16 +116,55 @@ def decode_image(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     raise ValueError(f"unknown fmt {fmt}")
 
 
-def phash64(pix: np.ndarray) -> int:
-    """64-bit perceptual hash: 8x8 block-mean of grayscale, thresholded at
-    the mean (deterministic, library-free)."""
-    g = pix.astype(np.float64).mean(axis=2)
-    h, w = g.shape
+SYNTHETIC_FORMATS = ("rgb8", "half")
+
+
+def synthetic_payload_len(w: int, h: int, fmt: str) -> int:
+    """Byte length of a valid rgb8/half payload for a w x h image."""
+    return w * h * 3 if fmt == "rgb8" else (w // 2) * (h // 2) * 3
+
+
+def decode_synthetic(payloads, w: int, h: int, fmt: str) -> np.ndarray:
+    """Decode same-size rgb8/half payloads to one (n, h, w, 3) uint8 stack
+    with a single frombuffer. 'half' is upsampled 2x by repetition, so odd
+    sizes come back cropped to even. A payload of the wrong length raises
+    ValueError, a NULL one TypeError."""
+    n = len(payloads)
+    raw = np.frombuffer(b"".join(payloads), dtype=np.uint8)
+    if fmt == "rgb8":
+        return raw.reshape(n, h, w, 3)
+    small = raw.reshape(n, h // 2, w // 2, 3)
+    return np.repeat(np.repeat(small, 2, axis=1), 2, axis=2)
+
+
+def gray_mean(pix: np.ndarray) -> np.ndarray:
+    """Channel mean of (..., C) pixels as float64. The channels are added
+    one by one, which is bit-identical to pix.astype(float64).mean(-1)
+    without materializing the float64 copy of every channel."""
+    g = pix[..., 0].astype(np.float64)
+    for c in range(1, pix.shape[-1]):
+        g += pix[..., c]
+    g /= pix.shape[-1]
+    return g
+
+
+def phash64_gray(g: np.ndarray) -> np.ndarray:
+    """64-bit perceptual hashes of an (n, h, w) float64 grayscale stack:
+    8x8 block-mean, thresholded at the mean of the 64 blocks
+    (deterministic, library-free). Returns int64 (the hash bits as a
+    signed long)."""
+    n, h, w = g.shape
     bh, bw = h // 8, w // 8
-    blocks = g[: bh * 8, : bw * 8].reshape(8, bh, 8, bw).mean(axis=(1, 3))
-    bits = (blocks > blocks.mean()).astype(np.uint64).ravel()
-    val = int((bits << np.arange(64, dtype=np.uint64)).sum(dtype=np.uint64))
-    return val - (1 << 64) if val >= (1 << 63) else val
+    blocks = g[:, : bh * 8, : bw * 8].reshape(n, 8, bh, 8, bw).mean(axis=(2, 4))
+    blocks = blocks.reshape(n, 64)
+    bits = (blocks > blocks.mean(axis=1)[:, None]).astype(np.uint64)
+    shifted = bits << np.arange(64, dtype=np.uint64)
+    return shifted.sum(axis=1, dtype=np.uint64).view(np.int64)
+
+
+def phash64(pix: np.ndarray) -> int:
+    """phash64_gray of one (h, w, C) image, as a 1-image stack."""
+    return int(phash64_gray(gray_mean(pix)[None])[0])
 
 
 def gen_caption(rng: np.random.Generator) -> str:

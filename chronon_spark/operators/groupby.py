@@ -198,6 +198,8 @@ def compute_snapshot_groupby(
     for p in hist_like + hist_array + bucketed_hist + hist_mapped:
         empty = F.expr(f"CAST(map() AS {out_types[p.output_name]})")
         out = out.withColumn(p.output_name, F.coalesce(F.col(p.output_name), empty))
+    # the sub-plans join in dispatch order; emit the parts in declared order
+    out = out.select(*keys, PARTITION_COLUMN, *[p.output_name for p in parts])
     return _apply_derivations(out, group_by)
 
 

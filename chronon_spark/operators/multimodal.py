@@ -2,8 +2,10 @@
 
 Payload columns are opaque `binary` with typed metadata (w, h, fmt). All
 decode / feature-extract / resize run as Arrow-batched pandas UDFs over
-`mapInPandas` — binary never round-trips through Python row objects, and
-the per-batch loop is numpy-vectorized per image.
+`mapInPandas` — binary never round-trips through Python row objects.
+Pixel features are computed per batch, not per image: a batch's images
+are stacked by shape (one frombuffer per stack for the synthetic
+layouts) and every feature is one numpy call over the stack.
 
 Decodable codecs: the synthetic layouts ('rgb8', 'half' — fixtures.py)
 plus REAL interchange formats 'png' and 'jpeg' (chronon_spark/codecs.py,
@@ -30,7 +32,14 @@ from pyspark.sql import functions as F
 
 from chronon_spark.fixtures import decode_image as _decode_native
 from chronon_spark.fixtures import decode_video as _decode_video_native
-from chronon_spark.fixtures import phash64
+from chronon_spark.fixtures import (
+    SYNTHETIC_FORMATS,
+    decode_synthetic,
+    gray_mean,
+    phash64,
+    phash64_gray,
+    synthetic_payload_len,
+)
 from struct import error as struct_error
 
 NATIVE_FORMATS = ("rgb8", "half", "png", "jpeg", "gif", "bmp", "tiff",
@@ -70,6 +79,110 @@ PIXEL_FEATURE_SCHEMA = (
 )
 
 
+_PIXEL_FEATURES = ("brightness", "contrast", "r_mean", "g_mean", "b_mean",
+                   "edge_energy")
+# pixels per feature stack: bounds a worker's float64 temporaries (about
+# 40 bytes per pixel) to a few MB whatever the image size. Larger stacks
+# were no faster and added ~100 MB of peak RSS across 5 workers (1M px).
+_STACK_PIXELS = 1 << 16
+
+
+def _pixel_stacks(pdf: pd.DataFrame) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """(row positions, pixel stack) for every decodable row of a batch, in
+    stacks of one decoded shape and about _STACK_PIXELS pixels at most.
+
+    Rows are grouped by (fmt, w, h). An rgb8/half group decodes with one
+    frombuffer per stack over its rows whose payload has the right
+    length. Real codecs decode row by row into per-shape stacks, which
+    are flushed whenever the decoded images held reach the pixel budget.
+    NULL, wrong-length, unknown-codec and corrupt rows yield nothing."""
+    data = pdf["bytes"].to_numpy(dtype=object)
+    meta = pd.DataFrame({"fmt": pdf["fmt"].to_numpy(dtype=object),
+                         "w": pdf["w"].astype("float64").to_numpy(),
+                         "h": pdf["h"].astype("float64").to_numpy()})
+    pending: dict[tuple, tuple[list, list]] = {}  # shape -> (rows, images)
+
+    def flush():
+        for idx, pixes in pending.values():
+            yield np.array(idx), np.stack(pixes)
+        pending.clear()
+
+    held = 0
+    for (fmt, w, h), rows in meta.groupby(["fmt", "w", "h"], sort=False).indices.items():
+        w, h = int(w), int(h)
+        if fmt in SYNTHETIC_FORMATS:
+            lens = np.array([-1 if d is None else len(d) for d in data[rows]])
+            rows = rows[lens == synthetic_payload_len(w, h, fmt)]
+            step = max(1, _STACK_PIXELS // max(w * h, 1))
+            for c in range(0, len(rows), step):
+                sel = rows[c:c + step]
+                yield sel, decode_synthetic(data[sel], w, h, fmt)
+            continue
+        for i in rows:
+            try:
+                pix = decode_image(data[i], w, h, fmt)
+            except (NotImplementedError, ValueError, TypeError):
+                continue
+            idx, pixes = pending.setdefault(pix.shape, ([], []))
+            idx.append(i)
+            pixes.append(pix)
+            held += pix.shape[0] * pix.shape[1]
+            if held >= _STACK_PIXELS:
+                yield from flush()
+                held = 0
+    yield from flush()
+
+
+def _stack_features(pix: np.ndarray) -> dict[str, np.ndarray]:
+    """phash and pixel features of an (n, h, w, C) stack, one value per
+    image: the per-image formulas evaluated along the stack axis."""
+    n, h, w = pix.shape[:3]
+    g = gray_mean(pix)
+    flat = g.reshape(n, -1)
+    gy, gx = np.gradient(g, axis=(1, 2))
+    gx *= gx
+    gy *= gy
+    gx += gy
+    np.sqrt(gx, out=gx)  # gradient magnitude
+    out = {
+        "phash_check": phash64_gray(g),
+        "brightness": flat.mean(axis=1),
+        "contrast": flat.std(axis=1),
+        "edge_energy": gx.reshape(n, -1).mean(axis=1),
+    }
+    for c, name in enumerate(("r_mean", "g_mean", "b_mean")):
+        # integer channel sums are exact, so this equals the float mean
+        out[name] = pix[..., c].reshape(n, -1).sum(axis=1, dtype=np.int64) / (h * w)
+    return out
+
+
+def pixel_feature_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One Arrow batch of (image_id, bytes, w, h, fmt) rows -> its
+    PIXEL_FEATURE_SCHEMA rows, in input order. Features are computed per
+    stack of same-shape images (`_pixel_stacks`), not per image; rows that
+    do not decode get decode_ok=false and NULL features."""
+    n = len(pdf)
+    ok = np.zeros(n, dtype=bool)
+    phash = np.zeros(n, dtype=np.int64)
+    feats = {c: np.full(n, np.nan) for c in _PIXEL_FEATURES}
+    for rows, pix in _pixel_stacks(pdf):
+        res = _stack_features(pix)
+        ok[rows] = True
+        phash[rows] = res.pop("phash_check")
+        for c, v in res.items():
+            feats[c][rows] = v
+    with np.errstate(divide="ignore", invalid="ignore"):
+        aspect = pdf["w"].astype("float64").to_numpy() / pdf["h"].astype("float64").to_numpy()
+    return pd.DataFrame({
+        "image_id": pdf["image_id"].reset_index(drop=True),
+        # nullable Int64: a float64 column would round 64-bit hashes
+        "phash_check": pd.arrays.IntegerArray(phash, ~ok),
+        **feats,
+        "aspect": np.where(ok, aspect, np.nan),
+        "decode_ok": ok,
+    })
+
+
 def extract_pixel_features(
     df: DataFrame, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -79,7 +192,8 @@ def extract_pixel_features(
     recomputed phash (integrity check vs the stored column), brightness,
     per-channel means, contrast (grayscale std), edge energy (mean
     gradient magnitude), aspect ratio. Unknown codecs yield
-    decode_ok=false rows instead of failing the job.
+    decode_ok=false rows instead of failing the job. Each batch runs
+    `pixel_feature_batch`.
 
     `passthrough` columns of the input are carried through the Arrow
     batch unchanged (pandas column slice, no per-row work) and appended
@@ -94,40 +208,7 @@ def extract_pixel_features(
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {k: [] for k in ("image_id", "phash_check", "brightness",
-                                   "contrast", "r_mean", "g_mean", "b_mean",
-                                   "edge_energy", "aspect", "decode_ok")}
-            for iid, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                out["image_id"].append(iid)
-                try:
-                    # TypeError covers NULL payload bytes (np.frombuffer(None))
-                    pix = decode_image(data, int(w), int(h), fmt)
-                except (NotImplementedError, ValueError, TypeError):
-                    for k in ("phash_check",):
-                        out[k].append(None)
-                    for k in ("brightness", "contrast", "r_mean", "g_mean",
-                              "b_mean", "edge_energy", "aspect"):
-                        out[k].append(None)
-                    out["decode_ok"].append(False)
-                    continue
-                g = pix.astype(np.float64).mean(axis=2)
-                gy, gx = np.gradient(g)
-                out["phash_check"].append(phash64(pix))
-                out["brightness"].append(float(g.mean()))
-                out["contrast"].append(float(g.std()))
-                out["r_mean"].append(float(pix[:, :, 0].mean()))
-                out["g_mean"].append(float(pix[:, :, 1].mean()))
-                out["b_mean"].append(float(pix[:, :, 2].mean()))
-                out["edge_energy"].append(float(np.hypot(gx, gy).mean()))
-                out["aspect"].append(float(w) / float(h))
-                out["decode_ok"].append(True)
-            res = pd.DataFrame(out)
-            # int/None lists coerce to float64 in pandas, silently rounding
-            # 64-bit hashes past 2^53 when a corrupt row shares the batch —
-            # force the nullable-int extension dtype so Arrow gets exact longs
-            res["phash_check"] = pd.array(out["phash_check"], dtype="Int64")
+            res = pixel_feature_batch(pdf)
             for c in passthrough:
                 res[c] = pdf[c].reset_index(drop=True)
             yield res

@@ -1,4 +1,4 @@
-"""Vectorized per-key sawtooth kernel for point-in-time (as-of) windows.
+"""Vectorized sawtooth kernel for point-in-time (as-of) windows.
 
 Computes, for each query timestamp T, windowed aggregates over events with
   ts in [ floor((T - window) / tailHop) * tailHop , T ]      (windowed)
@@ -12,8 +12,9 @@ boundary inclusion :129-137 and SawtoothUdfSpec.scala:256-259; hop sizes
 Resolution.scala:38-48.
 
 The reference walks per-row mutable IRs over RDDs; this kernel instead runs
-inside Arrow batches (applyInPandas / cogroup.applyInPandas) on
-time-sorted numpy arrays:
+inside Arrow batches (applyInPandas / cogroup.applyInPandas) on numpy
+arrays sorted by (key, ts), one call per batch for all of its keys
+(`sawtooth_segments`):
   * sum/count/moments  -> O(n) nan-prefix power sums + searchsorted
   * min/max            -> O(n log n) sparse-table RMQ, O(1) per query
   * first/last         -> index arithmetic over non-null positions
@@ -118,20 +119,6 @@ class _WaveletKth:
         return out
 
 
-def window_bounds(
-    event_ts: np.ndarray, query_ts: np.ndarray, part: AggregationPart
-) -> tuple[np.ndarray, np.ndarray]:
-    """(start_idx, end_idx) half-open event index ranges per query."""
-    end = np.searchsorted(event_ts, query_ts, side="right")  # head: ts <= T inclusive
-    if part.window is None:
-        start = np.zeros_like(end)
-    else:
-        hop = sawtooth_hop_millis(part.window)
-        tail_ts = ((query_ts - part.window.millis) // hop) * hop
-        start = np.searchsorted(event_ts, tail_ts, side="left")
-    return start, end
-
-
 class _RangeMinMax:
     """Sparse-table RMQ over a float array (NaN = missing)."""
 
@@ -172,22 +159,33 @@ class _RangeMinMax:
         return out
 
 
-def _prefix_powers(vals: np.ndarray, max_power: int) -> tuple[float, list[np.ndarray]]:
-    """(shift, prefixes) where prefixes[p][i] = sum of (vals[:i]-shift)**p
-    ignoring NaN; prefixes[p][0] = 0. Values are centered on their key-level
-    mean before accumulation: central moments are shift-invariant, and the
-    shift kills the catastrophic cancellation that raw prefix sums suffer
-    when subtracting window boundaries (long history, short window)."""
+def _prefix_powers(vals: np.ndarray, max_power: int, lo: np.ndarray):
+    """(shift, prefixes) for the segments (keys) starting at offsets `lo`.
+    shift[k] is segment k's mean (0 if it has no values). prefixes[0] is
+    the plain non-null count prefix (length n + 1). prefixes[p] holds the
+    running sums of (vals - shift)**p, NaN skipped, restarted at every
+    segment: segment k owns slots lo[k] + k .. lo[k] + k + its length,
+    starting with a 0. Centering each segment on its own mean, and summing
+    it from zero, keeps a window's difference of two prefixes free of the
+    catastrophic cancellation a long, large history would cause (also one
+    of an earlier key); central moments are shift-invariant."""
+    import pandas as pd
+
     v = vals.astype(np.float64, copy=False)
     nn = ~np.isnan(v)
-    shift = float(v[nn].mean()) if nn.any() else 0.0
-    out = [np.concatenate(([0], np.cumsum(nn)))]  # power 0 = count
-    filled = np.where(nn, v - shift, 0.0)
+    seg = np.repeat(np.arange(len(lo)), np.diff(np.append(lo, len(v))))
+    cnt = np.bincount(seg[nn], minlength=len(lo))
+    tot = np.bincount(seg[nn], weights=v[nn], minlength=len(lo))
+    shift = tot / np.maximum(cnt, 1)
+    filled = np.where(nn, v - shift[seg], 0.0)
+    powers = np.empty((len(v), max_power))
     acc = np.ones_like(filled)
-    for _ in range(max_power):
+    for i in range(max_power):
         acc = acc * filled
-        out.append(np.concatenate(([0.0], np.cumsum(acc))))
-    return shift, out
+        powers[:, i] = acc
+    running = pd.DataFrame(powers).groupby(seg).cumsum().to_numpy()
+    return shift, [np.concatenate(([0], np.cumsum(nn)))] + list(
+        np.insert(running, lo, 0.0, axis=0).T)
 
 
 _MOMENT_POWER = {
@@ -224,7 +222,11 @@ def sawtooth_aggregate(
     bucketed = [p for p in parts
                 if p.bucket is not None and p.input_column not in map_inputs]
     mapped = [p for p in parts if p.input_column in map_inputs]
-    out = _sawtooth_plain(event_ts, event_vals, query_ts, plain, array_inputs or set())
+    out = sawtooth_segments(
+        np.zeros(len(event_ts), dtype=np.int64), event_ts, event_vals,
+        np.zeros(len(query_ts), dtype=np.int64), query_ts, plain,
+        array_inputs or set(),
+    ) if plain else {}
     for part in bucketed:
         out[part.output_name] = _sawtooth_bucketed(
             event_ts, event_vals, query_ts, part, array_inputs or set()
@@ -322,6 +324,7 @@ def _sawtooth_grouped(ts, codes, uniq, vals, query_ts, part, array_inputs):
         part.input_column, part.operation, dict(part.arg_map), part.window, None
     )
     maps: list[dict] = [dict() for _ in range(nq)]
+    qzero = np.zeros(nq, dtype=np.int64)
     order = np.argsort(codes, kind="stable")
     oc = codes[order]
     first_nn = int(np.searchsorted(oc, 0, side="left"))  # skip the -1 block
@@ -331,8 +334,9 @@ def _sawtooth_grouped(ts, codes, uniq, vals, query_ts, part, array_inputs):
         bounds = np.append(bounds, len(oc))
         for seg in range(len(bounds) - 1):
             sel = order[bounds[seg]:bounds[seg + 1]]
-            r = _sawtooth_plain(
-                ts[sel], {part.input_column: vals[sel]}, query_ts, [sub],
+            r = sawtooth_segments(
+                np.zeros(len(sel), dtype=np.int64), ts[sel],
+                {part.input_column: vals[sel]}, qzero, query_ts, [sub],
                 array_inputs,
             )[sub.output_name]
             _fill_maps(maps, uniq[oc[bounds[seg]]], r, part.operation, nq)
@@ -411,42 +415,104 @@ def _prev_occurrence(vals: np.ndarray) -> np.ndarray:
     return prev
 
 
-def _flatten_arrays(event_ts: np.ndarray, vals: np.ndarray):
-    """Explode list-valued events: repeat ts per element (ts order is
-    preserved, so the flattened arrays stay time-sorted)."""
+def _flatten_arrays(vals: np.ndarray):
+    """Explode list-valued events: (elements per event, flat elements).
+    Repeating each event's sort key by its length keeps the flat arrays
+    sorted."""
     lens = np.array([0 if v is None else len(v) for v in vals], dtype=np.int64)
-    flat_ts = np.repeat(event_ts, lens)
     flat_vals = np.array(
         [x for v in vals if v is not None for x in v], dtype=object
     )
-    return flat_ts, flat_vals
+    return lens, flat_vals
 
 
-def _sawtooth_plain(
-    event_ts: np.ndarray,
-    event_vals: dict[str, np.ndarray],
-    query_ts: np.ndarray,
+def sawtooth_segments(
+    ecode: np.ndarray,
+    ets: np.ndarray,
+    evals: dict[str, np.ndarray],
+    qcode: np.ndarray,
+    qts: np.ndarray,
     parts: list[AggregationPart],
     array_inputs: set[str],
 ) -> dict[str, np.ndarray]:
+    """Plain parts (no bucket, no map input) for many keys in one pass.
+
+    Events (ecode, ets, evals) are sorted by (key code, ts); queries
+    (qcode, qts) come in any order and see only the events of their own
+    code. Each (code, ts) pair packs into one order-preserving int64:
+    code slot * (|distinct event ts| + 1) + ts rank. Ranks, not raw ts,
+    keep the product far from overflow for any ts range. A query's
+    window is then two searchsorted calls over the packed event keys,
+    for every query at once; a code with no events gets an even slot
+    between the event segments, so its windows are empty. Array inputs
+    flatten once; `_sawtooth_plain` then runs once over the whole arrays.
+    Returns output_name -> array aligned with the queries."""
+    ne = len(ets)
+    lo = (np.flatnonzero(np.diff(ecode, prepend=ecode[:1] - 1)) if ne
+          else np.zeros(1, dtype=np.int64))
+    seg = np.repeat(np.arange(len(lo)), np.diff(np.append(lo, ne)))
+    uts = np.unique(ets)
+    width = len(uts) + 1
+    ekey = (2 * seg + 1) * width + np.searchsorted(uts, ets, side="left") + 1
+    ucode = ecode[lo] if ne else ecode[:0]
+    j = np.searchsorted(ucode, qcode, side="left")
+    present = np.zeros(len(qcode), dtype=bool)
+    if ne:
+        present = ucode[np.minimum(j, len(ucode) - 1)] == qcode
+    qslot = (2 * j + present) * width
+    head = qslot + np.searchsorted(uts, qts, side="right")
+
+    cols: dict[str, tuple] = {}  # column -> (values, packed keys, segment offsets)
+    for col in dict.fromkeys(p.input_column for p in parts):
+        if col in array_inputs:
+            lens, flat = _flatten_arrays(evals[col])
+            offsets = np.concatenate(([0], np.cumsum(lens)))[lo]
+            cols[col] = (flat, np.repeat(ekey, lens), offsets)
+        else:
+            cols[col] = (evals[col], ekey, lo)
+    bounds, cache = [], {}
+    for part in parts:
+        keys = cols[part.input_column][1]
+        w = part.window and (part.window.millis, sawtooth_hop_millis(part.window))
+        ck = (id(keys), w)
+        if ck not in cache:
+            if w is None:
+                tail = qslot
+            else:
+                tail_ts = ((qts - w[0]) // w[1]) * w[1]
+                tail = qslot + np.searchsorted(uts, tail_ts, side="left") + 1
+            cache[ck] = (np.searchsorted(keys, tail, side="left"),
+                         np.searchsorted(keys, head, side="right"))
+        bounds.append(cache[ck])
+    return _sawtooth_plain(
+        {c: v[0] for c, v in cols.items()}, {c: v[2] for c, v in cols.items()},
+        parts, bounds,
+    )
+
+
+def _sawtooth_plain(
+    event_vals: dict[str, np.ndarray],
+    seg_lo: dict[str, np.ndarray],
+    parts: list[AggregationPart],
+    bounds: list[tuple[np.ndarray, np.ndarray]],
+) -> dict[str, np.ndarray]:
+    """Every plain part's op over half-open event ranges: part i answers
+    query q from event_vals[col][bounds[i][0][q]:bounds[i][1][q]]. Ranges
+    never cross a segment (seg_lo[col] holds the segment start offsets),
+    so the tables each op builds once over the whole arrays — prefix
+    sums, sparse-table RMQ, non-null index lists, wavelet tree — are
+    exact; only the moment prefixes need the segments themselves."""
     out: dict[str, Any] = {}
-    nq = len(query_ts)
-    flat_cache: dict[str, tuple] = {}
     # caches shared across parts touching the same input column
     prefix_cache: dict[tuple[str, int], list[np.ndarray]] = {}
     wavelet_cache: dict[str, _WaveletKth] = {}
     rmm_cache: dict[tuple[str, bool], _RangeMinMax] = {}
     nn_idx_cache: dict[str, np.ndarray] = {}
 
-    for part in parts:
+    for part, (start, end) in zip(parts, bounds):
         col = part.input_column
-        if col in array_inputs:
-            if col not in flat_cache:
-                flat_cache[col] = _flatten_arrays(event_ts, event_vals[col])
-            ets_c, vals = flat_cache[col]
-        else:
-            ets_c, vals = event_ts, event_vals[col]
-        start, end = window_bounds(ets_c, query_ts, part)
+        vals = event_vals[col]
+        nq = len(start)
         op = part.operation
 
         if op == Operation.APPROX_PERCENTILE:
@@ -506,13 +572,17 @@ def _sawtooth_plain(
             need = _MOMENT_POWER[op]
             key = (col, need)
             if key not in prefix_cache:
-                prefix_cache[key] = _prefix_powers(_as_float(vals), need)
-            shift, p = prefix_cache[key]
+                prefix_cache[key] = _prefix_powers(_as_float(vals), need, seg_lo[col])
+            shifts, p = prefix_cache[key]
             n = p[0][end] - p[0][start]
             nn = np.maximum(n, 1).astype(np.float64)
+            # a non-empty window lies in segment k, whose prefix slots are
+            # offset by k; empty windows are masked out below
+            k = np.searchsorted(seg_lo[col], start, side="right") - 1
+            shift = shifts[k]
             # s[i] are power sums of the SHIFTED values; central moments are
             # shift-invariant, raw sum/mean add the shift back.
-            s = [None] + [p[i][end] - p[i][start] for i in range(1, need + 1)]
+            s = [None] + [p[i][end + k] - p[i][start + k] for i in range(1, need + 1)]
             with np.errstate(invalid="ignore", divide="ignore"):
                 if op == Operation.SUM:
                     res = np.where(n > 0, s[1] + shift * n, np.nan)

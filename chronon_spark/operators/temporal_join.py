@@ -48,7 +48,7 @@ from chronon_spark.operators.groupby import (
     _union_sources,
     window_days,
 )
-from chronon_spark.operators.sawtooth import sawtooth_aggregate
+from chronon_spark.operators.sawtooth import sawtooth_aggregate, sawtooth_segments
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 
 
@@ -261,14 +261,16 @@ def _sawtooth_by_key(
     array_inputs: set[str],
     map_inputs: set[str],
 ) -> dict[str, np.ndarray]:
-    """The per-key sawtooth loop shared by the join and self kernels.
+    """The sawtooth entry point shared by the join and self kernels.
 
     Queries (qcode, qts) and events (ecode, ets, evals) are each sorted by
-    (key code, ts). Every query key's event range comes from one
-    searchsorted over all segment codes; `sawtooth_aggregate` then runs
-    once per query key on array views. Returns feature name -> buffer
-    aligned with the sorted queries: numeric features accumulate in
-    float64 (NaN = null, exact for int64 < 2^53) so emit stays
+    (key code, ts). Plain parts run as ONE `sawtooth_segments` call for
+    the whole bucket: every query's window comes from searchsorted over
+    packed (key, ts) event keys, and each op builds its tables once.
+    Bucketed and map-input parts still call `sawtooth_aggregate` once per
+    query key, on array views of that key's events. Returns feature name
+    -> buffer aligned with the sorted queries: numeric features accumulate
+    in float64 (NaN = null, exact for int64 < 2^53) so emit stays
     vectorized; arrays, maps and strings use object buffers."""
     nq = len(qts)
     outs = {
@@ -277,26 +279,33 @@ def _sawtooth_by_key(
     }
     if nq == 0:
         return outs
+
+    def store(name, vals, rows=slice(None)):
+        buf = outs[name]
+        if buf.dtype != object and vals.dtype == object:
+            vals = np.array([np.nan if v is None else v for v in vals], dtype=np.float64)
+        buf[rows] = vals
+
+    names = {p.output_name: name for (name, _), p in zip(feature_fields, parts)}
+    plain = [p for p in parts if p.bucket is None and p.input_column not in map_inputs]
+    grouped = [p for p in parts if p not in plain]
+    if plain:
+        feats = sawtooth_segments(ecode, ets, evals, qcode, qts, plain, array_inputs)
+        for out_name, vals in feats.items():
+            store(names[out_name], vals)
+    if not grouped:
+        return outs
     starts = np.flatnonzero(np.diff(qcode, prepend=qcode[0] - 1))
     ends = np.append(starts[1:], nq)
     e0 = np.searchsorted(ecode, qcode[starts], side="left")
     e1 = np.searchsorted(ecode, qcode[starts], side="right")
-    names = [(name, part.output_name) for (name, _), part in zip(feature_fields, parts)]
     for s, e, r0, r1 in zip(starts.tolist(), ends.tolist(), e0.tolist(), e1.tolist()):
         feats = sawtooth_aggregate(
-            ets[r0:r1],
-            {c: v[r0:r1] for c, v in evals.items()},
-            qts[s:e],
-            parts,
-            array_inputs=array_inputs,
-            map_inputs=map_inputs,
+            ets[r0:r1], {c: v[r0:r1] for c, v in evals.items()}, qts[s:e], grouped,
+            array_inputs=array_inputs, map_inputs=map_inputs,
         )
-        for name, out_name in names:
-            vals = feats[out_name]
-            buf = outs[name]
-            if buf.dtype != object and vals.dtype == object:
-                vals = np.array([np.nan if v is None else v for v in vals], dtype=np.float64)
-            buf[s:e] = vals
+        for out_name, vals in feats.items():
+            store(names[out_name], vals, slice(s, e))
     return outs
 
 
@@ -405,7 +414,8 @@ def temporal_features(
     the bucket from one Arrow batch. PySpark's cogroup serde costs
     milliseconds PER GROUP, so per-key grouping caps throughput at a few
     hundred groups/sec/core; bucketing amortizes that over thousands of
-    keys while the per-key sawtooth still runs on zero-copy array views.
+    keys, and `_sawtooth_by_key` answers all of the bucket's keys with one
+    bucket-level kernel call.
     The bucket count comes from `_join_buckets`; hot keys may be salted
     (`_salt_hot_keys`).
     """

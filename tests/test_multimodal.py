@@ -77,6 +77,119 @@ def test_extract_pixel_features_matches_numpy(spark):
         assert f["r_mean"] == pytest.approx(pix[:, :, 0].mean(), rel=1e-9)
 
 
+def _phash_ref(g):
+    """The per-image phash formula: 8x8 block means of the grayscale,
+    thresholded at their mean, bit i = block i."""
+    h, w = g.shape
+    bh, bw = h // 8, w // 8
+    blocks = g[: bh * 8, : bw * 8].reshape(8, bh, 8, bw).mean(axis=(1, 3))
+    bits = (blocks > blocks.mean()).astype(np.uint64).ravel()
+    val = int((bits << np.arange(64, dtype=np.uint64)).sum(dtype=np.uint64))
+    return val - (1 << 64) if val >= (1 << 63) else val
+
+
+def _features_ref(data, w, h, fmt):
+    """Per-image decode and feature formulas, or None if the row must not
+    decode. rgb8/half are decoded here independently of the engine."""
+    from chronon_spark.codecs import decode_png
+
+    if data is None or fmt not in ("rgb8", "half", "png"):
+        return None
+    if fmt == "png":
+        try:
+            pix = decode_png(data)
+        except ValueError:  # corrupt
+            return None
+    else:
+        sw, sh = (w, h) if fmt == "rgb8" else (w // 2, h // 2)
+        if len(data) != sw * sh * 3:
+            return None
+        pix = np.frombuffer(data, dtype=np.uint8).reshape(sh, sw, 3)
+        if fmt == "half":
+            pix = np.repeat(np.repeat(pix, 2, axis=0), 2, axis=1)
+    g = pix.astype(np.float64).mean(axis=2)
+    gy, gx = np.gradient(g)
+    return {
+        "phash_check": _phash_ref(g), "brightness": g.mean(), "contrast": g.std(),
+        "r_mean": pix[:, :, 0].mean(), "g_mean": pix[:, :, 1].mean(),
+        "b_mean": pix[:, :, 2].mean(), "edge_energy": np.hypot(gx, gy).mean(),
+        "aspect": w / h,
+    }
+
+
+# images under 8x8 have no phash blocks: their empty means warn
+@pytest.mark.filterwarnings("ignore::RuntimeWarning")
+@pytest.mark.parametrize("stack_pixels", [1 << 20, 700])
+@pytest.mark.parametrize("seed", [1, 2])
+def test_pixel_feature_batch_matches_per_image(seed, stack_pixels, monkeypatch):
+    """The stacked batch function against the per-image formulas: random
+    sizes (odd sides, sides that are not multiples of 8, a 4x4 image),
+    rgb8 and half rows sharing (fmt, w, h) groups with wrong-length, NULL
+    and unknown-codec rows, plus png rows. A small stack budget splits the
+    groups into many stacks."""
+    import pandas as pd
+
+    from chronon_spark.operators import multimodal
+
+    monkeypatch.setattr(multimodal, "_STACK_PIXELS", stack_pixels)
+    rng = np.random.default_rng(seed)
+    sizes = [(4, 4), (8, 8), (16, 9)] + [
+        (int(rng.integers(4, 40)), int(rng.integers(4, 40))) for _ in range(5)]
+    rows = []
+    for w, h in sizes:
+        for fmt in ("rgb8", "half"):
+            for _ in range(int(rng.integers(1, 5))):
+                rows.append((encode_image(gen_pixels(rng, w, h), fmt), w, h, fmt))
+            good = rows[-1][0]
+            rows += [(good[:-3], w, h, fmt), (good + b"\0", w, h, fmt),
+                     (None, w, h, fmt), (good, w, h, "heic")]
+        rows += [(encode_image(gen_pixels(rng, w, h), "png"), w, h, "png")
+                 for _ in range(2)]
+    rows.append((b"\x89PNG-corrupt", 8, 8, "png"))
+    order = rng.permutation(len(rows))
+    rows = [rows[i] for i in order]
+    pdf = pd.DataFrame({
+        "image_id": [f"i{i}" for i in range(len(rows))],
+        "bytes": [r[0] for r in rows],
+        "w": np.array([r[1] for r in rows], dtype=np.int32),
+        "h": np.array([r[2] for r in rows], dtype=np.int32),
+        "fmt": [r[3] for r in rows],
+    })
+    out = multimodal.pixel_feature_batch(pdf)
+    assert list(out.columns) == [
+        f.split()[0] for f in multimodal.PIXEL_FEATURE_SCHEMA.split(", ")]
+    assert list(out["image_id"]) == list(pdf["image_id"])
+    n_ok = 0
+    for i, r in enumerate(rows):
+        want = _features_ref(*r)
+        got = out.iloc[i]
+        assert bool(got["decode_ok"]) == (want is not None), (i, r[1:])
+        if want is None:
+            assert pd.isna(got["phash_check"]) and np.isnan(got["brightness"])
+            assert np.isnan(got["aspect"])
+            continue
+        n_ok += 1
+        assert int(got["phash_check"]) == want["phash_check"], (i, r[1:])
+        for c in ("brightness", "contrast", "r_mean", "g_mean", "b_mean", "aspect"):
+            assert got[c] == want[c], (i, r[1:], c)
+        assert got["edge_energy"] == pytest.approx(want["edge_energy"], rel=1e-12)
+    assert n_ok > len(sizes) * 3
+
+
+@pytest.mark.filterwarnings("ignore::RuntimeWarning")
+def test_phash64_matches_per_image_formula():
+    """phash64 (a 1-image stack) is bit-identical to the per-image formula
+    the stored fixture phashes were made with."""
+    rng = np.random.default_rng(3)
+    for _ in range(40):
+        w, h = int(rng.integers(4, 90)), int(rng.integers(4, 90))
+        pix = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        for p in (pix, gen_pixels(rng, w, h)):
+            assert phash64(p) == _phash_ref(p.astype(np.float64).mean(axis=2))
+    for r in gen_image_rows(40, seed=1):
+        assert phash64(decode_image(r["bytes"], r["w"], r["h"], r["fmt"])) == r["phash"]
+
+
 def test_unknown_codec_yields_decode_failed_row(spark):
     df = spark.createDataFrame(
         [("x", bytearray(b"\xff\xd8\xff"), 10, 10, "jpeg")],

@@ -2,7 +2,8 @@
 exactly the declared columns — the query columns plus one feature column
 per aggregation part — and never an internal `__`-prefixed column. The
 join operators are checked under every salting mode; the temporal
-GroupBy (self path) and the mutation-replay join carry no salting."""
+GroupBy (self path), the snapshot GroupBy and the mutation-replay join
+carry no salting."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +19,7 @@ from chronon_spark.api import (
     Operation,
     Window,
 )
+from chronon_spark.operators.groupby import compute_snapshot_groupby
 from chronon_spark.operators.mutations import temporal_entity_features
 from chronon_spark.operators.temporal_join import (
     compute_temporal_groupby,
@@ -133,3 +135,37 @@ def test_temporal_entity_features_declared_schema(spark):
                                    prefix="e_")
     _assert_contract(out, left.columns + [f"e_{p.output_name}" for p in parts])
     assert out.count() == left.count()
+
+
+@pytest.mark.parametrize("dense", [False, True])
+def test_compute_snapshot_groupby_declared_schema(spark, dense):
+    """Keys, ds and one column per part, in declared order, for a plain, a
+    bucketed, an exact UNIQUE_COUNT, an array-input and two map-input
+    parts — each of those has its own plan with internal columns."""
+    events = spark.createDataFrame(
+        [(i % 9, BASE + (i % 12) * DAY + i, float(i % 5), "ab"[i % 2],
+          [float(i % 3)], {"x": float(i % 4), "y": 1.0})
+         for i in range(300)],
+        "user_id int, ts long, value double, cat string, xs array<double>, "
+        "m map<string,double>",
+    )
+    gb = GroupBy(
+        sources=[DataFrameSource(lambda s: events)],
+        key_columns=["user_id"],
+        aggregations=[
+            Aggregation("value", Operation.SUM, windows=[Window(7)]),
+            Aggregation("value", Operation.SUM, windows=[Window(3)], buckets=["cat"]),
+            Aggregation("value", Operation.UNIQUE_COUNT, windows=[Window(7), None]),
+            Aggregation("xs", Operation.MAX, windows=[Window(7)]),
+            Aggregation("m", Operation.COUNT, windows=[Window(7)]),
+            Aggregation("m", Operation.HISTOGRAM, windows=[Window(7)]),
+        ],
+        name="snap",
+    )
+    features = [p.output_name for p in gb.aggregation_parts()]
+    for rng in (None, PartitionRange("2024-01-05", "2024-01-08", DEFAULT_SPEC)):
+        if dense and rng is None:
+            continue  # dense output needs a bounded range
+        out = compute_snapshot_groupby(spark, gb, rng, dense=dense)
+        _assert_contract(out, ["user_id", "ds"] + features)
+        assert out.count() > 0

@@ -326,30 +326,58 @@ def _same(f, s):
     return _close(f, s)
 
 
-def _check_by_key(qcode, qts, ecode, ets, evals, monkeypatch):
+def _check_by_key(qcode, qts, ecode, ets, evals, monkeypatch,
+                  parts=BUCKET_PARTS, types=BUCKET_TYPES, naive=_naive_key):
+    """Run `_sawtooth_by_key` over one bucket and compare every query key
+    against `naive(key events, key queries)`. Also pins the call shape:
+    one bucket-level `_sawtooth_plain` call for all plain parts, and the
+    per-key `sawtooth_aggregate` loop only for bucketed and map-input
+    parts."""
+    from chronon_spark.operators import sawtooth as st
     from chronon_spark.operators import temporal_join as tj
 
-    calls = []
+    plain_calls, key_calls = [], []
+    real_plain = st._sawtooth_plain
 
-    def counting(*a, **kw):
-        calls.append(1)
+    def counting_plain(event_vals, seg_lo, ps, bounds):
+        plain_calls.append(([p.output_name for p in ps], len(bounds[0][0])))
+        return real_plain(event_vals, seg_lo, ps, bounds)
+
+    def counting_agg(*a, **kw):
+        key_calls.append([p.output_name for p in a[3]])
         return sawtooth_aggregate(*a, **kw)
 
-    monkeypatch.setattr(tj, "sawtooth_aggregate", counting)
-    _, array_inputs, map_inputs, fields = tj._kernel_columns(BUCKET_TYPES, BUCKET_PARTS)
-    bufs = tj._sawtooth_by_key(qcode, qts, ecode, ets, evals, BUCKET_PARTS,
+    monkeypatch.setattr(st, "_sawtooth_plain", counting_plain)
+    monkeypatch.setattr(tj, "sawtooth_aggregate", counting_agg)
+    _, array_inputs, map_inputs, fields = tj._kernel_columns(types, parts)
+    bufs = tj._sawtooth_by_key(qcode, qts, ecode, ets, evals, parts,
                                fields, array_inputs, map_inputs)
-    # exactly one kernel call per query key, none for event-only keys
-    assert len(calls) == len(np.unique(qcode))
+    plain = [p.output_name for p in parts
+             if p.bucket is None and p.input_column not in map_inputs]
+    grouped = [p.output_name for p in parts
+               if p.bucket is not None or p.input_column in map_inputs]
+    # one bucket-level call answers every query of every key
+    assert [c for c in plain_calls if c[0] == plain] == [(plain, len(qts))]
+    # the per-key loop runs once per query key, for the grouped parts only
+    assert key_calls == [grouped] * (len(np.unique(qcode)) if grouped else 0)
     for c in np.unique(qcode):
         qi = np.flatnonzero(qcode == c)
         ei = np.flatnonzero(ecode == c)
-        want = _naive_key(ets[ei], {k: v[ei] for k, v in evals.items()}, qts[qi])
-        for (name, _), p in zip(fields, BUCKET_PARTS):
+        want = naive(ets[ei], {k: v[ei] for k, v in evals.items()}, qts[qi])
+        for (name, _), p in zip(fields, parts):
             for j, i in enumerate(qi):
                 assert _same(bufs[name][i], want[p.output_name][j]), (
                     f"key {c} {name} T={qts[i]}: {bufs[name][i]!r} "
                     f"!= {want[p.output_name][j]!r}")
+
+
+def _check_plain(qcode, qts, ecode, ets, evals, parts, types, monkeypatch):
+    """_check_by_key for plain parts against naive_aggregate."""
+    arrays = {c for c, t in types.items() if t.startswith("array<")}
+    order = np.lexsort((qts, qcode))
+    _check_by_key(
+        qcode[order], qts[order], ecode, ets, evals, monkeypatch, parts, types,
+        lambda e, v, q: naive_aggregate(e, v, q, parts, arrays))
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
@@ -389,3 +417,118 @@ def test_by_key_empty_query_set():
                             fields, array_inputs, map_inputs)
     assert sorted(bufs) == sorted(n for n, _ in fields)
     assert all(len(b) == 0 for b in bufs.values())
+
+
+MOMENT_PARTS = [
+    AggregationPart("v", op, window=w)
+    for op in (Operation.SUM, Operation.AVERAGE, Operation.VARIANCE,
+               Operation.SKEW, Operation.KURTOSIS)
+    for w in (None, Window(2, TimeUnit.DAYS), Window(3, TimeUnit.HOURS))
+]
+
+
+def test_by_key_moments_after_large_key(monkeypatch):
+    """Bucket-level moment prefixes restart at each key and centre on that
+    key's own mean. Key 0 has a long history of large, widely spread
+    values; keys 1 and 2 follow with a few small values, asked over short
+    windows. Prefix sums carried over from key 0 would swamp them."""
+    rng = np.random.default_rng(11)
+    base = 1704067200000
+    n0 = 1500
+    ets0 = np.sort(base + rng.integers(0, 20 * 86_400_000, size=n0))
+    v0 = 1e9 + rng.uniform(-1e6, 1e6, size=n0)
+    ets1 = np.sort(base + 19 * 86_400_000 + rng.integers(0, 7_200_000, size=7))
+    v1 = rng.uniform(0, 1, size=7)
+    ets2 = np.sort(base + 19 * 86_400_000 + rng.integers(0, 7_200_000, size=5))
+    v2 = 1e-3 * rng.uniform(0, 1, size=5)
+    ecode = np.repeat(np.arange(3, dtype=np.int64), [n0, 7, 5])
+    ets = np.concatenate([ets0, ets1, ets2]).astype(np.int64)
+    evals = {"v": np.concatenate([v0, v1, v2])}
+    qts = np.concatenate([rng.choice(ets0, 10), ets1, ets2 + 1]).astype(np.int64)
+    qcode = np.repeat(np.arange(3, dtype=np.int64), [10, 7, 5])
+    _check_plain(qcode, qts, ecode, ets, evals, MOMENT_PARTS, {"v": "double"},
+                 monkeypatch)
+
+
+def test_by_key_array_inputs_at_bucket_level(monkeypatch):
+    """array<double> parts flatten once per bucket: lists of any length,
+    None and empty lists, None elements, and keys whose lists are all
+    empty."""
+    rng = np.random.default_rng(12)
+    base = 1704067200000
+    sizes = [5, 0, 30, 3, 1, 12]
+    ecode = np.repeat(np.arange(len(sizes), dtype=np.int64), sizes)
+    n = len(ecode)
+    ets = base + rng.integers(0, 5 * 86_400_000, size=n)
+    order = np.lexsort((ets, ecode))
+    ecode, ets = ecode[order], ets[order].astype(np.int64)
+    xs = np.empty(n, dtype=object)
+    for i in range(n):
+        if ecode[i] == 3 or rng.random() < 0.1:
+            xs[i] = None if rng.random() < 0.5 else []
+        else:
+            xs[i] = [None if rng.random() < 0.1 else float(rng.integers(-9, 9))
+                     for _ in range(rng.integers(0, 5))]
+    parts = [
+        AggregationPart("xs", op, arg_map={"k": 3}, window=w)
+        for op in (Operation.COUNT, Operation.SUM, Operation.VARIANCE,
+                   Operation.MAX, Operation.FIRST, Operation.LAST_K,
+                   Operation.UNIQUE_COUNT, Operation.APPROX_PERCENTILE)
+        for w in (None, Window(2, TimeUnit.DAYS))
+    ]
+    qcode = rng.integers(0, len(sizes) + 1, size=80)
+    qts = (base + rng.integers(-86_400_000, 6 * 86_400_000, size=80)).astype(np.int64)
+    _check_plain(qcode, qts, ecode, ets, {"xs": xs}, parts,
+                 {"xs": "array<double>"}, monkeypatch)
+
+
+def test_by_key_tails_before_first_event(monkeypatch):
+    """Windows whose tail reaches back past the key's first event stop at
+    that event: the previous key's events, inside the time range, never
+    leak in."""
+    base = 1704067200000
+    day = 86_400_000
+    ets0 = base + np.arange(0, 10 * day, day // 4)
+    ets1 = base + 8 * day + np.arange(0, 2 * day, day // 3)
+    ets2 = base + 2 * day + np.arange(0, day, day // 5)
+    ecode = np.repeat(np.arange(3, dtype=np.int64), [len(ets0), len(ets1), len(ets2)])
+    ets = np.concatenate([ets0, ets1, ets2]).astype(np.int64)
+    rng = np.random.default_rng(13)
+    evals = {"v": np.round(rng.uniform(-5, 5, size=len(ets)), 1),
+             "cat": rng.choice(np.array(["a", "b", None], dtype=object), len(ets))}
+    parts = [
+        AggregationPart(c, op, arg_map={"k": 4}, window=w)
+        for c, op in (("v", Operation.COUNT), ("v", Operation.SUM),
+                      ("v", Operation.MIN), ("v", Operation.FIRST),
+                      ("v", Operation.FIRST_K), ("v", Operation.UNIQUE_COUNT),
+                      ("v", Operation.APPROX_PERCENTILE), ("v", Operation.KURTOSIS),
+                      ("cat", Operation.HISTOGRAM))
+        for w in (Window(30, TimeUnit.DAYS), Window(2, TimeUnit.DAYS))
+    ]
+    qcode = np.repeat(np.arange(3, dtype=np.int64), 6)
+    qts = np.concatenate([ets0[[0, 1, 5, 20, 30, 39]], ets1[[0, 1, 2, 3, 4, 5]],
+                          ets2[[0, 1, 2, 3, 4, 4]] + 1]).astype(np.int64)
+    _check_plain(qcode, qts, ecode, ets, evals, parts,
+                 {"v": "double", "cat": "string"}, monkeypatch)
+
+
+def test_by_key_wide_ts_range(monkeypatch):
+    """ts spread over most of the int64 range, with many keys: a packed
+    (key, raw ts) sort key would overflow; the rank packing must not."""
+    rng = np.random.default_rng(14)
+    lim = 1 << 61
+    ecode = np.repeat(np.arange(40, dtype=np.int64), rng.integers(0, 6, size=40))
+    n = len(ecode)
+    ets = rng.integers(-lim, lim, size=n)
+    ets[::7] = rng.integers(-1000 * 86_400_000, 1000 * 86_400_000, size=len(ets[::7]))
+    order = np.lexsort((ets, ecode))
+    ecode, ets = ecode[order], ets[order].astype(np.int64)
+    evals = {"v": np.round(rng.uniform(-5, 5, size=n), 1)}
+    parts = [AggregationPart("v", op, window=w)
+             for op in (Operation.COUNT, Operation.SUM, Operation.MAX, Operation.LAST)
+             for w in (None, Window(3, TimeUnit.HOURS), Window(30, TimeUnit.DAYS))]
+    pick = rng.choice(n, size=40)
+    qcode = np.concatenate([ecode[pick], rng.integers(0, 42, size=40)])
+    qts = np.concatenate([ets[pick] + rng.integers(0, 3_600_000, size=40),
+                          rng.integers(-lim, lim, size=40)]).astype(np.int64)
+    _check_plain(qcode, qts, ecode, ets, evals, parts, {"v": "double"}, monkeypatch)

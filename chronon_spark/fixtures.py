@@ -221,11 +221,6 @@ def gen_image_rows(n: int, seed: int = 42, span_days: int = 30, offset: int = 0)
 FIXTURE_ROW_GROUP = 1024
 
 
-def image_schema() -> str:
-    return ("image_id string, bytes binary, w int, h int, fmt string, "
-            "caption string, phash long, ts long")
-
-
 def _image_rows_table(rows):
     import pyarrow as pa
 

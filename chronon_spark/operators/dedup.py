@@ -236,19 +236,6 @@ def _check_bands(num_hashes: int, bands: int) -> int:
     return num_hashes // bands
 
 
-def minhash_signature(col: Column, n: int = 3, num_hashes: int = 64) -> Column:
-    """MinHash signature as array<long> — Spark-native, one pass."""
-    fps = shingle_fps(col, n)
-
-    def perm(A: int, B: int):
-        return lambda x: (F.lit(A) * x + F.lit(B)) % MINHASH_P
-
-    sigs = [
-        F.array_min(F.transform(fps, perm(A, B))) for A, B in _perm_consts(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -1015,26 +1002,6 @@ def hamming_pairs_incremental(
 # Exact substring dedup (duplicated-span detection)
 # ---------------------------------------------------------------------------
 FP_MOD2 = 1_000_000_009  # second independent modulus for the packed hash
-
-
-def positional_fps_np(text: Optional[str], n: int) -> np.ndarray:
-    """Packed double rolling hash of EVERY n-gram position (1-based
-    order, duplicates kept): h1 * 2^31 + h2 with independent moduli —
-    62 bits, because positional dedup compares hashes corpus-wide with
-    no exact-verify step (a single 2^30 modulus collides at ~100k grams;
-    the packed pair pushes expected collisions at 10^10 grams to ~single
-    digits, and a collision only ever OVER-marks a span — no false
-    negatives, Rabin-Karp style)."""
-    if not text or len(text) < n:
-        return np.empty(0, dtype=np.int64)
-    codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    windows = np.lib.stride_tricks.sliding_window_view(codes, n)
-    h1 = np.zeros(len(windows), dtype=np.int64)
-    h2 = np.zeros(len(windows), dtype=np.int64)
-    for j in range(n):
-        h1 = (h1 * FP_BASE + windows[:, j]) % FP_MOD
-        h2 = (h2 * FP_BASE + windows[:, j]) % FP_MOD2
-    return h1 * (1 << 31) + h2
 
 
 def duplicate_spans(

@@ -55,10 +55,10 @@ from chronon_spark.api import (
     Operation,
     sawtooth_hop_millis,
 )
-from chronon_spark.operators.sawtooth import _naive_one
+from chronon_spark.operators.sawtooth import _naive_one, range_pairs
 from chronon_spark.operators.temporal_join import (
     _emit,
-    _empty_feature,
+    _join_buckets,
     _kernel_columns,
     _np_col,
     _segment_codes,
@@ -458,18 +458,11 @@ def temporal_entity_features(
     is_before. Returns left_df columns + one `{prefix}{output_name}`
     column per part.
 
-    Group state is day-bounded (the day is in the cogroup hash), so the
-    bucket count only needs to cover the cluster: 4x parallelism, at
-    least 64, balances per-group Arrow overhead against skew headroom
-    (spark.chronon.mutations.buckets overrides).
+    Group state is day-bounded (the day is in the cogroup hash). The
+    bucket count comes from `_join_buckets`, as for the as-of join and
+    the temporal GroupBy kernels.
     """
-    spark = left_df.sparkSession
-    buckets = int(
-        spark.conf.get(
-            "spark.chronon.mutations.buckets",
-            str(max(64, 4 * spark.sparkContext.defaultParallelism)),
-        )
-    )
+    buckets = _join_buckets(left_df.sparkSession)
     right_types = dict(snapshot_df.dtypes)
     input_cols, _, _, feature_fields = _kernel_columns(right_types, parts, prefix)
 
@@ -515,10 +508,6 @@ def temporal_entity_features(
             return pd.DataFrame(columns=left_cols + [n for n, _ in feature_fields])
         nq = len(lpdf)
         out = lpdf[left_cols].copy().reset_index(drop=True)
-        if len(rpdf) == 0:
-            for (name, sql_type), part in zip(feature_fields, parts):
-                out[name] = _empty_feature(part, sql_type, nq)
-            return out
         lcode, rcode = _segment_codes(lpdf, rpdf, seg_l, seg_r, seg_types)
         lts = lpdf[TIME_COLUMN].to_numpy().astype(np.int64)
         rorder = np.argsort(rcode, kind="stable")
@@ -532,34 +521,19 @@ def temporal_entity_features(
             arr = np.empty(nq, dtype=object)
             arr[:] = [_replay_empty(part) for _ in range(nq)]
             outs[name] = arr
-        # one searchsorted pair per query -> (query, right-row) pair
-        # expansion; no per-segment Python loop. Chunk queries so the pair
-        # arrays stay bounded regardless of state size.
-        r0 = np.searchsorted(rcode_s, lcode, side="left")
-        r1 = np.searchsorted(rcode_s, lcode, side="right")
-        cntq = (r1 - r0).astype(np.int64)
-        csum = np.concatenate(([0], np.cumsum(cntq)))
-        max_pairs = 8_000_000
-        a = 0
-        while a < nq:
-            b = int(np.searchsorted(csum, csum[a] + max_pairs, side="left"))
-            b = min(max(b, a + 1), nq)
-            cc = cntq[a:b]
-            total = int(cc.sum())
-            if total > 0:
-                qidx = np.repeat(np.arange(b - a, dtype=np.int64), cc)
-                cl = np.concatenate(([0], np.cumsum(cc)))
-                ridx = (np.repeat(r0[a:b], cc)
-                        + np.arange(total, dtype=np.int64)
-                        - np.repeat(cl[:-1], cc))
-                views = {p.output_name: outs[n][a:b]
-                         for (n, _), p in zip(feature_fields, parts)}
-                replay_aggregate_batch(
-                    qidx, ridx, lts[a:b], b - a, rts_s, mut_ts, signs,
-                    evals, parts, views,
-                )
-            a = b
-        for (name, sql_type), part in zip(feature_fields, parts):
+        # every query pairs with the right rows of its (key, day) segment;
+        # no per-segment Python loop, and bounded pair arrays
+        for a, b, qidx, ridx in range_pairs(
+            np.searchsorted(rcode_s, lcode, side="left"),
+            np.searchsorted(rcode_s, lcode, side="right"),
+        ):
+            views = {p.output_name: outs[n][a:b]
+                     for (n, _), p in zip(feature_fields, parts)}
+            replay_aggregate_batch(
+                qidx, ridx, lts[a:b], b - a, rts_s, mut_ts, signs,
+                evals, parts, views,
+            )
+        for name, sql_type in feature_fields:
             out[name] = _emit(outs[name], sql_type)
         return out
 

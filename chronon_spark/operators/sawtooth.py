@@ -13,8 +13,9 @@ Resolution.scala:38-48.
 
 The reference walks per-row mutable IRs over RDDs; this kernel instead runs
 inside Arrow batches (applyInPandas / cogroup.applyInPandas) on numpy
-arrays sorted by (key, ts), one call per batch for all of its keys
-(`sawtooth_segments`):
+arrays sorted by (key, ts), one call per batch for all of its keys and
+parts (`sawtooth_segments`). Bucketed and map-input parts run the same
+ops over (key, label) segments, so there is one path for every part kind:
   * sum/count/moments  -> O(n) nan-prefix power sums + searchsorted
   * min/max            -> O(n log n) sparse-table RMQ, O(1) per query
   * first/last         -> index arithmetic over non-null positions
@@ -38,8 +39,7 @@ import numpy as np
 from chronon_spark.api import AggregationPart, Operation, sawtooth_hop_millis
 
 
-def _range_kth(vals_f: np.ndarray, start: np.ndarray, end: np.ndarray,
-               k: np.ndarray) -> np.ndarray:
+class _WaveletKth:
     """Exact k-th smallest (0-indexed, NaNs sort last) for MANY [s, e)
     ranges over one fixed sequence — a wavelet tree over value codes.
 
@@ -47,23 +47,17 @@ def _range_kth(vals_f: np.ndarray, start: np.ndarray, end: np.ndarray,
     C speed. Queries: every (range, k) pair walks the levels TOGETHER in
     one vectorized pass per level — O((n + q) log V) total, replacing the
     per-query `np.sort` slice that made temporal APPROX_PERCENTILE
-    O(q · w log w) (the one super-linear kernel left after round 3).
-    Exactness is the contract: the reference pins approx percentiles to
-    exact order statistics in tests (GroupByTest.scala:103-117), so a
-    lossy digest would break the oracle; the wavelet tree gives digest
-    speed without giving up the exact quantile.
+    O(q · w log w). Exactness is the contract: the reference pins approx
+    percentiles to exact order statistics in tests
+    (GroupByTest.scala:103-117), so a lossy digest would break the oracle;
+    the wavelet tree gives digest speed without giving up the exact
+    quantile. `query` returns float64 with NaN where the range holds no
+    usable value.
 
-    Returns float64 with NaN where the range holds no usable value.
-    """
-    return _WaveletKth(vals_f).query(start, end, k)
-
-
-class _WaveletKth:
-    """Build/query split of the range-kth wavelet tree so the build
-    (nbits stable argsorts + np.unique, the expensive half) is cached per
-    column across a GroupBy's windows — one Aggregation typically runs
-    [1d, 7d, 30d, lifetime] parts over the SAME values, and the build
-    depends only on those values."""
+    The build (nbits stable argsorts + np.unique, the expensive half) is
+    cached per column across a GroupBy's windows — one Aggregation
+    typically runs [1d, 7d, 30d, lifetime] parts over the SAME values, and
+    the build depends only on those values."""
 
     def __init__(self, vals_f: np.ndarray) -> None:
         self.n = len(vals_f)
@@ -205,142 +199,110 @@ def sawtooth_aggregate(
     array_inputs: Optional[set[str]] = None,
     map_inputs: Optional[set[str]] = None,
 ) -> dict[str, np.ndarray]:
-    """Per-key kernel. `event_ts` MUST be sorted ascending; `event_vals`
-    maps input column -> float/object array aligned with event_ts (NaN/None
-    = null). Returns output_name -> array aligned with query_ts (any order).
-
-    Bucketed parts (part.bucket set) produce dict outputs {bucket: value}
-    (reference: BucketedColumnAggregator). Columns named in `array_inputs`
-    hold lists and are auto-exploded: each element aggregates individually
-    at its row's timestamp (reference: VectorDispatcher auto-explode,
-    ColumnAggregator.scala:208-217). Columns named in `map_inputs` hold
-    dicts and aggregate per map-key into map outputs (MapColumnAggregator).
-    """
-    map_inputs = map_inputs or set()
-    plain = [p for p in parts
-             if p.bucket is None and p.input_column not in map_inputs]
-    bucketed = [p for p in parts
-                if p.bucket is not None and p.input_column not in map_inputs]
-    mapped = [p for p in parts if p.input_column in map_inputs]
-    out = sawtooth_segments(
+    """One key: `sawtooth_segments` over a single segment. `event_ts` MUST
+    be sorted ascending; `event_vals` maps input column -> float/object
+    array aligned with event_ts (NaN/None = null). Returns output_name ->
+    array aligned with query_ts (any order)."""
+    return sawtooth_segments(
         np.zeros(len(event_ts), dtype=np.int64), event_ts, event_vals,
-        np.zeros(len(query_ts), dtype=np.int64), query_ts, plain,
-        array_inputs or set(),
-    ) if plain else {}
-    for part in bucketed:
-        out[part.output_name] = _sawtooth_bucketed(
-            event_ts, event_vals, query_ts, part, array_inputs or set()
-        )
-    for part in mapped:
-        out[part.output_name] = _sawtooth_mapcol(
-            event_ts, event_vals, query_ts, part
-        )
-    return out
+        np.zeros(len(query_ts), dtype=np.int64), query_ts, parts,
+        array_inputs or set(), map_inputs or set(),
+    )
 
 
-def _fill_maps(maps: list[dict], b: str, r, op, nq: int) -> None:
-    """Insert one bucket's per-query results into the output dicts,
-    skipping empty/absent entries. Presence tests are vectorized when the
-    result is numeric."""
+_MAX_PAIRS = 8_000_000
+
+
+def range_pairs(lo: np.ndarray, hi: np.ndarray):
+    """Ranges -> (query, row) pairs: one pair (q, r) per row r in
+    [lo[q], hi[q]). Yields (a, b, qidx, ridx) chunks in query order; a
+    chunk covers queries a..b-1 (qidx counts from a) and holds at most
+    _MAX_PAIRS pairs unless one query alone has more, so the pair arrays
+    stay bounded however many rows the ranges span. Chunks without pairs
+    are skipped."""
+    cnt = (hi - lo).astype(np.int64)
+    csum = np.concatenate(([0], np.cumsum(cnt)))
+    a, nq = 0, len(cnt)
+    while a < nq:
+        b = int(np.searchsorted(csum, csum[a] + _MAX_PAIRS, side="right")) - 1
+        b = min(max(b, a + 1), nq)
+        total = int(csum[b] - csum[a])
+        if total:
+            cc = cnt[a:b]
+            start = np.repeat(lo[a:b] - (csum[a:b] - csum[a]), cc)
+            yield (a, b, np.repeat(np.arange(b - a, dtype=np.int64), cc),
+                   start + np.arange(total, dtype=np.int64))
+        a = b
+
+
+def _fill_maps(maps: list[dict], qidx: np.ndarray, labels: np.ndarray, r,
+               op) -> None:
+    """Insert result r[i] as maps[qidx[i]][labels[i]], skipping empty
+    entries. Presence tests are vectorized when the result is numeric."""
     # every count-shaped op returns 0 (not NaN/None) for an empty window,
-    # so 0 means "no in-window events for this bucket" — emitting it would
+    # so 0 means "no in-window events for this label" — emitting it would
     # leak stale buckets/map-keys from history into later queries' maps
-    count_like = (Operation.COUNT, Operation.UNIQUE_COUNT,
-                  Operation.APPROX_UNIQUE_COUNT)
+    count_like = op in (Operation.COUNT, Operation.UNIQUE_COUNT,
+                        Operation.APPROX_UNIQUE_COUNT)
     if isinstance(r, np.ndarray) and r.dtype != object:
-        if op in count_like:
-            present = r > 0
-        else:
-            present = ~np.isnan(r.astype(np.float64, copy=False))
-        for i in np.flatnonzero(present):
-            maps[i][b] = r[i]
-        return
-    for i in range(nq):
-        v = r[i]
-        if v is None:
-            continue
-        if isinstance(v, float) and v != v:
-            continue
-        if op in count_like and int(v) == 0:
-            continue
-        if isinstance(v, (list, dict)) and not v:
-            # empty list (k-ops) or empty dict (HISTOGRAM /
-            # APPROX_FREQUENT_K / APPROX_HEAVY_HITTERS_K): no events
-            continue
-        maps[i][b] = v
+        sel = np.flatnonzero(
+            r > 0 if count_like else ~np.isnan(r.astype(np.float64, copy=False)))
+    else:
+        sel = np.flatnonzero([
+            not (v is None or (isinstance(v, float) and v != v)
+                 or (count_like and int(v) == 0)
+                 # empty list (k-ops) or empty dict (HISTOGRAM /
+                 # APPROX_FREQUENT_K / APPROX_HEAVY_HITTERS_K): no events
+                 or (isinstance(v, (list, dict)) and not v))
+            for v in r])
+    for i, q, b in zip(sel, qidx[sel].tolist(), labels[sel].tolist()):
+        maps[q][b] = r[i]
 
 
-def _sawtooth_mapcol(event_ts, event_vals, query_ts, part):
-    """map<string, V> input: aggregate each map key's values independently
-    -> map output (reference: MapColumnAggregator).
-
-    Explodes the dicts ONCE into (ts, key, value) triples and factorizes
-    the keys — O(entries log entries) total instead of O(|keys| x
-    n_events) per-key scans."""
+def _sawtooth_grouped(ecode, ets, evals, qcode, qts, part, array_inputs,
+                      map_input):
+    """One bucketed or map-input part for many keys, through the plain
+    kernel. Label-explode: the label of an event is its stringified bucket
+    value (the bucket column must be string, reference:
+    RowAggregator.scala:42-48; null buckets are dropped), or the map key
+    of each of its (event, map key, value) triples. Every (key code,
+    label) pair is then its own segment, each query repeats once per label
+    its key has (`range_pairs`), and the results fill per-query maps
+    {label: value}, labels in sorted order. A stable sort keeps each
+    segment's events in time order."""
     import pandas as pd
 
-    ts_list, key_list, val_list = [], [], []
-    for t, d in zip(event_ts.tolist(), event_vals[part.input_column]):
-        if d is None:
-            continue
-        for k, v in d.items():
-            ts_list.append(t)
-            key_list.append(k)
-            val_list.append(v)
-    codes, uniq = pd.factorize(np.array(key_list, dtype=object))
-    return _sawtooth_grouped(
-        np.array(ts_list, dtype=np.int64), codes, uniq,
-        np.array(val_list, dtype=object), query_ts, part, set(),
-    )
-
-
-def _sawtooth_bucketed(event_ts, event_vals, query_ts, part, array_inputs):
-    """Per-bucket sub-aggregation -> map output. Bucket column must be
-    string (reference: RowAggregator.scala:42-48), so bucket values are
-    stringified before they are factorized."""
-    import pandas as pd
-
-    bstr = np.array(
-        [None if b is None or b != b else str(b)
-         for b in event_vals[part.bucket].tolist()],
-        dtype=object,
-    )
-    codes, uniq = pd.factorize(bstr)  # nulls -> -1
-    return _sawtooth_grouped(
-        event_ts, codes, uniq, event_vals[part.input_column], query_ts, part,
-        array_inputs,
-    )
-
-
-def _sawtooth_grouped(ts, codes, uniq, vals, query_ts, part, array_inputs):
-    """Shared tail of the bucketed and map-input parts: aggregate each
-    group's events (code c, labelled uniq[c]) separately and fill the
-    per-query output maps {label: value}. `ts` is time-sorted; a stable
-    argsort segments the codes, so events stay time-sorted inside each
-    segment — O(n log n) total instead of O(|groups| x n_events) boolean
-    masks. Code -1 (null bucket) is skipped."""
-    nq = len(query_ts)
-    sub = AggregationPart(
-        part.input_column, part.operation, dict(part.arg_map), part.window, None
-    )
-    maps: list[dict] = [dict() for _ in range(nq)]
-    qzero = np.zeros(nq, dtype=np.int64)
-    order = np.argsort(codes, kind="stable")
-    oc = codes[order]
-    first_nn = int(np.searchsorted(oc, 0, side="left"))  # skip the -1 block
-    order, oc = order[first_nn:], oc[first_nn:]
-    if len(oc):
-        bounds = np.flatnonzero(np.diff(oc, prepend=oc[0] - 1))
-        bounds = np.append(bounds, len(oc))
-        for seg in range(len(bounds) - 1):
-            sel = order[bounds[seg]:bounds[seg + 1]]
-            r = sawtooth_segments(
-                np.zeros(len(sel), dtype=np.int64), ts[sel],
-                {part.input_column: vals[sel]}, qzero, query_ts, [sub],
-                array_inputs,
-            )[sub.output_name]
-            _fill_maps(maps, uniq[oc[bounds[seg]]], r, part.operation, nq)
-    res = np.full(nq, None, dtype=object)
+    col = part.input_column
+    if map_input:
+        dicts = [d or {} for d in evals[col]]
+        rows = np.repeat(np.arange(len(ets)),
+                         np.array([len(d) for d in dicts], dtype=np.int64))
+        labels = np.array([k for d in dicts for k in d], dtype=object)
+        vals = np.array([v for d in dicts for v in d.values()], dtype=object)
+    else:
+        bstr = [None if b is None or b != b else str(b)
+                for b in evals[part.bucket].tolist()]
+        rows = np.flatnonzero([b is not None for b in bstr])
+        labels = np.array(bstr, dtype=object)[rows]
+        vals = evals[col][rows]
+    lab, uniq = pd.factorize(labels, sort=True)
+    order = np.lexsort((lab, ecode[rows]))
+    kcode, lab = ecode[rows][order], lab[order]
+    new = np.ones(len(order), dtype=bool)
+    new[1:] = (kcode[1:] != kcode[:-1]) | (lab[1:] != lab[:-1])
+    seg, seg_key, seg_label = np.cumsum(new) - 1, kcode[new], uniq[lab[new]]
+    gts, gvals = ets[rows][order], {col: vals[order]}
+    sub = AggregationPart(col, part.operation, dict(part.arg_map), part.window, None)
+    maps: list[dict] = [dict() for _ in range(len(qts))]
+    for a, _, qidx, sidx in range_pairs(
+        np.searchsorted(seg_key, qcode, side="left"),
+        np.searchsorted(seg_key, qcode, side="right"),
+    ):
+        qidx += a
+        r = _plain_segments(seg, gts, gvals, sidx, qts[qidx], [sub],
+                            array_inputs)[sub.output_name]
+        _fill_maps(maps, qidx, seg_label[sidx], r, part.operation)
+    res = np.full(len(qts), None, dtype=object)
     res[:] = maps
     return res
 
@@ -434,19 +396,53 @@ def sawtooth_segments(
     qts: np.ndarray,
     parts: list[AggregationPart],
     array_inputs: set[str],
+    map_inputs: set[str],
 ) -> dict[str, np.ndarray]:
-    """Plain parts (no bucket, no map input) for many keys in one pass.
+    """Every part, for many keys in one pass.
 
     Events (ecode, ets, evals) are sorted by (key code, ts); queries
     (qcode, qts) come in any order and see only the events of their own
-    code. Each (code, ts) pair packs into one order-preserving int64:
-    code slot * (|distinct event ts| + 1) + ts rank. Ranks, not raw ts,
-    keep the product far from overflow for any ts range. A query's
-    window is then two searchsorted calls over the packed event keys,
-    for every query at once; a code with no events gets an even slot
+    code. Returns output_name -> array aligned with the queries.
+
+    Columns named in `array_inputs` hold lists and are auto-exploded: each
+    element aggregates individually at its row's timestamp (reference:
+    VectorDispatcher auto-explode, ColumnAggregator.scala:208-217).
+    Bucketed parts (part.bucket set, reference: BucketedColumnAggregator)
+    and parts over `map_inputs` columns, which hold dicts
+    (MapColumnAggregator), produce dict outputs {label: value}: each runs
+    the same kernel once over its (key, label) segments
+    (`_sawtooth_grouped`). The other parts run together in one
+    `_plain_segments` call."""
+    plain = [p for p in parts
+             if p.bucket is None and p.input_column not in map_inputs]
+    out = _plain_segments(ecode, ets, evals, qcode, qts, plain,
+                          array_inputs) if plain else {}
+    for part in parts:
+        if part.bucket is not None or part.input_column in map_inputs:
+            out[part.output_name] = _sawtooth_grouped(
+                ecode, ets, evals, qcode, qts, part, array_inputs,
+                part.input_column in map_inputs)
+    return out
+
+
+def _plain_segments(
+    ecode: np.ndarray,
+    ets: np.ndarray,
+    evals: dict[str, np.ndarray],
+    qcode: np.ndarray,
+    qts: np.ndarray,
+    parts: list[AggregationPart],
+    array_inputs: set[str],
+) -> dict[str, np.ndarray]:
+    """`sawtooth_segments` for parts with no bucket and no map input. Each
+    (code, ts) pair packs into one order-preserving int64: code slot *
+    (|distinct event ts| + 1) + ts rank. Ranks, not raw ts, keep the
+    product far from overflow for any ts range. A query's window is then
+    two searchsorted calls over the packed event keys, for every query at
+    once; a code with no events (or no events at all) gets an even slot
     between the event segments, so its windows are empty. Array inputs
-    flatten once; `_sawtooth_plain` then runs once over the whole arrays.
-    Returns output_name -> array aligned with the queries."""
+    flatten once; `_sawtooth_plain` then runs once over the whole
+    arrays."""
     ne = len(ets)
     lo = (np.flatnonzero(np.diff(ecode, prepend=ecode[:1] - 1)) if ne
           else np.zeros(1, dtype=np.int64))

@@ -48,7 +48,7 @@ from chronon_spark.operators.groupby import (
     _union_sources,
     window_days,
 )
-from chronon_spark.operators.sawtooth import sawtooth_aggregate, sawtooth_segments
+from chronon_spark.operators.sawtooth import sawtooth_segments
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 
 
@@ -168,19 +168,6 @@ def _emit(res: np.ndarray, sql_type: str):
     return pd.Series(list(res), dtype=object)
 
 
-def _empty_feature(part: AggregationPart, sql_type: str, nq: int):
-    """Feature column for left rows whose key has NO right rows."""
-    if part.bucket is not None or sql_type.startswith("map<"):
-        return pd.Series([{} for _ in range(nq)], dtype=object)
-    if part.operation in (Operation.COUNT, Operation.UNIQUE_COUNT):
-        return _emit(np.zeros(nq, dtype=np.int64), sql_type)
-    if part.operation in _ARRAY_OPS:
-        return pd.Series([[] for _ in range(nq)], dtype=object)
-    if part.operation in _MAP_OPS:
-        return pd.Series([{} for _ in range(nq)], dtype=object)
-    return _emit(np.full(nq, None, dtype=object), sql_type)
-
-
 def _norm_key(s: pd.Series, spark_type: str) -> pd.Series:
     """Coerce a key column to the right side's Spark type so factorize
     agrees with the bucket hash (which casts left keys Spark-side): int 5
@@ -264,14 +251,15 @@ def _sawtooth_by_key(
     """The sawtooth entry point shared by the join and self kernels.
 
     Queries (qcode, qts) and events (ecode, ets, evals) are each sorted by
-    (key code, ts). Plain parts run as ONE `sawtooth_segments` call for
-    the whole bucket: every query's window comes from searchsorted over
-    packed (key, ts) event keys, and each op builds its tables once.
-    Bucketed and map-input parts still call `sawtooth_aggregate` once per
-    query key, on array views of that key's events. Returns feature name
-    -> buffer aligned with the sorted queries: numeric features accumulate
-    in float64 (NaN = null, exact for int64 < 2^53) so emit stays
-    vectorized; arrays, maps and strings use object buffers."""
+    (key code, ts). Every part of the bucket, for every key, comes from ONE
+    `sawtooth_segments` call: each query's window comes from searchsorted
+    over packed (segment, ts) event keys, and each op builds its tables
+    once; bucketed and map-input parts segment by (key, label). A bucket
+    with no events runs the same way and gives every query the
+    empty-window value. Returns feature name -> buffer aligned with the
+    sorted queries: numeric features accumulate in float64 (NaN = null,
+    exact for int64 < 2^53) so emit stays vectorized; arrays, maps and
+    strings use object buffers."""
     nq = len(qts)
     outs = {
         name: np.full(nq, np.nan) if t in _NUMERIC_BUF else np.full(nq, None, dtype=object)
@@ -279,33 +267,14 @@ def _sawtooth_by_key(
     }
     if nq == 0:
         return outs
-
-    def store(name, vals, rows=slice(None)):
-        buf = outs[name]
+    names = {p.output_name: name for (name, _), p in zip(feature_fields, parts)}
+    feats = sawtooth_segments(ecode, ets, evals, qcode, qts, parts, array_inputs,
+                              map_inputs)
+    for out_name, vals in feats.items():
+        buf = outs[names[out_name]]
         if buf.dtype != object and vals.dtype == object:
             vals = np.array([np.nan if v is None else v for v in vals], dtype=np.float64)
-        buf[rows] = vals
-
-    names = {p.output_name: name for (name, _), p in zip(feature_fields, parts)}
-    plain = [p for p in parts if p.bucket is None and p.input_column not in map_inputs]
-    grouped = [p for p in parts if p not in plain]
-    if plain:
-        feats = sawtooth_segments(ecode, ets, evals, qcode, qts, plain, array_inputs)
-        for out_name, vals in feats.items():
-            store(names[out_name], vals)
-    if not grouped:
-        return outs
-    starts = np.flatnonzero(np.diff(qcode, prepend=qcode[0] - 1))
-    ends = np.append(starts[1:], nq)
-    e0 = np.searchsorted(ecode, qcode[starts], side="left")
-    e1 = np.searchsorted(ecode, qcode[starts], side="right")
-    for s, e, r0, r1 in zip(starts.tolist(), ends.tolist(), e0.tolist(), e1.tolist()):
-        feats = sawtooth_aggregate(
-            ets[r0:r1], {c: v[r0:r1] for c, v in evals.items()}, qts[s:e], grouped,
-            array_inputs=array_inputs, map_inputs=map_inputs,
-        )
-        for out_name, vals in feats.items():
-            store(names[out_name], vals, slice(s, e))
+        buf[:] = vals
     return outs
 
 
@@ -414,9 +383,9 @@ def temporal_features(
     the bucket from one Arrow batch. PySpark's cogroup serde costs
     milliseconds PER GROUP, so per-key grouping caps throughput at a few
     hundred groups/sec/core; bucketing amortizes that over thousands of
-    keys, and `_sawtooth_by_key` answers all of the bucket's keys with one
-    bucket-level kernel call.
-    The bucket count comes from `_join_buckets`; hot keys may be salted
+    keys, and `_sawtooth_by_key` answers all of the bucket's keys and parts
+    with one bucket-level kernel call, also when the bucket holds no right
+    rows. The bucket count comes from `_join_buckets`; hot keys may be salted
     (`_salt_hot_keys`).
     """
     spark = left_df.sparkSession
@@ -448,12 +417,7 @@ def temporal_features(
     def kernel(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if len(lpdf) == 0:
             return pd.DataFrame(columns=left_cols + [n for n, _ in feature_fields])
-        nq = len(lpdf)
         out = lpdf[left_cols].copy().reset_index(drop=True)
-        if len(rpdf) == 0:
-            for (name, sql_type), part in zip(feature_fields, parts):
-                out[name] = _empty_feature(part, sql_type, nq)
-            return out
         lcode, rcode = _segment_codes(
             lpdf, rpdf, left_keys, right_keys,
             [right_types[rk] for rk in right_keys],

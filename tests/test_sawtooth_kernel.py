@@ -203,7 +203,7 @@ def test_range_kth_matches_naive_sort_randomized():
     duplicates, NaNs, empty windows, and multi-percentile k's."""
     import numpy as np
 
-    from chronon_spark.operators.sawtooth import _range_kth
+    from chronon_spark.operators.sawtooth import _WaveletKth
 
     rng = np.random.default_rng(42)
     for trial in range(5):
@@ -220,8 +220,8 @@ def test_range_kth_matches_naive_sort_randomized():
         p_tile = np.tile(np.array(pct), nq)
         ks = np.maximum(1, np.ceil(p_tile * m_rep)).astype(np.int64) - 1
         ks = np.where(m_rep > 0, np.minimum(ks, m_rep - 1), -1)
-        got = _range_kth(
-            vals, np.repeat(s, P), np.repeat(e, P), ks
+        got = _WaveletKth(vals).query(
+            np.repeat(s, P), np.repeat(e, P), ks
         ).reshape(nq, P)
         for i in range(nq):
             seg = vals[s[i]:e[i]]
@@ -268,7 +268,7 @@ BUCKET_PARTS = [
     AggregationPart("v", Operation.LAST, window=Window(2, TimeUnit.DAYS)),
     AggregationPart("v", Operation.LAST_K, arg_map={"k": 3}, window=Window(2, TimeUnit.DAYS)),
     AggregationPart("cat", Operation.HISTOGRAM, window=Window(30, TimeUnit.DAYS)),
-    # one bucketed part and one map-input part pin _sawtooth_grouped
+    # one bucketed part and one map-input part: (key, label) segments
     AggregationPart("v", Operation.SUM, window=Window(2, TimeUnit.DAYS), bucket="cat"),
     AggregationPart("m", Operation.COUNT, window=Window(30, TimeUnit.DAYS)),
 ]
@@ -318,8 +318,10 @@ def _naive_key(ets, evals, qts):
 
 
 def _same(f, s):
+    """Kernel value vs naive value; maps compare as dicts, so label order
+    does not matter."""
     if isinstance(s, dict):
-        return (isinstance(f, dict) and f.keys() == s.keys()
+        return (isinstance(f, dict) and set(f) == set(s)
                 and all(_close(f[k], s[k]) for k in s))
     if isinstance(s, list):
         return [round(float(x), 6) for x in f] == [round(float(x), 6) for x in s]
@@ -327,39 +329,51 @@ def _same(f, s):
 
 
 def _check_by_key(qcode, qts, ecode, ets, evals, monkeypatch,
-                  parts=BUCKET_PARTS, types=BUCKET_TYPES, naive=_naive_key):
+                  parts=BUCKET_PARTS, types=BUCKET_TYPES, naive=_naive_key,
+                  chunked=False):
     """Run `_sawtooth_by_key` over one bucket and compare every query key
-    against `naive(key events, key queries)`. Also pins the call shape:
-    one bucket-level `_sawtooth_plain` call for all plain parts, and the
-    per-key `sawtooth_aggregate` loop only for bucketed and map-input
-    parts."""
+    against `naive(key events, key queries)`. Also pins the call shape,
+    whatever the number of keys: exactly one `_sawtooth_plain` call for
+    all plain parts, covering every query, and one bucket-level call per
+    bucketed or map-input part, covering every (query, label) pair of the
+    bucket. With `chunked`, a grouped part's pairs may span several calls
+    instead."""
     from chronon_spark.operators import sawtooth as st
     from chronon_spark.operators import temporal_join as tj
 
-    plain_calls, key_calls = [], []
+    calls = []
     real_plain = st._sawtooth_plain
 
     def counting_plain(event_vals, seg_lo, ps, bounds):
-        plain_calls.append(([p.output_name for p in ps], len(bounds[0][0])))
+        calls.append(([p.output_name for p in ps], len(bounds[0][0])))
         return real_plain(event_vals, seg_lo, ps, bounds)
 
-    def counting_agg(*a, **kw):
-        key_calls.append([p.output_name for p in a[3]])
-        return sawtooth_aggregate(*a, **kw)
-
     monkeypatch.setattr(st, "_sawtooth_plain", counting_plain)
-    monkeypatch.setattr(tj, "sawtooth_aggregate", counting_agg)
     _, array_inputs, map_inputs, fields = tj._kernel_columns(types, parts)
     bufs = tj._sawtooth_by_key(qcode, qts, ecode, ets, evals, parts,
                                fields, array_inputs, map_inputs)
     plain = [p.output_name for p in parts
              if p.bucket is None and p.input_column not in map_inputs]
-    grouped = [p.output_name for p in parts
+    grouped = [p for p in parts
                if p.bucket is not None or p.input_column in map_inputs]
-    # one bucket-level call answers every query of every key
-    assert [c for c in plain_calls if c[0] == plain] == [(plain, len(qts))]
-    # the per-key loop runs once per query key, for the grouped parts only
-    assert key_calls == [grouped] * (len(np.unique(qcode)) if grouped else 0)
+    assert [c for c in calls if c[0] == plain] == ([(plain, len(qts))] if plain else [])
+    n_grouped = 0
+    for p in grouped:
+        sub = AggregationPart(p.input_column, p.operation, dict(p.arg_map), p.window)
+        sizes = [n for names, n in calls if names == [sub.output_name]]
+        n_grouped += len(sizes)
+        # one pair per query and label of its key (in any of its events)
+        col = evals[p.bucket if p.bucket else p.input_column]
+        pairs = sum(
+            len({str(b) for b in col[ecode == c] if b is not None} if p.bucket
+                else {k for d in col[ecode == c] for k in (d or {})})
+            for c in qcode)
+        assert sum(sizes) == pairs, p.output_name
+        if chunked:
+            assert len(sizes) > 1, p.output_name
+        else:
+            assert len(sizes) == (1 if pairs else 0), p.output_name
+    assert len(calls) == bool(plain) + n_grouped
     for c in np.unique(qcode):
         qi = np.flatnonzero(qcode == c)
         ei = np.flatnonzero(ecode == c)
@@ -404,6 +418,44 @@ def test_by_key_self_shape_vs_naive(seed, monkeypatch):
     lo = 1704067200000 + 3 * 86_400_000
     qsel = np.flatnonzero((ets >= lo) & (ets < lo + 4 * 86_400_000))
     _check_by_key(ecode[qsel], ets[qsel], ecode, ets, evals, monkeypatch)
+
+
+@pytest.mark.parametrize("seed", [8, 9])
+def test_by_key_grouped_chunked_vs_naive(seed, monkeypatch):
+    """Bucketed and map-input parts with the (query, label) pair bound
+    cut to a few pairs: each grouped part's pairs span many chunks, and
+    every query still gets every label of its key."""
+    from chronon_spark.operators import sawtooth as st
+
+    monkeypatch.setattr(st, "_MAX_PAIRS", 7)
+    rng = np.random.default_rng(seed)
+    ecode, ets, evals = _multikey_bucket(rng)
+    qcode = rng.integers(0, 16, size=60)
+    qts = 1704067200000 + rng.integers(-86_400_000, 11 * 86_400_000, size=60)
+    order = np.lexsort((qts, qcode))
+    _check_by_key(qcode[order], qts[order].astype(np.int64), ecode, ets, evals,
+                  monkeypatch, chunked=True)
+
+
+@pytest.mark.parametrize("bound", [1, 5, 40, 8_000_000])
+def test_range_pairs_vs_enumeration(bound, monkeypatch):
+    """Chunked (query, row) pairs equal the plain enumeration, in query
+    order; a chunk holds at most `bound` pairs unless it is one query."""
+    from chronon_spark.operators import sawtooth as st
+
+    monkeypatch.setattr(st, "_MAX_PAIRS", bound)
+    rng = np.random.default_rng(15)
+    lo = rng.integers(0, 50, size=200)
+    hi = lo + rng.choice([0, 0, 1, 3, 12], size=200)
+    want = [(q, r) for q in range(200) for r in range(lo[q], hi[q])]
+    got, nxt = [], 0
+    for a, b, qidx, ridx in st.range_pairs(lo, hi):
+        assert a >= nxt and b > a
+        assert len(qidx) <= bound or b == a + 1
+        assert qidx.min() >= 0 and qidx.max() < b - a
+        got += list(zip((qidx + a).tolist(), ridx.tolist()))
+        nxt = b
+    assert got == want
 
 
 def test_by_key_empty_query_set():

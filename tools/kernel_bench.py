@@ -1,6 +1,6 @@
-"""Kernel micro-benchmark outside Spark: `_sawtooth_by_key` and the
-pixel-feature batch function on fixed seeded inputs, timed with
-time.perf_counter and split by stage.
+"""Kernel micro-benchmark outside Spark: `_sawtooth_by_key`, the
+mutation-replay kernel and the pixel-feature batch function on fixed
+seeded inputs, timed with time.perf_counter and split by stage.
 
     python tools/kernel_bench.py [--repeat 7] [--fixtures DIR]
 
@@ -15,10 +15,22 @@ fastest repeat, in ms, plus the median per item in us):
   with moments (SUM, AVERAGE, VARIANCE, SKEW, KURTOSIS over 1d, 7d and
   lifetime) plus MAX and LAST_K.
 
-  In both sawtooth cases every event row is also a query, as in the
+* ``sawtooth.grouped``: one bucket of 2000 keys with 5 events each, with
+  two bucketed parts (SUM 7d and COUNT lifetime by a 4-value string
+  column with nulls) and one map-input part (COUNT 7d over maps of up to
+  3 of 5 keys).
+
+  In the sawtooth cases every event row is also a query, as in the
   image_asof join and the temporal GroupBy. Stages: ``by_key`` is
   `_sawtooth_by_key` (window bounds and ops), ``emit`` turns its buffers
   into the kernel's output columns (`_emit`).
+* ``mutation.replay``: the mutation-replay kernel on one bucket of 2000
+  (key, day) segments, each with 20 snapshot rows, 6 mutations (a third
+  of them deletes of snapshot rows) and 5 queries, with invertible (SUM,
+  COUNT, AVERAGE), non-invertible (MAX, LAST_K, UNIQUE_COUNT) and
+  bucketed (SUM by a string column) parts. Stages: ``pairs`` expands
+  each query into its (query, right row) pairs (`range_pairs`),
+  ``replay`` is `replay_aggregate_batch`.
 * ``pixel.batch``: `pixel_feature_batch` over the same fixture in
   1024-row batches (the Arrow batch size of the bench). Stages:
   ``to_pandas`` converts each Arrow batch, ``features`` is the batch
@@ -89,14 +101,96 @@ def _many_events_buckets():
     return _bucket_inputs(code, ts, vals, 8), parts
 
 
-def _time_sawtooth(buckets, parts):
+def _grouped_bucket():
+    rng = np.random.default_rng(8)
+    code = np.repeat(np.arange(2000, dtype=np.int64), 5)
+    n = len(code)
+    ts = 1704067200000 + rng.integers(0, 30 * DAY, size=n)
+    order = np.lexsort((ts, code))
+    code, ts = code[order], ts[order]
+    cat = rng.choice(np.array(["a", "b", "c", "d", None], dtype=object), size=n)
+    labels = np.array(["p", "q", "r", "s", "t"])
+    m = np.empty(n, dtype=object)
+    m[:] = [{str(k): float(rng.integers(0, 9)) for k in
+             rng.choice(labels, size=rng.integers(0, 4), replace=False)}
+            for _ in range(n)]
+    evals = {"v": np.round(rng.normal(50.0, 20.0, size=n), 2), "cat": cat, "m": m}
+    parts = [
+        AggregationPart("v", Operation.SUM, window=Window(7), bucket="cat"),
+        AggregationPart("v", Operation.COUNT, window=None, bucket="cat"),
+        AggregationPart("m", Operation.COUNT, window=Window(7)),
+    ]
+    types = {"v": "double", "cat": "string", "m": "map<string,double>"}
+    return [(code, ts, evals)], parts, types
+
+
+def _mutation_inputs():
+    """One cogroup bucket of the mutation kernel, rows sorted by segment."""
+    rng = np.random.default_rng(9)
+    n_seg, n_snap, n_mut, n_q = 2000, 20, 6, 5
+    day0 = 1704067200000 + 10 * DAY
+    seg = np.repeat(np.arange(n_seg, dtype=np.int64), n_snap)
+    snap_ts = day0 - rng.integers(1, 9 * DAY, size=len(seg))
+    snap_v = np.round(rng.normal(50.0, 20.0, size=len(seg)), 2)
+    # a third of the mutations delete a snapshot row, the rest insert
+    mseg = np.repeat(np.arange(n_seg, dtype=np.int64), n_mut)
+    victim = mseg * n_snap + rng.integers(0, n_snap, size=len(mseg))
+    delete = rng.random(len(mseg)) < 1 / 3
+    m_ts = np.where(delete, snap_ts[victim], day0 + rng.integers(0, DAY, size=len(mseg)))
+    m_v = np.where(delete, snap_v[victim], np.round(rng.normal(50.0, 20.0, size=len(mseg)), 2))
+    m_mut = (day0 + rng.integers(0, DAY, size=len(mseg))).astype(np.float64)
+    rcode = np.concatenate([seg, mseg])
+    order = np.argsort(rcode, kind="stable")
+    vals = np.concatenate([snap_v, m_v])[order]
+    rows = {
+        "code": rcode[order],
+        "ts": np.concatenate([snap_ts, m_ts])[order],
+        "mut_ts": np.concatenate([np.full(len(seg), np.nan), m_mut])[order],
+        "sign": np.concatenate([np.ones(len(seg), dtype=np.int64),
+                                np.where(delete, -1, 1)])[order],
+        "vals": {"v": vals,
+                 "cat": np.array(["abc"[int(x) % 3] for x in vals], dtype=object)},
+    }
+    qcode = np.repeat(np.arange(n_seg, dtype=np.int64), n_q)
+    qts = day0 + rng.integers(0, DAY, size=len(qcode))
+    parts = [
+        AggregationPart("v", op, arg_map={"k": 3}, window=w)
+        for op in (Operation.SUM, Operation.COUNT, Operation.AVERAGE,
+                   Operation.MAX, Operation.LAST_K, Operation.UNIQUE_COUNT)
+        for w in (Window(7), None)
+    ] + [AggregationPart("v", Operation.SUM, window=Window(7), bucket="cat")]
+    return rows, qcode, qts, parts
+
+
+def _time_replay(rows, qcode, qts, parts):
+    from chronon_spark.operators.mutations import _replay_empty, replay_aggregate_batch
+    from chronon_spark.operators.sawtooth import range_pairs
+
+    t0 = time.perf_counter()
+    chunks = list(range_pairs(np.searchsorted(rows["code"], qcode, side="left"),
+                              np.searchsorted(rows["code"], qcode, side="right")))
+    t1 = time.perf_counter()
+    nq = len(qts)
+    outs = {}
+    for p in parts:
+        outs[p.output_name] = np.empty(nq, dtype=object)
+        outs[p.output_name][:] = [_replay_empty(p) for _ in range(nq)]
+    for a, b, qidx, ridx in chunks:
+        replay_aggregate_batch(
+            qidx, ridx, qts[a:b], b - a, rows["ts"], rows["mut_ts"], rows["sign"],
+            rows["vals"], parts, {n: o[a:b] for n, o in outs.items()})
+    t2 = time.perf_counter()
+    return {"pairs": t1 - t0, "replay": t2 - t1}
+
+
+def _time_sawtooth(buckets, parts, types=None):
     from chronon_spark.operators.temporal_join import (
         _emit,
         _kernel_columns,
         _sawtooth_by_key,
     )
 
-    _, array_inputs, map_inputs, fields = _kernel_columns({"v": "double"}, parts)
+    _, array_inputs, map_inputs, fields = _kernel_columns(types or {"v": "double"}, parts)
     by_key = emit = 0.0
     for code, ts, evals in buckets:
         t0 = time.perf_counter()
@@ -139,9 +233,14 @@ def main() -> None:
     img_buckets, img_parts = _image_asof_buckets(path)
     many_buckets, many_parts = _many_events_buckets()
     n_many = sum(len(b[1]) for b in many_buckets)
+    grp_buckets, grp_parts, grp_types = _grouped_bucket()
+    mut = _mutation_inputs()
     cases = [
         ("sawtooth.image_asof", 4096, lambda: _time_sawtooth(img_buckets, img_parts)),
         ("sawtooth.many_events", n_many, lambda: _time_sawtooth(many_buckets, many_parts)),
+        ("sawtooth.grouped", 10_000,
+         lambda: _time_sawtooth(grp_buckets, grp_parts, grp_types)),
+        ("mutation.replay", len(mut[1]), lambda: _time_replay(*mut)),
         ("pixel.batch", 4096, lambda: _time_pixels(path)),
     ]
     print("| case | stage | median ms | best ms | us/item |")

@@ -31,7 +31,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronon_spark.api import PARTITION_COLUMN, BootstrapPart, Join
+from chronon_spark.api import BootstrapPart, Join
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 
 MATCHED_HASHES = "__matched_hashes"
@@ -78,20 +78,20 @@ def compute_bootstrap_table(
     for part in parts:
         keys = list(part.key_columns or join.row_ids or [])
         assert keys, "bootstrap part needs key_columns (or join.row_ids)"
+        # a key the left lacks can neither join nor be output
+        missing = [k for k in keys if k not in left_df.columns]
+        if missing:
+            raise ValueError(
+                f"bootstrap part {part.table}: key columns {missing} are not "
+                "columns of the join's left")
         bs = scan_df(spark, part.table, part.query, rng, spec)
         feature_cols = sorted(set(bs.columns) & out_cols)
         if not feature_cols:
             continue
         h = _part_hash(part)
         hash_fields[h] = set(feature_cols)
-        keep = [k for k in keys if k in bs.columns] + feature_cols
-        if PARTITION_COLUMN in bs.columns and PARTITION_COLUMN in df.columns \
-                and PARTITION_COLUMN not in keep and PARTITION_COLUMN in keys:
-            keep.append(PARTITION_COLUMN)
-        bs = bs.select(*dict.fromkeys(keep)).dropDuplicates(
-            [k for k in keys if k in bs.columns]
-        )
-        join_keys = [k for k in keys if k in bs.columns and k in df.columns]
+        join_keys = [k for k in keys if k in bs.columns]
+        bs = bs.select(*dict.fromkeys(join_keys + feature_cols)).dropDuplicates(join_keys)
         # coalesced left join: shared feature columns merge with bootstrap
         # precedence (earlier parts win — reference coalescedJoin)
         shared = [c for c in bs.columns if c in df.columns and c not in join_keys]

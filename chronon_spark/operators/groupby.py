@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from chronon_spark.api import (
     PARTITION_COLUMN,
     TIME_COLUMN,
-    Accuracy,
     AggregationPart,
     EntitySource,
     GroupBy,
@@ -595,28 +594,3 @@ def _compute_entity_snapshot(spark, group_by, rng, spec) -> DataFrame:
                 )
     return _apply_derivations(_in_range(out, rng, spec), group_by)
 
-
-def compute_groupby(
-    spark: SparkSession,
-    group_by: GroupBy,
-    rng: Optional[PartitionRange] = None,
-    spec: PartitionSpec = DEFAULT_SPEC,
-    dense: bool = False,
-) -> DataFrame:
-    """Dispatch on accuracy. TEMPORAL GroupBys are served through the
-    temporal join engine (operators/temporal_join.py) with the left side
-    equal to the source's own (keys, ts) rows."""
-    acc = group_by.inferred_accuracy()
-    if acc == Accuracy.SNAPSHOT:
-        return compute_snapshot_groupby(spark, group_by, rng, spec, dense)
-    if any(isinstance(s, EntitySource) and s.mutation_table for s in group_by.sources):
-        # (ENTITIES, TEMPORAL) has no standalone backfill shape — mutation
-        # replay needs a query set (the reference's temporalEntities takes
-        # the JOIN's left). Attach this GroupBy to a Join instead.
-        raise NotImplementedError(
-            "temporal-entity GroupBys are served through Join "
-            "(operators/mutations.compute_temporal_entity_join_part)"
-        )
-    from chronon_spark.operators.temporal_join import compute_temporal_groupby
-
-    return compute_temporal_groupby(spark, group_by, rng, spec)

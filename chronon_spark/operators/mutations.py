@@ -40,6 +40,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,18 +51,15 @@ from chronon_spark.api import (
     TIME_COLUMN,
     AggregationPart,
     EntitySource,
-    GroupBy,
     JoinPart,
     Operation,
     sawtooth_hop_millis,
 )
 from chronon_spark.operators.sawtooth import _naive_one, range_pairs
 from chronon_spark.operators.temporal_join import (
-    _emit,
-    _join_buckets,
+    _cogroup_features,
     _kernel_columns,
     _np_col,
-    _segment_codes,
 )
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 
@@ -458,13 +456,18 @@ def temporal_entity_features(
     is_before. Returns left_df columns + one `{prefix}{output_name}`
     column per part.
 
-    Group state is day-bounded (the day is in the cogroup hash). The
-    bucket count comes from `_join_buckets`, as for the as-of join and
-    the temporal GroupBy kernels.
+    Runs in the as-of join's cogroup frame (`_cogroup_features`) with the
+    query day as one more key, so group state is day-bounded. Map- and
+    array-input parts raise ValueError here, before any job runs.
     """
-    buckets = _join_buckets(left_df.sparkSession)
     right_types = dict(snapshot_df.dtypes)
-    input_cols, _, _, feature_fields = _kernel_columns(right_types, parts, prefix)
+    input_cols, array_inputs, map_inputs, feature_fields = _kernel_columns(
+        right_types, parts, prefix)
+    for p in parts:
+        if p.input_column in map_inputs | array_inputs:
+            raise ValueError(
+                f"mutation replay has no map- or array-input support: part "
+                f"{p.output_name} reads {p.input_column} ({right_types[p.input_column]})")
 
     # snapshot partition d serves queries of day d+1
     snap = snapshot_df.select(
@@ -486,36 +489,15 @@ def temporal_entity_features(
     )
     right = snap.unionByName(mut)
 
-    left_q = left_df.withColumn(_QDAY, F.expr(f"{TIME_COLUMN} DIV {DAY_MS}"))
-    left_cols = [f.name for f in left_df.schema.fields]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in left_df.schema.fields]
-        + [f"`{n}` {t}" for n, t in feature_fields]
-    )
-    lkey_exprs = [
-        F.col(lk).cast(right_types[rk]) for lk, rk in zip(left_keys, right_keys)
-    ]
-    l_bucket = F.pmod(F.xxhash64(*lkey_exprs, F.col(_QDAY)), F.lit(buckets))
-    r_bucket = F.pmod(
-        F.xxhash64(*[F.col(k) for k in right_keys], F.col(_QDAY)), F.lit(buckets)
-    )
-    seg_l = list(left_keys) + [_QDAY]
-    seg_r = list(right_keys) + [_QDAY]
-    seg_types = [right_types[rk] for rk in right_keys] + ["bigint"]
-
-    def kernel(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=left_cols + [n for n, _ in feature_fields])
-        nq = len(lpdf)
-        out = lpdf[left_cols].copy().reset_index(drop=True)
-        lcode, rcode = _segment_codes(lpdf, rpdf, seg_l, seg_r, seg_types)
-        lts = lpdf[TIME_COLUMN].to_numpy().astype(np.int64)
+    def body(left: pa.Table, right: pa.Table, lcode, rcode) -> dict:
+        nq = left.num_rows
+        lts = left.column(TIME_COLUMN).to_numpy().astype(np.int64)
         rorder = np.argsort(rcode, kind="stable")
         rcode_s = rcode[rorder]
-        rts_s = rpdf[TIME_COLUMN].to_numpy().astype(np.int64)[rorder]
-        mut_ts = rpdf["__mut_ts"].to_numpy(dtype=np.float64)[rorder]
-        signs = rpdf["__sign"].to_numpy(dtype=np.int64)[rorder]
-        evals = {c: _np_col(rpdf, c, right_types[c])[rorder] for c in input_cols}
+        rts_s = right.column(TIME_COLUMN).to_numpy().astype(np.int64)[rorder]
+        mut_ts = right.column("__mut_ts").to_numpy()[rorder]
+        signs = right.column("__sign").to_numpy().astype(np.int64)[rorder]
+        evals = {c: _np_col(right, c, right_types[c])[rorder] for c in input_cols}
         outs: dict[str, np.ndarray] = {}
         for (name, _), part in zip(feature_fields, parts):
             arr = np.empty(nq, dtype=object)
@@ -533,14 +515,14 @@ def temporal_entity_features(
                 qidx, ridx, lts[a:b], b - a, rts_s, mut_ts, signs,
                 evals, parts, views,
             )
-        for name, sql_type in feature_fields:
-            out[name] = _emit(outs[name], sql_type)
-        return out
+        return outs
 
-    grouped = left_q.groupBy(l_bucket.alias("__bucket")).cogroup(
-        right.groupBy(r_bucket.alias("__bucket"))
-    )
-    return grouped.applyInPandas(kernel, schema=out_schema)
+    # the query day is part of each group's key: snapshot rows of day D-1
+    # and mutations of day D meet the queries of day D
+    qday = F.expr(f"{TIME_COLUMN} DIV {DAY_MS}")
+    return _cogroup_features(
+        left_df, right, list(left_keys) + [qday], list(right_keys) + [_QDAY],
+        feature_fields, body)
 
 
 def _mutation_scan(

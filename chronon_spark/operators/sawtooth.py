@@ -12,7 +12,7 @@ boundary inclusion :129-137 and SawtoothUdfSpec.scala:256-259; hop sizes
 Resolution.scala:38-48.
 
 The reference walks per-row mutable IRs over RDDs; this kernel instead runs
-inside Arrow batches (applyInPandas / cogroup.applyInPandas) on numpy
+inside Arrow batches (groupBy / cogroup applyInArrow) on numpy
 arrays sorted by (key, ts), one call per batch for all of its keys and
 parts (`sawtooth_segments`). Bucketed and map-input parts run the same
 ops over (key, label) segments, so there is one path for every part kind:

@@ -13,10 +13,11 @@ TableUtils.scala:71-74; README.md:82 claims 9x vs the legacy cogroup
 path).
 
 Our physical plan is the idiomatic PySpark expression of the same shape:
-``left.groupBy(keys).cogroup(right.groupBy(keys)).applyInPandas(kernel)``.
+``left.groupBy(bucket).cogroup(right.groupBy(bucket)).applyInArrow(kernel)``.
 cogroup-apply is exactly union+groupBy at the shuffle level — each side is
 hash-partitioned by key ONCE, co-located, and handed to the vectorized
-kernel as Arrow batches; there is no join explosion and no per-row Python.
+kernel as Arrow tables, which it reads as numpy with no pandas layer;
+there is no join explosion and no per-row Python.
 Skew controls: AQE on; the bucket-hash grouping is itself a generalized
 salt (hot keys share buckets with other keys); hot keys named in
 ``spark.chronon.join.salt.keys`` can additionally be split across kernel
@@ -30,9 +31,11 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DataType, StructType
 
 from chronon_spark.api import (
     PARTITION_COLUMN,
@@ -127,98 +130,113 @@ def output_sql_type(part: AggregationPart, input_type: str) -> str:
     return base
 
 
-def _np_col(pdf: pd.DataFrame, col: str, input_type: str) -> np.ndarray:
-    """pandas column -> kernel array: floats w/ NaN nulls for numerics,
-    object w/ None for the rest."""
-    s = pdf[col]
+def _np_col(table: pa.Table, col: str, input_type: str) -> np.ndarray:
+    """Arrow column -> kernel array: float64 with NaN nulls for numerics,
+    object with None for the rest (map values as dicts)."""
+    arr = table.column(col)
     if input_type in ("double", "float", "bigint", "int", "smallint", "tinyint", "boolean"):
-        return s.astype("float64").to_numpy()
-    return s.to_numpy(dtype=object)
+        return arr.cast(pa.float64()).to_numpy()
+    vals = arr.to_pylist()
+    if input_type.startswith("map<"):
+        vals = [None if v is None else dict(v) for v in vals]
+    return np.fromiter(vals, dtype=object, count=len(vals))
 
 
-def _emit(res: np.ndarray, sql_type: str):
-    """kernel output -> pandas column matching the Arrow schema."""
-    if sql_type == "bigint":
-        if res.dtype == object:
-            # round, don't truncate: prefix-sum floats of exact integers can
-            # sit epsilon below the true integer
-            return pd.array(
-                [None if v is None or v != v else int(round(v)) for v in res],
-                dtype="Int64",
-            )
-        if res.dtype.kind == "f":
-            mask = np.isnan(res)
-            ints = np.where(mask, 0, np.round(res)).astype(np.int64)
-            return pd.arrays.IntegerArray(ints, mask)
-        return pd.array(res, dtype="Int64")
-    if sql_type in ("int", "smallint"):
-        return pd.array(
-            [None if v is None or v != v else int(round(v)) for v in res], dtype="Int32"
-        )
-    if sql_type == "double":
-        # kernel convention: NaN == null. Use the masked Float64 array so
-        # Arrow writes genuine SQL NULLs (plain float64 NaN survives as NaN).
-        if res.dtype == object:
-            vals = np.array(
-                [np.nan if v is None else float(v) for v in res], dtype=np.float64
-            )
-        else:
-            vals = res.astype(np.float64, copy=False)
-        return pd.arrays.FloatingArray(vals.copy(), np.isnan(vals))
-    return pd.Series(list(res), dtype=object)
+def _to_arrow(buf: np.ndarray, sql_type: DataType) -> pa.Array:
+    """Kernel buffer -> Arrow array of the output column's type. NaN and
+    None are NULL. Numbers are rounded before any cast to an integer type:
+    prefix sums of exact integers can sit an epsilon below them."""
+    typ = to_arrow_type(sql_type)
+    if not (pa.types.is_integer(typ) or pa.types.is_floating(typ)
+            or pa.types.is_boolean(typ)):
+        return pa.array(buf, type=typ, from_pandas=True)
+    if buf.dtype == object:
+        buf = pa.array(buf, type=pa.float64(), from_pandas=True).to_numpy(
+            zero_copy_only=False)
+    mask = np.isnan(buf)
+    if pa.types.is_integer(typ):
+        buf = np.round(buf)
+    return pa.array(buf, mask=mask).cast(typ)
 
 
-def _norm_key(s: pd.Series, spark_type: str) -> pd.Series:
-    """Coerce a key column to the right side's Spark type so factorize
-    agrees with the bucket hash (which casts left keys Spark-side): int 5
-    and string '5' must match when the declared key type is string."""
-    if spark_type == "string":
-        return s.map(lambda v: None if v is None else str(v))
-    if spark_type in ("bigint", "int", "smallint", "tinyint"):
-        return pd.to_numeric(s, errors="coerce").astype("Int64")
-    if spark_type in ("double", "float"):
-        return pd.to_numeric(s, errors="coerce").astype("float64")
-    return s
-
-
-def _segment_codes(
-    lpdf: pd.DataFrame,
-    rpdf: pd.DataFrame,
-    left_keys: list[str],
-    right_keys: list[str],
-    key_types: Optional[list[str]] = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Joint integer codes for composite keys across both frames —
-    vectorized (np.unique over concatenated values per key column)."""
-    nl = len(lpdf)
-    lcode = np.zeros(nl, dtype=np.int64)
-    rcode = np.zeros(len(rpdf), dtype=np.int64)
-    key_types = key_types or [None] * len(left_keys)
-    for lk, rk, kt in zip(left_keys, right_keys, key_types):
-        lv, rv = lpdf[lk], rpdf[rk]
-        if kt is not None and lv.dtype != rv.dtype:
-            lv, rv = _norm_key(lv, kt), _norm_key(rv, kt)
-        both = pd.concat([lv, rv], ignore_index=True)
-        codes, uniq = pd.factorize(both, use_na_sentinel=False)
-        n = len(uniq)
-        lcode = lcode * n + codes[:nl]
-        rcode = rcode * n + codes[nl:]
-    return lcode, rcode
+def _key_codes(cols: list[pa.ChunkedArray]) -> np.ndarray:
+    """One integer code per row for a composite key: each key column is
+    dictionary-encoded (NULL is a value of its own, codes in order of
+    first appearance) and the codes combine in mixed radix."""
+    code = np.zeros(len(cols[0]), dtype=np.int64)
+    for col in cols:
+        enc = col.combine_chunks().dictionary_encode(null_encoding="encode")
+        code = code * len(enc.dictionary) + enc.indices.to_numpy()
+    return code
 
 
 _NUMERIC_BUF = ("double", "bigint", "int", "smallint")
 
 
 def _join_buckets(spark: SparkSession) -> int:
-    """Cogroup bucket count: spark.chronon.join.buckets, default 8x the
-    shuffle partitions — at cluster scale size it so a bucket's rows fit
-    executor memory."""
-    return int(
-        spark.conf.get(
-            "spark.chronon.join.buckets",
-            str(8 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))),
-        )
-    )
+    """Cogroup bucket count: 8x the shuffle partitions. At cluster scale,
+    size the shuffle partitions so a bucket's rows fit executor memory."""
+    return 8 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+def _with_features(out: pa.Table, features: StructType, bufs: dict) -> pa.Table:
+    for f in features.fields:
+        out = out.append_column(f.name, _to_arrow(bufs[f.name], f.dataType))
+    return out
+
+
+def _feature_schema(feature_fields: list[tuple[str, str]]) -> StructType:
+    return DataType.fromDDL(", ".join(f"`{n}` {t}" for n, t in feature_fields))
+
+
+def _cogroup_features(
+    left_df: DataFrame,
+    right_df: DataFrame,
+    left_keys: list,
+    right_keys: list[str],
+    feature_fields: list[tuple[str, str]],
+    body,
+) -> DataFrame:
+    """The cogroup frame of the as-of join and mutation replay.
+
+    Both sides group on `pmod(xxhash64(keys), buckets)` and each bucket is
+    one Arrow kernel call. A left key is a column name or an expression;
+    one that is an expression or whose type differs from the right key's
+    is cast to the right type Spark-side and ships as a kernel-only column,
+    so the bucket hash and the kernel's key codes see one type.
+    `body(left, right, lcode, rcode)` gets the bucket's two Arrow tables
+    and each row's joint key code, and returns feature name -> buffer
+    aligned with the left rows. The frame passes every column of left_df
+    through and appends the features."""
+    buckets = _join_buckets(left_df.sparkSession)
+    right_types = dict(right_df.dtypes)
+    left_types = dict(left_df.dtypes)
+    features = _feature_schema(feature_fields)
+    schema = StructType(left_df.schema.fields + features.fields)
+    left_cols = left_df.columns
+    lkeys = []
+    for i, (lk, rk) in enumerate(zip(left_keys, right_keys)):
+        if not isinstance(lk, str) or left_types[lk] != right_types[rk]:
+            expr = F.col(lk) if isinstance(lk, str) else lk
+            lk = f"__key{i}"
+            left_df = left_df.withColumn(lk, expr.cast(right_types[rk]))
+        lkeys.append(lk)
+
+    def kernel(left: pa.Table, right: pa.Table) -> pa.Table:
+        code = _key_codes([
+            pa.chunked_array(left.column(lk).chunks + right.column(rk).chunks,
+                             type=right.schema.field(rk).type)
+            for lk, rk in zip(lkeys, right_keys)
+        ])
+        nl = left.num_rows
+        bufs = body(left, right, code[:nl], code[nl:])
+        return _with_features(left.select(left_cols), features, bufs)
+
+    l_bucket = F.pmod(F.xxhash64(*[F.col(k) for k in lkeys]), F.lit(buckets))
+    r_bucket = F.pmod(F.xxhash64(*[F.col(k) for k in right_keys]), F.lit(buckets))
+    grouped = left_df.groupBy(l_bucket.alias("__bucket")).cogroup(
+        right_df.groupBy(r_bucket.alias("__bucket")))
+    return grouped.applyInArrow(kernel, schema=schema)
 
 
 def _kernel_columns(types: dict, parts: list[AggregationPart], prefix: str = ""):
@@ -378,28 +396,21 @@ def temporal_features(
     All left columns pass through, so duplicate left rows are preserved
     (reference duplicates the left in tests: EventsEventsTemporalTest.scala:75-76).
 
-    Physical plan: both sides are cogrouped on `pmod(xxhash64(keys),
-    buckets)` — NOT on the raw key — and the kernel processes every key in
-    the bucket from one Arrow batch. PySpark's cogroup serde costs
-    milliseconds PER GROUP, so per-key grouping caps throughput at a few
-    hundred groups/sec/core; bucketing amortizes that over thousands of
-    keys, and `_sawtooth_by_key` answers all of the bucket's keys and parts
-    with one bucket-level kernel call, also when the bucket holds no right
-    rows. The bucket count comes from `_join_buckets`; hot keys may be salted
-    (`_salt_hot_keys`).
+    Physical plan (`_cogroup_features`): both sides are cogrouped on
+    `pmod(xxhash64(keys), buckets)` — NOT on the raw key — and the kernel
+    processes every key in the bucket from one Arrow table. Each cogroup
+    group is one Python call with its own Arrow streams, so a group per key
+    would pay that fixed cost per key; `_sawtooth_by_key` answers all of
+    the bucket's keys and parts with one bucket-level kernel call, also
+    when the bucket holds no right rows. The bucket count comes from
+    `_join_buckets`; hot keys may be salted (`_salt_hot_keys`).
     """
     spark = left_df.sparkSession
-    buckets = _join_buckets(spark)
     left_df, right_df, left_keys, right_keys = _salt_hot_keys(
         spark, left_df, right_df, left_keys, right_keys, parts)
     right_types = dict(right_df.dtypes)
     input_cols, array_inputs, map_inputs, feature_fields = _kernel_columns(
         right_types, parts, prefix)
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in left_df.schema.fields]
-        + [f"`{n}` {t}" for n, t in feature_fields]
-    )
-    left_cols = [f.name for f in left_df.schema.fields]
     right_needed = list(dict.fromkeys(right_keys + [TIME_COLUMN] + input_cols))
     # fresh aliases mint new exprIds so a self-cogroup (left derived from the
     # same scan as right) doesn't get its shared attributes deduplicated away
@@ -407,41 +418,24 @@ def temporal_features(
         right_df.select(*[F.col(c).alias(c) for c in right_needed])
         .where(F.col(TIME_COLUMN).isNotNull())
     )
-    # hash on type-aligned keys so both sides bucket identically
-    lkey_exprs = [
-        F.col(lk).cast(right_types[rk]) for lk, rk in zip(left_keys, right_keys)
-    ]
-    l_bucket = F.pmod(F.xxhash64(*lkey_exprs), F.lit(buckets))
-    r_bucket = F.pmod(F.xxhash64(*[F.col(k) for k in right_keys]), F.lit(buckets))
 
-    def kernel(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=left_cols + [n for n, _ in feature_fields])
-        out = lpdf[left_cols].copy().reset_index(drop=True)
-        lcode, rcode = _segment_codes(
-            lpdf, rpdf, left_keys, right_keys,
-            [right_types[rk] for rk in right_keys],
-        )
-        lts = lpdf[TIME_COLUMN].to_numpy().astype(np.int64)
-        rts = rpdf[TIME_COLUMN].to_numpy().astype(np.int64)
+    def body(left: pa.Table, right: pa.Table, lcode, rcode) -> dict:
+        lts = left.column(TIME_COLUMN).to_numpy().astype(np.int64)
+        rts = right.column(TIME_COLUMN).to_numpy().astype(np.int64)
         lorder = np.lexsort((lts, lcode))
         rorder = np.lexsort((rts, rcode))
         bufs = _sawtooth_by_key(
             lcode[lorder], lts[lorder], rcode[rorder], rts[rorder],
-            {c: _np_col(rpdf, c, right_types[c])[rorder] for c in input_cols},
+            {c: _np_col(right, c, right_types[c])[rorder] for c in input_cols},
             parts, feature_fields, array_inputs, map_inputs,
         )
-        for name, sql_type in feature_fields:
-            buf = np.empty_like(bufs[name])
-            buf[lorder] = bufs[name]
-            out[name] = _emit(buf, sql_type)
-        return out
+        back = np.argsort(lorder)  # each left row's position in sorted order
+        return {name: buf[back] for name, buf in bufs.items()}
 
-    grouped = left_df.groupBy(l_bucket.alias("__bucket")).cogroup(
-        right_slim.groupBy(r_bucket.alias("__bucket"))
-    )
+    out = _cogroup_features(left_df, right_slim, left_keys, right_keys,
+                            feature_fields, body)
     # both salting modes key the cogroup on `__salt`; it is never output
-    return grouped.applyInPandas(kernel, schema=out_schema).drop("__salt")
+    return out.drop("__salt")
 
 
 def temporal_self_features(
@@ -458,11 +452,11 @@ def temporal_self_features(
     The generic cogroup plan would scan and shuffle the SAME table twice
     (left = queries, right = events) and sort both sides. Here the table
     flows through ONE scan -> ONE hash shuffle -> ONE sort ->
-    applyInPandas, and the kernel serves each row's query from the very
-    batch it arrived in — half the shuffle bytes and half the Arrow
-    serde of the join path, which is exactly the memory-bandwidth-bound
-    portion at high parallelism. The bucket count comes from
-    `_join_buckets`.
+    groupBy(...).applyInArrow, and the kernel serves each row's query from
+    the very batch it arrived in — half the shuffle bytes and half the
+    Arrow transfer of the join path, which is exactly the
+    memory-bandwidth-bound portion at high parallelism. The bucket count
+    comes from `_join_buckets`.
 
     `query_lo`/`query_hi` (epoch ms) bound WHICH rows emit output (the
     backfill range) while all rows still feed window state — the self
@@ -476,39 +470,27 @@ def temporal_self_features(
         df.select(*dict.fromkeys(out_cols + input_cols))
         .where(F.col(TIME_COLUMN).isNotNull())
     )
-    out_schema = ", ".join(
-        [f"`{c}` {types[c]}" for c in out_cols]
-        + [f"`{n}` {t}" for n, t in feature_fields]
-    )
+    features = _feature_schema(feature_fields)
+    schema = StructType([slim.schema[c] for c in out_cols] + features.fields)
     bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(buckets))
     lo = -(1 << 62) if query_lo is None else int(query_lo)
     hi = (1 << 62) if query_hi is None else int(query_hi)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_cols + [f for f, _ in feature_fields])
-        code = np.zeros(len(pdf), dtype=np.int64)
-        for k in keys:
-            codes, uniq = pd.factorize(pdf[k], use_na_sentinel=False)
-            code = code * len(uniq) + codes
-        ts = pdf[TIME_COLUMN].to_numpy().astype(np.int64)
+    def kernel(table: pa.Table) -> pa.Table:
+        code = _key_codes([table.column(k) for k in keys])
+        ts = table.column(TIME_COLUMN).to_numpy().astype(np.int64)
         order = np.lexsort((ts, code))
         code_s, ts_s = code[order], ts[order]
         # the rows in [lo, hi) are the queries; every row is an event
         qsel = np.flatnonzero((ts_s >= lo) & (ts_s < hi))
         bufs = _sawtooth_by_key(
             code_s[qsel], ts_s[qsel], code_s, ts_s,
-            {c: _np_col(pdf, c, types[c])[order] for c in input_cols},
+            {c: _np_col(table, c, types[c])[order] for c in input_cols},
             parts, feature_fields, array_inputs, map_inputs,
         )
-        out = pdf.iloc[order[qsel]][out_cols].reset_index(drop=True)
-        for name, sql_type in feature_fields:
-            out[name] = _emit(bufs[name], sql_type)
-        return out
+        return _with_features(table.select(out_cols).take(order[qsel]), features, bufs)
 
-    return slim.groupBy(bucket.alias("__bucket")).applyInPandas(
-        kernel, schema=out_schema
-    )
+    return slim.groupBy(bucket.alias("__bucket")).applyInArrow(kernel, schema=schema)
 
 
 def compute_temporal_join_part(

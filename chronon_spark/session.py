@@ -23,7 +23,8 @@ ENGINE_CONFS: dict[str, str] = {
     # stages at larger scale are unaffected (partitions above the advisory
     # size are never merged).
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-    # Arrow transfer for every pandas UDF / applyInPandas kernel.
+    # Arrow for toPandas/createDataFrame, and the Arrow batch size of every
+    # Python kernel (applyInArrow / applyInPandas).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # Deterministic timestamp semantics vs the DuckDB oracle.

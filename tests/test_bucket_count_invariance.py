@@ -1,11 +1,11 @@
 """The as-of join and mutation-replay kernels give the same rows whatever
-`spark.chronon.join.buckets` is. A left key with no right rows gets the
+the cogroup bucket count is: at 1 every key shares one bucket, at 64 most
+buckets hold no right rows. A left key with no right rows gets the
 empty-window value of each part, whether or not its cogroup bucket holds
 right rows of other keys."""
 
-import pytest
-
 from chronon_spark.api import AggregationPart, Operation, Window
+from chronon_spark.operators import temporal_join
 from chronon_spark.operators.mutations import temporal_entity_features
 from chronon_spark.operators.temporal_join import temporal_features
 
@@ -43,16 +43,22 @@ def _rows(df):
     )
 
 
-def _by_buckets(spark, run):
-    out = {}
-    try:
-        for buckets in ("1", "64"):
-            spark.conf.set("spark.chronon.join.buckets", buckets)
-            out[buckets] = _rows(run())
-    finally:
-        spark.conf.unset("spark.chronon.join.buckets")
-    assert out["1"] == out["64"]
-    return [dict(r) for r in out["1"]]
+def _by_buckets(monkeypatch, run):
+    out, asked = {}, []
+
+    def buckets_of(n):
+        def count(spark):
+            asked.append(n)
+            return n
+        return count
+
+    for buckets in (1, 64):
+        # the shared cogroup frame of both kernels reads the count here
+        monkeypatch.setattr(temporal_join, "_join_buckets", buckets_of(buckets))
+        out[buckets] = _rows(run())
+    assert asked == [1, 64]
+    assert out[1] == out[64]
+    return [dict(r) for r in out[1]]
 
 
 def _check_empty(rows, names):
@@ -64,7 +70,7 @@ def _check_empty(rows, names):
     assert all(r["value_count_7d"] > 0 for r in present)
 
 
-def test_temporal_features_bucket_count_invariant(spark):
+def test_temporal_features_bucket_count_invariant(spark, monkeypatch):
     right = spark.createDataFrame(
         [(k, BASE + i * DAY // 2 + k, float(i % 3), "ab"[i % 2], {"x": 1.0, "y": float(i)})
          for k in range(3) for i in range(8)],
@@ -72,13 +78,13 @@ def test_temporal_features_bucket_count_invariant(spark):
     )
     parts = PARTS + [MAP_PART]
     rows = _by_buckets(
-        spark,
+        monkeypatch,
         lambda: temporal_features(_left(spark), right, ["user_id"], ["user_id"], parts),
     )
     _check_empty(rows, [p.output_name for p in parts])
 
 
-def test_temporal_entity_features_bucket_count_invariant(spark):
+def test_temporal_entity_features_bucket_count_invariant(spark, monkeypatch):
     snap = spark.createDataFrame(
         [(k, BASE + i * DAY // 2 + k, float(i % 3), "ab"[i % 2], "2024-01-05")
          for k in range(3) for i in range(8)],
@@ -91,7 +97,7 @@ def test_temporal_entity_features_bucket_count_invariant(spark):
         "is_before boolean",
     )
     rows = _by_buckets(
-        spark,
+        monkeypatch,
         lambda: temporal_entity_features(
             _left(spark), snap, mut, ["user_id"], ["user_id"], PARTS),
     )

@@ -272,3 +272,33 @@ def test_custom_mutation_and_reversal_columns(spark, scenario, tmp_path):
     row = compute_join(spark, join).collect()[0]
     assert row["ent_value_sum"] == pytest.approx(55.0)
     assert row["ent_value_count_2d"] == 2
+
+
+@pytest.mark.parametrize("col_type, value", [
+    ("map<string,double>", {"x": 1.0}),
+    ("array<double>", [1.0, 2.0]),
+])
+def test_map_and_array_input_parts_rejected_at_plan_time(spark, col_type, value):
+    """Mutation replay has no map- or array-input support: such a part is
+    refused when the plan is built, naming the part and the column, instead
+    of failing inside the kernel."""
+    snap = spark.createDataFrame(
+        [(1, BASE + DAY, value, "2024-01-04")],
+        f"user_id int, ts long, m {col_type}, ds string",
+    )
+    mut = spark.createDataFrame(
+        [(1, BASE + 4 * DAY, value, BASE + 4 * DAY + 10, False)],
+        f"user_id int, ts long, m {col_type}, mutation_ts long, is_before boolean",
+    )
+    left = spark.createDataFrame([(1, BASE + 4 * DAY + HOUR)], "user_id int, ts long")
+    parts = _mk_parts(("m", Operation.COUNT, Window(7), None))
+    sc, group = spark.sparkContext, f"mutation-input-check-{col_type}"
+    sc.setJobGroup(group, "plan-time rejection")
+    try:
+        with pytest.raises(ValueError, match=rf"m_count_7d reads m \({col_type}\)"):
+            temporal_entity_features(left, snap, mut, ["user_id"], ["user_id"], parts)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        left.count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))  # probe sees jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -3,7 +3,8 @@ exactly the declared columns — the query columns plus one feature column
 per aggregation part — and never an internal `__`-prefixed column. The
 join operators are checked under every salting mode; the temporal
 GroupBy (self path), the snapshot GroupBy and the mutation-replay join
-carry no salting."""
+carry no salting. Joins with bootstrap parts are checked with covering,
+partial and non-matching bootstrap tables."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +13,7 @@ from chronon_spark.api import (
     Accuracy,
     Aggregation,
     AggregationPart,
+    BootstrapPart,
     DataFrameSource,
     GroupBy,
     Join,
@@ -21,6 +23,7 @@ from chronon_spark.api import (
 )
 from chronon_spark.operators.groupby import compute_snapshot_groupby
 from chronon_spark.operators.mutations import temporal_entity_features
+from chronon_spark.operators.snapshot_join import compute_join
 from chronon_spark.operators.temporal_join import (
     compute_temporal_groupby,
     compute_temporal_join,
@@ -169,3 +172,64 @@ def test_compute_snapshot_groupby_declared_schema(spark, dense):
         out = compute_snapshot_groupby(spark, gb, rng, dense=dense)
         _assert_contract(out, ["user_id", "ds"] + features)
         assert out.count() > 0
+
+
+def test_compute_join_with_bootstrap_declared_schema(spark, tmp_path):
+    """Bootstrap tables that cover one part for some rows, cover a second
+    part only in part, or match no row: the output is the left columns and
+    then each part's features in declared order, whatever each table
+    brings along (its keys, its own extra columns). A bootstrap key that
+    is not a left column raises."""
+    left, right = _frames(spark)
+    gbs = [
+        GroupBy(
+            sources=[DataFrameSource(lambda s: right)],
+            key_columns=["user_id"],
+            aggregations=[Aggregation("value", op, windows=[Window(7), Window(1)])],
+            accuracy=acc,
+            name=name,
+        )
+        for name, op, acc in (("g1", Operation.SUM, Accuracy.TEMPORAL),
+                              ("g2", Operation.MAX, Accuracy.SNAPSHOT))
+    ]
+    jps = [JoinPart(g) for g in gbs]
+    features = [f"{jp.full_prefix()}_{p.output_name}"
+                for jp in jps for p in jp.group_by.aggregation_parts()]
+    g1, g2 = features[:2], features[2:]
+    rows = [(r["user_id"], r["ts"], r["ds"]) for r in left.collect()]
+    tables = {
+        # every g1 column for the first ten left rows
+        "cover": ([(u, t, ds, 1.0, 2.0) for u, t, ds in rows[:10]],
+                  f"user_id int, ts long, ds string, {g1[0]} double, {g1[1]} double"),
+        # one of g2's two columns, plus a column that is no join output
+        "partial": ([(u, t, ds, 3.0, "x") for u, t, ds in rows[5:15]],
+                    f"user_id int, ts long, ds string, {g2[1]} double, note string"),
+        # keys that match no left row
+        "miss": ([(99, 0, "2023-01-01", 4.0)],
+                 f"user_id int, ts long, ds string, {g1[0]} double"),
+    }
+    paths = {}
+    for name, (data, ddl) in tables.items():
+        paths[name] = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(data, ddl).write.parquet(paths[name])
+    for chosen in (["cover"], ["partial"], ["miss"], ["cover", "partial", "miss"]):
+        join = Join(
+            left=DataFrameSource(lambda s: left),
+            join_parts=jps,
+            row_ids=["user_id", "ts", "ds"],
+            bootstrap_parts=[BootstrapPart(paths[c]) for c in chosen],
+            name="bj",
+        )
+        out = compute_join(spark, join)
+        _assert_contract(out, left.columns + features)
+        assert out.count() == left.count()
+    # a bootstrap key the left lacks would join on the other keys alone
+    # and carry the extra key column into the output: refused
+    keyed = Join(
+        left=DataFrameSource(lambda s: left),
+        join_parts=jps,
+        bootstrap_parts=[BootstrapPart(paths["partial"], key_columns=["user_id", "note"])],
+        name="bj",
+    )
+    with pytest.raises(ValueError, match=r"\['note'\]"):
+        compute_join(spark, keyed)

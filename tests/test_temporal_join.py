@@ -284,7 +284,7 @@ def test_multi_part_row_id_merge_flat_payload(spark, data):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "__row_id" in plan
     import re
-    cogroups = re.findall(r"FlatMapCoGroupsInPandas[^\n]*?kernel\(([^)]*)\)", plan)
+    cogroups = re.findall(r"FlatMapCoGroupsInArrow[^\n]*?kernel\(([^)]*)\)", plan)
     assert len(cogroups) == 3
     for inputs in cogroups:  # kernel INPUTS: slim probe only, no features
         assert "payload" not in inputs, inputs

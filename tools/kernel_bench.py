@@ -23,7 +23,7 @@ fastest repeat, in ms, plus the median per item in us):
   In the sawtooth cases every event row is also a query, as in the
   image_asof join and the temporal GroupBy. Stages: ``by_key`` is
   `_sawtooth_by_key` (window bounds and ops), ``emit`` turns its buffers
-  into the kernel's output columns (`_emit`).
+  into the kernel's Arrow output columns (`_to_arrow`).
 * ``mutation.replay``: the mutation-replay kernel on one bucket of 2000
   (key, day) segments, each with 20 snapshot rows, 6 mutations (a third
   of them deletes of snapshot rows) and 5 queries, with invertible (SUM,
@@ -46,6 +46,7 @@ import sys
 import time
 
 import numpy as np
+from pyspark.sql.types import ArrayType, DoubleType, LongType, MapType, StringType
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -183,11 +184,21 @@ def _time_replay(rows, qcode, qts, parts):
     return {"pairs": t1 - t0, "replay": t2 - t1}
 
 
+# the output types of the cases above, built without a Spark session
+SQL_TYPES = {
+    "bigint": LongType(),
+    "double": DoubleType(),
+    "array<double>": ArrayType(DoubleType()),
+    "map<string,bigint>": MapType(StringType(), LongType()),
+    "map<string,double>": MapType(StringType(), DoubleType()),
+}
+
+
 def _time_sawtooth(buckets, parts, types=None):
     from chronon_spark.operators.temporal_join import (
-        _emit,
         _kernel_columns,
         _sawtooth_by_key,
+        _to_arrow,
     )
 
     _, array_inputs, map_inputs, fields = _kernel_columns(types or {"v": "double"}, parts)
@@ -198,7 +209,7 @@ def _time_sawtooth(buckets, parts, types=None):
                                 array_inputs, map_inputs)
         t1 = time.perf_counter()
         for name, sql_type in fields:
-            _emit(bufs[name], sql_type)
+            _to_arrow(bufs[name], SQL_TYPES[sql_type])
         t2 = time.perf_counter()
         by_key += t1 - t0
         emit += t2 - t1

@@ -41,18 +41,15 @@ def main() -> None:
     from chronon_spark.session import build_session
 
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
-    # bucket count sized to the input: ~30k rows per kernel batch amortizes
-    # cogroup serde while staying cache-friendly. The 64M-row join input
-    # wants 2048; the 480k-row image as-of would drown in per-group
-    # overhead at that size — scale with the level's cores instead.
-    buckets = ("2048" if args.workload in ("join", "groupby")
-               else str(max(64, 4 * args.cpus)))
+    # the kernels' cogroup bucket count is 8 x the shuffle partitions:
+    # ~30k rows per kernel batch gives the 64M-row join input 2048 buckets
+    # (256 shuffle partitions); the other workloads scale with the cores
+    shuffle_partitions = 256 if args.workload == "join" else 2 * args.cpus
     spark = build_session(
         "scaling-bench",
         master=f"local[{args.cpus}]",
-        shuffle_partitions=2 * args.cpus,
+        shuffle_partitions=shuffle_partitions,
         extra_confs={
-            "spark.chronon.join.buckets": buckets,
             # shuffle to tmpfs: removes disk-write variance from the
             # measurement (cluster analog: NVMe-backed shuffle dirs)
             "spark.local.dir": "/dev/shm/spark-shuffle",

@@ -27,7 +27,6 @@ spark = build_session(
     "video-probe", master=f"local[{args.cpus}]",
     shuffle_partitions=2 * args.cpus,
     extra_confs={
-        "spark.chronon.join.buckets": str(max(64, 4 * args.cpus)),
         "spark.local.dir": "/dev/shm/spark-shuffle",
         "spark.driver.extraJavaOptions": (
             f"-XX:ParallelGCThreads={args.cpus} -XX:ConcGCThreads={max(1, args.cpus // 4)} "

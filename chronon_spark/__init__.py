@@ -18,6 +18,7 @@ Public surface:
   plans.*        — incremental backfill planner, manifest/lineage
 """
 
+from chronon_spark import zipcache
 from chronon_spark.api import (  # noqa: F401
     Accuracy,
     Aggregation,
@@ -34,3 +35,7 @@ from chronon_spark.api import (  # noqa: F401
 from chronon_spark.partitions import PartitionRange, PartitionSpec  # noqa: F401
 
 __version__ = "0.1.0"
+
+# Every engine UDF imports this package, so each Python worker installs the
+# unchanged-archive zip cache on its first task (see zipcache).
+zipcache.install_in_worker()

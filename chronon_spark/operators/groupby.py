@@ -9,12 +9,20 @@ Semantics (reference: spark/.../GroupBy.scala):
   * entities: aggregate within each daily snapshot partition.
 
 Physical strategy (ours, Catalyst-native — replaces the reference's RDD
-aggregateByKey + HopsAggregator machinery, GroupBy.scala:113-173):
-  1. one shuffle: groupBy(keys, ds) computing partial IRs per day —
-     map-side combine shrinks 100TB of events to |keys|x|days| rows.
-  2. zero further shuffles: every window = Window.partitionBy(keys)
-     .orderBy(day).rangeBetween(-(N-1), 0) over the SAME daily partials —
-     the Catalyst analog of hop sharing (all windows reuse one pre-agg).
+aggregateByKey + HopsAggregator machinery, GroupBy.scala:113-173). The
+plain parts take two shuffles:
+  1. on (keys, day): groupBy(keys, day) computing partial IRs per day —
+     map-side combine shrinks the events to |keys|x|days| rows.
+  2. on keys: every window = Window.partitionBy(keys).orderBy(day)
+     .rangeBetween(-(N-1), 0) over the SAME daily partials — the Catalyst
+     analog of hop sharing (all windows reuse one pre-agg).
+Every other part family is its own sub-plan with its own shuffles; the
+exact UNIQUE_COUNT sweep, for one, shuffles on (keys, day, value) for its
+distinct triples, on (keys, value) for `lead`, on (keys, day) for its
+spine and on keys for the running sum. The families then join back on
+(keys, ds) with full-outer joins, which shuffle both sides once more,
+although each side is already hash-partitioned on keys. A step of the
+plain parts plus one UNIQUE_COUNT part thus runs 8 Exchanges.
 Scan range is widened by the max window lookback so window tails are
 complete (reference: GroupBy.getIntersectedRange, GroupBy.scala:616-663).
 """

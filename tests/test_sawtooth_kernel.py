@@ -64,7 +64,7 @@ def _gen_queries(event_ts, nq=150):
 
 def _isnull(x):
     """kernel convention: NaN in float arrays == null (converted to SQL
-    NULL at the Arrow boundary, temporal_join._emit)."""
+    NULL at the Arrow boundary, temporal_join._to_arrow)."""
     if x is None:
         return True
     try:

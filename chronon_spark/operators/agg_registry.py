@@ -1,38 +1,37 @@
 """Aggregation operator registry — the operator surface of SURVEY.md §2.1.
 
 Every reference operation (reference: thrift/api.thrift:195-227, dispatch
-aggregator/.../row/ColumnAggregator.scala:233-409) is mapped to Catalyst-
-native expressions in up to three execution contexts:
+aggregator/.../row/ColumnAggregator.scala:233-409) is mapped to Spark SQL
+expression TEXT in up to three execution contexts:
 
-  direct(col)                group-agg over all rows in scope (unbounded
+  direct()                   group-agg over all rows in scope (unbounded
                              window / per-day / per-query-bucket).
-  partials(col)              per-(key, day) partial IR columns — the
+  partials()                 per-(key, day) partial IR columns — the
                              map-side combine unit for snapshot windows.
                              reference IR schemas: BaseAggregator
                              (aggregator/.../base/SimpleAggregators.scala).
-  merge(wspec)               final value from partial IR columns over a
-                             Window.rangeBetween frame of days — the
+  merge(w)                   final value from partial IR columns over the
+                             named window `w` (a RANGE frame of days) — the
                              reduce side. Sliding windows become one daily
                              pre-aggregation shared by ALL windows (the
                              Catalyst analog of the reference's hop
                              sharing, HopsAggregator.scala:95-160).
 
-Everything is built-in `pyspark.sql.functions` (JVM-side, codegen). The
-moment-based ops (variance/skew/kurtosis) decompose into raw power sums
-s0..s4, which are trivially mergeable across partials; finalization uses
-the standard central-moment identities. Matches the reference semantics:
-population variance, population skew, EXCESS kurtosis, NaN below the
-minimum sample counts (SimpleAggregators.scala:173-261, 655-766).
+The snapshot GroupBy assembles these fragments into one SQL statement, so
+a step's plan is built without a py4j round trip per expression node.
+Everything is built-in Spark SQL (JVM-side, codegen). The moment-based ops
+(variance/skew/kurtosis) decompose into raw power sums s0..s4, which are
+trivially mergeable across partials; finalization uses the standard
+central-moment identities. Matches the reference semantics: population
+variance, population skew, EXCESS kurtosis (degenerate inputs are NULL, see
+below) (SimpleAggregators.scala:173-261, 655-766).
 """
 
 from __future__ import annotations
 
 from typing import Any, Optional
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from chronon_spark.api import AggregationPart, Operation
+from chronon_spark.api import TIME_COLUMN, AggregationPart, Operation
 
 # optional engine-wide rounding of floating outputs (None = raw doubles).
 # Cross-engine comparisons round at the QUERY boundary instead, with a
@@ -42,91 +41,110 @@ from chronon_spark.api import AggregationPart, Operation
 ROUND_DIGITS = None
 
 
+def quote(name: str) -> str:
+    """`name` as a Spark SQL identifier (any character, backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def dbl(x: float) -> str:
+    """A DOUBLE literal (repr round-trips the exact value)."""
+    return f"{float(x)!r}D"
+
+
 def _ir(part_name: str, field: str) -> str:
     return f"__{part_name}__{field}"
 
 
+# array_sort comparator: by .value desc, then .key asc (int-valued)
+CMP_COUNT_DESC = (
+    "(__a, __b) -> CASE WHEN __a.value < __b.value THEN 1"
+    " WHEN __a.value > __b.value THEN -1"
+    " WHEN __a.key < __b.key THEN -1 WHEN __a.key > __b.key THEN 1 ELSE 0 END"
+)
+
+
 class OpSpec:
-    """One operation's expression factories. Subclasses per family."""
+    """One operation's SQL fragments. Subclasses per family."""
 
     #: ops whose finalized value is floating point
     floating = False
 
     def __init__(self, part: AggregationPart):
         self.part = part
-        self.col = F.col(part.input_column)
+        self.col = quote(part.input_column)
         self.args: dict[str, Any] = part.arg_map
         self.name = part.output_name
 
     # --- direct ---------------------------------------------------------
-    def direct(self) -> Column:
+    def direct(self) -> str:
         raise NotImplementedError
 
     # --- partial / merge (snapshot windows over daily pre-aggs) ---------
-    def partials(self) -> dict[str, Column]:
-        """name -> partial agg column, computed per (key, day)."""
+    def partials(self) -> dict[str, str]:
+        """IR column name -> partial aggregate, computed per (key, day)."""
         raise NotImplementedError(f"{self.part.operation} has no partial decomposition")
 
-    def merge(self, wspec) -> Column:
-        """final value over a window frame of daily partials."""
+    def merge(self, w: str) -> str:
+        """final value over the named window `w` of daily partials."""
         raise NotImplementedError
+
+    def _over(self, fn: str, field: str, w: str) -> str:
+        return f"{fn}({quote(_ir(self.name, field))}) OVER {w}"
 
 
 class SumSpec(OpSpec):
-    def direct(self) -> Column:
-        return F.sum(self.col)
+    def direct(self) -> str:
+        return f"sum({self.col})"
 
-    def partials(self) -> dict[str, Column]:
-        return {_ir(self.name, "sum"): F.sum(self.col)}
+    def partials(self) -> dict[str, str]:
+        return {_ir(self.name, "sum"): f"sum({self.col})"}
 
-    def merge(self, wspec) -> Column:
-        return F.sum(F.col(_ir(self.name, "sum"))).over(wspec)
+    def merge(self, w: str) -> str:
+        return self._over("sum", "sum", w)
 
 
 class CountSpec(OpSpec):
-    def direct(self) -> Column:
-        return F.count(self.col)
+    def direct(self) -> str:
+        return f"count({self.col})"
 
-    def partials(self) -> dict[str, Column]:
-        return {_ir(self.name, "count"): F.count(self.col)}
+    def partials(self) -> dict[str, str]:
+        return {_ir(self.name, "count"): f"count({self.col})"}
 
-    def merge(self, wspec) -> Column:
-        return F.coalesce(F.sum(F.col(_ir(self.name, "count"))).over(wspec), F.lit(0))
+    def merge(self, w: str) -> str:
+        return f"coalesce({self._over('sum', 'count', w)}, 0)"
 
 
 class MinSpec(OpSpec):
-    fn = staticmethod(F.min)
+    fn = "min"
 
-    def direct(self) -> Column:
-        return self.fn(self.col)
+    def direct(self) -> str:
+        return f"{self.fn}({self.col})"
 
-    def partials(self) -> dict[str, Column]:
-        return {_ir(self.name, "m"): self.fn(self.col)}
+    def partials(self) -> dict[str, str]:
+        return {_ir(self.name, "m"): self.direct()}
 
-    def merge(self, wspec) -> Column:
-        return self.fn(F.col(_ir(self.name, "m"))).over(wspec)
+    def merge(self, w: str) -> str:
+        return self._over(self.fn, "m", w)
 
 
 class MaxSpec(MinSpec):
-    fn = staticmethod(F.max)
+    fn = "max"
 
 
 class AverageSpec(OpSpec):
     floating = True
 
-    def direct(self) -> Column:
-        return F.avg(self.col)
+    def direct(self) -> str:
+        return f"avg({self.col})"
 
-    def partials(self) -> dict[str, Column]:
+    def partials(self) -> dict[str, str]:
         return {
-            _ir(self.name, "sum"): F.sum(self.col.cast("double")),
-            _ir(self.name, "count"): F.count(self.col),
+            _ir(self.name, "sum"): f"sum(CAST({self.col} AS DOUBLE))",
+            _ir(self.name, "count"): f"count({self.col})",
         }
 
-    def merge(self, wspec) -> Column:
-        s = F.sum(F.col(_ir(self.name, "sum"))).over(wspec)
-        n = F.sum(F.col(_ir(self.name, "count"))).over(wspec)
-        return s / n
+    def merge(self, w: str) -> str:
+        return f"({self._over('sum', 'sum', w)}) / ({self._over('sum', 'count', w)})"
 
 
 class MomentSpec(OpSpec):
@@ -140,120 +158,101 @@ class MomentSpec(OpSpec):
     floating = True
     max_power = 2
 
-    def _powers(self, upto: int) -> dict[str, Column]:
-        d = self.col.cast("double")
-        out = {_ir(self.name, "n"): F.count(self.col)}
-        for p in range(1, upto + 1):
-            out[_ir(self.name, f"s{p}")] = F.sum(F.pow(d, F.lit(p)))
+    def partials(self) -> dict[str, str]:
+        d = f"CAST({self.col} AS DOUBLE)"
+        out = {_ir(self.name, "n"): f"count({self.col})"}
+        for p in range(1, self.max_power + 1):
+            out[_ir(self.name, f"s{p}")] = f"sum(pow({d}, {p}))"
         return out
 
-    def partials(self) -> dict[str, Column]:
-        return self._powers(self.max_power)
+    def _merged_sums(self, w: str) -> list[str]:
+        """n (as double), then s1..s{max_power} over the window."""
+        n = f"CAST({self._over('sum', 'n', w)} AS DOUBLE)"
+        return [n] + [self._over("sum", f"s{p}", w) for p in range(1, self.max_power + 1)]
+
+    def _direct_sums(self) -> list[str]:
+        d = f"CAST({self.col} AS DOUBLE)"
+        n = f"CAST(count({self.col}) AS DOUBLE)"
+        return [n] + [f"sum({' * '.join([d] * p)})" for p in range(1, self.max_power + 1)]
 
     @staticmethod
-    def _finalize_var(n, s1, s2) -> Column:
-        mean = s1 / n
-        return F.when(n >= 1, s2 / n - mean * mean)
+    def _finalize(n, s1, s2) -> str:
+        mean = f"({s1}) / ({n})"
+        return f"CASE WHEN ({n}) >= 1 THEN ({s2}) / ({n}) - ({mean}) * ({mean}) END"
 
-    def direct(self) -> Column:
-        return F.var_pop(self.col)
+    def direct(self) -> str:
+        return f"var_pop({self.col})"
 
-    def merge(self, wspec) -> Column:
-        n = F.sum(F.col(_ir(self.name, "n"))).over(wspec).cast("double")
-        s1 = F.sum(F.col(_ir(self.name, "s1"))).over(wspec)
-        s2 = F.sum(F.col(_ir(self.name, "s2"))).over(wspec)
-        return self._finalize_var(n, s1, s2)
+    def merge(self, w: str) -> str:
+        return self._finalize(*self._merged_sums(w))
 
 
 class SkewSpec(MomentSpec):
     max_power = 3
 
-    def direct(self) -> Column:
-        # population skew m3 / m2^1.5; NaN when n<3 or m2==0
-        # (SimpleAggregators.scala:655-712). Spark's F.skewness matches the
-        # formula but returns NULL not NaN for degenerate inputs, so we
-        # compute from power sums for exact reference parity.
-        n = F.count(self.col).cast("double")
-        d = self.col.cast("double")
-        s1, s2, s3 = F.sum(d), F.sum(d * d), F.sum(d * d * d)
-        return self._finalize_skew(n, s1, s2, s3)
+    # population skew m3 / m2^1.5. Spark's skewness() matches the formula
+    # but we compute from power sums for one definition in both contexts.
+    def direct(self) -> str:
+        return self._finalize(*self._direct_sums())
 
     @staticmethod
-    def _finalize_skew(n, s1, s2, s3) -> Column:
-        mean = s1 / n
-        m2 = s2 / n - mean * mean
-        m3 = s3 / n - 3 * mean * (s2 / n) + 2 * mean * mean * mean
+    def _finalize(n, s1, s2, s3) -> str:
+        mean = f"(({s1}) / ({n}))"
+        m2 = f"(({s2}) / ({n}) - {mean} * {mean})"
+        m3 = f"(({s3}) / ({n}) - 3 * {mean} * (({s2}) / ({n})) + 2 * {mean} * {mean} * {mean})"
         # deviation from reference (returns NaN, SimpleAggregators.scala:700):
-        # degenerate -> NULL, matching Spark/DuckDB built-in SQL semantics so
-        # results are portable across engines.
-        return F.when((n >= 3) & (m2 > F.lit(0.0)), m3 / F.pow(m2, F.lit(1.5)))
+        # degenerate (n<3 or m2==0) -> NULL, matching Spark/DuckDB built-in
+        # SQL semantics so results are portable across engines.
+        return f"CASE WHEN ({n}) >= 3 AND {m2} > 0.0D THEN {m3} / pow({m2}, 1.5D) END"
 
-    def merge(self, wspec) -> Column:
-        n = F.sum(F.col(_ir(self.name, "n"))).over(wspec).cast("double")
-        s = [F.sum(F.col(_ir(self.name, f"s{p}"))).over(wspec) for p in (1, 2, 3)]
-        return self._finalize_skew(n, *s)
+    def merge(self, w: str) -> str:
+        return self._finalize(*self._merged_sums(w))
 
 
-class KurtosisSpec(MomentSpec):
+class KurtosisSpec(SkewSpec):
     max_power = 4
 
-    def direct(self) -> Column:
-        n = F.count(self.col).cast("double")
-        d = self.col.cast("double")
-        s1, s2, s3, s4 = F.sum(d), F.sum(d * d), F.sum(d * d * d), F.sum(d * d * d * d)
-        return self._finalize_kurt(n, s1, s2, s3, s4)
-
     @staticmethod
-    def _finalize_kurt(n, s1, s2, s3, s4) -> Column:
-        mean = s1 / n
-        m2 = s2 / n - mean * mean
-        m4 = (
-            s4 / n
-            - 4 * mean * (s3 / n)
-            + 6 * mean * mean * (s2 / n)
-            - 3 * mean * mean * mean * mean
-        )
+    def _finalize(n, s1, s2, s3, s4) -> str:
+        mean = f"(({s1}) / ({n}))"
+        m2 = f"(({s2}) / ({n}) - {mean} * {mean})"
+        m4 = (f"(({s4}) / ({n}) - 4 * {mean} * (({s3}) / ({n}))"
+              f" + 6 * {mean} * {mean} * (({s2}) / ({n}))"
+              f" - 3 * {mean} * {mean} * {mean} * {mean})")
         # excess kurtosis (reference subtracts 3); degenerate (n<4 or m2==0)
         # -> NULL (deviation from the reference's NaN — SQL-portable)
-        return F.when((n >= 4) & (m2 > F.lit(0.0)), m4 / (m2 * m2) - F.lit(3.0))
-
-    def merge(self, wspec) -> Column:
-        n = F.sum(F.col(_ir(self.name, "n"))).over(wspec).cast("double")
-        s = [F.sum(F.col(_ir(self.name, f"s{p}"))).over(wspec) for p in (1, 2, 3, 4)]
-        return self._finalize_kurt(n, *s)
+        return f"CASE WHEN ({n}) >= 4 AND {m2} > 0.0D THEN {m4} / ({m2} * {m2}) - 3.0D END"
 
 
 class UniqueCountSpec(OpSpec):
-    def direct(self) -> Column:
-        return F.count_distinct(self.col)
+    def direct(self) -> str:
+        return f"count(DISTINCT {self.col})"
 
-    def partials(self) -> dict[str, Column]:
+    def partials(self) -> dict[str, str]:
         # exact distinct via daily sets; "expensive if high cardinality"
         # exactly as the reference warns (SimpleAggregators.scala:84-126)
-        return {_ir(self.name, "set"): F.collect_set(self.col)}
+        return {_ir(self.name, "set"): f"collect_set({self.col})"}
 
-    def merge(self, wspec) -> Column:
-        merged = F.flatten(F.collect_list(F.col(_ir(self.name, "set"))).over(wspec))
-        return F.size(F.array_distinct(merged)).cast("long")
+    def merge(self, w: str) -> str:
+        merged = f"flatten({self._over('collect_list', 'set', w)})"
+        return f"CAST(size(array_distinct({merged})) AS BIGINT)"
 
 
 class ApproxUniqueCountSpec(OpSpec):
-    def direct(self) -> Column:
+    def direct(self) -> str:
         # HLL++ rather than the reference's CPC sketch — numerically a
         # different estimator; correctness tests pin to exact counts at
         # test scale per the reference's own strategy (GroupByTest.scala:103-117)
-        rsd = self.args.get("rsd", 0.02)
-        return F.approx_count_distinct(self.col, rsd)
+        return f"approx_count_distinct({self.col}, {dbl(self.args.get('rsd', 0.02))})"
 
-    def partials(self) -> dict[str, Column]:
+    def partials(self) -> dict[str, str]:
         # hll_sketch_agg accepts int/bigint/string/binary only; stringify
         # (distinct-preserving) for double/other inputs
-        return {_ir(self.name, "hll"): F.hll_sketch_agg(self.col.cast("string"))}
+        return {_ir(self.name, "hll"): f"hll_sketch_agg(CAST({self.col} AS STRING))"}
 
-    def merge(self, wspec) -> Column:
+    def merge(self, w: str) -> str:
         # union HLL sketches across the day frame
-        merged = F.hll_union_agg(F.col(_ir(self.name, "hll"))).over(wspec)
-        return F.hll_sketch_estimate(merged)
+        return f"hll_sketch_estimate({self._over('hll_union_agg', 'hll', w)})"
 
 
 class ApproxPercentileSpec(OpSpec):
@@ -283,90 +282,68 @@ class ApproxPercentileSpec(OpSpec):
             pct = [pct]
         return list(pct)
 
-    def direct(self) -> Column:
-        acc = self.args.get("k", 10000)
-        return F.percentile_approx(self.col, self._pcts(), acc)
+    def direct(self) -> str:
+        pcts = ", ".join(dbl(p) for p in self._pcts())
+        return f"percentile_approx({self.col}, array({pcts}), {int(self.args.get('k', 10000))})"
 
-    def partials(self) -> dict[str, Column]:
+    def partials(self) -> dict[str, str]:
         k = self._k()
-        vals = F.array_sort(F.collect_list(self.col.cast("double")))
-        n = F.size(vals)
-        exact = F.transform(
-            vals, lambda v: F.struct(v.alias("v"), F.lit(1.0).alias("w"))
+        vals = f"array_sort(collect_list(CAST({self.col} AS DOUBLE)))"
+        n = f"size({vals})"
+        exact = f"transform({vals}, __x -> named_struct('v', __x, 'w', 1.0D))"
+        chunk = f"(CAST({n} AS DOUBLE) / {dbl(k)})"
+        anchors = (
+            f"transform(sequence(0, {k - 1}), __i -> named_struct("
+            f"'v', get({vals}, CAST(floor((CAST(__i AS DOUBLE) + 0.5D) * {chunk}) AS INT)),"
+            f" 'w', {chunk}))"
         )
-        chunk = n.cast("double") / F.lit(float(k))
-        anchors = F.transform(
-            F.sequence(F.lit(0), F.lit(k - 1)),
-            lambda i: F.struct(
-                F.get(
-                    vals,
-                    F.floor((i.cast("double") + F.lit(0.5)) * chunk).cast("int"),
-                ).alias("v"),
-                chunk.alias("w"),
-            ),
-        )
-        return {_ir(self.name, "qs"): F.when(n <= k, exact).otherwise(anchors)}
+        return {_ir(self.name, "qs"): f"CASE WHEN {n} <= {k} THEN {exact} ELSE {anchors} END"}
 
-    def merge(self, wspec) -> Column:
-        merged = F.flatten(F.collect_list(F.col(_ir(self.name, "qs"))).over(wspec))
-        srt = F.array_sort(
-            merged,
-            lambda a, b: F.when(a["v"] < b["v"], F.lit(-1))
-            .when(a["v"] > b["v"], F.lit(1))
-            .otherwise(F.lit(0)),
-        )
-        total = F.aggregate(
-            srt, F.lit(0.0), lambda acc, e: acc + e["w"]
-        )
-        def _scan(t):
-            # 2-arg merge lambda closing over the target rank column
-            return lambda acc, e: F.struct(
-                (acc["cum"] + e["w"]).alias("cum"),
-                F.coalesce(
-                    acc["res"],
-                    F.when(acc["cum"] + e["w"] >= t - F.lit(1e-9), e["v"]),
-                ).alias("res"),
-            )
-
+    def merge(self, w: str) -> str:
+        merged = f"flatten({self._over('collect_list', 'qs', w)})"
+        srt = (f"array_sort({merged}, (__a, __b) -> CASE WHEN __a.v < __b.v THEN -1"
+               f" WHEN __a.v > __b.v THEN 1 ELSE 0 END)")
+        total = f"aggregate({srt}, 0.0D, (__acc, __e) -> __acc + __e.w)"
         outs = []
         for p in self._pcts():
             # target rank: max(1, ceil(p * total)); first value whose
             # cumulative weight reaches it (1e-9 guards float cum sums)
-            target = F.greatest(F.lit(1.0), F.ceil(F.lit(p) * total))
-            picked = F.aggregate(
-                srt,
-                F.struct(F.lit(0.0).alias("cum"),
-                         F.lit(None).cast("double").alias("res")),
-                _scan(target),
-                lambda acc: acc["res"],
+            target = f"greatest(1.0D, ceil({dbl(p)} * {total}))"
+            outs.append(
+                f"aggregate({srt}, named_struct('cum', 0.0D, 'res', CAST(NULL AS DOUBLE)),"
+                f" (__acc, __e) -> named_struct('cum', __acc.cum + __e.w, 'res',"
+                f" coalesce(__acc.res, CASE WHEN __acc.cum + __e.w >= {target} - 1e-9D"
+                f" THEN __e.v END)), __acc -> __acc.res)"
             )
-            outs.append(picked)
-        return F.when(total > 0, F.array(*outs))
+        return f"CASE WHEN {total} > 0 THEN array({', '.join(outs)}) END"
 
 
 class FirstSpec(OpSpec):
     """Earliest non-null value by ts (TimedAggregators.scala:74-112)."""
 
-    agg = staticmethod(F.min_by)
-    ts_pick = staticmethod(F.min)
+    agg = "min_by"
+    ts_pick = "min"
 
-    def direct(self) -> Column:
-        return self.agg(self.col, F.when(self.col.isNotNull(), F.col("ts")))
+    def _ts_nn(self) -> str:
+        return f"CASE WHEN {self.col} IS NOT NULL THEN {quote(TIME_COLUMN)} END"
 
-    def partials(self) -> dict[str, Column]:
-        ts_nn = F.when(self.col.isNotNull(), F.col("ts"))
+    def direct(self) -> str:
+        return f"{self.agg}({self.col}, {self._ts_nn()})"
+
+    def partials(self) -> dict[str, str]:
         return {
-            _ir(self.name, "v"): self.agg(self.col, ts_nn),
-            _ir(self.name, "ts"): self.ts_pick(ts_nn),
+            _ir(self.name, "v"): self.direct(),
+            _ir(self.name, "ts"): f"{self.ts_pick}({self._ts_nn()})",
         }
 
-    def merge(self, wspec) -> Column:
-        return self.agg(F.col(_ir(self.name, "v")), F.col(_ir(self.name, "ts"))).over(wspec)
+    def merge(self, w: str) -> str:
+        v, ts = quote(_ir(self.name, "v")), quote(_ir(self.name, "ts"))
+        return f"{self.agg}({v}, {ts}) OVER {w}"
 
 
 class LastSpec(FirstSpec):
-    agg = staticmethod(F.max_by)
-    ts_pick = staticmethod(F.max)
+    agg = "max_by"
+    ts_pick = "max"
 
 
 def _k(args: dict[str, Any], default: int = 10) -> int:
@@ -378,29 +355,24 @@ class FirstKSpec(OpSpec):
 
     reverse = False
 
-    def _sorted_structs(self, c: Column) -> Column:
-        srt = F.array_sort(c)
-        return F.reverse(srt) if self.reverse else srt
+    def _first_k(self, pairs: str) -> str:
+        srt = f"array_sort({pairs})"
+        return f"slice({f'reverse({srt})' if self.reverse else srt}, 1, {_k(self.args)})"
 
-    def direct(self) -> Column:
-        pairs = F.collect_list(
-            F.when(self.col.isNotNull(), F.struct(F.col("ts").alias("ts"), self.col.alias("v")))
-        )
-        k = _k(self.args)
-        return F.slice(self._sorted_structs(pairs), 1, k).getField("v")
+    def _pairs(self) -> str:
+        return (f"collect_list(CASE WHEN {self.col} IS NOT NULL THEN named_struct("
+                f"'ts', {quote(TIME_COLUMN)}, 'v', {self.col}) END)")
 
-    def partials(self) -> dict[str, Column]:
-        pairs = F.collect_list(
-            F.when(self.col.isNotNull(), F.struct(F.col("ts").alias("ts"), self.col.alias("v")))
-        )
-        k = _k(self.args)
+    def direct(self) -> str:
+        return f"{self._first_k(self._pairs())}.v"
+
+    def partials(self) -> dict[str, str]:
         # per-day partial is already trimmed to k — bounded IR size
-        return {_ir(self.name, "kv"): F.slice(self._sorted_structs(pairs), 1, k)}
+        return {_ir(self.name, "kv"): self._first_k(self._pairs())}
 
-    def merge(self, wspec) -> Column:
-        merged = F.flatten(F.collect_list(F.col(_ir(self.name, "kv"))).over(wspec))
-        k = _k(self.args)
-        return F.slice(self._sorted_structs(merged), 1, k).getField("v")
+    def merge(self, w: str) -> str:
+        merged = f"flatten({self._over('collect_list', 'kv', w)})"
+        return f"{self._first_k(merged)}.v"
 
 
 class LastKSpec(FirstKSpec):
@@ -412,37 +384,21 @@ class TopKSpec(OpSpec):
 
     asc = False
 
-    def _sorted(self, c: Column) -> Column:
-        return F.sort_array(c, asc=self.asc)
+    def _top(self, arr: str) -> str:
+        return f"slice(sort_array({arr}, {str(self.asc).lower()}), 1, {_k(self.args)})"
 
-    def direct(self) -> Column:
-        return F.slice(self._sorted(F.collect_list(self.col)), 1, _k(self.args))
+    def direct(self) -> str:
+        return self._top(f"collect_list({self.col})")
 
-    def partials(self) -> dict[str, Column]:
-        return {
-            _ir(self.name, "kv"): F.slice(
-                self._sorted(F.collect_list(self.col)), 1, _k(self.args)
-            )
-        }
+    def partials(self) -> dict[str, str]:
+        return {_ir(self.name, "kv"): self.direct()}
 
-    def merge(self, wspec) -> Column:
-        merged = F.flatten(F.collect_list(F.col(_ir(self.name, "kv"))).over(wspec))
-        return F.slice(self._sorted(merged), 1, _k(self.args))
+    def merge(self, w: str) -> str:
+        return self._top(f"flatten({self._over('collect_list', 'kv', w)})")
 
 
 class BottomKSpec(TopKSpec):
     asc = True
-
-
-def _cmp_count_desc(a: Column, b: Column) -> Column:
-    """array_sort comparator: by .value desc, then .key asc (int-valued)."""
-    return (
-        F.when(a["value"] < b["value"], F.lit(1))
-        .when(a["value"] > b["value"], F.lit(-1))
-        .when(a["key"] < b["key"], F.lit(-1))
-        .when(a["key"] > b["key"], F.lit(1))
-        .otherwise(F.lit(0))
-    )
 
 
 class HistogramSpec(OpSpec):
@@ -452,86 +408,47 @@ class HistogramSpec(OpSpec):
     higher-order functions — no second shuffle.
     """
 
-    def direct(self) -> Column:
-        vals = F.array_sort(F.collect_list(self.col.cast("string")))
-        distinct = F.array_distinct(vals)
-        entries = F.transform(
-            distinct,
-            lambda v: F.struct(
-                v.alias("key"),
-                F.size(F.filter(vals, lambda x: x == v)).alias("value"),
-            ),
-        )
+    def _entries(self, value_type: str) -> str:
+        vals = f"array_sort(collect_list(CAST({self.col} AS STRING)))"
+        return (f"transform(array_distinct({vals}), __x -> named_struct('key', __x, 'value',"
+                f" CAST(size(filter({vals}, __y -> __y = __x)) AS {value_type})))")
+
+    def _top(self, entries: str) -> str:
         k = self.args.get("k")
         if k:
-            entries = F.slice(F.array_sort(entries, _cmp_count_desc), 1, int(k))
-        return F.map_from_entries(entries)
+            entries = f"slice(array_sort({entries}, {CMP_COUNT_DESC}), 1, {int(k)})"
+        return f"map_from_entries({entries})"
 
-    def partials(self) -> dict[str, Column]:
-        vals = F.array_sort(F.collect_list(self.col.cast("string")))
-        distinct = F.array_distinct(vals)
-        entries = F.transform(
-            distinct,
-            lambda v: F.struct(
-                v.alias("key"),
-                F.size(F.filter(vals, lambda x: x == v)).cast("long").alias("value"),
-            ),
-        )
-        return {_ir(self.name, "hist"): entries}
+    def direct(self) -> str:
+        return self._top(self._entries("INT"))
 
-    def merge(self, wspec) -> Column:
-        merged = F.flatten(F.collect_list(F.col(_ir(self.name, "hist"))).over(wspec))
-        keys = F.array_distinct(F.transform(merged, lambda e: e["key"]))
-        folded = F.transform(
-            keys,
-            lambda kk: F.struct(
-                kk.alias("key"),
-                F.aggregate(
-                    F.filter(merged, lambda e: e["key"] == kk),
-                    F.lit(0).cast("long"),
-                    lambda acc, e: acc + e["value"],
-                ).alias("value"),
-            ),
+    def partials(self) -> dict[str, str]:
+        return {_ir(self.name, "hist"): self._entries("BIGINT")}
+
+    def merge(self, w: str) -> str:
+        merged = f"flatten({self._over('collect_list', 'hist', w)})"
+        folded = (
+            f"transform(array_distinct(transform({merged}, __e -> __e.key)), __k -> named_struct("
+            f"'key', __k, 'value', aggregate(filter({merged}, __e -> __e.key = __k),"
+            f" CAST(0 AS BIGINT), (__acc, __e) -> __acc + __e.value)))"
         )
-        k = self.args.get("k")
-        if k:
-            folded = F.slice(F.array_sort(folded, _cmp_count_desc), 1, int(k))
-        return F.map_from_entries(folded)
+        return self._top(folded)
 
 
 class UniqueTopKSpec(OpSpec):
     """top-k deduped (SimpleAggregators.scala:768-917)."""
 
-    def direct(self) -> Column:
-        return F.slice(F.sort_array(F.collect_set(self.col), asc=False), 1, _k(self.args))
+    def _top(self, arr: str) -> str:
+        return f"slice(sort_array({arr}, false), 1, {_k(self.args)})"
 
-    def partials(self) -> dict[str, Column]:
-        return {
-            _ir(self.name, "kv"): F.slice(
-                F.sort_array(F.collect_set(self.col), asc=False), 1, _k(self.args)
-            )
-        }
+    def direct(self) -> str:
+        return self._top(f"collect_set({self.col})")
 
-    def merge(self, wspec) -> Column:
-        merged = F.array_distinct(
-            F.flatten(F.collect_list(F.col(_ir(self.name, "kv"))).over(wspec))
-        )
-        return F.slice(F.sort_array(merged, asc=False), 1, _k(self.args))
+    def partials(self) -> dict[str, str]:
+        return {_ir(self.name, "kv"): self.direct()}
 
-
-class ApproxFrequentKSpec(OpSpec):
-    """Frequency top-k map. Exact at batch scale via histogram trim —
-    the reference's ItemsSketch guarantees make exact computation a valid
-    superset (NO_FALSE_NEGATIVES, SimpleAggregators.scala:400-491)."""
-
-    def direct(self) -> Column:
-        return HistogramSpec(self.part).direct()
-
-    def partials(self) -> dict[str, Column]:
-        return HistogramSpec(self.part).partials()
-
-    def merge(self, wspec) -> Column:
-        return HistogramSpec(self.part).merge(wspec)
+    def merge(self, w: str) -> str:
+        return self._top(f"array_distinct(flatten({self._over('collect_list', 'kv', w)}))")
 
 
 _SPECS: dict[Operation, type[OpSpec]] = {
@@ -553,8 +470,11 @@ _SPECS: dict[Operation, type[OpSpec]] = {
     Operation.TOP_K: TopKSpec,
     Operation.BOTTOM_K: BottomKSpec,
     Operation.HISTOGRAM: HistogramSpec,
-    Operation.APPROX_FREQUENT_K: ApproxFrequentKSpec,
-    Operation.APPROX_HEAVY_HITTERS_K: ApproxFrequentKSpec,
+    # frequency top-k map: exact at batch scale via histogram trim — the
+    # reference's ItemsSketch guarantees make exact computation a valid
+    # superset (NO_FALSE_NEGATIVES, SimpleAggregators.scala:400-491)
+    Operation.APPROX_FREQUENT_K: HistogramSpec,
+    Operation.APPROX_HEAVY_HITTERS_K: HistogramSpec,
     Operation.UNIQUE_TOP_K: UniqueTopKSpec,
 }
 
@@ -568,8 +488,8 @@ def spec_for(part: AggregationPart) -> OpSpec:
         raise NotImplementedError(f"operation {part.operation} not implemented")
 
 
-def finalize_rounding(col: Column, spec: OpSpec, digits: Optional[int] = ROUND_DIGITS) -> Column:
+def finalize_rounding(expr: str, spec: OpSpec, digits: Optional[int] = ROUND_DIGITS) -> str:
     """Round floating outputs so results are stable across partition order."""
     if digits is not None and spec.floating:
-        return F.round(col, digits)
-    return col
+        return f"round({expr}, {digits})"
+    return expr

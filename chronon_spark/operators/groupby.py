@@ -8,14 +8,23 @@ Semantics (reference: spark/.../GroupBy.scala):
     GroupBy.scala:156-159).
   * entities: aggregate within each daily snapshot partition.
 
+Plan build: a step is ONE Spark SQL statement over the scanned source,
+which the statement reads as a temp view that lives only while Spark
+analyzes it. Each part family below is a nest of subqueries, and the
+operator registry (`agg_registry`) supplies every partial and merge as
+SQL text. The plan equals the one chained DataFrame calls would build,
+while the Python side makes a few dozen py4j calls per step instead of
+~13 per expression node and one eager analysis per DataFrame call.
+
 Physical strategy (ours, Catalyst-native — replaces the reference's RDD
 aggregateByKey + HopsAggregator machinery, GroupBy.scala:113-173). The
 plain parts take two shuffles:
-  1. on (keys, day): groupBy(keys, day) computing partial IRs per day —
+  1. on (keys, day): GROUP BY keys, day computing partial IRs per day —
      map-side combine shrinks the events to |keys|x|days| rows.
-  2. on keys: every window = Window.partitionBy(keys).orderBy(day)
-     .rangeBetween(-(N-1), 0) over the SAME daily partials — the Catalyst
-     analog of hop sharing (all windows reuse one pre-agg).
+  2. on keys: every window is a named `PARTITION BY keys ORDER BY day
+     RANGE BETWEEN N-1 PRECEDING AND CURRENT ROW` over the SAME daily
+     partials — the Catalyst analog of hop sharing (all windows reuse one
+     pre-agg).
 Every other part family is its own sub-plan with its own shuffles; the
 exact UNIQUE_COUNT sweep, for one, shuffles on (keys, day, value) for its
 distinct triples, on (keys, value) for `lead`, on (keys, day) for its
@@ -30,10 +39,10 @@ complete (reference: GroupBy.getIntersectedRange, GroupBy.scala:616-663).
 from __future__ import annotations
 
 import math
+import uuid
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from chronon_spark.api import (
     PARTITION_COLUMN,
@@ -44,19 +53,26 @@ from chronon_spark.api import (
     Operation,
     apply_derivations,
 )
-from chronon_spark.operators.agg_registry import _cmp_count_desc, finalize_rounding, spec_for
+from chronon_spark.operators.agg_registry import (
+    CMP_COUNT_DESC,
+    finalize_rounding,
+    quote,
+    spec_for,
+)
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 from chronon_spark.sources.scan import scan_source
 
 DAY_MS = 86_400_000
-# ops planned as exploded per-value daily counts (_compute_hist_like_part and
-# the bucketed twin); scalar and array exact UNIQUE_COUNT take the sweep instead
+# ops planned as exploded per-value daily counts (_hist_like_part and the
+# bucketed twin); scalar and array exact UNIQUE_COUNT take the sweep instead
 _HIST_LIKE = (
     Operation.HISTOGRAM,
     Operation.APPROX_FREQUENT_K,
     Operation.APPROX_HEAVY_HITTERS_K,
     Operation.UNIQUE_COUNT,
 )
+_DS = quote(PARTITION_COLUMN)
+_DS_FROM_DAY = f"date_format(timestamp_millis(__day * {DAY_MS}), 'yyyy-MM-dd') AS {_DS}"
 
 
 def window_days(part: AggregationPart) -> Optional[int]:
@@ -75,11 +91,8 @@ def _union_sources(spark: SparkSession, group_by: GroupBy, scan_rng, spec) -> Da
     for other in dfs[1:]:
         df = df.unionByName(other, allowMissingColumns=True)
     # key null-filter: (k1 IS NOT NULL OR k2 IS NOT NULL ...) (GroupBy.scala:516-517)
-    cond = None
-    for k in group_by.key_columns:
-        c = F.col(k).isNotNull()
-        cond = c if cond is None else (cond | c)
-    return df.where(cond) if cond is not None else df
+    cond = " OR ".join(f"{quote(k)} IS NOT NULL" for k in group_by.key_columns)
+    return df.where(cond) if cond else df
 
 
 def _scan_range(
@@ -101,6 +114,27 @@ def _apply_derivations(df: DataFrame, group_by: GroupBy) -> DataFrame:
     (api/.../Extensions.scala derivationProjection)."""
     ensure = list(group_by.key_columns) + [PARTITION_COLUMN, TIME_COLUMN]
     return apply_derivations(df, group_by.derivations, ensure)
+
+
+def _sql(spark: SparkSession, src: DataFrame, view: str, text: str) -> DataFrame:
+    """Run `text`, which reads `src` as the temp view `view`. Analysis is
+    eager, so the view is dropped as soon as the plan holds `src`."""
+    src.createOrReplaceTempView(view)
+    try:
+        return spark.sql(text)
+    finally:
+        spark.catalog.dropTempView(view)
+
+
+def _view() -> str:
+    return f"__chronon_src_{uuid.uuid4().hex}"
+
+
+def _sub(body: str) -> str:
+    """`body` as a relation. Sub-plans nest as subqueries, not CTEs: one
+    is analyzed in a few fixed-point rounds, while each level of a CTE
+    chain costs the analyzer another round over the whole plan."""
+    return f"({body})"
 
 
 def compute_snapshot_groupby(
@@ -132,208 +166,205 @@ def compute_snapshot_groupby(
 
     scan_rng = _scan_range(group_by, rng, spec)
     df = _union_sources(spark, group_by, scan_rng, spec)
-    keys = group_by.key_columns
     dtypes = dict(df.dtypes)
+    cols = list(dtypes)
+    keys = ", ".join(quote(k) for k in group_by.key_columns)
+    src = _view()
 
     # dispatch parts: plain scalar / auto-explode (array) / map-valued /
     # bucketed / histogram-like (value-exploded plan) / exact unique count
     plain, by_array, mapped, bucketed, hist_like, utk_struct = [], {}, [], [], [], []
     bucketed_hist, hist_array, unique = [], [], []
     for p in parts:
+        dtype = dtypes.get(p.input_column, "")
         if p.bucket is not None:
             # hist-like bucketed ops get the exploded (bucket, value) plan —
             # the map-merge HOF shape is O(distinct^2) interpreted lambdas
             (bucketed_hist if p.operation in _HIST_LIKE else bucketed).append(p)
-        elif (p.operation == Operation.UNIQUE_TOP_K
-              and dtypes.get(p.input_column, "").startswith("struct<")):
+        elif p.operation == Operation.UNIQUE_TOP_K and dtype.startswith("struct<"):
             utk_struct.append(p)
-        elif (p.operation == Operation.UNIQUE_COUNT
-              and not dtypes.get(p.input_column, "").startswith("map<")):
+        elif p.operation == Operation.UNIQUE_COUNT and not dtype.startswith("map<"):
             unique.append(p)
-        elif dtypes.get(p.input_column, "").startswith("array<"):
+        elif dtype.startswith("array<"):
             if p.operation in _HIST_LIKE:
                 hist_array.append(p)
             else:
                 by_array.setdefault(p.input_column, []).append(p)
-        elif dtypes.get(p.input_column, "").startswith("map<"):
+        elif dtype.startswith("map<"):
             mapped.append(p)
         elif p.operation in _HIST_LIKE:
             hist_like.append(p)
         else:
             plain.append(p)
 
-    results = []
+    results = []  # (relation, {output name: expression over it})
     if plain:
-        results.append(_compute_plain_parts(df, keys, plain, rng, spec, dense))
+        results.append(_plain_parts(keys, src, cols, plain, rng, spec, dense))
     for p in unique:
-        results.append(_compute_unique_count_part(df, keys, p, rng, spec, dense))
+        is_array = dtypes[p.input_column].startswith("array<")
+        results.append(_unique_count_part(keys, src, cols, p, is_array, rng, spec, dense))
     for p in hist_like:
-        results.append(_compute_hist_like_part(df, keys, p, rng, spec, dense))
+        results.append(_hist_like_part(keys, src, cols, p, rng, spec, dense))
     for p in hist_array:
         # array input: each element counts individually — explode, then the
         # same exploded-value plan as scalar hist-like ops
-        exploded = _explode(df, p.input_column)
-        results.append(_compute_hist_like_part(exploded, keys, p, rng, spec, dense))
+        exploded = _explode(src, cols, p.input_column)
+        results.append(_hist_like_part(keys, exploded, cols, p, rng, spec, dense))
     for p in bucketed_hist:
-        results.append(_compute_bucketed_hist_part(df, keys, p, rng, spec, dense))
+        results.append(_bucketed_hist_part(keys, src, cols, p, rng, spec, dense))
     for p in utk_struct:
-        results.append(_compute_unique_topk_struct_part(df, keys, p, rng, spec, dense))
+        results.append(_unique_topk_struct_part(keys, src, cols, p, rng, spec, dense))
     for col, ps in by_array.items():
         # auto-explode: each list element aggregates individually
         # (reference: VectorDispatcher, ColumnAggregator.scala:208-217)
-        results.append(_compute_plain_parts(_explode(df, col), keys, ps, rng, spec, dense))
+        exploded = _explode(src, cols, col)
+        results.append(_plain_parts(keys, exploded, cols, ps, rng, spec, dense))
     for p in mapped:
         # map<string, V> input: per-map-key aggregation == bucketed agg of
         # the exploded (key, value) pairs (reference: MapColumnAggregator)
         mk, mv = f"__mk_{p.input_column}", f"__mv_{p.input_column}"
-        exploded = _explode(df, p.input_column, mk, mv)
+        exploded = _explode(src, cols, p.input_column, mk, mv)
         sub = AggregationPart(mv, p.operation, dict(p.arg_map), p.window, bucket=mk)
-        fn = (_compute_bucketed_hist_part if p.operation in _HIST_LIKE
-              else _compute_bucketed_part)
-        r = fn(exploded, keys, sub, rng, spec, dense)
-        results.append(r.withColumnRenamed(sub.output_name, p.output_name))
+        fn = _bucketed_hist_part if p.operation in _HIST_LIKE else _bucketed_part
+        exploded_cols = [c for c in cols if c != p.input_column] + [mk, mv]
+        rel, outs = fn(keys, exploded, exploded_cols, sub, rng, spec, dense)
+        results.append((rel, {p.output_name: outs[sub.output_name]}))
     for p in bucketed:
-        results.append(_compute_bucketed_part(df, keys, p, rng, spec, dense))
+        results.append(_bucketed_part(keys, src, cols, p, rng, spec, dense))
 
-    out = results[0]
-    for other in results[1:]:
-        out = out.join(other, keys + [PARTITION_COLUMN], "full_outer")
+    outs = {name: e for _, family in results for name, e in family.items()}
     # a key with zero non-null input values has no exploded rows at all —
     # its histogram-like map is {} (kernel parity)
-    out_types = dict(out.dtypes)
     hist_mapped = [p for p in mapped if p.operation in _HIST_LIKE]
     for p in hist_like + hist_array + bucketed_hist + hist_mapped:
-        empty = F.expr(f"CAST(map() AS {out_types[p.output_name]})")
-        out = out.withColumn(p.output_name, F.coalesce(F.col(p.output_name), empty))
-    # the sub-plans join in dispatch order; emit the parts in declared order
-    out = out.select(*keys, PARTITION_COLUMN, *[p.output_name for p in parts])
+        outs[p.output_name] = f"coalesce({outs[p.output_name]}, map())"
+    joined = " FULL OUTER JOIN ".join(
+        [results[0][0]] + [f"{rel} USING ({keys}, {_DS})" for rel, _ in results[1:]]
+    )
+    # the families join in dispatch order; emit the parts in declared order
+    out = _sql(spark, df, src, f"SELECT {keys}, {_DS}, {_outputs(parts, outs)} FROM {joined}")
     return _apply_derivations(out, group_by)
 
 
-def _explode(df: DataFrame, col: str, *aliases: str) -> DataFrame:
+def _outputs(parts: list[AggregationPart], exprs: dict[str, str]) -> str:
+    return ", ".join(f"{exprs[p.output_name]} AS {quote(p.output_name)}" for p in parts)
+
+
+def _explode(rel: str, cols: list[str], col: str, *aliases: str) -> str:
     """`col` replaced by its elements (a map by its key/value `aliases`),
     one row each; a NULL or empty collection keeps one NULL row."""
-    return df.select(*[c for c in df.columns if c != col],
-                     F.explode_outer(F.col(col)).alias(*(aliases or (col,))))
+    names = ", ".join(quote(a) for a in aliases or (col,))
+    others = "".join(f"{quote(c)}, " for c in cols if c != col)
+    return _sub(f"SELECT {others}explode_outer({quote(col)}) AS ({names}) FROM {rel}")
 
 
-def _day_expr(df) -> F.Column:
+def _day_expr(cols: list[str]) -> str:
     """Integer day number for stage-1 grouping. Event rows bin by EVENT
     TIME via exact integer division — per-row date STRING formatting would
     dominate the scan at 10^11 rows (measured: anti-scaling from GC
     pressure). Rows with NULL ts fall back PER ROW to parsing the ds
     string (so they still group under their partition instead of being
     silently dropped)."""
-    from_ds = (
-        F.unix_date(F.to_date(F.col(PARTITION_COLUMN))).cast("long")
-        if PARTITION_COLUMN in df.columns
-        else F.lit(None).cast("long")
-    )
-    if TIME_COLUMN in df.columns:
-        return F.coalesce(F.expr(f"{TIME_COLUMN} DIV {DAY_MS}"), from_ds)
+    from_ds = (f"CAST(unix_date(to_date({_DS})) AS BIGINT)" if PARTITION_COLUMN in cols
+               else "CAST(NULL AS BIGINT)")
+    if TIME_COLUMN in cols:
+        return f"coalesce({quote(TIME_COLUMN)} DIV {DAY_MS}, {from_ds})"
     return from_ds
 
 
-def _ds_from_day(col: F.Column) -> F.Column:
-    return F.date_format(F.timestamp_millis(col * DAY_MS), "yyyy-MM-dd")
+def _dayed(rel: str, cols: list[str], where: str = "") -> str:
+    """`rel` (filtered by `where`) plus its `__day`."""
+    return _sub(f"SELECT *, {_day_expr(cols)} AS __day FROM {rel}"
+                + (f" WHERE {where}" if where else ""))
 
 
-def _in_range(df: DataFrame, rng: Optional[PartitionRange], spec) -> DataFrame:
-    for clause in rng.where_clauses(spec.column) if rng is not None else []:
-        df = df.where(clause)
-    return df
+def _in_range(body: str, rng: Optional[PartitionRange], spec) -> str:
+    clauses = rng.where_clauses(quote(spec.column)) if rng is not None else []
+    return f"SELECT * FROM ({body}) WHERE {' AND '.join(clauses)}" if clauses else body
 
 
-def _compute_plain_parts(df, keys, parts, rng, spec, dense) -> DataFrame:
+def _frame(days: Optional[int], lifetime: str = "UNBOUNDED PRECEDING") -> str:
+    """The RANGE frame of a `days`-day window over `__day` (None: lifetime)."""
+    lo = lifetime if days is None else f"{days - 1} PRECEDING" if days > 1 else "CURRENT ROW"
+    return f"RANGE BETWEEN {lo} AND CURRENT ROW"
+
+
+def _windowed(partition: str, frames: list[str]) -> tuple[list[str], str]:
+    """One named window per distinct frame, ordered by `__day`: the names,
+    in the order of `frames`, and the WINDOW clause defining them."""
+    names: dict[str, str] = {}
+    for f in frames:
+        names.setdefault(f, f"__w{len(names)}")
+    defs = ", ".join(f"{w} AS (PARTITION BY {partition} ORDER BY __day {f})"
+                     for f, w in names.items())
+    return [names[f] for f in frames], f"WINDOW {defs}" if defs else ""
+
+
+def _plain_parts(keys, rel, cols, parts, rng, spec, dense):
     """stage 1: one shuffle to daily partial IRs (grouped on the integer
     day number — strings only materialize on the aggregated output);
-    stage 2: every window as a rangeBetween frame over the SAME partials
-    (the Catalyst analog of hop sharing)."""
+    stage 2: every window as a RANGE frame over the SAME partials (the
+    Catalyst analog of hop sharing)."""
     specs = [spec_for(p) for p in parts]
-    partial_cols: dict[str, F.Column] = {}
+    partials: dict[str, str] = {}
     for sp in specs:
-        partial_cols.update(sp.partials())
-    daily = df.withColumn("__day", _day_expr(df)).groupBy(*keys, "__day").agg(
-        *[c.alias(n) for n, c in partial_cols.items()]
-    )
-
+        partials.update(sp.partials())
+    aggs = ", ".join(f"{e} AS {quote(n)}" for n, e in partials.items())
+    daily = _sub(f"SELECT {keys}, __day, {aggs} FROM {_dayed(rel, cols)}"
+                 f" GROUP BY {keys}, __day")
     if dense:
-        daily = _densify(daily, keys, rng, spec)
-
-    w_base = W.partitionBy(*keys).orderBy("__day")
-    out_cols = []
-    for part, sp in zip(parts, specs):
-        days = window_days(part)
-        if days is None:
-            frame = w_base.rangeBetween(W.unboundedPreceding, W.currentRow)
-        else:
-            frame = w_base.rangeBetween(-(days - 1), W.currentRow)
-        daily = daily.withColumn(part.output_name, finalize_rounding(sp.merge(frame), sp))
-        out_cols.append(part.output_name)
-
-    out = daily.select(
-        *keys, _ds_from_day(F.col("__day")).alias(PARTITION_COLUMN), *out_cols
-    )
-    return _in_range(out, rng, spec)
+        daily = _densify(keys, daily, rng, spec)
+    names, window = _windowed(keys, [_frame(window_days(p)) for p in parts])
+    merges = ", ".join(f"{finalize_rounding(sp.merge(w), sp)} AS {quote(p.output_name)}"
+                       for p, sp, w in zip(parts, specs, names))
+    out = _sub(_in_range(f"SELECT {keys}, {_DS_FROM_DAY}, {merges} FROM {daily} {window}",
+                         rng, spec))
+    return out, {p.output_name: quote(p.output_name) for p in parts}
 
 
-def _compute_bucketed_part(df, keys, part, rng, spec, dense) -> DataFrame:
+def _bucketed_part(keys, rel, cols, part, rng, spec, dense):
     """Bucketed aggregation -> map<bucket, value> (reference:
     BucketedColumnAggregator): partials per (keys, ds, bucket), densified
     over the key's (bucket x active-day) grid so a bucket with in-window
     but not same-day events still gets its map entry, then windowed and
     folded to a map."""
-    b = part.bucket
+    b = quote(part.bucket)
     sub = AggregationPart(part.input_column, part.operation, dict(part.arg_map), part.window)
     sp = spec_for(sub)
-    dfb = df.where(F.col(b).isNotNull()).withColumn("__day", _day_expr(df))
-    partial_cols = sp.partials()
-    daily = dfb.groupBy(*keys, "__day", b).agg(
-        *[c.alias(n) for n, c in partial_cols.items()]
-    )
+    dfb = _dayed(rel, cols, f"{b} IS NOT NULL")
+    aggs = ", ".join(f"{e} AS {quote(n)}" for n, e in sp.partials().items())
+    daily = _sub(f"SELECT {keys}, __day, {b}, {aggs} FROM {dfb}"
+                 f" GROUP BY {keys}, __day, {b}")
     # densify: (key, day) spine x key's observed buckets. Dense mode (used
     # by snapshot joins) must cover EVERY day of the output range — not just
     # observed days — so a window still holding events emits its map on
-    # event-free days.
-    if dense:
-        # key universe from ALL event rows (df), not the null-bucket-filtered
-        # daily: a key whose buckets are all NULL still has rows, so kernel
-        # parity (and any GROUP BY oracle) gives it an {} map, not no row
-        spine = _dense_spine(df, keys, rng, spec)
-    else:
-        spine = df.withColumn("__day", _day_expr(df)).select(*keys, "__day").distinct()
-    kb = dfb.select(*keys, b).distinct()
+    # event-free days. Its key universe comes from ALL event rows, not the
+    # null-bucket-filtered ones: a key whose buckets are all NULL still has
+    # rows, so kernel parity (and any GROUP BY oracle) gives it an {} map.
+    spine = _spine(keys, _dayed(rel, cols), rng, spec, dense)
     # LEFT join: identical to inner for keys holding >=1 non-null bucket;
     # all-null-bucket keys keep one (key, day, bucket=NULL) scaffold row
     # whose window value nulls out below, folding to the {} map the
     # temporal kernel emits for the same inputs
-    scaffold = spine.join(kb, keys, "left")
-    daily = scaffold.join(daily, keys + ["__day", b], "full_outer")
-
-    w_base = W.partitionBy(*keys, b).orderBy("__day")
-    days = window_days(part)
-    frame = (
-        w_base.rangeBetween(W.unboundedPreceding, W.currentRow)
-        if days is None
-        else w_base.rangeBetween(-(days - 1), W.currentRow)
-    )
-    val = finalize_rounding(sp.merge(frame), sp)
-    daily = daily.withColumn("__v", val)
+    scaffold = _sub(f"SELECT * FROM {spine} LEFT JOIN (SELECT DISTINCT {keys}, {b}"
+                    f" FROM {dfb}) USING ({keys})")
+    joined = _sub(f"SELECT * FROM {scaffold} FULL OUTER JOIN {daily}"
+                  f" USING ({keys}, __day, {b})")
+    (w,), window = _windowed(f"{keys}, {b}", [_frame(window_days(part))])
+    windowed = _sub(f"SELECT *, {finalize_rounding(sp.merge(w), sp)} AS __v"
+                    f" FROM {joined} {window}")
     # empty-window entries are dropped from the map (kernel parity)
-    if part.operation in (Operation.COUNT, Operation.UNIQUE_COUNT):
-        keep = F.col("__v") > 0
-    else:
-        keep = F.col("__v").isNotNull()
-    entries = F.sort_array(
-        F.collect_list(F.when(keep, F.struct(F.col(b).alias("key"), F.col("__v").alias("value"))))
-    )
-    out = daily.groupBy(*keys, "__day").agg(
-        F.map_from_entries(entries).alias(part.output_name)
-    ).withColumn(PARTITION_COLUMN, _ds_from_day(F.col("__day"))).drop("__day")
-    return _in_range(out, rng, spec)
+    keep = ("__v > 0" if part.operation in (Operation.COUNT, Operation.UNIQUE_COUNT)
+            else "__v IS NOT NULL")
+    entries = (f"sort_array(collect_list(CASE WHEN {keep} THEN"
+               f" named_struct('key', {b}, 'value', __v) END))")
+    name = quote(part.output_name)
+    out = _sub(_in_range(f"SELECT {keys}, {_DS_FROM_DAY}, map_from_entries({entries}) AS {name}"
+                         f" FROM {windowed} GROUP BY {keys}, __day", rng, spec))
+    return out, {part.output_name: name}
 
 
-def _compute_unique_count_part(df, keys, part, rng, spec, dense) -> DataFrame:
+def _unique_count_part(keys, rel, cols, part, is_array, rng, spec, dense):
     """Exact UNIQUE_COUNT (scalar or array input) as a sweep line over
     time, the time-ordered single pass of TD-Join (SIGMOD 2025).
 
@@ -345,66 +376,58 @@ def _compute_unique_count_part(df, keys, part, rng, spec, dense) -> DataFrame:
     distinct values in the window. Values are compared as strings (an
     array element counts individually). Cost is O(distinct (key, value,
     day) triples) — no (key x day x value) scaffold, no map fold."""
-    uv = f"__uv_{part.output_name}"
-    dayed = df.withColumn("__day", _day_expr(df))
-    val = F.col(part.input_column)
-    if dict(df.dtypes)[part.input_column].startswith("array<"):
-        val = F.explode(val)
-    triples = (
-        dayed.select(*keys, "__day", val.alias(uv))
-        .select(*keys, "__day", F.col(uv).cast("string").alias(uv))
-        .where(F.col(uv).isNotNull())
-        .distinct()
-    )
+    uv = quote(f"__uv_{part.output_name}")
+    dayed = _dayed(rel, cols)
+    val = f"explode({quote(part.input_column)})" if is_array else quote(part.input_column)
+    triples = _sub(f"SELECT DISTINCT {keys}, __day, {uv} FROM (SELECT {keys}, __day,"
+                   f" CAST({uv} AS STRING) AS {uv} FROM (SELECT {keys}, __day, {val} AS {uv}"
+                   f" FROM {dayed})) WHERE {uv} IS NOT NULL")
     days = window_days(part)
-    nxt = F.lead("__day").over(W.partitionBy(*keys, uv).orderBy("__day"))
+    nxt = f"lead(__day) OVER (PARTITION BY {keys}, {uv} ORDER BY __day)"
     # least() skips NULL: a value's last occurrence leaves at day + w, and
     # never under a lifetime window
-    leave = nxt if days is None else F.least(nxt, F.col("__day") + days)
-    deltas = triples.withColumn("__leave", leave).select(*keys, F.inline(F.array(
-        F.struct(F.col("__day"), F.lit(1).alias("__d")),
-        F.struct(F.col("__leave").alias("__day"), F.lit(-1).alias("__d")),
-    ))).where(F.col("__day").isNotNull())
+    leave = nxt if days is None else f"least({nxt}, __day + {days})"
+    deltas = _sub(f"SELECT * FROM (SELECT {keys}, inline(array("
+                  f"named_struct('__day', __day, '__d', 1),"
+                  f" named_struct('__day', __leave, '__d', -1)))"
+                  f" FROM (SELECT *, {leave} AS __leave FROM {triples})) WHERE __day IS NOT NULL")
     # the spine carries every output row (keys whose values are all NULL
     # included, so they read 0); its delta-0 rows only mark where to read
-    spine = (_dense_spine(dayed, keys, rng, spec) if dense
-             else dayed.select(*keys, "__day").distinct())
-    swept = spine.select(*keys, "__day", F.lit(0).alias("__d"), F.lit(True).alias("__s"))
-    swept = swept.unionByName(deltas.withColumn("__s", F.lit(False)))
-    running = F.sum("__d").over(
-        W.partitionBy(*keys).orderBy("__day")
-        .rangeBetween(W.unboundedPreceding, W.currentRow)
-    )
-    out = swept.withColumn(part.output_name, running.cast("long")).where("__s").select(
-        *keys, _ds_from_day(F.col("__day")).alias(PARTITION_COLUMN), part.output_name
-    )
-    return _in_range(out, rng, spec)
+    spine = _spine(keys, dayed, rng, spec, dense)
+    swept = _sub(f"SELECT {keys}, __day, 0 AS __d, true AS __s FROM {spine}"
+                 f" UNION ALL SELECT {keys}, __day, __d, false AS __s FROM {deltas}")
+    running = (f"CAST(sum(__d) OVER (PARTITION BY {keys} ORDER BY __day"
+               f" {_frame(None)}) AS BIGINT)")
+    name = quote(part.output_name)
+    out = _sub(_in_range(f"SELECT {keys}, {_DS_FROM_DAY}, {name} FROM (SELECT {keys}, __day,"
+                         f" __s, {running} AS {name} FROM {swept}) WHERE __s", rng, spec))
+    return out, {part.output_name: name}
 
 
-def _compute_hist_like_part(df, keys, part, rng, spec, dense) -> DataFrame:
-    """HISTOGRAM / frequent-k via the explode -> groupBy(keys, day, value)
+def _hist_like_part(keys, rel, cols, part, rng, spec, dense):
+    """HISTOGRAM / frequent-k via the explode -> group by (keys, day, value)
     -> re-window -> fold plan (the shape of the reference's own Spark
     UDAF, spark/.../udafs/Histogram.scala:28-43). Exact UNIQUE_COUNT has
-    its own sweep (`_compute_unique_count_part`).
+    its own sweep (`_unique_count_part`).
 
     Replaces the round-1 scale-killer: the O(distinct^2)
     higher-order-function merge (interpreted lambdas per output row).
     Total cost here is O(distinct (key, day, value) triples) with map-side
     combine, and every window shares the same per-value daily counts."""
     hv = f"__hv_{part.output_name}"
-    dfb = df.withColumn(hv, F.col(part.input_column).cast("string"))
+    dfb = _sub(f"SELECT *, CAST({quote(part.input_column)} AS STRING) AS {quote(hv)}"
+               f" FROM {rel}")
     sub = AggregationPart(part.input_column, Operation.COUNT, {}, part.window, bucket=hv)
-    r = _compute_bucketed_part(dfb, keys, sub, rng, spec, dense)
-    out_col = m = F.col(sub.output_name)
+    out, outs = _bucketed_part(keys, dfb, cols + [hv], sub, rng, spec, dense)
+    m = outs[sub.output_name]
     k = part.arg_map.get("k")
     if k:
-        out_col = F.map_from_entries(
-            F.slice(F.array_sort(F.map_entries(m), _cmp_count_desc), 1, int(k))
-        )
-    return r.withColumn(part.output_name, out_col).drop(sub.output_name)
+        m = (f"map_from_entries(slice(array_sort(map_entries({m}), {CMP_COUNT_DESC}),"
+             f" 1, {int(k)}))")
+    return out, {part.output_name: m}
 
 
-def _compute_bucketed_hist_part(df, keys, part, rng, spec, dense) -> DataFrame:
+def _bucketed_hist_part(keys, rel, cols, part, rng, spec, dense):
     """Bucketed HISTOGRAM / frequent-k / UNIQUE_COUNT without interpreted
     map-merge lambdas: explode to (keys, day, bucket, value) daily counts,
     re-window the counts (bucket AND value are plain group columns), then
@@ -412,136 +435,111 @@ def _compute_bucketed_hist_part(df, keys, part, rng, spec, dense) -> DataFrame:
     distinct count), per (keys, day) to the outer bucket map. Cost is
     O(distinct (key, day, bucket, value)) with map-side combine, replacing
     the O(distinct^2) HistogramSpec/UniqueCountSpec HOF merges."""
-    b, col = part.bucket, part.input_column
-    hv = f"__hv_{part.output_name}"
-    dayed = df.withColumn("__day", _day_expr(df))
-    dfb = dayed.where(F.col(b).isNotNull()).withColumn(hv, F.col(col).cast("string"))
-    daily = (
-        dfb.where(F.col(hv).isNotNull())
-        .groupBy(*keys, "__day", b, hv)
-        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-    )
+    b = quote(part.bucket)
+    hv = quote(f"__hv_{part.output_name}")
+    dayed = _dayed(rel, cols)
+    dfb = _sub(f"SELECT *, CAST({quote(part.input_column)} AS STRING) AS {hv}"
+               f" FROM {dayed} WHERE {b} IS NOT NULL")
+    daily = _sub(f"SELECT {keys}, __day, {b}, {hv}, CAST(count(1) AS BIGINT) AS __c"
+                 f" FROM {dfb} WHERE {hv} IS NOT NULL GROUP BY {keys}, __day, {b}, {hv}")
     # scaffold: (key, day) spine x the key's observed (bucket, value) pairs
-    # so windows still emit on days without that exact pair
-    if dense:
-        # key universe from ALL event rows (kernel parity for all-null keys;
-        # the spine left-join at the end coalesces them to empty maps)
-        spine = _dense_spine(dayed, keys, rng, spec)
-    else:
-        spine = dayed.select(*keys, "__day").distinct()
-    kb = dfb.where(F.col(hv).isNotNull()).select(*keys, b, hv).distinct()
-    scaffold = spine.join(kb, keys)
-    daily = scaffold.join(daily, keys + ["__day", b, hv], "full_outer")
-
-    days = window_days(part)
-    w_base = W.partitionBy(*keys, b, hv).orderBy("__day")
-    frame = (
-        w_base.rangeBetween(W.unboundedPreceding, W.currentRow)
-        if days is None
-        else w_base.rangeBetween(-(days - 1), W.currentRow)
-    )
-    windowed = daily.withColumn("__v", F.sum("__c").over(frame)).where(
-        F.col("__v") > 0
-    )
+    # so windows still emit on days without that exact pair; the dense
+    # spine's key universe is ALL event rows (kernel parity for all-null
+    # keys; the spine left-join at the end gives them empty maps)
+    spine = _spine(keys, dayed, rng, spec, dense)
+    scaffold = _sub(f"SELECT * FROM {spine} JOIN (SELECT DISTINCT {keys}, {b}, {hv}"
+                    f" FROM {dfb} WHERE {hv} IS NOT NULL) USING ({keys})")
+    joined = _sub(f"SELECT * FROM {scaffold} FULL OUTER JOIN {daily}"
+                  f" USING ({keys}, __day, {b}, {hv})")
+    (w,), window = _windowed(f"{keys}, {b}, {hv}", [_frame(window_days(part))])
+    windowed = _sub(f"SELECT * FROM (SELECT *, sum(__c) OVER {w} AS __v FROM {joined}"
+                    f" {window}) WHERE __v > 0")
     if part.operation == Operation.UNIQUE_COUNT:
-        inner = F.count(F.lit(1)).cast("long").alias("__m")
+        inner = "CAST(count(1) AS BIGINT)"
     else:
-        entries = F.sort_array(F.collect_list(
-            F.struct(F.col(hv).alias("key"), F.col("__v").alias("value"))
-        ))
+        entries = f"sort_array(collect_list(named_struct('key', {hv}, 'value', __v)))"
         k = part.arg_map.get("k")
         if k:
-            entries = F.slice(F.array_sort(entries, _cmp_count_desc), 1, int(k))
-        inner = F.map_from_entries(entries).alias("__m")
-    per_bucket = windowed.groupBy(*keys, "__day", b).agg(inner)
-
-    def _cmp_key(x, y):  # structs holding maps aren't orderable; sort by key
-        return (F.when(x["key"] < y["key"], F.lit(-1))
-                .when(x["key"] > y["key"], F.lit(1)).otherwise(F.lit(0)))
-
-    outer = per_bucket.groupBy(*keys, "__day").agg(
-        F.map_from_entries(F.array_sort(F.collect_list(
-            F.struct(F.col(b).alias("key"), F.col("__m").alias("value"))
-        ), _cmp_key)).alias(part.output_name)
-    )
-    out_type = dict(outer.dtypes)[part.output_name]
-    out = (
-        spine.join(outer, keys + ["__day"], "left")
-        .withColumn(
-            part.output_name,
-            F.coalesce(F.col(part.output_name), F.expr(f"CAST(map() AS {out_type})")),
-        )
-        .withColumn(PARTITION_COLUMN, _ds_from_day(F.col("__day")))
-        .drop("__day")
-    )
-    return _in_range(out, rng, spec)
+            entries = f"slice(array_sort({entries}, {CMP_COUNT_DESC}), 1, {int(k)})"
+        inner = f"map_from_entries({entries})"
+    per_bucket = _sub(f"SELECT {keys}, __day, {b}, {inner} AS __m FROM {windowed}"
+                      f" GROUP BY {keys}, __day, {b}")
+    # structs holding maps aren't orderable; sort by key
+    cmp_key = ("(__a, __b) -> CASE WHEN __a.key < __b.key THEN -1"
+               " WHEN __a.key > __b.key THEN 1 ELSE 0 END")
+    name = quote(part.output_name)
+    outer = _sub(f"SELECT {keys}, __day, map_from_entries(array_sort(collect_list("
+                 f"named_struct('key', {b}, 'value', __m)), {cmp_key})) AS {name}"
+                 f" FROM {per_bucket} GROUP BY {keys}, __day")
+    out = _sub(_in_range(f"SELECT {keys}, coalesce({name}, map()) AS {name}, {_DS_FROM_DAY}"
+                         f" FROM {spine} LEFT JOIN {outer} USING ({keys}, __day)", rng, spec))
+    return out, {part.output_name: name}
 
 
-def _cmp_utk(a, b):
-    """array_sort comparator: sort_key DESC, unique_id ASC — the
-    deterministic order of the reference's UniqueOrderByLimit (topK=true)."""
-    return (
-        F.when(a["sort_key"] > b["sort_key"], F.lit(-1))
-        .when(a["sort_key"] < b["sort_key"], F.lit(1))
-        .when(a["unique_id"] < b["unique_id"], F.lit(-1))
-        .when(a["unique_id"] > b["unique_id"], F.lit(1))
-        .otherwise(F.lit(0))
-    )
+# array_sort comparator: sort_key DESC, unique_id ASC — the deterministic
+# order of the reference's UniqueOrderByLimit (topK=true)
+_CMP_UTK = (
+    "(__a, __b) -> CASE WHEN __a.sort_key > __b.sort_key THEN -1"
+    " WHEN __a.sort_key < __b.sort_key THEN 1"
+    " WHEN __a.unique_id < __b.unique_id THEN -1"
+    " WHEN __a.unique_id > __b.unique_id THEN 1 ELSE 0 END"
+)
 
 
-def _compute_unique_topk_struct_part(df, keys, part, rng, spec, dense) -> DataFrame:
+def _unique_topk_struct_part(keys, rel, cols, part, rng, spec, dense):
     """UNIQUE_TOP_K over struct{sort_key: string, unique_id: bigint}
     (reference: UniqueTopKAggregator / UniqueOrderByLimit.scala:1-123,
     SimpleAggregators.scala:768-917): top-k elements by sort_key desc,
     at most one element per unique_id.
 
-    Plan: explode -> groupBy(keys, day, unique_id) keeping the MAX
+    Plan: explode -> group by (keys, day, unique_id) keeping the MAX
     sort_key per id per day (deterministic tiebreak; the reference keeps
     the first-inserted element, which is partition-order-dependent) ->
     window max per (keys, unique_id) -> fold per (keys, day) to the k
     best (sort_key desc, unique_id asc). State stays O(ids/day), the
     windowed merge is a plain max — same asymptotics as the reference's
     bounded insert-with-watermark state."""
-    uid = f"__uid_{part.output_name}"
-    sk = f"__sk_{part.output_name}"
-    exploded = df.select(
-        *[c for c in df.columns if c != part.input_column],
-        F.col(f"{part.input_column}.unique_id").alias(uid),
-        F.col(f"{part.input_column}.sort_key").alias(sk),
-    )
+    uid, sk = f"__uid_{part.output_name}", f"__sk_{part.output_name}"
+    c = quote(part.input_column)
+    others = [x for x in cols if x != part.input_column]
+    exploded = _sub(f"SELECT {''.join(f'{quote(x)}, ' for x in others)}"
+                    f"{c}.unique_id AS {quote(uid)}, {c}.sort_key AS {quote(sk)} FROM {rel}")
     sub = AggregationPart(sk, Operation.MAX, {}, part.window, bucket=uid)
-    r = _compute_bucketed_part(exploded, keys, sub, rng, spec, dense)
+    out, outs = _bucketed_part(keys, exploded, others + [uid, sk], sub, rng, spec, dense)
+    entries = (f"transform(map_entries({outs[sub.output_name]}), __e -> named_struct("
+               f"'sort_key', __e.value, 'unique_id', CAST(__e.key AS BIGINT)))")
     k = int(part.arg_map.get("k", 10))
-    entries = F.transform(
-        F.map_entries(F.col(sub.output_name)),
-        lambda e: F.struct(
-            e["value"].alias("sort_key"),
-            e["key"].cast("long").alias("unique_id"),
-        ),
-    )
-    out_col = F.slice(F.array_sort(entries, _cmp_utk), 1, k)
-    return r.withColumn(part.output_name, out_col).drop(sub.output_name)
+    return out, {part.output_name: f"slice(array_sort({entries}, {_CMP_UTK}), 1, {k})"}
 
 
-def _dense_spine(df, keys, rng, spec) -> DataFrame:
+def _spine(keys, dayed, rng, spec, dense) -> str:
+    """The output rows of a family: every (key, `__day`) of the range when
+    `dense`, else the (key, `__day`) pairs with events."""
+    if dense:
+        return _dense_spine(keys, dayed, rng, spec)
+    return _sub(f"SELECT DISTINCT {keys}, __day FROM {dayed}")
+
+
+def _dense_spine(keys, rel, rng, spec) -> str:
     """Every (key, `__day`) pair of the bounded output range, over the keys
-    of `df` — the dense-mode output rows (Chronon emits rows for all days,
+    of `rel` — the dense-mode output rows (Chronon emits rows for all days,
     so window tails materialize on event-free days)."""
     assert rng is not None and rng.start is not None and rng.end is not None, (
         "dense mode needs a bounded output range"
     )
-    days_df = df.sparkSession.createDataFrame(
-        [(spec.epoch_millis(d) // DAY_MS,) for d in rng.partitions()], "__day long"
-    )
-    return df.select(*keys).distinct().crossJoin(F.broadcast(days_df))
+    lo, hi = (spec.epoch_millis(d) // DAY_MS for d in (rng.start, rng.end))
+    return _sub(f"SELECT /*+ BROADCAST(__days) */ * FROM (SELECT DISTINCT {keys}"
+                f" FROM {rel}) CROSS JOIN (SELECT explode(sequence({lo}L, {hi}L)) AS __day)"
+                f" AS __days")
 
 
-def _densify(daily, keys, rng, spec):
+def _densify(keys, daily, rng, spec) -> str:
     """Scaffold the dense spine onto the daily partials. FULL outer: keep
     the lookback days' partials (outside the output range) — the window
     frames need that history — while adding empty rows for event-free
     days inside the range."""
-    return _dense_spine(daily, keys, rng, spec).join(daily, keys + ["__day"], "full_outer")
+    spine = _dense_spine(keys, daily, rng, spec)
+    return _sub(f"SELECT * FROM {spine} FULL OUTER JOIN {daily} USING ({keys}, __day)")
 
 
 def _compute_entity_snapshot(spark, group_by, rng, spec) -> DataFrame:
@@ -552,53 +550,46 @@ def _compute_entity_snapshot(spark, group_by, rng, spec) -> DataFrame:
     (each partition already carries the accumulated world — merging days
     would double-count entities)."""
     df = _union_sources(spark, group_by, rng, spec)
-    keys = group_by.key_columns
+    keys = ", ".join(quote(k) for k in group_by.key_columns)
+    src = _view()
     parts = group_by.aggregation_parts()
     if all(p.window is None for p in parts):
-        specs = [spec_for(p) for p in parts]
-        aggs = [
-            finalize_rounding(sp.direct(), sp).alias(p.output_name)
-            for p, sp in zip(parts, specs)
-        ]
-        out = df.groupBy(*keys, PARTITION_COLUMN).agg(*aggs)
-    else:
-        # windowed hist-like parts ride the exploded per-value plan (same
-        # round-2 rewrite as the events path — no O(distinct^2) HOF merge)
-        def _is_hist(p):
-            return (p.window is not None and p.operation in _HIST_LIKE
-                    and p.bucket is None)
+        aggs = ", ".join(f"{finalize_rounding(sp.direct(), sp)} AS {quote(p.output_name)}"
+                         for p, sp in ((p, spec_for(p)) for p in parts))
+        final = f"SELECT {keys}, {_DS}, {aggs} FROM {src} GROUP BY {keys}, {_DS}"
+        return _apply_derivations(_sql(spark, df, src, _in_range(final, rng, spec)), group_by)
 
-        plain = [p for p in parts if not _is_hist(p)]
-        hist_like = [p for p in parts if _is_hist(p)]
-        specs = [spec_for(p) for p in plain]
-        partial_cols: dict[str, F.Column] = {}
-        for sp in specs:
-            partial_cols.update(sp.partials())
-        daily = df.groupBy(*keys, PARTITION_COLUMN).agg(
-            *[c.alias(n) for n, c in partial_cols.items()]
-        )
-        daily = daily.withColumn(
-            "__day", F.unix_date(F.to_date(F.col(PARTITION_COLUMN))).cast("long")
-        )
-        w_base = W.partitionBy(*keys).orderBy("__day")
-        for part, sp in zip(plain, specs):
-            days = window_days(part)
-            frame = (
-                w_base.rangeBetween(W.currentRow, W.currentRow)
-                if days is None
-                else w_base.rangeBetween(-(days - 1), W.currentRow)
-            )
-            daily = daily.withColumn(part.output_name, finalize_rounding(sp.merge(frame), sp))
-        out = daily.select(*keys, PARTITION_COLUMN, *[p.output_name for p in plain])
-        for p in hist_like:
-            fn = (_compute_unique_count_part if p.operation == Operation.UNIQUE_COUNT
-                  else _compute_hist_like_part)
-            r = fn(df, keys, p, rng, spec, dense=False)
-            out = out.join(r, keys + [PARTITION_COLUMN], "full_outer")
-            if p.operation == Operation.UNIQUE_COUNT:
-                out = out.withColumn(
-                    p.output_name,
-                    F.coalesce(F.col(p.output_name), F.lit(0).cast("long")),
-                )
-    return _apply_derivations(_in_range(out, rng, spec), group_by)
+    # windowed hist-like parts ride the exploded per-value plan (same
+    # round-2 rewrite as the events path — no O(distinct^2) HOF merge)
+    def _is_hist(p):
+        return p.window is not None and p.operation in _HIST_LIKE and p.bucket is None
 
+    plain = [p for p in parts if not _is_hist(p)]
+    hist_like = [p for p in parts if _is_hist(p)]
+    specs = [spec_for(p) for p in plain]
+    partials: dict[str, str] = {}
+    for sp in specs:
+        partials.update(sp.partials())
+    aggs = "".join(f", {e} AS {quote(n)}" for n, e in partials.items())
+    daily = _sub(f"SELECT *, CAST(unix_date(to_date({_DS})) AS BIGINT) AS __day FROM"
+                 f" (SELECT {keys}, {_DS}{aggs} FROM {src} GROUP BY {keys}, {_DS})")
+    frames = [_frame(window_days(p), lifetime="CURRENT ROW") for p in plain]
+    names, window = _windowed(keys, frames)
+    merges = "".join(f", {finalize_rounding(sp.merge(w), sp)} AS {quote(p.output_name)}"
+                     for p, sp, w in zip(plain, specs, names))
+    out = _sub(f"SELECT {keys}, {_DS}{merges} FROM {daily} {window}")
+    outs = {p.output_name: quote(p.output_name) for p in plain}
+    joined = out
+    dtypes = dict(df.dtypes) if hist_like else {}
+    cols = list(dtypes)
+    for p in hist_like:
+        if p.operation == Operation.UNIQUE_COUNT:
+            is_array = dtypes[p.input_column].startswith("array<")
+            rel, family = _unique_count_part(keys, src, cols, p, is_array, rng, spec, False)
+            family = {n: f"coalesce({e}, CAST(0 AS BIGINT))" for n, e in family.items()}
+        else:
+            rel, family = _hist_like_part(keys, src, cols, p, rng, spec, False)
+        joined += f" FULL OUTER JOIN {rel} USING ({keys}, {_DS})"
+        outs.update(family)
+    final = f"SELECT {keys}, {_DS}, {_outputs(plain + hist_like, outs)} FROM {joined}"
+    return _apply_derivations(_sql(spark, df, src, _in_range(final, rng, spec)), group_by)

@@ -43,7 +43,7 @@ def test_percentile_partial_is_bounded(spark):
                            {"percentiles": [0.5], "sketch_k": k}, Window(7))
     sp = spec_for(part)
     daily = df.withColumn("__day", F.expr(f"ts DIV {DAY}")).groupBy("k", "__day").agg(
-        *[c.alias(nm) for nm, c in sp.partials().items()]
+        *[F.expr(e).alias(nm) for nm, e in sp.partials().items()]
     )
     row = daily.collect()[0]
     ir = row[f"__{part.output_name}__qs"]

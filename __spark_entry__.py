@@ -29,6 +29,7 @@ from chronon_spark.api import (
     Query,
     Window,
 )
+from chronon_spark.fixtures import FIXTURE_DIR
 
 # testdata `ts` columns are TIMESTAMP_NTZ; session TZ is pinned to UTC so the
 # cast is identity and matches DuckDB's naive-UTC epoch_ms().
@@ -1684,7 +1685,7 @@ def q_groupby_unique_topk_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 FIXTURE_N, FIXTURE_SEED = 500, 42
-_FIXTURE_PATH = f"/root/repo/.fixtures/images_n{FIXTURE_N}_s{FIXTURE_SEED}.parquet"
+_FIXTURE_PATH = f"{FIXTURE_DIR}/images_n{FIXTURE_N}_s{FIXTURE_SEED}.parquet"
 
 
 def _image_fixture_path() -> str:
@@ -1716,7 +1717,7 @@ def q_image_pixel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 REAL_IMG_N, REAL_IMG_SEED = 200, 42
 _REAL_FIXTURE_PATH = (
-    f"/root/repo/.fixtures/images_real_v6_n{REAL_IMG_N}_s{REAL_IMG_SEED}.parquet"
+    f"{FIXTURE_DIR}/images_real_v6_n{REAL_IMG_N}_s{REAL_IMG_SEED}.parquet"
 )
 
 
@@ -1754,7 +1755,7 @@ def q_image_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 EXIF_N, EXIF_SEED = 600, 101
 _EXIF_FIXTURE_PATH = (
-    f"/root/repo/.fixtures/images_exif_v4_n{EXIF_N}_s{EXIF_SEED}.parquet"
+    f"{FIXTURE_DIR}/images_exif_v4_n{EXIF_N}_s{EXIF_SEED}.parquet"
 )
 
 
@@ -1817,7 +1818,7 @@ def q_image_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUAL_N, QUAL_SEED = 600, 131
 _QUALITY_FIXTURE_PATH = (
-    f"/root/repo/.fixtures/images_quality_v1_n{QUAL_N}_s{QUAL_SEED}.parquet"
+    f"{FIXTURE_DIR}/images_quality_v1_n{QUAL_N}_s{QUAL_SEED}.parquet"
 )
 
 
@@ -1934,7 +1935,7 @@ def q_image_letterbox(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_N, BPE_SEED = 1_200, 171
 _BPE_FIXTURE_PATH = (
-    f"/root/repo/.fixtures/bpe_docs_v1_n{BPE_N}_s{BPE_SEED}.parquet"
+    f"{FIXTURE_DIR}/bpe_docs_v1_n{BPE_N}_s{BPE_SEED}.parquet"
 )
 
 
@@ -2375,12 +2376,12 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 VIDEO_N, VIDEO_SEED = 200, 77
-_VIDEO_FIXTURE_PATH = f"/root/repo/.fixtures/videos_n{VIDEO_N}_s{VIDEO_SEED}.parquet"
+_VIDEO_FIXTURE_PATH = f"{FIXTURE_DIR}/videos_n{VIDEO_N}_s{VIDEO_SEED}.parquet"
 AUDIO_N, AUDIO_SEED = 300, 55
-_AUDIO_FIXTURE_PATH = f"/root/repo/.fixtures/audio_n{AUDIO_N}_s{AUDIO_SEED}.parquet"
+_AUDIO_FIXTURE_PATH = f"{FIXTURE_DIR}/audio_n{AUDIO_N}_s{AUDIO_SEED}.parquet"
 AUDIO_REAL_N, AUDIO_REAL_SEED = 300, 91
 _AUDIO_REAL_FIXTURE_PATH = (
-    f"/root/repo/.fixtures/audio_real_v2_n{AUDIO_REAL_N}_s{AUDIO_REAL_SEED}.parquet"
+    f"{FIXTURE_DIR}/audio_real_v2_n{AUDIO_REAL_N}_s{AUDIO_REAL_SEED}.parquet"
 )
 
 
@@ -2404,7 +2405,7 @@ def _audio_real_fixture_path() -> str:
 
 VIDEO_REAL_N, VIDEO_REAL_SEED = 200, 83
 _VIDEO_REAL_FIXTURE_PATH = (
-    f"/root/repo/.fixtures/videos_real_v4_n{VIDEO_REAL_N}_s{VIDEO_REAL_SEED}.parquet"
+    f"{FIXTURE_DIR}/videos_real_v4_n{VIDEO_REAL_N}_s{VIDEO_REAL_SEED}.parquet"
 )
 
 
@@ -3082,7 +3083,7 @@ def q_cumulative_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chronon_spark.operators.groupby import compute_snapshot_groupby
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/root/repo/.fixtures/cumulative_events_{tag}.parquet"
+    path = f"{FIXTURE_DIR}/cumulative_events_{tag}.parquet"
     if not os.path.exists(path):
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         day = F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd")
@@ -3125,7 +3126,7 @@ def q_join_noagg_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chronon_spark.operators.snapshot_join import compute_join
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/root/repo/.fixtures/snapshots_customer_{tag}.parquet"
+    path = f"{FIXTURE_DIR}/snapshots_customer_{tag}.parquet"
     if not os.path.exists(path):
         cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
         snaps = None

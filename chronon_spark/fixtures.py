@@ -22,6 +22,8 @@ from typing import Optional
 
 import numpy as np
 
+# generated fixtures go to `.fixtures/` in the checkout this package is in
+FIXTURE_DIR = os.path.abspath(os.path.join(__file__, "..", "..", ".fixtures"))
 DAY_MS = 86_400_000
 BASE_TS = 1704067200000  # 2024-01-01 UTC
 
@@ -253,7 +255,7 @@ def _image_chunk_writer(task):
 
 
 def ensure_image_fixture(
-    n: int = 500, seed: int = 42, out_dir: str = "/root/repo/.fixtures",
+    n: int = 500, seed: int = 42, out_dir: str = FIXTURE_DIR,
     n_jobs: int | None = None,
 ) -> str:
     """Write the fixture parquet once; return the path. Idempotent on
@@ -535,7 +537,7 @@ def _encode_webp_lossy_system(pix: "np.ndarray", quality: float):
 
 
 def ensure_real_image_fixture(
-    n: int = 200, seed: int = 42, out_dir: str = "/root/repo/.fixtures",
+    n: int = 200, seed: int = 42, out_dir: str = FIXTURE_DIR,
     n_jobs: int | None = None,
 ) -> str:
     """Write the real-codec (png/jpeg) fixture parquet once; idempotent
@@ -671,7 +673,7 @@ def _video_chunk_writer(task):
 
 
 def ensure_video_fixture(
-    n: int = 200, seed: int = 77, out_dir: str = "/root/repo/.fixtures",
+    n: int = 200, seed: int = 77, out_dir: str = FIXTURE_DIR,
     n_jobs: int | None = None,
 ) -> str:
     """Deterministic 'vraw' video table. Large n (>=100k) is generated in
@@ -779,7 +781,7 @@ def gen_audio_rows(n: int, seed: int = 55, span_days: int = 30):
 
 
 def ensure_audio_fixture(
-    n: int = 300, seed: int = 55, out_dir: str = "/root/repo/.fixtures"
+    n: int = 300, seed: int = 55, out_dir: str = FIXTURE_DIR
 ) -> str:
     path = os.path.join(out_dir, f"audio_n{n}_s{seed}.parquet")
     if os.path.exists(path):
@@ -935,7 +937,7 @@ def gen_real_audio_rows(n: int, seed: int = 91, span_days: int = 30):
 
 
 def ensure_real_audio_fixture(
-    n: int = 300, seed: int = 91, out_dir: str = "/root/repo/.fixtures"
+    n: int = 300, seed: int = 91, out_dir: str = FIXTURE_DIR
 ) -> str:
     path = os.path.join(out_dir, f"audio_real_v2_n{n}_s{seed}.parquet")
     if os.path.exists(path):
@@ -1080,7 +1082,7 @@ def gen_real_video_rows(n: int, seed: int = 83, span_days: int = 30):
 
 
 def ensure_real_video_fixture(
-    n: int = 200, seed: int = 83, out_dir: str = "/root/repo/.fixtures"
+    n: int = 200, seed: int = 83, out_dir: str = FIXTURE_DIR
 ) -> str:
     path = os.path.join(out_dir, f"videos_real_v4_n{n}_s{seed}.parquet")
     if os.path.exists(path):
@@ -1278,7 +1280,7 @@ def _exif_chunk_writer(task):
 
 
 def ensure_exif_fixture(
-    n: int = 2_000, seed: int = 101, out_dir: str = "/root/repo/.fixtures",
+    n: int = 2_000, seed: int = 101, out_dir: str = FIXTURE_DIR,
     n_jobs: int | None = None,
 ) -> str:
     """Write the EXIF-bearing image fixture once; idempotent on (n, seed)."""
@@ -1394,7 +1396,7 @@ def gen_quality_image_rows(n: int, seed: int = 131, span_days: int = 30,
 
 
 def ensure_quality_fixture(
-    n: int = 600, seed: int = 131, out_dir: str = "/root/repo/.fixtures",
+    n: int = 600, seed: int = 131, out_dir: str = FIXTURE_DIR,
 ) -> str:
     """Write the quality-metric image fixture once; idempotent on (n, seed)."""
     path = os.path.join(out_dir, f"images_quality_v1_n{n}_s{seed}.parquet")
@@ -1474,7 +1476,7 @@ def gen_bpe_doc_rows(n: int, seed: int = 171):
 
 
 def ensure_bpe_fixture(
-    n: int = 1_200, seed: int = 171, out_dir: str = "/root/repo/.fixtures",
+    n: int = 1_200, seed: int = 171, out_dir: str = FIXTURE_DIR,
 ) -> str:
     path = os.path.join(out_dir, f"bpe_docs_v1_n{n}_s{seed}.parquet")
     if os.path.exists(path):

@@ -225,17 +225,11 @@ class KurtosisSpec(SkewSpec):
 
 
 class UniqueCountSpec(OpSpec):
+    """Direct form only: windows take the sweep of
+    `groupby._unique_count_part`, not daily sets."""
+
     def direct(self) -> str:
         return f"count(DISTINCT {self.col})"
-
-    def partials(self) -> dict[str, str]:
-        # exact distinct via daily sets; "expensive if high cardinality"
-        # exactly as the reference warns (SimpleAggregators.scala:84-126)
-        return {_ir(self.name, "set"): f"collect_set({self.col})"}
-
-    def merge(self, w: str) -> str:
-        merged = f"flatten({self._over('collect_list', 'set', w)})"
-        return f"CAST(size(array_distinct({merged})) AS BIGINT)"
 
 
 class ApproxUniqueCountSpec(OpSpec):
@@ -404,35 +398,19 @@ class BottomKSpec(TopKSpec):
 class HistogramSpec(OpSpec):
     """Exact value -> count map, optional top-k trim (SimpleAggregators.scala:263-335).
 
-    direct form is a single pass: collect values, fold counts with
-    higher-order functions — no second shuffle.
+    Direct form only, a single pass: collect values, fold counts with
+    higher-order functions — no second shuffle. Windows take the exploded
+    per-value plan of `groupby._hist_like_part` instead.
     """
 
-    def _entries(self, value_type: str) -> str:
+    def direct(self) -> str:
         vals = f"array_sort(collect_list(CAST({self.col} AS STRING)))"
-        return (f"transform(array_distinct({vals}), __x -> named_struct('key', __x, 'value',"
-                f" CAST(size(filter({vals}, __y -> __y = __x)) AS {value_type})))")
-
-    def _top(self, entries: str) -> str:
+        entries = (f"transform(array_distinct({vals}), __x -> named_struct('key', __x, 'value',"
+                   f" CAST(size(filter({vals}, __y -> __y = __x)) AS INT)))")
         k = self.args.get("k")
         if k:
             entries = f"slice(array_sort({entries}, {CMP_COUNT_DESC}), 1, {int(k)})"
         return f"map_from_entries({entries})"
-
-    def direct(self) -> str:
-        return self._top(self._entries("INT"))
-
-    def partials(self) -> dict[str, str]:
-        return {_ir(self.name, "hist"): self._entries("BIGINT")}
-
-    def merge(self, w: str) -> str:
-        merged = f"flatten({self._over('collect_list', 'hist', w)})"
-        folded = (
-            f"transform(array_distinct(transform({merged}, __e -> __e.key)), __k -> named_struct("
-            f"'key', __k, 'value', aggregate(filter({merged}, __e -> __e.key = __k),"
-            f" CAST(0 AS BIGINT), (__acc, __e) -> __acc + __e.value)))"
-        )
-        return self._top(folded)
 
 
 class UniqueTopKSpec(OpSpec):

@@ -315,3 +315,83 @@ def test_entity_windowed_histogram_and_unique(spark):
     assert rows["2024-01-02"]["tag_unique_count_2d"] == 2
     assert rows["2024-01-03"]["tag_histogram_2d"] == {"a": 1, "c": 1}
     assert rows["2024-01-03"]["tag_count_2d"] == 2
+
+
+def _entity_gb(df, aggs, keys=("acct",)):
+    return GroupBy(sources=[DataFrameSource(lambda s: df, entity=True)],
+                   key_columns=list(keys), aggregations=aggs, name="e")
+
+
+@pytest.fixture(scope="module")
+def bucketed_snap(spark):
+    return spark.createDataFrame(
+        [(1, "2024-01-01", "x", 5.0), (1, "2024-01-01", "y", 2.0), (1, "2024-01-02", "x", 7.0)],
+        "acct int, ds string, cat string, v double",
+    )
+
+
+def test_entity_bucketed_windowed_part_is_a_map(spark, bucketed_snap):
+    """A bucketed entity part keeps its bucket: map<bucket, value>, the
+    window summing each bucket over the snapshot days it covers."""
+    out = compute_snapshot_groupby(spark, _entity_gb(bucketed_snap, [
+        Aggregation("v", Operation.SUM, windows=[Window(2)], buckets=["cat"])]))
+    assert out.schema["v_sum_2d_by_cat"].dataType.simpleString() == "map<string,double>"
+    rows = {r["ds"]: r["v_sum_2d_by_cat"] for r in out.collect()}
+    assert rows == {"2024-01-01": {"x": 5.0, "y": 2.0}, "2024-01-02": {"x": 12.0, "y": 2.0}}
+
+
+def test_entity_bucketed_unwindowed_part_is_the_day(spark, bucketed_snap):
+    out = compute_snapshot_groupby(spark, _entity_gb(bucketed_snap, [
+        Aggregation("v", Operation.SUM, buckets=["cat"])]))
+    rows = {r["ds"]: r["v_sum_by_cat"] for r in out.collect()}
+    assert rows == {"2024-01-01": {"x": 5.0, "y": 2.0}, "2024-01-02": {"x": 7.0}}
+
+
+@pytest.mark.parametrize("col", ["a", "m"])
+def test_entity_collection_input_matches_event_path(spark, col):
+    """Array- and map-input entity parts explode like event parts: the
+    same rows as events (one per day) give the same 2-day sums."""
+    snap = spark.createDataFrame(
+        [(1, "2024-01-01", [1.0, 2.0], {"x": 1.0}), (1, "2024-01-02", [4.0], {"x": 2.0, "y": 3.0}),
+         (2, "2024-01-02", None, None), (1, "2024-01-04", [8.0], {"y": 5.0})],
+        "acct int, ds string, a array<double>, m map<string,double>",
+    )
+    events = snap.withColumn(
+        "ts", F.expr(f"CAST(unix_date(to_date(ds)) AS BIGINT) * {DAY} + 3600000"))
+    aggs = [Aggregation(col, Operation.SUM, windows=[Window(2)])]
+    name = f"{col}_sum_2d"
+    ent = {(r["acct"], r["ds"]): r[name]
+           for r in compute_snapshot_groupby(spark, _entity_gb(snap, aggs)).collect()}
+    ev = {(r["acct"], r["ds"]): r[name]
+          for r in compute_snapshot_groupby(spark, GroupBy(
+              sources=[_src(events)], key_columns=["acct"], aggregations=aggs,
+              name="ev")).collect()}
+    assert ent == ev
+    assert ent[(1, "2024-01-02")] == (7.0 if col == "a" else {"x": 3.0, "y": 3.0})
+
+
+@pytest.mark.parametrize("entity", [False, True])
+def test_multi_key_null_part_is_one_row(spark, entity):
+    """Keys (a, b) with b NULL: every part family lands on ONE row per
+    (a, NULL, ds) — the families' join-back must match the NULL part."""
+    df = spark.createDataFrame(
+        [(1, None, BASE, 4.0, "x", "2024-01-01"), (1, None, BASE + 5, 7.0, "y", "2024-01-01"),
+         (2, 3, BASE + 9, 1.0, "x", "2024-01-01")],
+        "a int, b int, ts long, v double, cat string, ds string",
+    )
+    gb = GroupBy(
+        sources=[DataFrameSource(lambda s: df, entity=entity)], key_columns=["a", "b"],
+        aggregations=[
+            Aggregation("v", Operation.SUM, windows=[Window(7)]),
+            Aggregation("v", Operation.UNIQUE_COUNT, windows=[Window(7)]),
+            Aggregation("v", Operation.SUM, windows=[Window(7)], buckets=["cat"]),
+        ],
+        name="mk",
+    )
+    rows = [r.asDict() for r in compute_snapshot_groupby(spark, gb).collect()]
+    assert sorted(rows, key=lambda r: r["a"]) == [
+        {"a": 1, "b": None, "ds": "2024-01-01", "v_sum_7d": 11.0, "v_unique_count_7d": 2,
+         "v_sum_7d_by_cat": {"x": 4.0, "y": 7.0}},
+        {"a": 2, "b": 3, "ds": "2024-01-01", "v_sum_7d": 1.0, "v_unique_count_7d": 1,
+         "v_sum_7d_by_cat": {"x": 1.0}},
+    ]

@@ -6,8 +6,10 @@ go through `compute_snapshot_groupby` in sparse and dense mode, and every
 output cell is compared with a pure-Python evaluation of its definition:
 the window of N days ending at `ds` covers the events of days
 [ds - N + 1, ds]; a lifetime window covers every day up to `ds`. The key
-column and the value column have names that need quoting in SQL (a space,
-an embedded backtick).
+columns and the value column have names that need quoting in SQL (a space,
+an embedded backtick). Two-key configs have keys with one NULL part, which
+group as one key. Entity GroupBys also run as backfills of random step
+sizes, whose union must equal the full-range output.
 """
 
 import math
@@ -26,12 +28,15 @@ from chronon_spark.api import (
 )
 from chronon_spark.operators.groupby import compute_snapshot_groupby
 from chronon_spark.partitions import PartitionRange
+from chronon_spark.plans.backfill import groupby_backfill
+from chronon_spark.sources.catalog import ParquetWarehouse
 
 BASE = 1704067200000  # 2024-01-01 UTC
 DAY = 86_400_000
 EPOCH_DAY0 = 19723  # 2024-01-01 as days since 1970-01-01
 DAYS = 14
 KEY = "user id"
+KEY2 = "gr`p"
 VAL = "va`l"
 CATS = ["a", "b", "c", "d"]
 L = None  # lifetime window
@@ -52,11 +57,12 @@ EVENT_AGGS = [
 ]
 ENTITY_AGGS = [
     Aggregation(VAL, Operation.SUM, windows=[Window(3)]),
-    # an unwindowed part next to windowed ones: the day's snapshot only
+    # unwindowed parts next to windowed ones: the day's snapshot only
     Aggregation(VAL, Operation.COUNT, windows=[L]),
     Aggregation(VAL, Operation.MAX, windows=[Window(2)]),
-    Aggregation("cat", Operation.UNIQUE_COUNT, windows=[Window(3)]),
-    Aggregation("cat", Operation.HISTOGRAM, windows=[Window(2)]),
+    Aggregation("cat", Operation.UNIQUE_COUNT, windows=[Window(3), L]),
+    Aggregation("cat", Operation.HISTOGRAM, windows=[Window(2), L]),
+    Aggregation(VAL, Operation.SUM, windows=[Window(2), L], buckets=["cat"]),
 ]
 
 
@@ -65,7 +71,8 @@ def _ds(day: int) -> str:
 
 
 def _events(seed: int):
-    """(key, ts, value, cat, day) rows; every ts is distinct."""
+    """(key, ts, value, cat, day, key2) rows; every ts is distinct. key2 is
+    NULL for every third key, so a two-key row may have one NULL part."""
     rng = np.random.default_rng(seed)
     rows = []
     for k in range(12):
@@ -80,7 +87,7 @@ def _events(seed: int):
                 cat = None if rng.random() < 0.15 else str(rng.choice(CATS))
                 # row i owns the slot [i * 997, i * 997 + 997) ms of its day
                 ts = BASE + d * DAY + len(rows) * 997 + int(rng.integers(0, 997))
-                rows.append((key, ts, val, cat, EPOCH_DAY0 + d))
+                rows.append((key, ts, val, cat, EPOCH_DAY0 + d, None if k % 3 == 1 else k % 2))
     return rows
 
 
@@ -158,8 +165,18 @@ def _assert_equal(got, want, where):
         assert got == want, where
 
 
-def _check(out_rows, expected_rows, parts, rows_by_key, entity=False):
-    got = {(r[KEY], r["ds"]): r for r in out_rows}
+def _by_key(events, keys):
+    """Rows per key tuple; a key with every part NULL is dropped."""
+    by_key = defaultdict(list)
+    for r in events:
+        key = (r[0], r[5])[:len(keys)]
+        if any(k is not None for k in key):
+            by_key[key].append(r)
+    return by_key
+
+
+def _check(out_rows, expected_rows, parts, rows_by_key, keys, entity=False):
+    got = {(tuple(r[k] for k in keys), r["ds"]): r for r in out_rows}
     assert len(got) == len(out_rows), "duplicate (key, ds) rows"
     assert set(got) == expected_rows
     for (key, ds), r in got.items():
@@ -172,23 +189,20 @@ def _check(out_rows, expected_rows, parts, rows_by_key, entity=False):
 
 
 def _df(spark, events, entity=False):
-    rows = [(k, t, v, c, _ds(d)) for k, t, v, c, d in events]
+    rows = [(k, t, v, c, _ds(d), k2) for k, t, v, c, d, k2 in events]
     df = spark.createDataFrame(
-        rows, f"`{KEY}` int, ts long, `{VAL.replace('`', '``')}` double, cat string, ds string")
+        rows, f"`{KEY}` int, ts long, `{VAL.replace('`', '``')}` double, cat string, ds string,"
+              f" `{KEY2.replace('`', '``')}` int")
     return df.drop("ts") if entity else df
 
 
-@pytest.mark.parametrize("seed", [3, 11])
-def test_event_snapshot_matches_brute_force(spark, seed):
+def _event_case(spark, seed, keys):
     events = _events(seed)
     df = _df(spark, events)
-    gb = GroupBy(sources=[DataFrameSource(lambda s: df)], key_columns=[KEY],
+    gb = GroupBy(sources=[DataFrameSource(lambda s: df)], key_columns=keys,
                  aggregations=EVENT_AGGS, name="bf")
     parts = _parts(EVENT_AGGS)
-    by_key = defaultdict(list)
-    for r in events:
-        if r[0] is not None:
-            by_key[r[0]].append(r)
+    by_key = _by_key(events, keys)
     start, end = EPOCH_DAY0 + 8, EPOCH_DAY0 + 11
     rng = PartitionRange(_ds(start), _ds(end))
     event_days = {(k, _ds(r[4])) for k, rows in by_key.items() for r in rows}
@@ -196,26 +210,61 @@ def test_event_snapshot_matches_brute_force(spark, seed):
     # sparse, bounded range: (key, ds) pairs with an event inside the range
     sparse = compute_snapshot_groupby(spark, gb, rng).collect()
     want = {(k, ds) for k, ds in event_days if _ds(start) <= ds <= _ds(end)}
-    _check(sparse, want, parts, by_key)
+    _check(sparse, want, parts, by_key, keys)
 
     # dense: every day of the range for every key with an event up to its end
     dense = compute_snapshot_groupby(spark, gb, rng, dense=True).collect()
-    keys = {k for k, rows in by_key.items() if any(r[4] <= end for r in rows)}
-    _check(dense, {(k, _ds(d)) for k in keys for d in range(start, end + 1)}, parts, by_key)
+    active = {k for k, rows in by_key.items() if any(r[4] <= end for r in rows)}
+    _check(dense, {(k, _ds(d)) for k in active for d in range(start, end + 1)}, parts, by_key,
+           keys)
 
     # unbounded: every event day
-    _check(compute_snapshot_groupby(spark, gb).collect(), event_days, parts, by_key)
+    _check(compute_snapshot_groupby(spark, gb).collect(), event_days, parts, by_key, keys)
 
 
-def test_entity_windowed_snapshot_matches_brute_force(spark):
-    events = _events(29)
+@pytest.mark.parametrize("seed", [3, 11])
+def test_event_snapshot_matches_brute_force(spark, seed):
+    _event_case(spark, seed, [KEY])
+
+
+def test_event_snapshot_two_keys_matches_brute_force(spark):
+    _event_case(spark, 5, [KEY, KEY2])
+
+
+def _entity_case(spark, tmp_path, seed, keys):
+    events = _events(seed)
     df = _df(spark, events, entity=True)
-    gb = GroupBy(sources=[DataFrameSource(lambda s: df, entity=True)], key_columns=[KEY],
+    gb = GroupBy(sources=[DataFrameSource(lambda s: df, entity=True)], key_columns=keys,
                  aggregations=ENTITY_AGGS, name="bfe")
-    by_key = defaultdict(list)
-    for r in events:
-        if r[0] is not None:
-            by_key[r[0]].append(r)
+    parts = _parts(ENTITY_AGGS)
+    by_key = _by_key(events, keys)
     want = {(k, _ds(r[4])) for k, rows in by_key.items() for r in rows}
     out = compute_snapshot_groupby(spark, gb).collect()
-    _check(out, want, _parts(ENTITY_AGGS), by_key, entity=True)
+    _check(out, want, parts, by_key, keys, entity=True)
+
+    # a bounded range reads the snapshots its windows reach back to
+    start, end = EPOCH_DAY0 + 6, EPOCH_DAY0 + 11
+    in_range = {(k, ds) for k, ds in want if _ds(start) <= ds <= _ds(end)}
+    full = compute_snapshot_groupby(spark, gb, PartitionRange(_ds(start), _ds(end))).collect()
+    _check(full, in_range, parts, by_key, keys, entity=True)
+
+    # a backfill's answer does not depend on its step size: the union of
+    # the steps' outputs is the full-range output
+    by_row = {(tuple(r[k] for k in keys), r["ds"]): r for r in full}
+    for step_days in [1, int(np.random.default_rng(seed).integers(2, 5))]:
+        wh = ParquetWarehouse(spark, str(tmp_path / f"wh{step_days}"))
+        groupby_backfill(spark, wh, gb, "out", step_days=step_days).run(_ds(start), _ds(end))
+        steps = wh.read("out").collect()
+        _check(steps, in_range, parts, by_key, keys, entity=True)
+        for r in steps:
+            want_row = by_row[(tuple(r[k] for k in keys), r["ds"])]
+            for name, _, _ in parts:
+                _assert_equal(r[name], want_row[name], (step_days, name))
+
+
+def test_entity_windowed_snapshot_matches_brute_force(spark, tmp_path):
+    _entity_case(spark, tmp_path, 29, [KEY])
+
+
+def test_entity_two_keys_matches_brute_force(spark, tmp_path):
+    _entity_case(spark, tmp_path, 31, [KEY, KEY2])

@@ -4,7 +4,8 @@ Built from chained DataFrame calls, a step of the `groupby_backfill`
 benchmark shape made ~1,400 py4j round trips before Spark ran a task
 (each `F.*` / `Column` call pays ~13 of them). These tests pin the
 round-trip budget of the build, the Exchange count of the plan it
-builds, and that the build leaves no temp view behind.
+builds, and that the build leaves no temp view behind. Entity GroupBys
+take the same statement; their Exchange counts are pinned per part mix.
 """
 
 import re
@@ -12,7 +13,15 @@ import re
 import numpy as np
 import pytest
 
-from chronon_spark.api import Aggregation, EventSource, GroupBy, Operation, Query, Window
+from chronon_spark.api import (
+    Aggregation,
+    DataFrameSource,
+    EventSource,
+    GroupBy,
+    Operation,
+    Query,
+    Window,
+)
 from chronon_spark.operators.groupby import compute_snapshot_groupby
 from chronon_spark.partitions import PartitionRange
 
@@ -79,3 +88,29 @@ def test_step_plan_exchanges_and_no_leftover_views(spark, group_by):
     exchanges = re.findall(r"\bExchange\b", plan)
     assert 0 < len(exchanges) <= MAX_EXCHANGES, plan
     assert df.count() > 0  # the view the statement read is gone, the plan is not
+
+
+# entity part mixes -> the Exchanges of their plan, which must not grow
+ENTITY_EXCHANGES = {
+    "sum_count_max_unwindowed": (
+        [Aggregation("v", op) for op in (Operation.SUM, Operation.COUNT, Operation.MAX)], 1),
+    "sum_lifetime_and_3d": ([Aggregation("v", Operation.SUM, windows=[None, Window(3)])], 2),
+    "sum_3d_unique_count_3d": ([Aggregation("v", Operation.SUM, windows=[Window(3)]),
+                                Aggregation("cat", Operation.UNIQUE_COUNT, windows=[Window(3)])],
+                               8),
+    "unique_count_histogram_unwindowed": ([Aggregation("cat", Operation.UNIQUE_COUNT),
+                                           Aggregation("cat", Operation.HISTOGRAM)], 2),
+}
+
+
+@pytest.mark.parametrize("mix", sorted(ENTITY_EXCHANGES))
+def test_entity_plan_exchanges(spark, mix):
+    aggs, budget = ENTITY_EXCHANGES[mix]
+    rows = [(i % 7, f"2024-01-{1 + i % 9:02d}", float(i), "abc"[i % 3]) for i in range(100)]
+    snap = spark.createDataFrame(rows, "k int, ds string, v double, cat string")
+    gb = GroupBy(sources=[DataFrameSource(lambda s: snap, entity=True)], key_columns=["k"],
+                 aggregations=aggs, name="e")
+    df = compute_snapshot_groupby(spark, gb, PartitionRange("2024-01-03", "2024-01-08"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert 0 < len(re.findall(r"\bExchange\b", plan)) <= budget, plan
+    assert df.count() > 0

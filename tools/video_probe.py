@@ -9,10 +9,11 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from chronon_spark.fixtures import FIXTURE_DIR  # noqa: E402
 
 ap = argparse.ArgumentParser()
 ap.add_argument("--cpus", type=int, required=True)
-ap.add_argument("--input", default="/root/repo/.fixtures/videos_n240000_s7.parquet")
+ap.add_argument("--input", default=os.path.join(FIXTURE_DIR, "videos_n240000_s7.parquet"))
 ap.add_argument("--passes", type=int, default=3)
 args = ap.parse_args()
 

@@ -117,10 +117,12 @@ def run_real_decode(spark):
     ~40% of webp rows REAL LOSSY VP8 from the system encoder — r5. The
     v6 wall is ~2x the v5 wall ENTIRELY from those ~1.6k lossy rows:
     the from-scratch RFC 6386 decode (bool decoder + per-MB intra loop)
-    costs ~30ms/image in pure Python vs ~1ms for VP8L — the price of
-    proving the capability inside the timed path; embarrassingly
-    parallel, so it scales, and a native codec swap removes it in a
-    real deployment. Not comparable across fixture versions.)"""
+    costs ~28-38ms/image in pure Python, and VP8L ~36-40ms (its per-pixel
+    inverse predictor), measured on one core against ~2ms for JPEG and
+    under 1ms for PNG — the price of proving the capability inside the
+    timed path; embarrassingly parallel, so it scales, and a native codec
+    swap removes it in a real deployment. Not comparable across fixture
+    versions.)"""
     from chronon_spark.fixtures import ensure_real_image_fixture
     from chronon_spark.operators.multimodal import extract_pixel_features
 

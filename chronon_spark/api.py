@@ -281,9 +281,6 @@ class GroupBy:
             return []
         return [p for a in self.aggregations for p in a.unpack()]
 
-    def output_columns(self) -> list[str]:
-        return [p.output_name for p in self.aggregation_parts()]
-
 
 @dataclass
 class JoinPart:

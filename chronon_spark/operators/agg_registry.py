@@ -406,7 +406,7 @@ class HistogramSpec(OpSpec):
     def direct(self) -> str:
         vals = f"array_sort(collect_list(CAST({self.col} AS STRING)))"
         entries = (f"transform(array_distinct({vals}), __x -> named_struct('key', __x, 'value',"
-                   f" CAST(size(filter({vals}, __y -> __y = __x)) AS INT)))")
+                   f" CAST(size(filter({vals}, __y -> __y = __x)) AS BIGINT)))")
         k = self.args.get("k")
         if k:
             entries = f"slice(array_sort({entries}, {CMP_COUNT_DESC}), 1, {int(k)})"

@@ -13,7 +13,7 @@ Flow:
      combos).
   2. Per join part, a matched-hash combo is COVERING iff the union of its
      sources' columns ⊇ the part's output columns.
-  3. `bootstrapped_join_part`: rows in a covering combo keep their
+  3. `snapshot_join.compute_join`: rows in a covering combo keep their
      bootstrapped values untouched; only the uncovered remainder runs the
      real join-part computation, and computed values coalesce UNDER the
      bootstrap (bootstrap wins where non-null — reference coalescedJoin

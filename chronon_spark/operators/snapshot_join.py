@@ -1,12 +1,19 @@
-"""Snapshot-accuracy join parts: left rows enriched with features "as of
-end of yesterday" — the (EVENTS, EVENTS, SNAPSHOT) and (*, ENTITIES)
-topologies of the reference's dispatch (JoinPartJob.scala:216-246).
+"""The Join orchestrator and its snapshot-accuracy parts.
 
-Semantics (reference: JoinBase.joinWithLeft:99-111, JoinUtils.shiftDays):
-a left row at time ts joins the snapshot feature row of partition
-ds = date(ts) - 1 day: "features as of the end of yesterday". Implemented
-as a plain equi-join on (keys, date) against the DENSE daily snapshot
-table — Catalyst picks broadcast/SMJ, AQE handles skew; no custom kernel.
+`compute_join` is the one code that runs a Join: it scans the left, drops
+the skew keys, applies bootstrap parts, computes each part by its
+accuracy (`_join_part`, the reference's dispatch table,
+JoinPartJob.scala:216-246), merges multi-part features back by row id
+and derives. `compute_temporal_join`, `join_backfill` and the modular
+join (`plans.backfill.run_modular_join`) all go through it or through
+`_join_part`.
+
+Snapshot semantics (reference: JoinBase.joinWithLeft:99-111,
+JoinUtils.shiftDays): a left row at time ts joins the snapshot feature row
+of partition ds = date(ts) - 1 day: "features as of the end of yesterday".
+Implemented as a plain equi-join on (keys, date) against the DENSE daily
+snapshot table — Catalyst picks broadcast/SMJ, AQE handles skew; no custom
+kernel.
 
 At scale: the snapshot side is |keys| x |days| (already aggregated), so
 this join is usually broadcastable per-day or a cheap shuffled hash join;
@@ -24,15 +31,28 @@ from pyspark.sql import functions as F
 from chronon_spark.api import (
     PARTITION_COLUMN,
     TIME_COLUMN,
+    Accuracy,
     EntitySource,
     GroupBy,
     Join,
     JoinPart,
+    apply_derivations,
 )
-from chronon_spark.operators.groupby import compute_snapshot_groupby
+from chronon_spark.operators.bootstrap import (
+    MATCHED_HASHES,
+    collect_combos,
+    compute_bootstrap_table,
+    covering_combos,
+    covering_filter,
+)
+from chronon_spark.operators.groupby import _union_sources, compute_snapshot_groupby
+from chronon_spark.operators.mutations import compute_temporal_entity_join_part
+from chronon_spark.operators.temporal_join import compute_temporal_join_part
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
+from chronon_spark.sources.scan import scan_source
 
 TS_DS = "ts_ds"  # date-of-ts helper (reference: Constants.TimePartitionColumn)
+ROW_ID = "__row_id"
 
 
 def _left_date_range(left_df: DataFrame, spec: PartitionSpec) -> PartitionRange:
@@ -87,117 +107,136 @@ def compute_join(
     rng: Optional[PartitionRange] = None,
     spec: PartitionSpec = DEFAULT_SPEC,
 ) -> DataFrame:
-    """Full join with per-part accuracy dispatch (the reference's
-    JoinPartJob algorithm table): TEMPORAL parts -> sawtooth cogroup;
-    SNAPSHOT parts -> end-of-yesterday snapshot equi-join; no-agg parts ->
-    plain left join on keys (+ derivations at the end)."""
-    from chronon_spark.api import Accuracy
-    from chronon_spark.operators.temporal_join import (
-        _apply_skew_filter,
-        compute_temporal_join_part,
-    )
-    from chronon_spark.sources.scan import scan_source
+    """The one code that runs a Join; `compute_temporal_join`, `join_backfill`
+    and the modular join all come here or to `_join_part`.
 
-    left_df = scan_source(spark, join.left, rng, spec)
-    left_df = _apply_skew_filter(left_df, join)
-    # resolve the date range ONCE against the raw left scan: per-part range
-    # probes (and the mid-size semi filter's probe.count) must never execute
-    # the accumulated chained plan with earlier parts' Arrow kernels in it
-    if rng is None or not rng.start:
-        if PARTITION_COLUMN in left_df.columns:
-            rng = _left_date_range(left_df, spec)
-    hash_fields: dict = {}
-    combos: list = []
+    The left is scanned once and the skew keys are filtered out of it. Each
+    part is then computed by its GroupBy's accuracy (`_join_part`). A single
+    part cogroups the left itself. Several parts, or bootstrap parts, each
+    compute over a SLIM probe — (row id, ts, ds, the union of join keys) —
+    and their features merge back onto the left by row id (the monolith
+    analog of the modular MergeJob, reference MergeJob.scala:81-140), so no
+    part's Arrow kernel carries earlier parts' features or the left's
+    payload. Row ids come from monotonically_increasing_id over the scanned
+    left: deterministic, because the plan below them is a scan plus narrow
+    ops. A row a bootstrap combo covers (reference Join.computeRange
+    :264-285) is kept out of the part's probe and keeps its bootstrap
+    values; elsewhere a bootstrap value wins over the computed one where it
+    is not NULL. Derivations run last. The output is the left columns, then
+    each part's features in declared order."""
+    left_df = _apply_skew_filter(scan_source(spark, join.left, rng, spec), join)
+    # resolve the date range ONCE against the raw left scan, and only where
+    # a snapshot, no-agg or mutation part or a bootstrap table scans by it:
+    # a per-part probe would re-execute the chained plan with earlier
+    # parts' Arrow kernels in it
+    if ((rng is None or not rng.start) and PARTITION_COLUMN in left_df.columns
+            and (join.bootstrap_parts or any(
+                _kind(jp.group_by) != "temporal" for jp in join.join_parts))):
+        rng = _left_date_range(left_df, spec)
+
+    def part(df: DataFrame, jp: JoinPart) -> DataFrame:
+        return _join_part(spark, df, jp, rng, spec, join.skew_keys, probe_df=left_df)
+
+    if len(join.join_parts) <= 1 and not join.bootstrap_parts:
+        out = left_df
+        for jp in join.join_parts:
+            out = part(out, jp)
+        return _derive(join, out, left_df.columns)
+
+    out = left_df.withColumn(ROW_ID, F.monotonically_increasing_id())
+    hash_fields, combos = {}, []
     if join.bootstrap_parts:
-        from chronon_spark.operators.bootstrap import (
-            collect_combos,
-            compute_bootstrap_table,
-        )
-
-        out, hash_fields = compute_bootstrap_table(spark, left_df, join, rng, spec)
+        out, hash_fields = compute_bootstrap_table(spark, out, join, rng, spec)
         # one collect on the un-chained bootstrap table; per-part covering
         # sets are then pure-Python filters over these combos
         if hash_fields:
             combos = collect_combos(out)
-    else:
-        out = left_df
-
+    need = {ROW_ID, MATCHED_HASHES, TIME_COLUMN, PARTITION_COLUMN}.union(
+        *(jp.right_to_left_keys().values() for jp in join.join_parts))
+    slim = out.select(*[c for c in out.columns if c in need])
+    frames = []
     for jp in join.join_parts:
-        gb = jp.group_by
-        is_mutation_part = gb.inferred_accuracy() == Accuracy.TEMPORAL and any(
-            isinstance(s, EntitySource) and s.mutation_table for s in gb.sources
-        )
-        if not gb.aggregations:
-            compute_fn = lambda df, jp=jp: _no_agg_join_part(spark, df, jp, rng, spec)
-        elif is_mutation_part:
-            from chronon_spark.operators.mutations import (
-                compute_temporal_entity_join_part,
-            )
-
-            compute_fn = lambda df, jp=jp: compute_temporal_entity_join_part(
-                spark, df, jp, rng, spec
-            )
-        elif gb.inferred_accuracy() == Accuracy.TEMPORAL:
-            compute_fn = lambda df, jp=jp: compute_temporal_join_part(
-                spark, df, jp, rng, spec, skew_keys=join.skew_keys,
-                probe_df=left_df,
-            )
-        else:
-            compute_fn = lambda df, jp=jp: compute_snapshot_join_part(
-                spark, df, jp, rng, spec
-            )
-        if hash_fields and gb.aggregations:
-            out = _bootstrapped_part(out, jp, hash_fields, combos, compute_fn)
-        else:
-            out = compute_fn(out)
-    if join.bootstrap_parts:
-        from chronon_spark.operators.bootstrap import MATCHED_HASHES
-
-        out = out.drop(MATCHED_HASHES)
-    if join.derivations:
-        from chronon_spark.api import apply_derivations
-        from chronon_spark.operators.temporal_join import _join_ensure_keys
-
-        ensure = list(join.row_ids or []) or _join_ensure_keys(join, left_df)
-        out = apply_derivations(out, join.derivations, ensure)
-    return out
+        prefix = jp.full_prefix() + "_"
+        part_cols = [prefix + p.output_name for p in jp.group_by.aggregation_parts()]
+        covering = covering_combos(combos, hash_fields, part_cols) if part_cols else []
+        probe = slim.where(~covering_filter(covering)) if covering else slim
+        pf = part(probe, jp)
+        frames.append((pf, [c for c in pf.columns if c not in slim.columns]))
+    return _derive(join, _merge_parts(out, frames, [ROW_ID], left_df.columns),
+                   left_df.columns)
 
 
-def _bootstrapped_part(
-    out: DataFrame, join_part: JoinPart, hash_fields: dict,
-    all_combos: list, compute_fn
+def _kind(gb: GroupBy) -> str:
+    """The part's algorithm in the reference's table (JoinPartJob.scala
+    :216-246): "no_agg", "mutations" for a TEMPORAL part over an entity
+    mutation log, else "temporal" or "snapshot" by accuracy."""
+    if not gb.aggregations:
+        return "no_agg"
+    if gb.inferred_accuracy() != Accuracy.TEMPORAL:
+        return "snapshot"
+    if any(isinstance(s, EntitySource) and s.mutation_table for s in gb.sources):
+        return "mutations"
+    return "temporal"
+
+
+def _join_part(
+    spark: SparkSession,
+    left_df: DataFrame,
+    join_part: JoinPart,
+    rng: Optional[PartitionRange],
+    spec: PartitionSpec,
+    skew_keys: Optional[dict] = None,
+    probe_df: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """Covering-set split for one join part (reference: Join.computeRange
-    :264-285): rows whose matched bootstrap combo fully covers the part's
-    output keep their values; only the uncovered remainder is computed,
-    with bootstrap values coalescing OVER computed ones. `all_combos` was
-    collected once from the bootstrap table before any part was chained."""
-    from chronon_spark.operators.bootstrap import (
-        covering_combos,
-        covering_filter,
-    )
+    """One join part by its `_kind`: temporal -> sawtooth cogroup;
+    mutations -> mutation replay; snapshot -> end-of-yesterday snapshot
+    equi-join; no_agg -> latest snapshot row by key. `probe_df` (default
+    `left_df`) supplies the left keys of the temporal right-scan filters."""
+    kind = _kind(join_part.group_by)
+    if kind == "temporal":
+        return compute_temporal_join_part(
+            spark, left_df, join_part, rng, spec, skew_keys=skew_keys, probe_df=probe_df)
+    if kind == "mutations":
+        return compute_temporal_entity_join_part(spark, left_df, join_part, rng, spec)
+    if kind == "snapshot":
+        return compute_snapshot_join_part(spark, left_df, join_part, rng, spec)
+    return _no_agg_join_part(spark, left_df, join_part, rng, spec)
 
-    prefix = join_part.full_prefix() + "_"
-    part_cols = [prefix + p.output_name
-                 for p in join_part.group_by.aggregation_parts()]
-    present = [c for c in part_cols if c in out.columns]
-    if not present:
-        return compute_fn(out)
-    combos = covering_combos(all_combos, hash_fields, part_cols)
-    cov = covering_filter(combos)
-    uncovered = out.where(~cov)
-    unc = uncovered
-    for c in present:
-        unc = unc.withColumnRenamed(c, f"__bs_{c}")
-    computed = compute_fn(unc)
-    for c in present:
-        computed = computed.withColumn(
-            c, F.coalesce(F.col(f"__bs_{c}"), F.col(c))
-        ).drop(f"__bs_{c}")
-    if not combos:
-        return computed
-    covered = out.where(cov)
-    return computed.unionByName(covered)
+
+def _apply_skew_filter(left_df: DataFrame, join: Join) -> DataFrame:
+    """skewKeys config -> NOT IN filters (reference: JoinUtils.skewFilter:330-382)."""
+    for col, values in (join.skew_keys or {}).items():
+        if col in left_df.columns:
+            left_df = left_df.where(~F.col(col).isin(values) | F.col(col).isNull())
+    return left_df
+
+
+def _merge_parts(
+    out: DataFrame, frames: list, on: list[str], keep: list[str]
+) -> DataFrame:
+    """Left-join each (part frame, its feature columns) back onto `out` on
+    `on`, the row id; return `keep` and then the features. A feature column
+    `out` already holds is a bootstrap value and wins where not NULL."""
+    features = {}
+    for i, (pf, fcols) in enumerate(frames):
+        out = out.join(
+            pf.select(*on, *[F.col(c).alias(f"__p{i}_{c}") for c in fcols]), on, "left")
+        for c in fcols:
+            v = F.col(f"__p{i}_{c}")
+            features[c] = F.coalesce(F.col(c), v) if c in out.columns else v
+    return out.select(*keep, *[v.alias(c) for c, v in features.items()])
+
+
+def _derive(join: Join, out: DataFrame, left_columns: list[str]) -> DataFrame:
+    """Join derivations. Without a "*" entry only the row ids — by default
+    the join keys, ts and ds — and the derived columns survive."""
+    if not join.derivations:
+        return out
+    keys = [k for jp in join.join_parts for k in jp.right_to_left_keys().values()]
+    ensure = list(join.row_ids or []) or [
+        k for k in dict.fromkeys(keys + [TIME_COLUMN, PARTITION_COLUMN])
+        if k in left_columns]
+    return apply_derivations(out, join.derivations, ensure)
 
 
 def _no_agg_join_part(
@@ -219,8 +258,6 @@ def _no_agg_join_part(
     left on (keys, date(ts)-1). Snapshot side is |keys| x |days| so the
     final join is broadcast/cheap."""
     from pyspark.sql import Window as W
-
-    from chronon_spark.operators.groupby import _union_sources
 
     gb = join_part.group_by
     key_map = join_part.right_to_left_keys()

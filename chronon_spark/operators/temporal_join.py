@@ -28,6 +28,7 @@ gate query and test_composite_skew).
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Optional
 
 import numpy as np
@@ -40,6 +41,7 @@ from pyspark.sql.types import DataType, StructType
 from chronon_spark.api import (
     PARTITION_COLUMN,
     TIME_COLUMN,
+    Accuracy,
     AggregationPart,
     GroupBy,
     Join,
@@ -633,73 +635,18 @@ def compute_temporal_join(
     rng: Optional[PartitionRange] = None,
     spec: PartitionSpec = DEFAULT_SPEC,
 ) -> DataFrame:
-    """Full join: left source scanned once, then enriched per part.
+    """`compute_join` with every aggregating part forced to TEMPORAL
+    accuracy, whatever its GroupBy declares or infers: features as of each
+    left row's own timestamp. A part over an entity mutation log therefore
+    runs the mutation replay; no-agg parts are unchanged."""
+    from chronon_spark.operators.snapshot_join import compute_join
 
-    Single part: one co-partitioned cogroup over the left (no extra join).
-    Multiple parts: each part cogroups a SLIM probe — (row_id, ts, the
-    union of join-key columns) — and the feature columns merge back onto
-    the left by row id at the end (the monolith analog of the modular
-    MergeJob, reference MergeJob.scala:81-140). Chaining parts directly
-    would push part 1..N-1's feature columns through part N's Arrow
-    kernel serde: payload grows linearly with part count for nothing.
-    Row ids are minted with monotonically_increasing_id over the scanned
-    left — deterministic because the left plan below it is a parquet scan
-    plus narrow ops (no round-robin repartition); the modular path
-    materializes ids to disk for full re-execution safety."""
-    from chronon_spark.sources.scan import scan_source
-
-    left_df = scan_source(spark, join.left, rng, spec)
-    left_df = _apply_skew_filter(left_df, join)
-    if len(join.join_parts) <= 1:
-        out = left_df
-        for jp in join.join_parts:
-            out = compute_temporal_join_part(
-                spark, out, jp, rng, spec, skew_keys=join.skew_keys,
-                probe_df=left_df,
-            )
-    else:
-        row_id = "__row_id"
-        base = left_df.withColumn(row_id, F.monotonically_increasing_id())
-        need = {TIME_COLUMN}
-        for jp in join.join_parts:
-            need.update(jp.right_to_left_keys().values())
-        slim = base.select(
-            *[c for c in base.columns if c in need], row_id
-        )
-        out = base
-        for jp in join.join_parts:
-            pf = compute_temporal_join_part(
-                spark, slim, jp, rng, spec, skew_keys=join.skew_keys,
-                probe_df=left_df,
-            )
-            fcols = [c for c in pf.columns if c not in slim.columns]
-            out = out.join(pf.select(row_id, *fcols), row_id, "left")
-        out = out.drop(row_id)
-    if join.derivations:
-        from chronon_spark.api import apply_derivations
-
-        ensure = list(join.row_ids or []) or _join_ensure_keys(join, left_df)
-        out = apply_derivations(out, join.derivations, ensure)
-    return out
-
-
-def _join_ensure_keys(join: Join, left_df: DataFrame) -> list[str]:
-    keys = []
-    for jp in join.join_parts:
-        km = jp.right_to_left_keys()
-        keys.extend(km.values())
-    keys.extend([TIME_COLUMN, PARTITION_COLUMN])
-    return [k for k in dict.fromkeys(keys) if k in left_df.columns]
-
-
-def _apply_skew_filter(left_df: DataFrame, join: Join) -> DataFrame:
-    """skewKeys config -> NOT IN filters (reference: JoinUtils.skewFilter:330-382)."""
-    if not join.skew_keys:
-        return left_df
-    for col, values in join.skew_keys.items():
-        if col in left_df.columns:
-            left_df = left_df.where(~F.col(col).isin(values) | F.col(col).isNull())
-    return left_df
+    parts = [
+        replace(jp, group_by=replace(jp.group_by, accuracy=Accuracy.TEMPORAL))
+        if jp.group_by.aggregations else jp
+        for jp in join.join_parts
+    ]
+    return compute_join(spark, replace(join, join_parts=parts), rng, spec)
 
 
 def compute_temporal_groupby(

@@ -62,9 +62,6 @@ class PartitionRange:
     end: Optional[str]
     spec: PartitionSpec = field(default=DEFAULT_SPEC)
 
-    def is_valid(self) -> bool:
-        return self.start is None or self.end is None or self.start <= self.end
-
     def intersect(self, other: "PartitionRange") -> "PartitionRange":
         def _max(a, b):
             if a is None:

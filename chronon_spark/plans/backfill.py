@@ -348,12 +348,14 @@ def join_backfill(
     spec: PartitionSpec = DEFAULT_SPEC,
     cluster_by: Optional[Sequence[str]] = None,
 ) -> BackfillJob:
-    """Temporal-join backfill job (reference EP-2, JoinBase.computeJoin)."""
-    from chronon_spark.operators.temporal_join import compute_temporal_join
+    """Join backfill job (reference EP-2, JoinBase.computeJoin): each step is
+    `compute_join` over the step's range, so every part keeps its declared
+    accuracy, no-agg and bootstrap parts included."""
+    from chronon_spark.operators.snapshot_join import compute_join
 
     return BackfillJob(
         spark, warehouse, output_table,
-        compute=lambda rng: compute_temporal_join(spark, join, rng, spec),
+        compute=lambda rng: compute_join(spark, join, rng, spec),
         config=join, job_name=f"join/{join.name}",
         step_days=step_days, spec=spec, cluster_by=cluster_by,
     )
@@ -520,64 +522,64 @@ def run_modular_join(
     spec: PartitionSpec = DEFAULT_SPEC,
 ) -> DataFrame:
     """Join executed as a DAG of independently-resumable, table-materialized
-    nodes: SourceJob (left) -> per-part JoinPartJob -> MergeJob -> result.
-
-    Each node is a BackfillJob: re-running after a failure (or with new
-    partitions) computes only unfilled ranges. Equivalent to the monolith
-    `compute_temporal_join` (asserted in tests, the analog of the
-    reference's ModularJoinTest).
-    """
-    from chronon_spark.operators.temporal_join import compute_temporal_join_part
+    nodes: SourceJob (left, skew keys filtered out) -> per-part JoinPartJob
+    (`_join_part`, the monolith's per-accuracy dispatch) -> MergeJob ->
+    derivations. Each node is a BackfillJob: re-running after a failure (or
+    with new partitions) computes only unfilled ranges. Equals the monolith
+    `compute_join` (asserted in tests, the analog of the reference's
+    ModularJoinTest). Bootstrap parts are not supported and raise."""
+    from chronon_spark.operators.snapshot_join import (
+        ROW_ID,
+        _apply_skew_filter,
+        _derive,
+        _join_part,
+        _merge_parts,
+    )
     from chronon_spark.sources.scan import scan_source
 
+    if join.bootstrap_parts:
+        raise ValueError(
+            f"join {join.name}: the modular join does not support bootstrap_parts; "
+            "run it with compute_join or join_backfill")
     left_table = f"{namespace}_{join.name}_left"
     # row id (reference: Join.rowIds / JoinPartJob row-id carry): minted
     # ONCE when the left table materializes, then stable on disk — part
     # outputs carry it through, and MergeJob joins on it instead of on
     # every left column (null-valued or duplicated left columns would make
     # an all-columns equi-join drop or multiply feature rows).
-    ROW_ID = "__row_id"
     src_job = BackfillJob(
         spark, warehouse, left_table,
-        compute=lambda r: scan_source(spark, join.left, r, spec).withColumn(
-            ROW_ID, F.monotonically_increasing_id()
-        ),
-        config=join.left, job_name=f"source/{join.name}",
-        step_days=step_days, spec=spec,
+        compute=lambda r: _apply_skew_filter(
+            scan_source(spark, join.left, r, spec), join
+        ).withColumn(ROW_ID, F.monotonically_increasing_id()),
+        # the skew keys shape the table; a join without them keeps its hash
+        config=(join.left, join.skew_keys) if join.skew_keys else join.left,
+        job_name=f"source/{join.name}", step_days=step_days, spec=spec,
     )
     src_job.run(rng.start, rng.end)
 
     part_tables = []
     for jp in join.join_parts:
         pt = f"{namespace}_{join.name}_part_{jp.full_prefix()}"
-        part_tables.append((jp, pt))
+        part_tables.append(pt)
         pj = BackfillJob(
             spark, warehouse, pt,
-            compute=lambda r, jp=jp: compute_temporal_join_part(
-                spark, warehouse.read(left_table, r), jp, r, spec
+            compute=lambda r, jp=jp: _join_part(
+                spark, warehouse.read(left_table, r), jp, r, spec, join.skew_keys
             ),
             config=jp, job_name=f"part/{join.name}/{jp.full_prefix()}",
             step_days=step_days, spec=spec,
         )
         pj.run(rng.start, rng.end)
 
-    # MergeJob: coalesced left-joins of part tables back onto the left
-    # (reference: JoinBase.joinWithLeft / MergeJob.scala:81-140), keyed on
-    # (__row_id, ds) — unique because ids are unique within one chunk's
-    # compute and chunks cover disjoint ds ranges.
+    # MergeJob (reference: JoinBase.joinWithLeft / MergeJob.scala:81-140),
+    # keyed on (__row_id, ds) — unique because ids are unique within one
+    # chunk's compute and chunks cover disjoint ds ranges.
     left_df = warehouse.read(left_table, rng)
-    out = left_df
-    left_cols = left_df.columns
-    merge_keys = [ROW_ID, PARTITION_COLUMN]
-    for jp, pt in part_tables:
+    frames = []
+    for pt in part_tables:
         part_df = warehouse.read(pt, rng)
-        feature_cols = [c for c in part_df.columns if c not in left_cols]
-        out = out.join(part_df.select(*merge_keys, *feature_cols), merge_keys, "left")
-    out = out.drop(ROW_ID)
-    if join.derivations:
-        from chronon_spark.api import apply_derivations
-        from chronon_spark.operators.temporal_join import _join_ensure_keys
-
-        ensure = list(join.row_ids or []) or _join_ensure_keys(join, left_df)
-        out = apply_derivations(out, join.derivations, ensure)
-    return out
+        frames.append((part_df, [c for c in part_df.columns if c not in left_df.columns]))
+    keep = [c for c in left_df.columns if c != ROW_ID]
+    out = _merge_parts(left_df, frames, [ROW_ID, PARTITION_COLUMN], keep)
+    return _derive(join, out, keep)

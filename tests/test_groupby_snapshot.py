@@ -317,6 +317,25 @@ def test_entity_windowed_histogram_and_unique(spark):
     assert rows["2024-01-03"]["tag_count_2d"] == 2
 
 
+@pytest.mark.parametrize("windowed_neighbour", [False, True])
+def test_unwindowed_histogram_counts_are_bigint(spark, windowed_neighbour):
+    """An unwindowed HISTOGRAM counts BIGINT whether it is the only part
+    (the one-aggregate plan) or sits next to a windowed part (the
+    exploded plan): its type never depends on the other parts."""
+    snap = spark.createDataFrame(
+        [(1, "2024-01-01", "x"), (1, "2024-01-01", "x")],
+        "acct int, ds string, tag string",
+    )
+    aggs = [Aggregation("tag", Operation.HISTOGRAM)]
+    if windowed_neighbour:
+        aggs.append(Aggregation("tag", Operation.COUNT, windows=[Window(2)]))
+    gb = GroupBy(sources=[DataFrameSource(lambda s: snap, entity=True)],
+                 key_columns=["acct"], aggregations=aggs, name="h")
+    out = compute_snapshot_groupby(spark, gb)
+    assert out.schema["tag_histogram"].dataType.simpleString() == "map<string,bigint>"
+    assert out.collect()[0]["tag_histogram"] == {"x": 2}
+
+
 def _entity_gb(df, aggs, keys=("acct",)):
     return GroupBy(sources=[DataFrameSource(lambda s: df, entity=True)],
                    key_columns=list(keys), aggregations=aggs, name="e")

@@ -32,7 +32,9 @@ from chronon_spark.api import (
     PARTITION_COLUMN,
     TIME_COLUMN,
     Accuracy,
+    DataFrameSource,
     EntitySource,
+    EventSource,
     GroupBy,
     Join,
     JoinPart,
@@ -49,7 +51,7 @@ from chronon_spark.operators.groupby import _union_sources, compute_snapshot_gro
 from chronon_spark.operators.mutations import compute_temporal_entity_join_part
 from chronon_spark.operators.temporal_join import compute_temporal_join_part
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
-from chronon_spark.sources.scan import scan_source
+from chronon_spark.sources.scan import _load_table, scan_source
 
 TS_DS = "ts_ds"  # date-of-ts helper (reference: Constants.TimePartitionColumn)
 ROW_ID = "__row_id"
@@ -110,34 +112,29 @@ def compute_join(
     """The one code that runs a Join; `compute_temporal_join`, `join_backfill`
     and the modular join all come here or to `_join_part`.
 
-    The left is scanned once and the skew keys are filtered out of it. Each
-    part is then computed by its GroupBy's accuracy (`_join_part`). A single
-    part cogroups the left itself. Several parts, or bootstrap parts, each
-    compute over a SLIM probe — (row id, ts, ds, the union of join keys) —
-    and their features merge back onto the left by row id (the monolith
-    analog of the modular MergeJob, reference MergeJob.scala:81-140), so no
-    part's Arrow kernel carries earlier parts' features or the left's
-    payload. Row ids come from monotonically_increasing_id over the scanned
-    left: deterministic, because the plan below them is a scan plus narrow
-    ops. A row a bootstrap combo covers (reference Join.computeRange
-    :264-285) is kept out of the part's probe and keeps its bootstrap
-    values; elsewhere a bootstrap value wins over the computed one where it
-    is not NULL. Derivations run last. The output is the left columns, then
-    each part's features in declared order."""
+    The left is scanned once, without the skew keys; each part is computed
+    by its GroupBy's accuracy (`_join_part`). A single part cogroups the
+    left itself. Several parts, or bootstrap parts, each compute over a
+    SLIM probe (row id, ts, ds, join keys), so no part's Arrow kernel
+    carries the left's payload, and their features merge back by row id
+    (the monolith MergeJob, reference MergeJob.scala:81-140). A row a
+    bootstrap combo covers (reference Join.computeRange:264-285) stays out
+    of the part's probe; elsewhere a non-NULL bootstrap value wins.
+    Derivations run last. Output: the left columns, then each part's
+    features in declared order."""
     left_df = _apply_skew_filter(scan_source(spark, join.left, rng, spec), join)
-    # resolve the date range ONCE against the raw left scan, and only where
-    # a snapshot, no-agg or mutation part or a bootstrap table scans by it:
-    # a per-part probe would re-execute the chained plan with earlier
-    # parts' Arrow kernels in it
+    merged = len(join.join_parts) > 1 or bool(join.bootstrap_parts)
+    left_df = _pinned(left_df) if merged else left_df
+    # resolve the date range ONCE, and only where a scan prunes by it: a
+    # per-part probe would re-run the chained plan with earlier parts in it
     if ((rng is None or not rng.start) and PARTITION_COLUMN in left_df.columns
-            and (join.bootstrap_parts or any(
-                _kind(jp.group_by) != "temporal" for jp in join.join_parts))):
+            and _scans_by_range(spark, join, spec)):
         rng = _left_date_range(left_df, spec)
 
     def part(df: DataFrame, jp: JoinPart) -> DataFrame:
         return _join_part(spark, df, jp, rng, spec, join.skew_keys, probe_df=left_df)
 
-    if len(join.join_parts) <= 1 and not join.bootstrap_parts:
+    if not merged:
         out = left_df
         for jp in join.join_parts:
             out = part(out, jp)
@@ -164,6 +161,30 @@ def compute_join(
         frames.append((pf, [c for c in pf.columns if c not in slim.columns]))
     return _derive(join, _merge_parts(out, frames, [ROW_ID], left_df.columns),
                    left_df.columns)
+
+
+def _pinned(left_df: DataFrame) -> DataFrame:
+    """`left_df`, materialized when its plan has a shuffle (a JoinSource),
+    whose rows may come in another order each time the plan runs: the merge
+    and each probe would get different monotonically_increasing_id rows."""
+    plan = left_df._jdf.queryExecution().executedPlan().toString()
+    return left_df.localCheckpoint() if "Exchange" in plan else left_df
+
+
+def _scans_by_range(spark: SparkSession, join: Join, spec: PartitionSpec) -> bool:
+    """Whether the left's date range prunes a scan: a bootstrap table, a
+    snapshot, no-agg or mutation part, or a temporal part's right source
+    that is a partitioned table or passes the range to inner sources."""
+    def prunes(src) -> bool:
+        if isinstance(src, (EventSource, EntitySource)):
+            table = src.table if isinstance(src, EventSource) else src.snapshot_table
+            return (src.query.partition_column or spec.column) in _load_table(
+                spark, table).columns
+        return not isinstance(src, DataFrameSource)
+
+    return bool(join.bootstrap_parts) or any(
+        _kind(jp.group_by) != "temporal" or any(map(prunes, jp.group_by.sources))
+        for jp in join.join_parts)
 
 
 def _kind(gb: GroupBy) -> str:

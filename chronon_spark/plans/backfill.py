@@ -521,20 +521,13 @@ def run_modular_join(
     step_days: int = 15,
     spec: PartitionSpec = DEFAULT_SPEC,
 ) -> DataFrame:
-    """Join executed as a DAG of independently-resumable, table-materialized
-    nodes: SourceJob (left, skew keys filtered out) -> per-part JoinPartJob
-    (`_join_part`, the monolith's per-accuracy dispatch) -> MergeJob ->
-    derivations. Each node is a BackfillJob: re-running after a failure (or
-    with new partitions) computes only unfilled ranges. Equals the monolith
-    `compute_join` (asserted in tests, the analog of the reference's
-    ModularJoinTest). Bootstrap parts are not supported and raise."""
+    """Join as a DAG of resumable, table-materialized BackfillJob nodes:
+    SourceJob (left) -> per-part JoinPartJob (`_join_part`) -> MergeJob ->
+    derivations; parts and merge read the left without the skew keys.
+    Re-running computes only unfilled ranges. Equals `compute_join` (the
+    reference's ModularJoinTest). Bootstrap parts raise."""
     from chronon_spark.operators.snapshot_join import (
-        ROW_ID,
-        _apply_skew_filter,
-        _derive,
-        _join_part,
-        _merge_parts,
-    )
+        ROW_ID, _apply_skew_filter, _derive, _join_part, _merge_parts)
     from chronon_spark.sources.scan import scan_source
 
     if join.bootstrap_parts:
@@ -549,14 +542,16 @@ def run_modular_join(
     # an all-columns equi-join drop or multiply feature rows).
     src_job = BackfillJob(
         spark, warehouse, left_table,
-        compute=lambda r: _apply_skew_filter(
-            scan_source(spark, join.left, r, spec), join
-        ).withColumn(ROW_ID, F.monotonically_increasing_id()),
-        # the skew keys shape the table; a join without them keeps its hash
-        config=(join.left, join.skew_keys) if join.skew_keys else join.left,
-        job_name=f"source/{join.name}", step_days=step_days, spec=spec,
+        compute=lambda r: scan_source(spark, join.left, r, spec).withColumn(
+            ROW_ID, F.monotonically_increasing_id()
+        ),
+        config=join.left, job_name=f"source/{join.name}",
+        step_days=step_days, spec=spec,
     )
     src_job.run(rng.start, rng.end)
+
+    def read_left(r: PartitionRange) -> DataFrame:
+        return _apply_skew_filter(warehouse.read(left_table, r), join)
 
     part_tables = []
     for jp in join.join_parts:
@@ -565,9 +560,11 @@ def run_modular_join(
         pj = BackfillJob(
             spark, warehouse, pt,
             compute=lambda r, jp=jp: _join_part(
-                spark, warehouse.read(left_table, r), jp, r, spec, join.skew_keys
+                spark, read_left(r), jp, r, spec, join.skew_keys
             ),
-            config=jp, job_name=f"part/{join.name}/{jp.full_prefix()}",
+            # the part's rows carry the left table's row ids and skew filter
+            config=(jp, join.skew_keys, src_job.sem_hash),
+            job_name=f"part/{join.name}/{jp.full_prefix()}",
             step_days=step_days, spec=spec,
         )
         pj.run(rng.start, rng.end)
@@ -575,7 +572,7 @@ def run_modular_join(
     # MergeJob (reference: JoinBase.joinWithLeft / MergeJob.scala:81-140),
     # keyed on (__row_id, ds) — unique because ids are unique within one
     # chunk's compute and chunks cover disjoint ds ranges.
-    left_df = warehouse.read(left_table, rng)
+    left_df = read_left(rng)
     frames = []
     for pt in part_tables:
         part_df = warehouse.read(pt, rng)

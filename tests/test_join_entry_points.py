@@ -9,9 +9,15 @@ keys matches the brute-force `naive_aggregate` per left row, and the union
 of a step-split `join_backfill` equals the full-range compute. A left row
 with a NULL key part matches no right row, whatever the part's accuracy:
 TEMPORAL parts give their empty-window values (COUNT 0, the rest NULL),
-SNAPSHOT and no-agg parts NULL."""
+SNAPSHOT and no-agg parts NULL.
 
+Row ids: a modular join rerun after its skew keys or its left change
+still equals `compute_join`, and a multi-part join over a left with
+shuffles below it (a JoinSource) equals its parts chained."""
+
+import re
 import zlib
+from dataclasses import replace
 
 import numpy as np
 import pytest
@@ -28,16 +34,18 @@ from chronon_spark.api import (
     GroupBy,
     Join,
     JoinPart,
+    JoinSource,
     Operation,
     Query,
     Window,
 )
 from chronon_spark.operators.sawtooth import naive_aggregate
-from chronon_spark.operators.snapshot_join import compute_join
+from chronon_spark.operators.snapshot_join import _join_part, _pinned, compute_join
 from chronon_spark.operators.temporal_join import compute_temporal_join
 from chronon_spark.partitions import PartitionRange
 from chronon_spark.plans.backfill import join_backfill, run_modular_join
 from chronon_spark.sources.catalog import ParquetWarehouse
+from chronon_spark.sources.scan import scan_source
 
 BASE = 1704067200000  # 2024-01-01 UTC
 DAY = 86_400_000
@@ -287,3 +295,74 @@ def test_one_part_temporal_join_job_budget(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     # 5 before the delegation (local[4], shuffle_partitions=4)
     assert 0 < jobs <= 5, jobs
+
+
+# --------------------------------------------------------------------------
+# row ids: modular reruns, a shuffled left; the unranged right scan
+# --------------------------------------------------------------------------
+def test_modular_join_rerun_after_skew_and_left_changes(spark, tables, tmp_path):
+    """One modular join rerun in one warehouse: skew keys added, removed,
+    then the left redefined. Each run equals `compute_join`, so no part
+    table keeps the row ids of an older left table or misses the keys an
+    older skew filter dropped."""
+    base = _joins(tables)["temporal_snapshot"]
+    narrowed = replace(base.left, query=replace(base.left.query, wheres=["user_id != 9"]))
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    for join in (base, replace(base, skew_keys={"user_id": [7]}), base,
+                 replace(base, left=narrowed)):
+        mono = _rows(compute_join(spark, join, RNG))
+        assert _rows(run_modular_join(spark, wh, join, RNG)) == mono, (
+            join.skew_keys, join.left.query.wheres)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_multi_part_join_over_join_source_left(spark, tables):
+    """A JoinSource left has shuffles below it. The multi-part merge
+    materializes it before minting row ids, and the merged result equals
+    the parts chained one after the other."""
+    joins = _joins(tables)
+    upstream = joins["skew"]
+    left = JoinSource(upstream, Query(selects={"user_id": "user_id",
+                                               "up": "t_value_sum_7d"}))
+    parts = joins["temporal_snapshot"].join_parts
+    merged = compute_join(spark, Join(left, parts, name="down"), RNG)
+    chained = scan_source(spark, left, RNG)
+    assert "Exchange" in _plan(chained)
+    for jp in parts:
+        chained = _join_part(spark, chained, jp, RNG, RNG.spec)
+    assert _rows(merged) == _rows(chained)
+    assert "Exchange" not in _plan(_pinned(scan_source(spark, left, RNG)))
+    plain = scan_source(spark, upstream.left, RNG)
+    assert _pinned(plain) is plain
+
+
+def test_unranged_temporal_join_prunes_right_partitions(spark, tmp_path):
+    """Called without a range, a TEMPORAL join over a ds-partitioned right
+    source resolves the left's dates once and scans the right only from
+    the window's reach before the left's first day."""
+    r = np.random.default_rng(3)
+    right = spark.createDataFrame(
+        [(int(r.integers(0, 5)), int(BASE + r.integers(0, 30 * DAY)), float(r.random()))
+         for _ in range(300)], "user_id int, ts long, value double",
+    ).withColumn("ds", F.date_format(F.timestamp_millis("ts"), "yyyy-MM-dd"))
+    right.write.partitionBy("ds").parquet(str(tmp_path / "right"))
+    left = spark.createDataFrame(
+        [(int(r.integers(0, 5)), int(BASE + r.integers(25 * DAY, 28 * DAY)))
+         for _ in range(20)], "user_id int, ts long")
+    left.write.parquet(str(tmp_path / "left"))
+    src = EventSource(str(tmp_path / "right"), Query(
+        selects={"user_id": "user_id", "value": "value"}, time_column="ts"))
+    gb = GroupBy([src], ["user_id"], [Aggregation("value", Operation.SUM, windows=[Window(3)])],
+                 accuracy=Accuracy.TEMPORAL, name="g")
+    join = Join(EventSource(str(tmp_path / "left"), Query(
+        selects={"user_id": "user_id"}, time_column="ts")), [JoinPart(gb)], name="prune")
+    lo = left.selectExpr("min(date_format(timestamp_millis(ts), 'yyyy-MM-dd'))").first()[0]
+    # a 3-day window reaches back 3 days, the sawtooth tail one more
+    bound = RNG.spec.shift(lo, -4)
+    for fn in (compute_join, compute_temporal_join):
+        out = fn(spark, join)
+        assert re.search(rf"PartitionFilters: \[.*ds#\d+ >= {bound}", _plan(out)), fn
+        assert _rows(out) == _rows(fn(spark, join, PartitionRange(lo, "2024-01-29")))

@@ -49,7 +49,7 @@ from chronon_spark.operators.bootstrap import (
 )
 from chronon_spark.operators.groupby import _union_sources, compute_snapshot_groupby
 from chronon_spark.operators.mutations import compute_temporal_entity_join_part
-from chronon_spark.operators.temporal_join import compute_temporal_join_part
+from chronon_spark.operators.temporal_join import LeftProbe, compute_temporal_join_part
 from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange, PartitionSpec
 from chronon_spark.sources.scan import _load_table, scan_source
 
@@ -121,7 +121,8 @@ def compute_join(
     bootstrap combo covers (reference Join.computeRange:264-285) stays out
     of the part's probe; elsewhere a non-NULL bootstrap value wins.
     Derivations run last. Output: the left columns, then each part's
-    features in declared order."""
+    features in declared order. TEMPORAL parts over the same left keys
+    share one bounded probe of it (`LeftProbe`): scan reduction and split."""
     left_df = _apply_skew_filter(scan_source(spark, join.left, rng, spec), join)
     merged = len(join.join_parts) > 1 or bool(join.bootstrap_parts)
     left_df = _pinned(left_df) if merged else left_df
@@ -131,8 +132,13 @@ def compute_join(
             and _scans_by_range(spark, join, spec)):
         rng = _left_date_range(left_df, spec)
 
+    probes = {}  # left keys -> the step's one LeftProbe of them
+
     def part(df: DataFrame, jp: JoinPart) -> DataFrame:
-        return _join_part(spark, df, jp, rng, spec, join.skew_keys, probe_df=left_df)
+        keys = tuple(jp.right_to_left_keys()[k] for k in jp.group_by.key_columns)
+        if _kind(jp.group_by) == "temporal" and keys not in probes:
+            probes[keys] = LeftProbe(spark, left_df, keys)
+        return _join_part(spark, df, jp, rng, spec, join.skew_keys, probes.get(keys))
 
     if not merged:
         out = left_df
@@ -207,16 +213,16 @@ def _join_part(
     rng: Optional[PartitionRange],
     spec: PartitionSpec,
     skew_keys: Optional[dict] = None,
-    probe_df: Optional[DataFrame] = None,
+    probe: Optional[LeftProbe] = None,
 ) -> DataFrame:
     """One join part by its `_kind`: temporal -> sawtooth cogroup;
     mutations -> mutation replay; snapshot -> end-of-yesterday snapshot
-    equi-join; no_agg -> latest snapshot row by key. `probe_df` (default
-    `left_df`) supplies the left keys of the temporal right-scan filters."""
+    equi-join; no_agg -> latest snapshot row by key. A temporal part takes
+    the step's `probe` of its left keys."""
     kind = _kind(join_part.group_by)
     if kind == "temporal":
         return compute_temporal_join_part(
-            spark, left_df, join_part, rng, spec, skew_keys=skew_keys, probe_df=probe_df)
+            spark, left_df, join_part, rng, spec, skew_keys=skew_keys, probe=probe)
     if kind == "mutations":
         return compute_temporal_entity_join_part(spark, left_df, join_part, rng, spec)
     if kind == "snapshot":

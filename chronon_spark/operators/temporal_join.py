@@ -19,21 +19,22 @@ hash-partitioned by key ONCE, co-located, and handed to the vectorized
 kernel as Arrow tables, which it reads as numpy with no pandas layer;
 there is no join explosion and no per-row Python.
 Skew controls: AQE on; the bucket-hash grouping is itself a generalized
-salt (hot keys share buckets with other keys); hot keys named in
-``spark.chronon.join.salt.keys`` can additionally be split across kernel
-groups by hash (``salt``) or by time chunk (``salt.time_days``) — see
-`_salt_hot_keys` (exact results, verified by the temporal_join_salted
-gate query and test_composite_skew).
+salt (hot keys share buckets with other keys); a Join step splits each key
+above fair share across kernel groups, by hash or by time chunk
+(`LeftProbe`, `_split_decision`, `_salt_hot_keys`; exact results).
 """
 
 from __future__ import annotations
 
-from dataclasses import replace
+from collections import Counter
+from dataclasses import dataclass, replace
+from functools import reduce
+from operator import and_, or_
 from typing import Optional
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import DataType, StructType
@@ -49,6 +50,7 @@ from chronon_spark.api import (
     Operation,
 )
 from chronon_spark.operators.groupby import (
+    DAY_MS,
     _apply_derivations,
     _union_sources,
     window_days,
@@ -298,87 +300,67 @@ def _sawtooth_by_key(
     return outs
 
 
+@dataclass(frozen=True)
+class HotKey:
+    """A hot key's split (`key`: left-key values): its left rows spread over
+    `shards` groups by a (keys, ts) hash or, if `days` > 0, into `days`-day
+    chunks; `ts_range`, its left rows' first and last ts, bounds them."""
+
+    key: tuple
+    shards: int
+    days: int = 0
+    ts_range: Optional[tuple] = None
+
+
+def _key_in(cols: list[str], keys) -> Column:
+    """Whether a row's `cols` hold one of the key tuples in `keys`."""
+    return reduce(or_, [reduce(and_, [F.col(c) == F.lit(v) for c, v in zip(cols, k)])
+                        for k in keys])
+
+
 def _salt_hot_keys(
-    spark: SparkSession,
     left_df: DataFrame,
     right_df: DataFrame,
     left_keys: list[str],
     right_keys: list[str],
     parts: list[AggregationPart],
+    split: tuple,
 ):
-    """Targeted hot-key salting: the keys named in
-    spark.chronon.join.salt.keys (comma-separated values of the FIRST join
-    key) get a `__salt` cogroup key so their rows spread over several
-    kernel groups; every other key takes salt 0, the plain path.
-
-    * ``spark.chronon.join.salt = S`` (QUERY-heavy keys): a hot key's left
-      rows spread over S salts by a ts-derived hash and only its right rows
-      replicate S times. Measured 2.03x on a 32M-row join whose viral key
-      holds 1/3 of the queries (16 cores).
-    * ``spark.chronon.join.salt.time_days = D`` (EVENT-heavy keys, where
-      every hash slice would re-process all the key's events): the hot
-      key's queries shard by ts into D-day chunks and each event
-      replicates only into the chunks whose queries can see it, so
-      per-chunk input is the chunk's own traffic plus one window of
-      lookback. Needs every part windowed. Measured 1.46x.
-
-    Either mode without salt.keys, or both together, raises ValueError.
-    salt.keys is required because salting EVERY key replicates the whole
-    right side S times: on a 32M-row join with one 3% key that was ~1.5x
-    slower than no salting (best pass 67.2 s vs 44.3 s, same session).
-    Returns the (possibly salted) frames and key lists."""
-    salt = int(spark.conf.get("spark.chronon.join.salt", "1"))
-    time_days = int(spark.conf.get("spark.chronon.join.salt.time_days", "0"))
-    if salt <= 1 and time_days <= 0:
+    """Split each `HotKey` across kernel groups with a `__salt` cogroup
+    key; every other key takes salt 0, the plain path. A hash split
+    (query-heavy keys; 2.03x on a 32M-row join with a 1/3 viral key)
+    replicates only the key's events, once per shard. Time shards
+    (event-heavy keys, 1.46x) replicate each event only into the chunks
+    whose queries can see it, and need every part windowed. Salting every
+    key replicates the whole right side: ~1.5x slower with one 3% key."""
+    if not split:
         return left_df, right_df, left_keys, right_keys
-    if salt > 1 and time_days > 0:
-        raise ValueError(
-            "spark.chronon.join.salt and spark.chronon.join.salt.time_days "
-            "are exclusive salting modes; set one")
-    salt_keys = [
-        s for s in spark.conf.get("spark.chronon.join.salt.keys", "").split(",")
-        if s != ""
-    ]
-    if not salt_keys:
-        raise ValueError(
-            "spark.chronon.join.salt and spark.chronon.join.salt.time_days "
-            "require spark.chronon.join.salt.keys")
-    l_hot = F.col(left_keys[0]).cast("string").isin(salt_keys)
-    r_hot = F.col(right_keys[0]).cast("string").isin(salt_keys)
-    if time_days > 0:
-        unbounded = [p.output_name for p in parts if p.window is None]
-        if unbounded:
-            raise ValueError(
-                "time-sharded salting needs every part windowed; "
-                f"unbounded: {unbounded}")
-        span = time_days * 86_400_000
-        max_w = max(p.window.millis for p in parts)
-        # an event at ts serves query chunks floor(ts/span) ..
-        # floor((ts + max_w + hop)/span): the sawtooth tail rounds the
-        # window start DOWN by up to one hop (hop <= 1 day for every
-        # window size), so the visibility horizon is max_w + hop, not
-        # max_w — bound with a full day to stay safe for all hops
-        reps = (max_w + 86_400_000) // span + 2
-        l_salt = (
-            F.when(l_hot, F.floor(F.col(TIME_COLUMN) / F.lit(span)))
-            .otherwise(F.lit(0)).cast("long")
-        )
-        chunk0 = F.floor(F.col(TIME_COLUMN) / F.lit(span)).cast("long")
-        r_salts = F.array_distinct(
-            F.array(*[chunk0 + F.lit(i).cast("long") for i in range(reps)])
-        )
-    else:
-        l_salt = F.when(
-            l_hot,
-            F.pmod(F.xxhash64(*[F.col(k) for k in left_keys], F.col(TIME_COLUMN)),
-                   F.lit(salt)),
-        ).otherwise(F.lit(0).cast("long"))
-        r_salts = F.array(*[F.lit(i).cast("long") for i in range(salt)])
-    left_df = left_df.withColumn("__salt", l_salt)
-    right_df = right_df.withColumn(
-        "__salt",
-        F.explode(F.when(r_hot, r_salts).otherwise(F.array(F.lit(0).cast("long")))),
-    )
+    if any(h.days for h in split) and any(p.window is None for p in parts):
+        raise ValueError("time shards need every part windowed")
+    l_case = r_case = F  # `F.when` opens each CASE, `Column.when` extends it
+    for hot in split:
+        if hot.days > 0:
+            span = hot.days * DAY_MS
+            # an event at ts serves query chunks floor(ts/span) ..
+            # floor((ts + max_w + hop)/span): the sawtooth tail rounds the
+            # window start DOWN by up to one hop (hop <= 1 day for every
+            # window size), so the visibility horizon is max_w + hop, not
+            # max_w — bound with a full day to stay safe for all hops
+            reps = (max(p.window.millis for p in parts) + DAY_MS) // span + 2
+            l_salt = F.floor(F.col(TIME_COLUMN) / F.lit(span)).cast("long")
+            r_salts = F.sequence(l_salt, l_salt + F.lit(reps - 1))
+            if hot.ts_range:
+                first, last = (t // span for t in hot.ts_range)
+                r_salts = F.filter(r_salts, lambda c: c.between(first, last))
+        else:
+            l_salt = F.pmod(F.xxhash64(*[F.col(k) for k in left_keys], F.col(TIME_COLUMN)),
+                            F.lit(hot.shards))
+            r_salts = F.sequence(F.lit(0).cast("long"), F.lit(hot.shards - 1).cast("long"))
+        l_case = l_case.when(_key_in(left_keys, [hot.key]), l_salt)
+        r_case = r_case.when(_key_in(right_keys, [hot.key]), r_salts)
+    zero = F.lit(0).cast("long")
+    left_df = left_df.withColumn("__salt", l_case.otherwise(zero))
+    right_df = right_df.withColumn("__salt", F.explode(r_case.otherwise(F.array(zero))))
     return left_df, right_df, list(left_keys) + ["__salt"], list(right_keys) + ["__salt"]
 
 
@@ -389,6 +371,7 @@ def temporal_features(
     right_keys: list[str],
     parts: list[AggregationPart],
     prefix: str = "",
+    split: tuple = (),
 ) -> DataFrame:
     """Enrich every left row with point-in-time features from right_df.
 
@@ -405,11 +388,11 @@ def temporal_features(
     would pay that fixed cost per key; `_sawtooth_by_key` answers all of
     the bucket's keys and parts with one bucket-level kernel call, also
     when the bucket holds no right rows. The bucket count comes from
-    `_join_buckets`; hot keys may be salted (`_salt_hot_keys`).
+    `_join_buckets`. `split` (`HotKey`s, default none) spreads those keys
+    over several kernel groups (`_salt_hot_keys`).
     """
-    spark = left_df.sparkSession
     left_df, right_df, left_keys, right_keys = _salt_hot_keys(
-        spark, left_df, right_df, left_keys, right_keys, parts)
+        left_df, right_df, left_keys, right_keys, parts, split)
     right_types = dict(right_df.dtypes)
     input_cols, array_inputs, map_inputs, feature_fields = _kernel_columns(
         right_types, parts, prefix)
@@ -436,7 +419,7 @@ def temporal_features(
 
     out = _cogroup_features(left_df, right_slim, left_keys, right_keys,
                             feature_fields, body)
-    # both salting modes key the cogroup on `__salt`; it is never output
+    # both splits key the cogroup on `__salt`; it is never output
     return out.drop("__salt")
 
 
@@ -502,131 +485,139 @@ def compute_temporal_join_part(
     rng: Optional[PartitionRange] = None,
     spec: PartitionSpec = DEFAULT_SPEC,
     skew_keys: Optional[dict] = None,
-    probe_df: Optional[DataFrame] = None,
+    probe: Optional[LeftProbe] = None,
 ) -> DataFrame:
     """One join part: scan right GroupBy sources (lookback-widened),
-    cogroup with the left, run the sawtooth kernel.
-
-    `probe_df` (default: left_df) supplies the left keys for the
-    small/mid-size right-scan filters — callers chaining several parts
-    pass the RAW left scan so probing doesn't re-execute the upstream
-    cogroups."""
+    cogroup with the left, run the sawtooth kernel. `probe`, the step's
+    `LeftProbe` of the part's left keys (default: a probe of `left_df`),
+    picks the right-scan reduction and the hot-key split."""
     gb = join_part.group_by
     scan_rng = _temporal_scan_range(gb, rng, spec)
     right = _union_sources(spark, gb, scan_rng, spec)
     parts = gb.aggregation_parts()
     key_map = join_part.right_to_left_keys()  # gb key -> left col
     left_keys = [key_map[k] for k in gb.key_columns]
-    # skew keys excluded from the left must be excluded from the RIGHT scan
-    # too (reference: JoinUtils.skewFilter:330-382 filters both sides) —
-    # otherwise the hot keys' events are still scanned, shuffled and sorted
-    # in their cogroup bucket for nothing.
-    if skew_keys:
-        for gb_key, left_col in key_map.items():
-            values = skew_keys.get(left_col) or skew_keys.get(gb_key)
-            if values:
-                right = right.where(
-                    ~F.col(gb_key).isin(values) | F.col(gb_key).isNull()
-                )
-    probe = probe_df if probe_df is not None else left_df
-    right = _right_key_filter(spark, probe, right, left_keys, gb.key_columns)
-    prefix = join_part.full_prefix() + "_"
-    return temporal_features(left_df, right, left_keys, gb.key_columns, parts, prefix)
+    # skew keys leave the RIGHT scan too (reference: JoinUtils.skewFilter
+    # :330-382 filters both sides), or their events are shuffled for nothing
+    for gb_key, left_col in key_map.items() if skew_keys else ():
+        values = skew_keys.get(left_col) or skew_keys.get(gb_key)
+        if values:
+            right = right.where(~F.col(gb_key).isin(values) | F.col(gb_key).isNull())
+    probe = probe or LeftProbe(spark, left_df, left_keys)
+    # the split first: its exact left count spares the semi-join's count
+    split = _split_decision(probe, right, gb.key_columns, parts)
+    right = _right_key_filter(spark, probe, right, gb.key_columns)
+    return temporal_features(left_df, right, left_keys, gb.key_columns, parts,
+                             join_part.full_prefix() + "_", split)
+
+
+class LeftProbe:
+    """A Join step's one bounded look at its left keys, shared by its
+    temporal parts over them: `left.select(keys).limit(n + 1)`, n the
+    small-mode cutoff but at least 5,000. Counts run at most once."""
+
+    def __init__(self, spark: SparkSession, left_df: DataFrame, keys):
+        self.left_df, self.keys = left_df, list(keys)
+        self.parallelism = spark.sparkContext.defaultParallelism
+        cutoff = int(spark.conf.get("spark.chronon.backfill.small_mode.cutoff", "5000"))
+        self.sample = left_df.select(*self.keys).limit(max(cutoff, 5000) + 1).collect()
+        self.small = 0 < cutoff and len(self.sample) <= cutoff
+        n = len(self.sample)
+        self.rows = n if n <= max(cutoff, 5000) else None  # exact, once known
+        self._at_most, self._hot = {}, None
+
+    def at_most(self, n: int) -> bool:
+        """Whether the left has at most n rows: counted at most once."""
+        if self.rows is None and n >= len(self.sample) and n not in self._at_most:
+            self._at_most[n] = self.left_df.select(*self.keys).limit(n + 1).count()
+        return self._at_most.get(n, len(self.sample) if self.rows is None else self.rows) <= n
+
+    def hot_keys(self) -> dict:
+        """Left keys above fair share (1 / defaultParallelism of the rows)
+        -> (rows, first ts, last ts): candidates from the probe, confirmed by
+        one exact aggregate (a key-clustered left over-represents its first
+        keys). No key of a left within the probe, nor one with a NULL."""
+        if self._hot is None:
+            n, fair = len(self.sample), self.parallelism
+            cands = [k for k, c in Counter(map(tuple, self.sample)).items()
+                     if c * fair > n and None not in k]
+            self._hot = {}
+            if cands and self.rows is None:
+                stats = self.left_df.groupBy(
+                    F.when(_key_in(self.keys, cands), F.struct(*self.keys)).alias("k")
+                ).agg(F.count(F.lit(1)).alias("n"), F.min(TIME_COLUMN).alias("lo"),
+                      F.max(TIME_COLUMN).alias("hi")).collect()
+                self.rows = sum(r["n"] for r in stats)
+                self._hot = {tuple(r["k"]): (r["n"], r["lo"], r["hi"]) for r in stats
+                             if r["k"] is not None and r["n"] * fair > self.rows}
+        return self._hot
+
+
+def _split_decision(probe: LeftProbe, right: DataFrame, right_keys: list[str],
+                    parts: list[AggregationPart]) -> tuple:
+    """Each hot left key's `HotKey` for one part, from one count of `right`
+    by hot key: ceil(its rows on both sides x parallelism / all rows)
+    shards, at most the parallelism. A hash split when its queries outnumber
+    its events; else time shards if every part is windowed, or none (each
+    hash slice would re-process all its events)."""
+    hot = probe.hot_keys()
+    if not hot:
+        return ()
+    k = F.when(_key_in(right_keys, list(hot)), F.struct(*right_keys)).alias("k")
+    counts = right.groupBy(k).count().collect()
+    total = probe.rows + sum(r["count"] for r in counts)
+    events = {tuple(r["k"]): r["count"] for r in counts if r["k"] is not None}
+    split = []
+    for key, (rows, lo, hi) in hot.items():
+        ev = events.get(key, 0)
+        shards = min(probe.parallelism, -(-(rows + ev) * probe.parallelism // total))
+        if shards > 1 and ev < rows:
+            split.append(HotKey(key, shards))
+        elif shards > 1 and lo is not None and all(p.window is not None for p in parts):
+            split.append(HotKey(key, shards, -(-(hi - lo + 1) // (shards * DAY_MS)), (lo, hi)))
+    return tuple(split)
 
 
 def _right_key_filter(
     spark: SparkSession,
-    left_df: DataFrame,
+    probe: LeftProbe,
     right: DataFrame,
-    left_keys: list[str],
     right_keys: list[str],
 ) -> DataFrame:
-    """Two-tier right-scan reduction by left keys:
+    """Two-tier right-scan reduction by the left keys of `probe`:
 
-    * small mode (|left| <= 5k): literal IN-list pushdown — parquet
-      row-group skipping (reference: JoinUtils.runSmallMode).
+    * small mode (|left| <= 5k): literal IN-lists of the probe's rows, a
+      superset filter for composite keys — parquet row-group skipping
+      (reference: JoinUtils.runSmallMode, injectKeyFilter).
     * mid-size mode (5k < |left| <= 1M): broadcast LEFT-SEMI join of the
-      right on the left's DISTINCT keys. The reference builds a bloom
-      filter here (Join.scala:267-285, genBloomFilterIfNeeded); the
-      broadcast-hash semi probe is the Spark-native equivalent with zero
-      false positives and no separate filter-building pass — the probe
-      sits directly above the right scan, so a 50k-row left no longer
-      drags a full 100 TB right table through the shuffle.
+      right on the left's DISTINCT keys, right above the right scan — the
+      reference's bloom filter (Join.scala:267-285, genBloomFilterIfNeeded)
+      with zero false positives and no filter-building pass.
     """
-    filtered = _small_mode_filter(spark, left_df, right, left_keys, right_keys)
-    if filtered is not right:
-        return filtered
-    return _midsize_semi_filter(spark, left_df, right, left_keys, right_keys)
-
-
-def _midsize_semi_filter(
-    spark: SparkSession,
-    left_df: DataFrame,
-    right: DataFrame,
-    left_keys: list[str],
-    right_keys: list[str],
-) -> DataFrame:
-    cutoff = int(spark.conf.get("spark.chronon.backfill.bloom.cutoff", "1000000"))
-    if cutoff <= 0:
+    if probe.small:
+        for lk, rk in zip(probe.keys, right_keys):
+            vals = {r[lk] for r in probe.sample if r[lk] is not None}
+            if vals:
+                right = right.where(F.col(rk).isin(list(vals)))
         return right
-    # only worth paying the probe job + broadcast when the right scan is
-    # big enough that skipping rows saves real IO (the reference gates its
-    # bloom the same way, on leftRowCount vs threshold); the size estimate
-    # comes free from file statistics — no job
-    min_right = int(
-        spark.conf.get("spark.chronon.backfill.bloom.min_right_bytes",
-                       str(256 * 1024 * 1024))
-    )
+    cutoff = int(spark.conf.get("spark.chronon.backfill.bloom.cutoff", "1000000"))
+    # only worth a count job + broadcast when the right scan is big enough
+    # that skipping rows saves real IO (the reference gates its bloom on
+    # leftRowCount the same way); file statistics give the size, no job
+    min_right = int(spark.conf.get("spark.chronon.backfill.bloom.min_right_bytes",
+                                   str(256 * 1024 * 1024)))
     try:
-        right_bytes = int(
-            right._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        right_bytes = int(right._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # pragma: no cover - non-file-backed plans
         right_bytes = 1 << 62
-    if right_bytes < min_right:
-        return right
-    probe = left_df.select(*left_keys).limit(cutoff + 1)
-    if probe.count() > cutoff:
+    if cutoff <= 0 or right_bytes < min_right or not probe.at_most(cutoff):
         return right
     right_types = dict(right.dtypes)
-    keys_df = (
-        left_df.select(
-            *[F.col(lk).cast(right_types[rk]).alias(f"__sj_{rk}")
-              for lk, rk in zip(left_keys, right_keys)]
-        )
-        .distinct()
-    )
-    cond = None
-    for rk in right_keys:
-        c = F.col(rk).eqNullSafe(F.col(f"__sj_{rk}"))
-        cond = c if cond is None else (cond & c)
+    keys_df = probe.left_df.select(*[
+        F.col(lk).cast(right_types[rk]).alias(f"__sj_{rk}")
+        for lk, rk in zip(probe.keys, right_keys)]).distinct()
+    cond = reduce(and_, [F.col(rk).eqNullSafe(F.col(f"__sj_{rk}")) for rk in right_keys])
     return right.join(F.broadcast(keys_df), cond, "left_semi")
-
-
-def _small_mode_filter(
-    spark: SparkSession,
-    left_df: DataFrame,
-    right: DataFrame,
-    left_keys: list[str],
-    right_keys: list[str],
-) -> DataFrame:
-    """Small-mode semi-join reduction (reference: JoinUtils.runSmallMode /
-    injectKeyFilter, cutoff conf TableUtils.scala:54-57): when the left has
-    few rows, push `key IN (...)` predicates into the right scan — Catalyst
-    turns them into parquet row-group filters, so a tiny backfill touches a
-    tiny slice of a 100TB right table. A per-key IN-list is a superset
-    filter for composite keys (safe: extra right rows only cost compute)."""
-    cutoff = int(spark.conf.get("spark.chronon.backfill.small_mode.cutoff", "5000"))
-    if cutoff <= 0:
-        return right
-    sample = left_df.select(*left_keys).limit(cutoff + 1).collect()
-    if len(sample) > cutoff:
-        return right
-    for lk, rk in zip(left_keys, right_keys):
-        vals = {r[lk] for r in sample if r[lk] is not None}
-        if vals:
-            right = right.where(F.col(rk).isin(list(vals)))
-    return right
 
 
 def compute_temporal_join(

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from chronon_spark.api import AggregationPart, Operation, Window
-from chronon_spark.operators.temporal_join import temporal_features
+from chronon_spark.operators.temporal_join import HotKey, temporal_features
 
 BASE = 1704067200000
 DAY = 86_400_000
@@ -71,23 +71,12 @@ def test_hot_key_skew_completes_and_is_correct(spark):
     assert rows[3] == expect_cold
 
 
+# the two splits `_split_decision` chooses from, forced on hot key 7
 SALTING = {
-    # query-side hash split of the named hot key
-    "salt.keys": {"spark.chronon.join.salt": "4",
-                  "spark.chronon.join.salt.keys": "7"},
-    # time shards of the named hot key (windowed parts only)
-    "salt.time_days": {"spark.chronon.join.salt.keys": "7",
-                       "spark.chronon.join.salt.time_days": "3"},
-}
-
-REJECTED = {
-    # a salt with no hot keys named would salt every key
-    "salt-without-keys": {"spark.chronon.join.salt": "4"},
-    "time_days-without-keys": {"spark.chronon.join.salt.time_days": "3"},
-    # two modes at once: neither may silently win
-    "salt-and-time_days": {"spark.chronon.join.salt": "4",
-                           "spark.chronon.join.salt.keys": "7",
-                           "spark.chronon.join.salt.time_days": "3"},
+    # query-side hash split
+    "salt.keys": (HotKey((7,), 4),),
+    # time shards of 3 days (windowed parts only)
+    "salt.time_days": (HotKey((7,), 4, days=3),),
 }
 
 SALT_PARTS = [
@@ -95,16 +84,6 @@ SALT_PARTS = [
     AggregationPart("value", Operation.COUNT, window=Window(1)),
     AggregationPart("value", Operation.LAST_K, arg_map={"k": 3}, window=Window(7)),
 ]
-
-
-def _with_confs(spark, confs, fn):
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        return fn()
-    finally:
-        for k in confs:
-            spark.conf.unset(k)
 
 
 def _hot_key_frames(spark):
@@ -126,23 +105,24 @@ def _hot_key_frames(spark):
 
 @pytest.mark.parametrize("mode", sorted(SALTING))
 def test_salting_matches_unsalted(spark, mode):
-    """Each salting mode splits the hot key across kernel groups without
+    """Each split spreads the hot key across kernel groups without
     changing ANY result value, for the hot key's rows and every other key:
-    salt.keys hash-splits its queries and replicates only its events;
-    salt.time_days shards its queries by 3-day chunk and replicates each
-    event only into the chunks whose queries can see it."""
+    the hash split spreads its queries and replicates only its events;
+    time shards cut its queries into 3-day chunks and replicate each event
+    only into the chunks whose queries can see it."""
     left, right = _hot_key_frames(spark)
     parts = list(SALT_PARTS)
     if mode == "salt.keys":  # hash splits also serve lifetime parts
         parts.append(AggregationPart("value", Operation.COUNT, window=None))
 
-    def run():
-        out = temporal_features(left, right, ["user_id"], ["user_id"], parts)
+    def run(split=()):
+        out = temporal_features(left, right, ["user_id"], ["user_id"], parts,
+                                split=split)
         return {(r["user_id"], r["ts"]): [r[p.output_name] for p in parts]
                 for r in out.collect()}
 
     base = run()
-    salted = _with_confs(spark, SALTING[mode], run)
+    salted = run(SALTING[mode])
     assert set(base) == set(salted)
     for k in base:
         for b, s in zip(base[k], salted[k]):
@@ -152,19 +132,12 @@ def test_salting_matches_unsalted(spark, mode):
                 assert s == b, k
 
 
-@pytest.mark.parametrize("mode", sorted(REJECTED))
-def test_conflicting_salt_confs_raise(spark, mode):
-    left, right = _hot_key_frames(spark)
-    with pytest.raises(ValueError):
-        _with_confs(spark, REJECTED[mode], lambda: temporal_features(
-            left, right, ["user_id"], ["user_id"], SALT_PARTS))
-
-
 def test_time_sharding_rejects_unbounded_parts(spark):
-    """time_days is exact only for windowed parts; an unbounded part fails
-    loudly instead of returning silently wrong results."""
+    """Time shards are exact only for windowed parts, so the engine never
+    picks them for a key with an unwindowed part (test_skew_decision);
+    forced on one, they fail loudly instead of returning wrong results."""
     left, right = _hot_key_frames(spark)
     bad = SALT_PARTS + [AggregationPart("value", Operation.COUNT, window=None)]
     with pytest.raises(ValueError):
-        _with_confs(spark, SALTING["salt.time_days"], lambda: temporal_features(
-            left, right, ["user_id"], ["user_id"], bad))
+        temporal_features(left, right, ["user_id"], ["user_id"], bad,
+                          split=SALTING["salt.time_days"])

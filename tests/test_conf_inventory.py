@@ -50,8 +50,8 @@ def _readme_table() -> dict[str, tuple[str, str]]:
 
 
 def test_reads_are_found():
-    # positive control: the scan sees a key read inside a comprehension
-    assert "spark.chronon.join.salt.keys" in _conf_reads()
+    # positive control: the scan sees a key read inside a call's argument
+    assert "spark.chronon.backfill.small_mode.cutoff" in _conf_reads()
     assert "spark.chronon.join.backfill.mode.skewFree" not in _conf_reads()
 
 

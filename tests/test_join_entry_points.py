@@ -297,6 +297,42 @@ def test_one_part_temporal_join_job_budget(spark):
     assert 0 < jobs <= 5, jobs
 
 
+def test_three_part_temporal_join_shares_one_left_probe(spark):
+    """Three TEMPORAL parts over the same left keys share one probe of the
+    left: the plan build runs the jobs of a single probe, and the whole
+    join fewer jobs than a probe per part paid (16 at local[2]). Counted
+    on a noop sink, AQE stage jobs included."""
+    r = np.random.default_rng(5)
+    right = spark.createDataFrame(
+        [(int(r.integers(0, 50)), int(BASE + r.integers(0, 10 * DAY)), float(r.random()))
+         for _ in range(2000)], "user_id int, ts long, value double")
+    left = spark.createDataFrame(
+        [(int(r.integers(0, 50)), int(BASE + r.integers(0, 10 * DAY))) for _ in range(2000)],
+        "user_id int, ts long",
+    ).withColumn("ds", F.date_format(F.timestamp_millis("ts"), "yyyy-MM-dd"))
+    join = Join(DataFrameSource(lambda s: left), [
+        JoinPart(GroupBy([DataFrameSource(lambda s: right)], ["user_id"],
+                         [Aggregation("value", op, windows=[Window(7)])],
+                         accuracy=Accuracy.TEMPORAL, name=f"g{i}"))
+        for i, op in enumerate((Operation.SUM, Operation.MAX, Operation.COUNT))],
+        name="budget3")
+    sc = spark.sparkContext
+
+    def jobs(fn, group):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    probe = jobs(lambda: left.select("user_id").limit(5001).collect(), "three-part-probe")
+    assert jobs(lambda: compute_join(spark, join), "three-part-build") == probe
+    total = jobs(lambda: compute_join(spark, join).write.format("noop").mode("overwrite")
+                 .save(), "three-part-total")
+    assert 0 < total <= 12, total
+
+
 # --------------------------------------------------------------------------
 # row ids: modular reruns, a shuffled left; the unranged right scan
 # --------------------------------------------------------------------------
@@ -366,3 +402,47 @@ def test_unranged_temporal_join_prunes_right_partitions(spark, tmp_path):
         out = fn(spark, join)
         assert re.search(rf"PartitionFilters: \[.*ds#\d+ >= {bound}", _plan(out)), fn
         assert _rows(out) == _rows(fn(spark, join, PartitionRange(lo, "2024-01-29")))
+
+
+def test_step_split_floats_agree_to_a_relative_1e12(spark, tmp_path):
+    """The step-split contract (README, incremental backfill): a
+    `join_backfill` of any step gives the rows of `compute_join` over the
+    range, every value exact except TEMPORAL SUM, AVERAGE and the moments,
+    which may differ in the last bit. The sawtooth centres each key's
+    prefix sums on the mean of the rows it scanned, and the lookback-widened
+    scan depends on the step."""
+    r = np.random.default_rng(17)
+    ev = [(int(r.integers(0, 4)), int(BASE + r.integers(0, 12 * DAY)),
+           float(r.uniform(-1e3, 1e6))) for _ in range(400)]
+    left = [(int(r.integers(0, 4)), int(BASE + r.integers(3 * DAY, 12 * DAY)))
+            for _ in range(80)]
+    for name, data, ddl in (("ev", ev, "user_id int, ts long, value double"),
+                            ("left", left, "user_id int, ts long")):
+        spark.createDataFrame(data, ddl).write.parquet(str(tmp_path / name))
+    src = EventSource(str(tmp_path / "ev"), Query(
+        selects={"user_id": "user_id", "value": "value"}, time_column="ts"))
+    gb = GroupBy([src], ["user_id"], [
+        Aggregation("value", op, windows=[Window(2), Window(5)])
+        for op in (Operation.SUM, Operation.AVERAGE, Operation.VARIANCE, Operation.COUNT,
+                   Operation.MAX)], accuracy=Accuracy.TEMPORAL, name="t")
+    join = Join(EventSource(str(tmp_path / "left"), Query(
+        selects={"user_id": "user_id"}, time_column="ts")), [JoinPart(gb)], name="ulp")
+    rng = PartitionRange("2024-01-04", "2024-01-12")
+    key = ("user_id", "ts")
+
+    def rows(df):
+        return {tuple(row[k] for k in key): row.asDict() for row in df.collect()}
+
+    mono = rows(compute_join(spark, join, rng))
+    assert len(mono) > 40
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    for days in (2, 3):
+        join_backfill(spark, wh, join, f"out_{days}", step_days=days).run(rng.start, rng.end)
+        stepped = rows(wh.read(f"out_{days}"))
+        assert stepped.keys() == mono.keys()
+        for k, row in mono.items():
+            for c, v in row.items():
+                if isinstance(v, float):
+                    assert stepped[k][c] == pytest.approx(v, rel=1e-12, abs=0), (days, k, c)
+                else:
+                    assert stepped[k][c] == v, (days, k, c)

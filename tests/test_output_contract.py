@@ -1,7 +1,7 @@
 """Output contract of the public temporal operators: the result carries
 exactly the declared columns — the query columns plus one feature column
 per aggregation part — and never an internal `__`-prefixed column. The
-join operators are checked under every salting mode; the temporal
+join operators are checked under each hot-key split; the temporal
 GroupBy (self path), the snapshot GroupBy and the mutation-replay join
 carry no salting. Joins with bootstrap parts are checked with covering,
 partial and non-matching bootstrap tables."""
@@ -24,7 +24,9 @@ from chronon_spark.api import (
 from chronon_spark.operators.groupby import compute_snapshot_groupby
 from chronon_spark.operators.mutations import temporal_entity_features
 from chronon_spark.operators.snapshot_join import compute_join
+from chronon_spark.operators import temporal_join
 from chronon_spark.operators.temporal_join import (
+    HotKey,
     compute_temporal_groupby,
     compute_temporal_join,
     temporal_features,
@@ -34,22 +36,21 @@ from chronon_spark.partitions import DEFAULT_SPEC, PartitionRange
 BASE = 1704067200000
 DAY = 86_400_000
 
+# no split, a hash split and 3-day time shards of key 7
 SALTING = {
-    "none": {},
-    "salt.keys": {"spark.chronon.join.salt": "4", "spark.chronon.join.salt.keys": "7"},
-    "salt.time_days": {"spark.chronon.join.salt.keys": "7",
-                       "spark.chronon.join.salt.time_days": "3"},
+    "none": (),
+    "salt.keys": (HotKey((7,), 4),),
+    "salt.time_days": (HotKey((7,), 4, days=3),),
 }
 
 
 @pytest.fixture(params=sorted(SALTING))
-def salting(request, spark):
-    confs = SALTING[request.param]
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    yield
-    for k in confs:
-        spark.conf.unset(k)
+def salting(request, monkeypatch):
+    """The split under test; every join step the test runs also takes it
+    in place of the one the engine would choose."""
+    split = SALTING[request.param]
+    monkeypatch.setattr(temporal_join, "_split_decision", lambda *a: split)
+    return split
 
 
 def _frames(spark):
@@ -75,7 +76,8 @@ def test_temporal_features_declared_schema(spark, salting):
         AggregationPart("value", Operation.SUM, window=Window(7)),
         AggregationPart("value", Operation.COUNT, window=Window(1)),
     ]
-    out = temporal_features(left, right, ["user_id"], ["user_id"], parts, prefix="f_")
+    out = temporal_features(left, right, ["user_id"], ["user_id"], parts, prefix="f_",
+                            split=salting)
     _assert_contract(out, left.columns + [f"f_{p.output_name}" for p in parts])
     assert out.count() == left.count()
 

@@ -45,7 +45,7 @@ def ensure_input(replicas: int, sf_dir: str) -> str:
 
 
 def run_level(cpus: int, inp: str, workload: str = "join", passes: int = 2,
-              salt: int = 1, extra: list = ()) -> dict:
+              extra: list = ()) -> dict:
     """Pin the ENTIRE process tree (JVM task threads + python workers +
     GC) to `cpus` physical cores — a faithful N-core-cluster proxy.
     Without the pin, local[N]'s python workers overflow onto spare host
@@ -54,7 +54,7 @@ def run_level(cpus: int, inp: str, workload: str = "join", passes: int = 2,
         ["taskset", "-c", f"0-{cpus - 1}",
          sys.executable, os.path.join(REPO, "tools", "scaling_worker.py"),
          "--cpus", str(cpus), "--input", inp, "--workload", workload,
-         "--passes", str(passes), "--salt", str(salt), *extra],
+         "--passes", str(passes), *extra],
         capture_output=True, text=True, timeout=3600,
     )
     line = [l for l in res.stdout.splitlines() if l.startswith("{")][-1]
@@ -62,14 +62,16 @@ def run_level(cpus: int, inp: str, workload: str = "join", passes: int = 2,
 
 
 def skew_checksum_identical(sf_dir: str) -> bool:
-    """Hash-identity of the skewed join output at salt=1 vs salt=8 on
-    sf0.01 — the correctness half of the skew-torture evidence (the
-    driver gate's temporal_join_salted pins salt=4 against the SQL
-    oracle; this pins the monster-key shape specifically)."""
+    """Hash-identity of the skewed join output with and without an
+    8-shard hash split of the monster key, forced through
+    `temporal_features`' split parameter, on sf0.01 — the correctness half
+    of the skew-torture evidence (test_composite_skew pins both splits,
+    test_skew_decision the engine's choice; this pins the monster-key
+    shape specifically)."""
     from pyspark.sql import functions as F
 
     from chronon_spark.api import Aggregation, Operation, Window
-    from chronon_spark.operators.temporal_join import temporal_features
+    from chronon_spark.operators.temporal_join import HotKey, temporal_features
     from chronon_spark.session import build_session
 
     spark = build_session("skew-check", master="local[8]",
@@ -91,11 +93,9 @@ def skew_checksum_identical(sf_dir: str) -> bool:
                         windows=[Window(7)]),
         ) for p in a.unpack()]
         sums = []
-        for salt in (1, 8):
-            spark.conf.set("spark.chronon.join.salt", str(salt))
-            spark.conf.set("spark.chronon.join.salt.keys",
-                           "0" if salt > 1 else "")
-            out = temporal_features(left, ev, ["user_id"], ["user_id"], parts)
+        for split in ((), (HotKey((0,), 8),)):
+            out = temporal_features(left, ev, ["user_id"], ["user_id"], parts,
+                                    split=split)
             chk = out.select(F.sum(F.hash(*out.columns)).alias("h"),
                              F.count("*").alias("n")).collect()[0]
             sums.append((chk["h"], chk["n"]))
@@ -363,8 +363,8 @@ only the largest-input entries per level; the smaller runs stay logged.
 The reference's skew-free-join claim (README.md:82, UnionJoin.scala:28-198)
 probed across THREE deliberately different skew regimes on the same 32M-row
 input, alternated passes, best per config (all walls in
-`BENCH/scaling_runs.jsonl` under run tags r5skew*). `spark.chronon.join.salt.keys`
-restricts the split to the listed hot keys — only their query rows spread
+`BENCH/scaling_runs.jsonl` under run tags r5skew*). r5 split only the hot
+keys a setting named (since removed) — only their query rows spread
 across S salted cogroup keys and only their event rows replicate. Output is
 hash-identical in every mode (checksum-verified on the exact skew shape at
 sf0.01 before each run, plus the `temporal_join_salted` oracle gate row and
@@ -381,13 +381,14 @@ The same 3% control with the old GLOBAL salt (whole right side replicated
 8x) had a best pass of {g8}s against 44.27s unsalted in the same session
 (`r5skew`, 83 vs 81 jiffies of steal) — about 1.5x SLOWER, which is why r5
 made salting targeted. (An earlier "5x" figure came from a 229.6s pass taken
-under 870 jiffies of steal.) The global mode has since been removed: a salt
-without `salt.keys`, or `salt` together with `salt.time_days`, now raises
-`ValueError`. The honest operating guidance a 1000-executor deployment needs:
-salt only named viral keys when their load is query-dominated; reach for
-time-sharded salting when the EVENT history is the heavy side and every
-part is windowed; and fall back to skew-key exclusion
-(`temporal_join_skewfilter`) or snapshot accuracy otherwise.
+under 870 jiffies of steal.) The global mode, the named keys and the salt
+settings have since been removed: the engine now picks the split itself,
+per Join step, from its one bounded left probe. A key below fair share
+(rows / cores, as the 3% control) is left alone; a key above it gets a
+hash split when its queries dominate, time shards when its EVENT history is
+the heavy side and every part is windowed, a hash split otherwise. Where no
+split helps, fall back to skew-key exclusion (`temporal_join_skewfilter`)
+or snapshot accuracy.
 """
     sat_block = "" if sat is None else f"""
 ### Saturation datapoint: the same join at 8 -> 32 cores — r5 run, another host
@@ -541,8 +542,9 @@ def main() -> None:
     ap.add_argument("--real-images", type=int, default=192_000)
     ap.add_argument("--run-tag", default="bench")
     ap.add_argument("--skew-only", action="store_true")
-    ap.add_argument("--skew-shape", choices=["viral", "event"],
+    ap.add_argument("--skew-shape", choices=["viral", "event", "event_windowed"],
                     default="viral")
+    ap.add_argument("--hot-share", type=float, default=1 / 3)
     ap.add_argument("--skew-replicas", type=int, default=320)
     args = ap.parse_args()
 
@@ -551,20 +553,13 @@ def main() -> None:
 
         if args.skew_only:
             assert skew_checksum_identical("/root/testdata/sf0.01"), \
-                "salted skew join output differs from unsalted"
+                "split skew join output differs from the plain path"
             inp = ensure_input(args.skew_replicas, args.sf)
-            if args.skew_shape == "event":
-                for td in (0, 5, 0, 5):
-                    tag = ("join_skew_event_shard5d" if td
-                           else "join_skew_event_plain")
-                    log_level(args.run_tag, tag,
-                              run_level(16, inp, "join_skew", 2,
-                                        extra=["--skew-shape", "event",
-                                               "--salt-time-days", str(td)]))
-            else:
-                for salt in (1, 8, 1, 8):
-                    log_level(args.run_tag, f"join_skew_salt{salt}",
-                              run_level(16, inp, "join_skew", 2, salt=salt))
+            for _ in range(2):
+                log_level(args.run_tag, f"join_skew_{args.skew_shape}_auto",
+                          run_level(16, inp, "join_skew", 2,
+                                    extra=["--skew-shape", args.skew_shape,
+                                           "--hot-share", str(args.hot_share)]))
         elif args.video_only:
             vid_inp = ensure_video_fixture(n=args.videos, seed=7)
             measure_pair(args.run_tag, 4, 16, vid_inp, "video_fused")

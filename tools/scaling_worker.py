@@ -26,12 +26,10 @@ def main() -> None:
                              "real_decode", "join_skew"],
                     default="join")
     ap.add_argument("--passes", type=int, default=2)
-    ap.add_argument("--salt", type=int, default=1,
-                    help="spark.chronon.join.salt for join_skew")
-    ap.add_argument("--skew-shape", choices=["viral", "event"],
+    ap.add_argument("--skew-shape", choices=["viral", "event", "event_windowed"],
                     default="viral")
-    ap.add_argument("--salt-time-days", type=int, default=0,
-                    help="time-sharded salting span for the event shape")
+    ap.add_argument("--hot-share", type=float, default=1 / 3,
+                    help="share of the join_skew rows collapsed onto key 0")
     args = ap.parse_args()
 
     from chronon_spark.api import (
@@ -104,8 +102,8 @@ def main() -> None:
                 "noop").mode("overwrite").save()
             return n_rows
     elif args.workload == "join_skew":
-        if args.salt_time_days:
-            # time-sharding requires every part windowed
+        if args.skew_shape == "event_windowed":
+            # time shards need every part windowed
             gb = GroupBy(
                 sources=[src], key_columns=["user_id"],
                 aggregations=[
@@ -125,59 +123,41 @@ def main() -> None:
                 name="scaling",
             )
         # skew torture for the headline as-of join (the reference's
-        # UnionJoin "skew-free" claim, README.md:82): ~3% of ALL rows
-        # (left queries AND right events) collapse onto ONE monster key,
-        # then the two-sided cogroup join runs with the configured salt.
-        # salt=1 serializes the monster key's kernel batch on one core;
-        # salt=S spreads its left rows across S batches with the right
-        # side replicated — identical output (oracle-pinned by
-        # temporal_join_salted + checksum below), parallel wall.
+        # UnionJoin "skew-free" claim, README.md:82): --hot-share of the
+        # query rows collapse onto ONE monster key, then the two-sided
+        # cogroup join runs through `compute_temporal_join`, so the pass
+        # measures the split the engine picks (none below fair share, a
+        # hash split for a query-dominated key, time shards for an
+        # event-dominated one with every part windowed) — identical output
+        # to the plain path (pinned by test_composite_skew and
+        # test_skew_decision + the checksum in scaling_bench).
+        from dataclasses import replace
+
         from pyspark.sql import functions as Fn
 
-        from chronon_spark.operators.temporal_join import temporal_features
+        from chronon_spark.api import DataFrameSource, Join, JoinPart
+        from chronon_spark.operators.temporal_join import compute_temporal_join
 
-        if args.salt_time_days:
-            spark.conf.set("spark.chronon.join.salt.time_days",
-                           str(args.salt_time_days))
-        elif args.salt > 1:
-            spark.conf.set("spark.chronon.join.salt", str(args.salt))
-        # targeted mode: only the monster key is split/replicated
-        spark.conf.set("spark.chronon.join.salt.keys", "0")
         ev = spark.read.parquet(args.input).select("user_id", "ts", "value")
-        # QUERY-DOMINATED monster key — the pattern salting exists for
-        # (a viral entity probed by ~1/3 of all query rows while its own
-        # event history stays modest): left collapses 1/3 of queries
-        # onto key 0; the right side keeps only ~1% of key-0's events.
-        # Two earlier regimes remain in the log as controls:
-        # r5skew/r5skew-targeted (3% key - smaller than one core's fair
-        # share at 16 cores, no straggler, salting pure overhead) and
-        # r5skew-monster (EVENT-heavy 1/3 key - each salt slice must
-        # still process ALL the hot key's events, so splitting queries
-        # cannot win; that shape wants skew-key exclusion or snapshot
-        # accuracy instead, both supported).
-        hot = Fn.pmod(Fn.hash("ts", "value"), Fn.lit(3)) == 0
+        hot = Fn.pmod(Fn.hash("ts", "value"), Fn.lit(1000)) < int(args.hot_share * 1000)
         left = ev.withColumn(
             "user_id", Fn.when(hot, Fn.lit(0)).otherwise(Fn.col("user_id"))
         ).select("user_id", "ts")
+        ev = ev.withColumn(
+            "user_id", Fn.when(hot, Fn.lit(0)).otherwise(Fn.col("user_id")))
         if args.skew_shape == "viral":
-            # hot key query-dominated: its own events thinned to ~1%
-            ev = ev.withColumn(
-                "user_id",
-                Fn.when(hot, Fn.lit(0)).otherwise(Fn.col("user_id"))
-            ).where(~hot
-                    | (Fn.pmod(Fn.hash("value", "ts"), Fn.lit(100)) == 0))
-        else:
-            # event-heavy: 1/3 of rows on the key on BOTH sides — hash
-            # salting cannot win here (measured); time-sharding can
-            ev = ev.withColumn(
-                "user_id",
-                Fn.when(hot, Fn.lit(0)).otherwise(Fn.col("user_id")))
+            # QUERY-dominated: a viral entity probed by the hot share of
+            # the queries while its own events are thinned to ~1%
+            ev = ev.where(~hot | (Fn.pmod(Fn.hash("value", "ts"), Fn.lit(100)) == 0))
+        # event shapes: the hot share on BOTH sides — a hash split cannot
+        # win there (every slice still processes all the key's events);
+        # time shards can when every part is windowed
+        join = Join(DataFrameSource(lambda s: left), [JoinPart(
+            replace(gb, sources=[DataFrameSource(lambda s: ev)]))], name="skew")
         n_rows = left.count()
-        parts = [p for a in gb.aggregations for p in a.unpack()]
 
         def run():
-            temporal_features(left, ev, ["user_id"], ["user_id"],
-                              parts).write.format("noop").mode(
+            compute_temporal_join(spark, join).write.format("noop").mode(
                 "overwrite").save()
             return n_rows
     elif args.workload.startswith("image"):
